@@ -121,6 +121,37 @@ object Bench {
   private def fmt(v: Double, digits: Int): String =
     String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
 
+  /** Longest `queries_part` line (chars): short enough for a reader
+    * that keeps only a bounded tail of stdout. */
+  private[graft] val PartLineMax = 1500
+
+  /** `"key":value` JSON members packed in order into
+    * `{"metric":"queries_part","part":i,"parts":n,"<field>":{...}}`
+    * lines of at most [[PartLineMax]] chars each (a field with no
+    * members emits no line). */
+  private[graft] def queryParts(fields: Seq[(String, Seq[String])])
+      : Seq[String] = {
+    // room for the members once the longest possible envelope is paid
+    val room = PartLineMax - 100
+    val chunks = fields.flatMap { case (field, members) =>
+      val out = Vector.newBuilder[Seq[String]]
+      var cur = Vector.empty[String]
+      var len = 0
+      members.foreach { m =>
+        if (cur.nonEmpty && len + 1 + m.length > room) {
+          out += cur; cur = Vector.empty; len = 0
+        }
+        len += (if (cur.isEmpty) 0 else 1) + m.length
+        cur :+= m
+      }
+      if (cur.nonEmpty) out += cur
+      out.result().map(field -> _)
+    }
+    chunks.zipWithIndex.map { case ((field, ms), i) =>
+      s"""{"metric":"queries_part","part":${i + 1},"parts":${chunks.size},"$field":${ms.mkString("{", ",", "}")}}"""
+    }
+  }
+
   /** External (not-this-JVM) system CPU fraction, or -1 if the platform
     * bean can't say. The r12 driver artifact recorded the same tree at
     * 1.5–15× its isolated times (decode 122 k rows/s vs 1.26 M clean) —
@@ -352,27 +383,24 @@ object Bench {
           .findAllMatchIn(obj(s, "queries"))
           .map(m => m.group(1) -> m.group(2).toDouble))
         .sortBy(_._1)
-      val qmap = perQuery.map { case (k, v) => s""""$k":${fmt(v, 3)}""" }
-        .mkString("{", ",", "}")
       val total = perQuery.map(_._2).filter(_ >= 0).sum
-      // The driver keeps only the LAST ~2000 chars of stdout: a single
-      // line carrying the full ~280-entry queries map overflows that
-      // window and truncates its own head. Emit the full per-query map
-      // as a DETAIL line first (whatever fits of its tail still lands
-      // in the capture), then a compact final line — totals, serving
-      // metrics, and the top-10 slowest gates — that fits the window
-      // whole and, with sbt's [info] prefix and [success] epilogue
-      // disabled in build.sbt, is the process's LAST stdout line, so
-      // the driver's JSON parse lands.
-      // raw anomaly-retry pairs (gate → [first, second]) ride the detail
-      // line: min-of-two hides an intermittent stall from the final
+      // A reader that keeps a bounded tail of stdout loses the head of
+      // one line carrying the full ~310-entry queries map. Emit the
+      // per-query map as bounded queries_part lines first, then a
+      // compact final line — totals, serving metrics, and the top-10
+      // slowest gates — that fits the window whole and, with sbt's
+      // [info] prefix and [success] epilogue disabled in build.sbt, is
+      // the process's LAST stdout line, so a parse of that line lands.
+      // raw anomaly-retry pairs (gate → [first, second]) ride the part
+      // lines: min-of-two hides an intermittent stall from the final
       // number, so the evidence lands where a reader can still see it
       val retryPairs = sweeps
         .flatMap(s => "\"([A-Za-z0-9_]+)\":\\[([0-9.]+),([0-9.]+)\\]".r
           .findAllMatchIn(obj(s, "retry_samples"))
           .map(m => s""""${m.group(1)}":[${m.group(2)},${m.group(3)}]"""))
-        .mkString("{", ",", "}")
-      println(s"""{"metric":"queries","retry_samples":$retryPairs,"queries":$qmap}""")
+      queryParts(Seq(
+        "queries" -> perQuery.map { case (k, v) => s""""$k":${fmt(v, 3)}""" },
+        "retry_samples" -> retryPairs)).foreach(println)
       val top10 = perQuery
         .sortBy { case (k, v) => (-v, k) }.take(10)
         .map { case (k, v) => s""""$k":${fmt(v, 3)}""" }

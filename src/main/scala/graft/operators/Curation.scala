@@ -627,12 +627,13 @@ object Curation {
       require(v >= 0, s"budgetSelect: negative $weightCol ($v)")
       v
     }
-    // codegen pass over the checkpoint: ANSI long-sum raises on
-    // overflow (the Math.addExact analogue); null/negative weights are
+    // codegen pass over the checkpoint: try_sum yields null on overflow
+    // whatever the session's ANSI mode, and a null sum over non-null
+    // weights fails like Math.addExact; null/negative weights are
     // rejected with the same loud contract the row pass enforced —
     // including in partitions the budget would let pass 2 skip
     val stats = sorted.groupBy(spark_partition_id().as("_pid"))
-      .agg(coalesce(sum(col(weightCol)), lit(0L)).as("_s"),
+      .agg(try_sum(col(weightCol)).as("_s"),
         count(lit(1)).as("_n"), count(col(weightCol)).as("_nw"),
         min(col(weightCol)).as("_min"))
       .collect()
@@ -641,6 +642,9 @@ object Curation {
         s"budgetSelect: null $weightCol")
       require(r.getLong(2) == 0L || r.getLong(4) >= 0L,
         s"budgetSelect: negative $weightCol (${r.getLong(4)})")
+      if (r.getLong(3) > 0L && r.isNullAt(1))
+        throw new ArithmeticException(
+          s"budgetSelect: $weightCol total overflows a long")
     }
     val nParts = sorted.rdd.getNumPartitions
     val partSums = Array.fill(nParts)(0L)
@@ -703,10 +707,11 @@ object Curation {
     }
     // pass 1 as a codegen aggregation over the checkpoint (no
     // external-Row conversion, no re-sort — the budgetSelect reshape);
-    // ANSI long-sum raises on overflow like Math.addExact did
+    // try_sum's null on overflow fails like Math.addExact, in any ANSI
+    // mode
     val partSums = sorted
       .groupBy(spark_partition_id().as("_pid"), col(groupCol).as("_g"))
-      .agg(coalesce(sum(col(weightCol)), lit(0L)).as("_s"),
+      .agg(try_sum(col(weightCol)).as("_s"),
         count(lit(1)).as("_n"), count(col(weightCol)).as("_nw"),
         min(col(weightCol)).as("_min"))
       .collect()
@@ -715,6 +720,9 @@ object Curation {
           s"budgetSelectByGroup: null $weightCol")
         require(r.getLong(3) == 0L || r.getLong(5) >= 0L,
           s"budgetSelectByGroup: negative $weightCol (${r.getLong(5)})")
+        if (r.getLong(4) > 0L && r.isNullAt(2))
+          throw new ArithmeticException(
+            s"budgetSelectByGroup: $weightCol total overflows a long")
         (r.getInt(0), r.get(1), r.getLong(2))
       }
     // exclusive prefix offset of each group at each partition

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.Model
 import graft.functions.Net
@@ -889,6 +890,36 @@ final class ObservationStore(byRrname: DataFrame, byRdata: DataFrame,
     }
   }
 
+  /** [[cidrQuery]] on the driver-local fast path: every bucket of the
+    * inverted copy fans on the calling thread's reader, and a row is kept
+    * when its rdata parses — with the same [[Net.ipv4ToLong]] /
+    * [[Net.ipv6ToHex]] that fill the persisted `rdata_ip`/`rdata_ip6`
+    * columns — into the block's [[Net.cidrBounds]] / [[Net.cidrBounds6]]
+    * range. The rows are therefore exactly the plan path's, for both
+    * families and for non-canonical spellings (`010.0.0.1`) that no
+    * string-prefix seek would find; a binding limit returns `limit` of
+    * them (an arbitrary subset on either path). A malformed block throws
+    * what `cidrQuery` throws. None when the fast path is unavailable. */
+  def serveCidr(cidr: String, limit: Int = 1000)
+      : Option[Seq[graft.model.Observation]] = {
+    val keep: Array[Byte] => Boolean =
+      if (cidr.contains(':')) {
+        val (lo, hi) = Net.cidrBounds6(cidr)
+        val (l, h) = (UTF8String.fromString(lo), UTF8String.fromString(hi))
+        b => {
+          val k = Net.ipv6ToHex(UTF8String.fromBytes(b))
+          k != null && k.compareTo(l) >= 0 && k.compareTo(h) <= 0
+        }
+      } else {
+        val (lo, hi) = Net.cidrBounds(cidr)
+        b => {
+          val ip = Net.ipv4ToLong(UTF8String.fromBytes(b))
+          ip >= lo && ip <= hi
+        }
+      }
+    pointReaders.map { case (_, inv) => inv.keyTestLookup(keep, limit) }
+  }
+
   /** [[servePoint]] as schema-carrying Rows (for callers that render by
     * field name — GraphQL, the TCP wire). */
   def servePointRows(
@@ -1072,6 +1103,11 @@ final class ObservationStore(byRrname: DataFrame, byRdata: DataFrame,
     * column comparison that Parquet min/max row-group stats can prune;
     * in-memory (and older-layout) stores fall back to computing the
     * parse at read time.
+    *
+    * Serving answers CIDR blocks with [[serveCidr]] (same rows, no Spark
+    * job); this plan is its fallback for stores without driver-local
+    * readers — in-memory stores, pre-meta stores with no recorded bucket
+    * count, and files of a shape the readers refuse.
     */
   def cidrQuery(cidr: String, limit: Int = 1000): DataFrame = {
     val pred =

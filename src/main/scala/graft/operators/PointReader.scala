@@ -56,11 +56,9 @@ import graft.model.Observation
   * Scale stance: the bytes read are the SAME pruned set the Spark plan
   * reads (one bucket ≈ store/numBuckets, row-group-pruned below that);
   * the win is dropping per-query planning/scheduling, not skipping work.
-  * Point lookups and prefix seeks serve here; analytics-shaped queries
-  * (CIDR ranges, fan-out, dumps) stay on the Spark plan path where
-  * distribution pays for itself. On a real cluster the serving driver holds the bucket→file
-  * map + footers (numBuckets entries — metadata, not data) and streams
-  * at most `limit` rows per query.
+  * On a real cluster the serving driver holds the bucket→file map +
+  * footers (numBuckets entries — metadata, not data) and streams at most
+  * `limit` rows per query.
   *
   * Staleness: file map + footer cache are revalidated against the
   * store's committed epoch at most every [[PointReader.EpochCheckMillis]]
@@ -257,7 +255,8 @@ final class PointReader private[operators] (
       throw new IllegalStateException("fast path unavailable"))
     ensureFresh()
     val kb = key.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    readBucket(bucketOf(key), proj, predicate(key, residual), limit,
+    readBucket(bucketOf(key), proj, predicate(key, residual),
+      new PointReader.Budget(limit),
       (entries, sorted) =>
         if (sorted) PointReader.containsSorted(entries, kb)
         else entries.exists(java.util.Arrays.equals(_, kb)))
@@ -279,35 +278,65 @@ final class PointReader private[operators] (
     * path's unordered scan + limit). */
   def prefixLookup(prefix: String, residual: Seq[(String, String)],
       limit: Int): Vector[Observation] = {
+    val pb = prefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    fan(prefixPredicate(prefix, residual), limit,
+      (entries, sorted) =>
+        if (sorted) PointReader.anyPrefixSorted(entries, pb)
+        else entries.exists(PointReader.startsWith(_, pb)))
+  }
+
+  /** Key-test scan: every observation whose `keyCol` value satisfies
+    * `keep`, capped at `limit` — the shape of a CIDR block over the
+    * inverted copy, where no key order (string or hash) bounds the
+    * matches, so every bucket fans and every row's key is tested. Files
+    * whose cached dictionaries hold no kept key are skipped with zero
+    * I/O; rows are kept by a [[PointReader.KeyTestPredicate]] in the
+    * record filter. Result order is per-bucket file order, as in
+    * [[prefixLookup]]. A selective block still decodes every file its
+    * dictionaries cannot rule out; only a binding `limit` cuts the read
+    * short. */
+  def keyTestLookup(keep: Array[Byte] => Boolean,
+      limit: Int): Vector[Observation] =
+    fan(FilterApi.userDefined(FilterApi.binaryColumn(keyCol),
+        new PointReader.KeyTestPredicate(keep)), limit,
+      (entries, _) => entries.exists(keep))
+
+  /** Reads every bucket with `pred`, stopping all of them once `limit`
+    * rows exist in total. The buckets are INDEPENDENT reads (every cache
+    * here is a TrieMap — the same concurrency the multi-worker serving
+    * path already exercises), so they fan over the shared bounded pool:
+    * a serial walk pays bucket-count × per-file latency for what is
+    * mostly dictionary-pruned no-ops plus a handful of real reads.
+    * Concatenation keeps bucket order, so a non-binding limit returns
+    * the serial walk's rows in its order; a binding one returns exactly
+    * `limit` matches (an arbitrary subset, as on the plan path's
+    * unordered scan + limit). */
+  private def fan(pred: FilterPredicate, limit: Int,
+      anyEntry: (Array[Array[Byte]], Boolean) => Boolean)
+      : Vector[Observation] = {
     val proj = projection.getOrElse(
       throw new IllegalStateException("fast path unavailable"))
     ensureFresh()
-    val pred = prefixPredicate(prefix, residual)
-    val pb = prefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val anyEntry = (entries: Array[Array[Byte]], sorted: Boolean) =>
-      if (sorted) PointReader.anyPrefixSorted(entries, pb)
-      else entries.exists(PointReader.startsWith(_, pb))
-    if (numBuckets <= 1)
-      readBucket(0L, proj, pred, limit, anyEntry, trackFan = true)
-    else {
-      // the buckets are INDEPENDENT reads (every cache here is a
-      // TrieMap — the same concurrency the multi-worker serving path
-      // already exercises), so fan them over the shared bounded pool:
-      // a serial walk pays bucket-count × per-file latency for what is
-      // mostly dictionary-pruned no-ops plus a handful of real reads.
-      // Per-bucket cap stays the full limit (no cross-bucket early exit
-      // in parallel); when the limit binds both paths already return an
-      // arbitrary subset, and concatenation keeps bucket order so the
-      // non-binding case is byte-identical to the serial walk.
-      val futures = (0L until numBuckets).map { b =>
-        PointReader.prefixFanPool.submit(
-          new java.util.concurrent.Callable[Vector[Observation]] {
-            def call(): Vector[Observation] =
-              readBucket(b, proj, pred, limit, anyEntry, trackFan = true)
-          })
-      }
-      futures.flatMap(_.get()).take(limit).toVector
+    def once(): (Vector[Observation], PointReader.Budget) = {
+      val budget = new PointReader.Budget(limit)
+      val rows =
+        if (numBuckets <= 1)
+          readBucket(0L, proj, pred, budget, anyEntry, trackFan = true)
+        else
+          (0L until numBuckets).map { b =>
+            PointReader.prefixFanPool.submit(
+              new java.util.concurrent.Callable[Vector[Observation]] {
+                def call(): Vector[Observation] =
+                  readBucket(b, proj, pred, budget, anyEntry, trackFan = true)
+              })
+          }.flatMap(_.get()).take(limit).toVector
+      (rows, budget)
     }
+    // a bucket whose file vanished mid-read (concurrent commit) gives
+    // back the rows it had counted; buckets that stopped on that count
+    // may leave a binding limit short, so fan once more on fresh files
+    val (rows, budget) = once()
+    if (rows.size < limit && budget.refunded) once()._1 else rows
   }
 
   /** May this file contain a matching key? Answered from the cached
@@ -385,7 +414,7 @@ final class PointReader private[operators] (
     } catch { case _: Exception => Seq(None) }
 
   private def readBucket(bucket: Long, proj: MessageType,
-      pred: FilterPredicate, limit: Int,
+      pred: FilterPredicate, budget: PointReader.Budget,
       anyEntry: (Array[Array[Byte]], Boolean) => Boolean,
       trackFan: Boolean = false): Vector[Observation] = {
     // An EMPTY cached list never touches a file, so the vanished-file
@@ -406,7 +435,7 @@ final class PointReader private[operators] (
       PointReader.fanBucketsTotal.incrementAndGet()
       if (live.nonEmpty) PointReader.fanBucketsRead.incrementAndGet(): Unit
     }
-    try readFiles(live, proj, pred, limit)
+    try readFiles(live, proj, pred, budget)
     catch {
       // vanished file = concurrent committed merge swapped this bucket:
       // drop caches for it, relist once and retry (see staleness note)
@@ -420,7 +449,7 @@ final class PointReader private[operators] (
         }
         val fresh = listBucket(bucket)
         filesByBucket.put(bucket, fresh)
-        readFiles(fresh.filter(mayContain(_, anyEntry)), proj, pred, limit)
+        readFiles(fresh.filter(mayContain(_, anyEntry)), proj, pred, budget)
     }
   }
 
@@ -435,7 +464,8 @@ final class PointReader private[operators] (
     })
 
   private def readFiles(files: Seq[Path], proj: MessageType,
-      pred: FilterPredicate, limit: Int): Vector[Observation] = {
+      pred: FilterPredicate, budget: PointReader.Budget)
+      : Vector[Observation] = {
     val out = Vector.newBuilder[Observation]
     var n = 0
     val filter = FilterCompat.get(pred)
@@ -459,7 +489,7 @@ final class PointReader private[operators] (
       .useBloomFilter(false)
       .build()
     val it = files.iterator
-    while (it.hasNext && n < limit) {
+    try while (it.hasNext && budget.open) {
       val path = it.next()
       val (footer, columnIO) = footerAndIo(path, proj)
       val in = inputFile(path)
@@ -467,12 +497,12 @@ final class PointReader private[operators] (
       try {
         reader.setRequestedSchema(proj)
         var pages = reader.readNextFilteredRowGroup()
-        while (pages != null && n < limit) {
+        while (pages != null && budget.open) {
           val rr = columnIO.getRecordReader(pages,
             new GroupRecordConverter(proj), filter)
           val rows = pages.getRowCount
           var i = 0L
-          while (i < rows && n < limit) {
+          while (i < rows && budget.open) {
             val g = rr.read()
             if (!rr.shouldSkipCurrentRecord && g != null) {
               out += Observation(
@@ -481,13 +511,16 @@ final class PointReader private[operators] (
                 tsOf(g.getLong("first_seen", 0)),
                 tsOf(g.getLong("last_seen", 0)))
               n += 1
+              budget.take()
             }
             i += 1
           }
           pages =
-            if (n < limit) reader.readNextFilteredRowGroup() else null
+            if (budget.open) reader.readNextFilteredRowGroup() else null
         }
       } finally reader.close()
+    } catch {
+      case e: Throwable => budget.refund(n); throw e
     }
     out.result()
   }
@@ -498,8 +531,8 @@ object PointReader {
     * against the store's committed epoch. */
   val EpochCheckMillis: Long = 2000L
 
-  /** Prefix-fan pruning telemetry (cumulative across all readers):
-    * of the buckets a prefix fan visited, how many actually had a
+  /** Bucket-fan pruning telemetry (cumulative across all readers):
+    * of the buckets a prefix or key-test fan visited, how many actually had a
     * candidate file after the cached-dictionary prune (i.e. opened
     * data). `graft.Bench` snapshots these around its prefix phase —
     * the falsifiable form of "a selective prefix touches few buckets
@@ -588,7 +621,39 @@ object PointReader {
       .flatMap(s => scala.util.Try(s.toLong).toOption)
       .getOrElse(256L) * 1024L * 1024L
 
-  /** Shared bounded pool for the prefix bucket fan-out — sized small
+  /** Rows one read has emitted toward its `limit`, shared by every
+    * bucket of a fan so all of them stop once the total is reached. A
+    * read that fails after counting rows (a file vanished under a
+    * concurrent commit) refunds them before its bucket retries. */
+  private[operators] final class Budget(limit: Int) {
+    private val taken = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var refunded = false
+    def open: Boolean = taken.get < limit
+    def take(): Unit = taken.incrementAndGet(): Unit
+    def refund(n: Int): Unit = if (n > 0) {
+      taken.addAndGet(-n)
+      refunded = true
+    }
+  }
+
+  /** Keeps the values of a BINARY column that satisfy `keep` (raw
+    * bytes). No order bounds the kept set, so row groups and pages are
+    * never dropped from stats; the caller prunes whole files with the
+    * decoded dictionaries instead. */
+  private[operators] final class KeyTestPredicate(test: Array[Byte] => Boolean)
+      extends org.apache.parquet.filter2.predicate.UserDefinedPredicate[Binary]
+      with java.io.Serializable {
+    override def keep(value: Binary): Boolean =
+      value != null && test(value.getBytesUnsafe)
+    override def canDrop(
+        st: org.apache.parquet.filter2.predicate.Statistics[Binary])
+        : Boolean = false
+    override def inverseCanDrop(
+        st: org.apache.parquet.filter2.predicate.Statistics[Binary])
+        : Boolean = false
+  }
+
+  /** Shared bounded pool for the bucket fan-out — sized small
     * (the reads are I/O-bound and dictionary-pruned; more threads than
     * this just queue on the disk) and daemon so it never pins a JVM.
     * Serving threads block on their own fan's futures only (no nested

@@ -9,6 +9,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.DataFrame
 
+import graft.functions.Net
 import graft.operators.{ObservationStore, Tools}
 
 /** The serving layer (SURVEY.md §2.4 Q1/Q7/Q11/Q12 and §3.1/§3.3): the
@@ -149,7 +150,9 @@ final class QueryServer(store: ObservationStore, port: Int = 0,
     // Server-side CIDR range query (Q9 as an HTTP surface — the reference
     // can only expand client-side): `GET /pdns/cidr/<block>[?limit=]`,
     // v4 or v6, NDJSON like /pdns/query. The block's '/' arrives as a
-    // path segment, so everything after the prefix is the CIDR.
+    // path segment, so everything after the prefix is the CIDR. Fast path
+    // (driver-local fan over the inverted copy) first; stores without
+    // point readers fall back to the cidrQuery plan.
     server.createContext("/pdns/cidr/", (ex: HttpExchange) => handle(ex) {
       val cidr = ex.getRequestURI.getPath.stripPrefix("/pdns/cidr/")
       val limit = parseLimit(queryParam(ex, "limit"))
@@ -157,18 +160,22 @@ final class QueryServer(store: ObservationStore, port: Int = 0,
       else if (limit.isEmpty) respond(ex, 400, "invalid limit\n")
       else {
         // parse errors (bad prefix length, malformed address) are client
-        // errors; the filter itself is validated before any Spark work
-        val parsed =
-          try Right(store.cidrQuery(cidr, limit.get))
-          catch {
+        // errors, caught before either path reads anything
+        val bad =
+          try {
+            if (cidr.contains(':')) Net.cidrBounds6(cidr) else Net.cidrBounds(cidr)
+            None
+          } catch {
             // NumberFormatException is an IllegalArgumentException (bad
             // prefix digits); MatchError = missing '/'
-            case e: IllegalArgumentException => Left(e.getMessage)
-            case e: MatchError => Left(e.getMessage)
+            case e: IllegalArgumentException => Some(e.getMessage)
+            case e: MatchError => Some(e.getMessage)
           }
-        parsed match {
-          case Left(msg) => respond(ex, 400, s"bad cidr: $msg\n")
-          case Right(df) => streamNdjson(ex, df, notFoundOnEmpty = true)
+        if (bad.isDefined) respond(ex, 400, s"bad cidr: ${bad.get}\n")
+        else store.serveCidr(cidr, limit.get) match {
+          case Some(obs) => streamNdjsonObs(ex, obs, notFoundOnEmpty = true)
+          case None => streamNdjson(ex, store.cidrQuery(cidr, limit.get),
+            notFoundOnEmpty = true)
         }
       }
     })

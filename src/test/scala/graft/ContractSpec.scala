@@ -25,6 +25,28 @@ class ContractSpec extends AnyFunSuite {
     SparkEntry.oracleSql // must not throw
   }
 
+  test("Bench per-gate map splits into bounded queries_part lines") {
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    val queries = names.map(n => s""""$n":1234.567""")
+    val retries = names.take(40).map(n => s""""$n":[1.234,5.678]""")
+    val lines = Bench.queryParts(
+      Seq("queries" -> queries, "retry_samples" -> retries))
+    assert(lines.size > 1)
+    assert(lines.forall(_.length < Bench.PartLineMax),
+      lines.map(_.length).max)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val parsed = lines.map(mapper.readTree)
+    assert(parsed.map(_.get("part").asInt) == (1 to lines.size))
+    assert(parsed.forall(_.get("parts").asInt == lines.size))
+    assert(parsed.forall(_.get("metric").asText == "queries_part"))
+    import scala.jdk.CollectionConverters._
+    def keys(field: String): Seq[String] = parsed
+      .flatMap(p => Option(p.get(field)).toSeq.flatMap(_.fieldNames.asScala))
+    assert(keys("queries") == names)
+    assert(keys("retry_samples") == names.take(40))
+    assert(Bench.queryParts(Seq("queries" -> Nil)).isEmpty)
+  }
+
   test("gate names are stable lowercase identifiers") {
     SparkEntry.queries.keys.foreach { name =>
       assert(name.matches("[a-z][a-z0-9_]*"), name)

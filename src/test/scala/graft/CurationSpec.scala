@@ -846,6 +846,28 @@ class CurationSpec extends AnyFunSuite {
       Curation.budgetSelect(nul, "w", Seq(col("id")), 10L).collect())
   }
 
+  test("budgetSelect(+ByGroup): weight totals past Long.MaxValue raise, ANSI off") {
+    // a session that wraps long sums silently; one shuffle partition puts
+    // both weights in the same partition total
+    val lax = spark.newSession()
+    lax.conf.set("spark.sql.ansi.enabled", "false")
+    lax.conf.set("spark.sql.shuffle.partitions", "1")
+    val big = Long.MaxValue / 2 + 1
+    val df = lax.createDataFrame(Seq((1L, big, "g"), (2L, big, "g")))
+      .toDF("id", "w", "grp")
+    assert(df.agg(sum(col("w"))).head().getLong(0) < 0L) // wraps here
+    // budget 0 selects nothing, so only the totals pass can notice
+    intercept[ArithmeticException](
+      Curation.budgetSelect(df, "w", Seq(col("id")), 0L).collect())
+    intercept[ArithmeticException](
+      Curation.budgetSelectByGroup(df, "w", "grp", Seq(col("id")), 0L)
+        .collect())
+    // under the default (ANSI) session the same totals raise too
+    val strict = Seq((1L, big, "g"), (2L, big, "g")).toDF("id", "w", "grp")
+    intercept[ArithmeticException](
+      Curation.budgetSelect(strict, "w", Seq(col("id")), 0L).collect())
+  }
+
   test("budgetSelectByGroup: per-group window parity, null group kept") {
     val df = (1L to 300L).map(i =>
       (i, i % 5 + 1, if (i % 7 == 0) None else Some(s"g${i % 3}")))

@@ -85,6 +85,83 @@ class PointReaderSpec extends AnyFunSuite {
     assert(store.servePrefix("f", limit = 2).get.size == 2)
   }
 
+  test("serveCidr matches the cidrQuery plan: v4, v6, non-IP, limits, merge") {
+    val t = ts("2020-01-01 00:00:00")
+    // every rdata spelling the two persisted parsers accept or reject
+    val spelled = Seq(
+      "10.0.0.1", "10.0.0.2", "10.0.0.255", "9.255.255.255", "11.0.0.1",
+      "010.0.0.3", "10.00.1.7",                 // leading-zero IPv4
+      "10.0.0.1.example", "ns1.example", "10.0.0", // not IPv4
+      "2001:db8:0:0:0:0:0:1", "2001:0db8:0000:0000:0000:0000:0000:0002",
+      "2001:db8::3", "2001:DB8::ff", "::1",     // full and :: forms
+      "::ffff:10.0.0.9")                        // v4-mapped v6
+    // 300 addresses in 10.1.0.0/16, enough for a binding limit
+    val bulk = (0 until 300).map(i => s"10.1.${i / 200}.${i % 200}")
+    val input = (spelled ++ bulk).zipWithIndex.flatMap { case (d, i) =>
+      Seq((s"n$i.example", "s1", "A", d, 1L, t),
+        (s"m$i.example", "s2", "A", d, 2L, t))
+    }.toDF("rrname", "sensor_id", "rrtype", "rdata", "count", "ts")
+    val dir = java.nio.file.Files.createTempDirectory("graft-pr-cidr").toString
+    ObservationStore.writeDual(ObservationStore.aggregate(input), dir,
+      numBuckets = 8)
+    val store = ObservationStore.load(spark, dir)
+    def rows(obs: Seq[graft.model.Observation]): Seq[Seq[Any]] =
+      sortedSet(obs.map(o => Row(o.rrname, o.sensor_id, o.rrtype, o.rdata,
+        o.count, o.first_seen, o.last_seen)))
+    def plan(s: ObservationStore, block: String): Seq[Seq[Any]] =
+      sortedSet(s.cidrQuery(block, limit = Int.MaxValue).collect().toSeq)
+    def assertCidr(block: String, expect: Int): Unit = {
+      val fast = rows(store.serveCidr(block, limit = Int.MaxValue).get)
+      assert(fast == plan(store, block), s"block=$block")
+      assert(fast.size == expect, s"block=$block: ${fast.size} rows")
+    }
+    assertCidr("0.0.0.0/0", 2 * (7 + 300)) // every IPv4 spelling, no v6
+    assertCidr("10.0.0.0/24", 2 * 4)   // .1 .2 .255 and 010.0.0.3
+    assertCidr("10.0.0.1/32", 2)       // not 10.0.0.1.example
+    assertCidr("10.0.0.3/32", 2)       // 010.0.0.3
+    assertCidr("10.0.1.0/24", 2)       // 10.00.1.7
+    assertCidr("::/0", 2 * 6)          // every IPv6 spelling, no v4
+    assertCidr("2001:db8::/32", 2 * 4)
+    assertCidr("2001:db8::ff/128", 2)  // upper-case hex
+    assertCidr("2001:db8:0:0:0:0:0:2/128", 2)
+    assertCidr("::ffff:0:0/96", 2)     // the v4-mapped address
+    assertCidr("192.168.0.0/16", 0)
+    assertCidr("fe80::/10", 0)
+    // a binding limit: exactly `limit` distinct rows, all from the block
+    val all = plan(store, "10.1.0.0/16").toSet
+    assert(all.size == 600)
+    for (limit <- Seq(1, 50, 599)) {
+      val got = rows(store.serveCidr("10.1.0.0/16", limit).get)
+      assert(got.size == limit && got.distinct.size == limit, s"limit=$limit")
+      assert(got.forall(all), s"limit=$limit")
+    }
+    assert(rows(store.serveCidr("10.1.0.0/16", 600).get).toSet == all)
+    // malformed blocks throw what cidrQuery throws
+    intercept[IllegalArgumentException](store.serveCidr("10.0.0.0/33"))
+    intercept[IllegalArgumentException](store.serveCidr("::g/64"))
+    intercept[MatchError](store.serveCidr("10.0.0.0"))
+    // a merge advancing the epoch is served after the refresh
+    val batch = Seq(
+      ("late.example", "s1", "A", "10.0.0.77", 1L, t, t),
+      ("late6.example", "s1", "AAAA", "2001:db8::77", 1L, t, t),
+      ("n0.example", "s1", "A", "10.0.0.1", 5L, t, t)
+    ).toDF("rrname", "sensor_id", "rrtype", "rdata", "count",
+      "timestamp_start", "timestamp_end")
+    ObservationStore.mergeBatch(spark, dir, batch, numBuckets = 8)
+    Thread.sleep(graft.operators.PointReader.EpochCheckMillis + 100)
+    val re = ObservationStore.load(spark, dir)
+    for (block <- Seq("10.0.0.0/24", "2001:db8::/32")) {
+      val fast = rows(store.serveCidr(block, limit = Int.MaxValue).get)
+      assert(fast == plan(re, block), s"after merge, block=$block")
+    }
+    assert(store.serveCidr("10.0.0.0/24").get.size == 2 * 4 + 1)
+    assert(store.serveCidr("10.0.0.1/32").get.map(_.count).sorted ==
+      Seq(2L, 6L))
+    // an in-memory store has no readers: the caller falls back
+    assert(ObservationStore.inMemory(ObservationStore.aggregate(input))
+      .serveCidr("10.0.0.0/8").isEmpty)
+  }
+
   test("multi-page buckets: column-index filtering keeps rows aligned") {
     // Force MANY pages per bucket file (row-count limit 50) so the
     // column-index filter actually prunes pages and the record reader

@@ -149,6 +149,53 @@ class QueryServerSpec extends AnyFunSuite {
       .split("\n").length == 1)
   }
 
+  test("GET /pdns/cidr/: in-memory plan fallback answers like the disk fast path") {
+    import spark.implicits._
+    val ts = Timestamp.valueOf("2018-01-01 00:00:00")
+    val input = Seq(
+      ("foo", "abc", "A", "1.2.3.4", 10L, ts, ts),
+      ("bar", "abc", "A", "1.2.3.5", 10L, ts, ts),
+      ("baz", "abc", "A", "1.2.3.4", 1L, ts, ts)
+    ).toDF("rrname", "sensor_id", "rrtype", "rdata", "count",
+      "timestamp_start", "timestamp_end")
+    val dir = java.nio.file.Files.createTempDirectory("graft-qs-cidr").toString
+    ObservationStore.writeDual(ObservationStore.aggregate(input), dir,
+      numBuckets = 4)
+    val disk = ObservationStore.load(spark, dir)
+    assert(disk.serveCidr("1.2.3.0/24").isDefined)  // served on the fast path
+    assert(store.serveCidr("1.2.3.0/24").isEmpty)   // in-memory: plan fallback
+    val diskSrv = new QueryServer(disk)
+    diskSrv.start()
+    try {
+      def onDisk(path: String): HttpResponse[String] = client.send(
+        HttpRequest.newBuilder(
+          URI.create(s"http://localhost:${diskSrv.boundPort}$path")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      for ((path, status) <- Seq(
+          "/pdns/cidr/1.2.3.0/24" -> 200, "/pdns/cidr/1.2.3.4/32" -> 200,
+          "/pdns/cidr/0.0.0.0/0" -> 200, "/pdns/cidr/9.9.9.0/24" -> 404,
+          "/pdns/cidr/2001:db8::/64" -> 404, "/pdns/cidr/nonsense" -> 400,
+          "/pdns/cidr/1.2.3.0/33" -> 400, "/pdns/cidr/::g/64" -> 400,
+          "/pdns/cidr/1.2.3.0/24?limit=0" -> 400,
+          "/pdns/cidr/1.2.3.0/24?limit=x" -> 400)) {
+        val (mem, dsk) = (get(path), onDisk(path))
+        assert(mem.statusCode() == status, s"$path in memory: ${mem.body()}")
+        assert(dsk.statusCode() == status, s"$path on disk: ${dsk.body()}")
+        if (status == 200) {
+          assert(dsk.headers().firstValue("Content-Type").orElse("")
+            .contains("ndjson"), path)
+          assert(mem.body().trim.split("\n").sorted.toSeq ==
+            dsk.body().trim.split("\n").sorted.toSeq, path)
+        }
+      }
+      // a binding limit returns `limit` rows on both paths
+      assert(onDisk("/pdns/cidr/1.2.3.0/24?limit=2").body().trim
+        .split("\n").length == 2)
+      assert(get("/pdns/cidr/1.2.3.0/24?limit=2").body().trim
+        .split("\n").length == 2)
+    } finally diskSrv.stop()
+  }
+
   test("GET /stats -> total_count + goroutines + serving counters") {
     val body = get("/stats").body().trim
     assert(body.matches("""\{"total_count":3,"num_goroutines":\d+,""" +
