@@ -952,7 +952,7 @@ object Bench {
 
     // Spark-plan path for trend continuity. AQE off: it buys nothing for
     // a single-stage pre-pruned scan but costs per-query driver planning
-    // (~1.5× qps when off, measured in BenchPoints). try/finally: a
+    // (~1.5× qps when off). try/finally: a
     // failure mid-phase must not leave AQE off for anything after.
     // 100 queries per path (was 200): at ~10-20 qps these two LEGACY
     // trend metrics were ~40 s of the serving wall — the per-query

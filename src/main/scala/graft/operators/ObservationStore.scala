@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.model.Model
+import graft.model.{Model, Observation}
 import graft.functions.Net
 
 /** JVM-wide per-path lock serializing staged-merge apply/recover across
@@ -131,6 +131,13 @@ object ObservationStore {
 
   /** Columns that exist only in the on-disk layout, never in results. */
   private[operators] val LayoutCols = Seq("bucket", "rdata_ip", "rdata_ip6")
+
+  /** A result row as [[Observation]] fields; a TIMESTAMP_NTZ store reads
+    * in the session time zone. */
+  private val ObsCols: Seq[Column] =
+    Seq("rrname", "sensor_id", "rrtype", "rdata", "count").map(col) ++
+      Seq("first_seen", "last_seen").map(c => col(c).cast("timestamp").as(c))
+  private val ObsEncoder = Encoders.product[Observation]
 
   // All store paths go through Hadoop FS, so hdfs:// / s3a:// stores work
   // the same as local ones. Shared with [[Retrieval]]'s staged index merge.
@@ -850,7 +857,8 @@ final class ObservationStore(byRrname: DataFrame, byRdata: DataFrame,
     * on the calling thread via a pruned parquet read instead of a Spark
     * job, dropping the per-query planning+scheduling floor. Returns None
     * when the fast path is unavailable (in-memory store, pre-meta store,
-    * or a non-standard on-disk shape) — callers fall back to [[entries]].
+    * or a non-standard on-disk shape) — [[answerPoint]] then runs
+    * [[entries]].
     */
   def servePoint(
       rrname: Option[String] = None,
@@ -920,8 +928,7 @@ final class ObservationStore(byRrname: DataFrame, byRdata: DataFrame,
     pointReaders.map { case (_, inv) => inv.keyTestLookup(keep, limit) }
   }
 
-  /** [[servePoint]] as schema-carrying Rows (for callers that render by
-    * field name — GraphQL, the TCP wire). */
+  /** [[servePoint]] as Rows of [[Model.observationSchema]]. */
   def servePointRows(
       rrname: Option[String] = None,
       rdata: Option[String] = None,
@@ -937,39 +944,73 @@ final class ObservationStore(byRrname: DataFrame, byRdata: DataFrame,
         o.first_seen, o.last_seen),
       Model.observationSchema)
 
-  /** Q6 on the serving fast path: for point-shaped parents, each entry's
-    * aliases ARE an inverted point lookup — key `rdata`, residual
-    * `sensor_id` — so resolve them through [[PointReader]] on the
-    * calling thread instead of the [[aliases]] Spark self-join.
-    * Plan-path parity, pinned by PointReaderSpec: same aliasable-type
-    * gate, same rrname-differs predicate, same (rrname, rrtype) ordering
-    * (total — the store key is unique within an (rdata, sensor_id)
-    * group) and the same per-entry cap applied after the sort. Returns
-    * alias rows grouped by the entry key; None when the fast path is
-    * unavailable (callers fall back to the plan join). */
-  def serveAliasRows(entryRows: Seq[org.apache.spark.sql.Row],
-      perEntryLimit: Int = 1000,
+  // ---------------------------------------------------------- answering
+  // One always-answering method per query shape, the only entry points
+  // the serving front ends call: the driver-local readers when the store
+  // has them, else the plan below, collected — at most `limit` rows on
+  // either path, materialized once.
+
+  /** [[servePoint]], else the [[entries]] plan. */
+  def answerPoint(
+      rrname: Option[String] = None,
+      rdata: Option[String] = None,
+      rrtype: Option[String] = None,
+      sensorId: Option[String] = None,
+      limit: Int = 1000): Seq[Observation] =
+    servePoint(rrname, rdata, rrtype, sensorId, limit).getOrElse(
+      collectObs(entries(rrname, rdata, rrtype, sensorId, limit)))
+
+  /** [[servePrefix]], else the [[entriesPrefix]] plan. */
+  def answerPrefix(prefix: String, limit: Int = 1000,
+      rrtype: Option[String] = None, sensorId: Option[String] = None)
+      : Seq[Observation] =
+    servePrefix(prefix, limit, rrtype, sensorId).getOrElse(
+      collectObs(entriesPrefix(prefix, limit, rrtype, sensorId)))
+
+  /** [[serveCidr]], else the [[cidrQuery]] plan. */
+  def answerCidr(cidr: String, limit: Int = 1000): Seq[Observation] =
+    serveCidr(cidr, limit).getOrElse(collectObs(cidrQuery(cidr, limit)))
+
+  /** Q6 for the serving front ends: the aliases of each aliasable entry,
+    * keyed by the entry's (rrname, sensor_id, rdata). With readers, each
+    * entry's aliases ARE an inverted point lookup — key `rdata`, residual
+    * `sensor_id` — resolved on the calling thread; without, the
+    * [[aliases]] self-join over exactly `entries`, collected. Plan-path
+    * parity, pinned by PointReaderSpec: same aliasable-type gate, same
+    * rrname-differs predicate, same (rrname, rrtype) ordering (total —
+    * the store key is unique within an (rdata, sensor_id) group) and the
+    * same per-entry cap applied after the sort. */
+  def answerAliases(entries: Seq[Observation], perEntryLimit: Int = 1000,
       aliasableTypes: Seq[String] = Seq("A", "AAAA"))
-      : Option[Map[(String, String, String), Seq[org.apache.spark.sql.Row]]] =
-    pointReaders.map { case (_, inv) =>
-      entryRows
-        .map(r => (r.getAs[String]("rrname"), r.getAs[String]("sensor_id"),
-          r.getAs[String]("rrtype"), r.getAs[String]("rdata")))
-        .filter { case (_, _, t, _) => aliasableTypes.contains(t) }
-        .map { case (n, s, _, d) => (n, s, d) }
-        .distinct
-        .map { case key @ (n, s, d) =>
-          key -> inv.lookup(d, Seq("sensor_id" -> s), Int.MaxValue)
-            .filter(_.rrname != n)
-            .sortBy(o => (o.rrname, o.rrtype))
-            .take(perEntryLimit)
-            .map(obsRow)
-        }.toMap
+      : Map[(String, String, String), Seq[Observation]] =
+    pointReaders match {
+      case Some((_, inv)) =>
+        entries.filter(e => aliasableTypes.contains(e.rrtype))
+          .map(e => (e.rrname, e.sensor_id, e.rdata))
+          .distinct
+          .map { case key @ (n, s, d) =>
+            key -> inv.lookup(d, Seq("sensor_id" -> s), Int.MaxValue)
+              .filter(_.rrname != n)
+              .sortBy(o => (o.rrname, o.rrtype))
+              .take(perEntryLimit)
+          }.toMap
+      case None =>
+        aliases(entriesDfFromRows(entries.map(obsRow)), perEntryLimit,
+            aliasableTypes)
+          .select(col("e_rrname"), struct(ObservationStore.ObsCols: _*))
+          .as(Encoders.tuple(Encoders.STRING, ObservationStore.ObsEncoder))
+          .collect().toSeq
+          .groupMap { case (n, o) => (n, o.sensor_id, o.rdata) }(_._2)
     }
 
+  /** A plan's rows on the driver as [[Observation]]s. */
+  private def collectObs(df: DataFrame): Seq[Observation] =
+    df.select(ObservationStore.ObsCols: _*).as(ObservationStore.ObsEncoder)
+      .collect().toSeq
+
   /** Materialized rows back into a (LocalRelation-rooted) DataFrame, for
-    * the few serving flows that feed fast-path results into a Spark op
-    * (the GraphQL `aliases` self-join). */
+    * feeding served rows into a Spark op (the [[answerAliases]] fallback
+    * join). */
   def entriesDfFromRows(rows: Seq[org.apache.spark.sql.Row]): DataFrame =
     byRrname.sparkSession.createDataFrame(
       scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava,
@@ -1079,19 +1120,6 @@ final class ObservationStore(byRrname: DataFrame, byRdata: DataFrame,
              rrname: Option[String], rdata: Option[String],
              limit: Int = 1000): DataFrame =
     stores.map(_.entries(rrname, rdata, limit = limit)).reduce(_ unionAll _)
-
-  /** Q5 on the serving fast path: per-store [[servePoint]] results
-    * concatenated (bag semantics, per-store limit — the [[fanOut]]
-    * contract), available only when EVERY store serves driver-locally;
-    * None sends the caller to the plan-path [[fanOut]]. The reference
-    * dispatches serially per backend (`db_remote.go:133-202`); so does
-    * this — each lookup is ms-class, and ordering stays deterministic. */
-  def servePointFanOut(stores: Seq[ObservationStore],
-      rrname: Option[String], rdata: Option[String],
-      limit: Int = 1000): Option[Seq[graft.model.Observation]] = {
-    val per = stores.map(_.servePoint(rrname, rdata, limit = limit))
-    if (per.exists(_.isEmpty)) None else Some(per.flatMap(_.get))
-  }
 
   /** Q9 done server-side: the reference expands a CIDR client-side into one
     * point query per address (`cmds/query.go:32-57`); on Spark a range

@@ -30,7 +30,8 @@ import graft.model.Observation
   * query with a seek + residual filters + limit
   * (`backend/balboa-rocksdb/rocksdb-impl.c:259-422`), not a distributed
   * job; the Spark-plan equivalent pays per-query driver planning + task
-  * scheduling (~10 ms floor in local mode, measured in `BenchPoints`) for
+  * scheduling (~10 ms floor in local mode; perfbench `lookup` and
+  * `Bench.benchPointLookups` report both paths) for
   * a read that only ever touches ONE bucket directory. This reader does
   * exactly what that pruned plan would do — bucket-prune with the same
   * `xxhash64(key) % n`, Parquet row-group stats + dictionary filtering on

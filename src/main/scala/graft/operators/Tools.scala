@@ -31,17 +31,6 @@ object Tools {
       expr("last_seen DIV 1000000").as("time_last"))
       .toJSON.toDF("value")
 
-  /** [[jsonize]] dispatching on the store's timestamp shape: true
-    * timestamps AND the unix-micros long projections (the memoized
-    * query-surface shape) render to the SAME unix-seconds JSON — the
-    * serving layer never needs to know which shape it was handed (the
-    * `Graphql.unixSeconds` contract, on the NDJSON surface; an unaware
-    * cast would read micros as seconds and report year ~51954). */
-  def jsonizeAuto(agg: DataFrame): DataFrame =
-    if (agg.schema("first_seen").dataType ==
-      org.apache.spark.sql.types.LongType) jsonizeMicros(agg)
-    else jsonize(agg)
-
   def dump(agg: DataFrame, outPath: String): Unit =
     jsonize(agg).write.mode("overwrite").text(outPath)
 

@@ -3,8 +3,6 @@ package graft.serve
 import java.io.{ByteArrayOutputStream, DataInputStream, EOFException}
 import java.net.{ServerSocket, Socket}
 
-import org.apache.spark.sql.Row
-
 import graft.operators.ObservationStore
 
 /** The reference's native frontend↔backend TCP protocol
@@ -34,9 +32,10 @@ import graft.operators.ObservationStore
   * `ERROR_RESPONSE` naming the unsupported operation
   * (`db_protocol.go:52-54` shape).
   *
-  * Results stream through `toLocalIterator` — no driver-side result
-  * buffering, matching the reference's start/data…/end protocol
-  * semantics (and this server's HTTP twin, [[QueryServer]]).
+  * A query's answer (`ObservationStore.answerPoint`, at most `Limit`
+  * rows) is encoded in full before the start frame is written, so an
+  * entry the wire cannot carry (seconds outside u32) fails only that
+  * query with an `ERROR_RESPONSE`, never a half-written stream.
   */
 object BalboaTcp {
 
@@ -221,6 +220,13 @@ object BalboaTcp {
       case b => fail(s"expected uint, got 0x${b.toHexString}")
     }
 
+    /** [[readUint]] clamped to `Int.MaxValue`: a uint32 past it, or a
+      * uint64 of 2^63 or more (negative as a Long), never wraps. */
+    def readUintAsInt(): Int = {
+      val v = readUint()
+      if (v < 0 || v > Int.MaxValue) Int.MaxValue else v.toInt
+    }
+
     def readBool(): Boolean = u8() match {
       case 0xc3 => true
       case 0xc2 => false
@@ -272,7 +278,7 @@ object BalboaTcp {
       var i = 0
       while (i < n) {
         readStr() match {
-          case "T" => tpe = readUint().toInt
+          case "T" => tpe = readUintAsInt()
           case "M" => inner = readRaw()
           case k => fail(s"unknown typed-message key '$k'")
         }
@@ -295,7 +301,7 @@ object BalboaTcp {
     var i = 0
     while (i < n) {
       rd.readStr() match {
-        case "Limit" => limit = rd.readUint().toInt
+        case "Limit" => limit = rd.readUintAsInt()
         case "Qrrname" => qn = rd.readStr()
         case "Hrrname" => hn = rd.readBool()
         case "Qrdata" => qd = rd.readStr()
@@ -437,14 +443,6 @@ final class BalboaTcpServer(store: ObservationStore, port: Int = 0,
     ()
   }
 
-  private def unixSeconds(row: Row, col: String): Long =
-    row.get(row.fieldIndex(col)) match {
-      case t: java.sql.Timestamp => t.getTime / 1000L
-      case l: java.lang.Long => l / 1000000L // unix-micros projections
-      case i: java.time.Instant => i.getEpochSecond
-      case other => throw new IllegalStateException(s"bad ts: $other")
-    }
-
   /** Counts every byte written to the peer (the engine stats
     * `bytes_out` figure) without double-buffering. */
   private final class CountingStream(out: java.io.OutputStream)
@@ -475,33 +473,26 @@ final class BalboaTcpServer(store: ObservationStore, port: Int = 0,
                 "one of rrname or rdata must be given"))
               out.flush()
             } else {
-              out.write(encodeTyped(TypeQueryStreamStartResponse,
-                Array.emptyByteArray))
-              // serving fast path first (driver-local pruned parquet
-              // read — see PointReader); fall back to the Spark plan
-              // with toLocalIterator: entries stream straight to the
-              // socket, never buffered driver-side (Q12 semantics)
-              val it: Iterator[Row] = store.servePointRows(q.rrname,
-                  q.rdata, q.rrtype.filter(_.nonEmpty), q.sensorId,
-                  q.limit) match {
-                case Some(rows) => rows.iterator
-                case None =>
-                  scala.jdk.CollectionConverters.IteratorHasAsScala(
-                    store.entries(q.rrname, q.rdata,
-                      q.rrtype.filter(_.nonEmpty), q.sensorId, q.limit)
-                      .toLocalIterator()).asScala
+              val rows = store.answerPoint(q.rrname, q.rdata,
+                q.rrtype.filter(_.nonEmpty), q.sensorId, q.limit)
+              // writeTimestampSeconds refuses seconds outside u32
+              val frames =
+                try Right(rows.map(o => encodeTyped(TypeQueryStreamDataResponse,
+                  encodeEntry(Entry(o.rrname, o.rrtype, o.rdata, o.sensor_id,
+                    o.count, QueryServer.unixSeconds(o.first_seen),
+                    QueryServer.unixSeconds(o.last_seen))))))
+                catch { case e: IllegalArgumentException => Left(e.getMessage) }
+              frames match {
+                case Left(msg) =>
+                  stats.errors.incrementAndGet()
+                  out.write(encodeErrorResponse(msg))
+                case Right(data) =>
+                  out.write(encodeTyped(TypeQueryStreamStartResponse,
+                    Array.emptyByteArray))
+                  data.foreach(out.write)
+                  out.write(encodeTyped(TypeQueryStreamEndResponse,
+                    Array.emptyByteArray))
               }
-              while (it.hasNext) {
-                val r = it.next()
-                out.write(encodeTyped(TypeQueryStreamDataResponse,
-                  encodeEntry(Entry(
-                    r.getAs[String]("rrname"), r.getAs[String]("rrtype"),
-                    r.getAs[String]("rdata"), r.getAs[String]("sensor_id"),
-                    r.getAs[Long]("count"), unixSeconds(r, "first_seen"),
-                    unixSeconds(r, "last_seen")))))
-              }
-              out.write(encodeTyped(TypeQueryStreamEndResponse,
-                Array.emptyByteArray))
               out.flush()
             }
           case TypeInputRequest =>

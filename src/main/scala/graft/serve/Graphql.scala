@@ -3,9 +3,7 @@ package graft.serve
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
-
+import graft.model.Observation
 import graft.operators.ObservationStore
 
 /** Minimal executor for the reference's GraphQL query surface
@@ -623,53 +621,20 @@ object Graphql {
 
   private def renderEntries(data: ObjectNode, key: String, q: EntriesQuery,
       store: ObservationStore): Unit = {
-    // serving fast path (driver-local pruned parquet read — PointReader)
-    // when the store supports it; the Spark plan path otherwise. Fast-path
-    // rows are already materialized, so the aliases join consumes a
-    // LocalRelation of EXACTLY the returned row set — the double-execution
-    // hazard the localCheckpoint below guards against cannot arise.
-    val (rows, dfForAliases): (Seq[Row], () => org.apache.spark.sql.DataFrame) =
-      store.servePointRows(q.rrname, q.rdata, q.rrtype, q.sensorId,
-        q.limit) match {
-        case Some(fast) => (fast, () => store.entriesDfFromRows(fast))
-        case None =>
-          val entriesDf0 = store.entries(q.rrname, q.rdata, q.rrtype,
-            q.sensorId, q.limit)
-          // when aliases are requested the limited DataFrame is consumed
-          // TWICE (collect + the aliases join); without materializing it
-          // first, a binding limit over the unordered scan could select a
-          // different row set on the second execution — aliases for rows
-          // we never return, none for rows we do
-          val entriesDf =
-            if (q.aliasFields.isEmpty) entriesDf0
-            else entriesDf0.localCheckpoint(false)
-          (entriesDf.collect().toSeq, () => entriesDf)
-      }
-
-    // fast path for the aliases too: each entry's aliases are one
-    // inverted point lookup (serveAliasRows) — available exactly when
-    // the entries above came from the fast path; the Spark self-join
-    // stays the fallback
-    val aliasesByKey: Map[(String, String, String), Seq[Row]] =
+    val rows = store.answerPoint(q.rrname, q.rdata, q.rrtype, q.sensorId,
+      q.limit)
+    val aliasesByKey: Map[(String, String, String), Seq[Observation]] =
       if (q.aliasFields.isEmpty) Map.empty
-      else store.serveAliasRows(rows, q.aliasLimit).getOrElse {
-        store.aliases(dfForAliases(), perEntryLimit = q.aliasLimit).collect()
-          .groupBy(r => (r.getAs[String]("e_rrname"),
-            r.getAs[String]("e_sensor_id"), r.getAs[String]("e_rdata")))
-          .map { case (k, v) => k -> v.toSeq }
-      }
+      else store.answerAliases(rows, q.aliasLimit)
 
     val arr = data.putArray(key)
     rows.foreach { row =>
       val o = arr.addObject()
       writeFields(o, row, q.fields)
       if (q.aliasFields.nonEmpty) {
-        val k = (row.getAs[String]("rrname"), row.getAs[String]("sensor_id"),
-          row.getAs[String]("rdata"))
         val aArr = o.putArray("aliases")
-        aliasesByKey.getOrElse(k, Seq.empty).foreach { ar =>
-          writeFields(aArr.addObject(), ar, q.aliasFields)
-        }
+        aliasesByKey.getOrElse((row.rrname, row.sensor_id, row.rdata),
+          Seq.empty).foreach(ar => writeFields(aArr.addObject(), ar, q.aliasFields))
       }
     }
   }
@@ -736,30 +701,25 @@ object Graphql {
     mapper.writeValueAsString(root)
   }
 
-  private def unixSeconds(row: Row, col: String): Long = {
-    row.get(row.fieldIndex(col)) match {
-      case t: java.sql.Timestamp => t.getTime / 1000L
-      case l: java.lang.Long => l / 1000000L // already unix micros
-      case i: java.time.Instant => i.getEpochSecond
-      case other => throw new IllegalStateException(s"bad ts: $other")
-    }
-  }
-
-  private def writeFields(o: ObjectNode, row: Row, fields: Seq[String]): Unit =
+  private def writeFields(o: ObjectNode, e: Observation,
+      fields: Seq[String]): Unit = {
+    import QueryServer.unixSeconds
+    def rfc3339(ts: java.sql.Timestamp) =
+      java.time.Instant.ofEpochSecond(unixSeconds(ts)).toString
     fields.filter(validFields.contains).foreach {
-      case "count" => o.put("count", row.getAs[Long]("count"))
-      case "time_first" => o.put("time_first", unixSeconds(row, "first_seen"))
-      case "time_last" => o.put("time_last", unixSeconds(row, "last_seen"))
-      case "time_first_rfc3339" => o.put("time_first_rfc3339",
-        java.time.Instant.ofEpochSecond(unixSeconds(row, "first_seen")).toString)
-      case "time_last_rfc3339" => o.put("time_last_rfc3339",
-        java.time.Instant.ofEpochSecond(unixSeconds(row, "last_seen")).toString)
+      case "count" => o.put("count", e.count)
+      case "time_first" => o.put("time_first", unixSeconds(e.first_seen))
+      case "time_last" => o.put("time_last", unixSeconds(e.last_seen))
+      case "time_first_rfc3339" => o.put("time_first_rfc3339", rfc3339(e.first_seen))
+      case "time_last_rfc3339" => o.put("time_last_rfc3339", rfc3339(e.last_seen))
       case "id" => // synthetic, not persisted (observation.go:16): stable hash
         o.put("id", java.util.UUID.nameUUIDFromBytes(
-          (row.getAs[String]("rrname") + "\u001f" +
-            row.getAs[String]("sensor_id") + "\u001f" +
-            row.getAs[String]("rrtype") + "\u001f" +
-            row.getAs[String]("rdata")).getBytes("UTF-8")).toString)
-      case f => o.put(f, row.getAs[String](f))
+          (e.rrname + "\u001f" + e.sensor_id + "\u001f" + e.rrtype +
+            "\u001f" + e.rdata).getBytes("UTF-8")).toString)
+      case "rrname" => o.put("rrname", e.rrname)
+      case "rrtype" => o.put("rrtype", e.rrtype)
+      case "rdata" => o.put("rdata", e.rdata)
+      case "sensor_id" => o.put("sensor_id", e.sensor_id)
     }
+  }
 }

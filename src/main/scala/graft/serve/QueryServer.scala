@@ -7,10 +7,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import org.apache.spark.sql.DataFrame
-
 import graft.functions.Net
-import graft.operators.{ObservationStore, Tools}
+import graft.model.Observation
+import graft.operators.ObservationStore
 
 /** The serving layer (SURVEY.md §2.4 Q1/Q7/Q11/Q12 and §3.1/§3.3): the
   * reference's GraphQL `entries` resolver and CIRCL-compatible REST
@@ -26,14 +25,15 @@ import graft.operators.{ObservationStore, Tools}
   *    empty, NDJSON with unix-seconds ints (`query_rest.go:41-82`).
   *  - `GET /stats` — `{"total_count": N}` (Q11).
   *
-  * Result streaming (Q12): rows are written through `toLocalIterator`
-  * straight to the chunked response stream — no driver-side buffering of
-  * the result set, the Spark analogue of the reference's
-  * start/data.../end wire protocol. Concurrent queries: run the session
-  * with `spark.scheduler.mode=FAIR` (the analogue of the backend's
-  * 64-thread connection pool) and `spark.sql.adaptive.enabled=false` —
-  * AQE buys nothing for single-stage pre-pruned point scans but costs
-  * per-query driver planning (~1.5× qps when disabled, see BenchPoints).
+  * Every route answers through one [[ObservationStore]] method per
+  * query shape (`answerPoint`, `answerPrefix`, `answerCidr`): at most
+  * `limit` rows, materialized on the driver, then written as NDJSON.
+  * Concurrent queries on stores without driver-local readers: run the
+  * session with `spark.scheduler.mode=FAIR` (the analogue of the
+  * backend's 64-thread connection pool) and
+  * `spark.sql.adaptive.enabled=false` — AQE buys nothing for
+  * single-stage pre-pruned point scans but costs per-query driver
+  * planning.
   */
 final class QueryServer(store: ObservationStore, port: Int = 0,
     statsIntervalMillis: Long = 10000L,
@@ -100,31 +100,16 @@ final class QueryServer(store: ObservationStore, port: Int = 0,
               "rrname_prefix must be non-empty and alone\n")
           else
             // prefix range scan (extension; the reference's forward
-            // scan shape) — fast path with plan fallback, like points;
-            // rrtype/sensor_id apply as residual equality filters on
-            // BOTH paths (silently ignoring them would serve a
-            // superset as if it were the answer)
-            store.servePrefix(prefix.get, limit.get, opt("rrtype"),
-              opt("sensor_id")) match {
-              case Some(obs) =>
-                streamNdjsonObs(ex, obs, notFoundOnEmpty = false)
-              case None => streamNdjson(ex,
-                store.entriesPrefix(prefix.get, limit.get, opt("rrtype"),
-                  opt("sensor_id")),
-                notFoundOnEmpty = false)
-            }
+            // scan shape); rrtype/sensor_id apply as residual equality
+            // filters (silently ignoring them would serve a superset as
+            // if it were the answer)
+            writeNdjson(ex, store.answerPrefix(prefix.get, limit.get,
+              opt("rrtype"), opt("sensor_id")), notFoundOnEmpty = false)
         }
         else if (rrname.isEmpty && rdata.isEmpty)
           respond(ex, 400, "one of rrname or rdata is required\n")
-        else store.servePoint(rrname, rdata, opt("rrtype"),
-          opt("sensor_id"), limit.get) match {
-          // serving fast path (driver-local pruned parquet read)
-          case Some(obs) => streamNdjsonObs(ex, obs, notFoundOnEmpty = false)
-          case None =>
-            val df = store.entries(rrname, rdata, opt("rrtype"),
-              opt("sensor_id"), limit.get)
-            streamNdjson(ex, df, notFoundOnEmpty = false)
-        }
+        else writeNdjson(ex, store.answerPoint(rrname, rdata, opt("rrtype"),
+          opt("sensor_id"), limit.get), notFoundOnEmpty = false)
       }
     })
 
@@ -134,25 +119,18 @@ final class QueryServer(store: ObservationStore, port: Int = 0,
       else parseLimit(queryParam(ex, "limit")) match {
         case None => respond(ex, 400, "invalid limit\n")
         case Some(l) =>
-          // CIRCL bag semantics on the fast path: subject as rrname THEN
-          // as rdata, concatenated (duplicates kept — query_rest.go:58-70)
-          (store.servePoint(rrname = Some(subject), limit = l),
-            store.servePoint(rdata = Some(subject), limit = l)) match {
-            case (Some(asName), Some(asData)) =>
-              streamNdjsonObs(ex, asName ++ asData, notFoundOnEmpty = true)
-            case _ =>
-              streamNdjson(ex, store.restQuery(subject, l),
-                notFoundOnEmpty = true)
-          }
+          // CIRCL bag semantics: subject as rrname THEN as rdata,
+          // concatenated (duplicates kept — query_rest.go:58-70)
+          writeNdjson(ex, store.answerPoint(rrname = Some(subject), limit = l) ++
+            store.answerPoint(rdata = Some(subject), limit = l),
+            notFoundOnEmpty = true)
       }
     })
 
     // Server-side CIDR range query (Q9 as an HTTP surface — the reference
     // can only expand client-side): `GET /pdns/cidr/<block>[?limit=]`,
     // v4 or v6, NDJSON like /pdns/query. The block's '/' arrives as a
-    // path segment, so everything after the prefix is the CIDR. Fast path
-    // (driver-local fan over the inverted copy) first; stores without
-    // point readers fall back to the cidrQuery plan.
+    // path segment, so everything after the prefix is the CIDR.
     server.createContext("/pdns/cidr/", (ex: HttpExchange) => handle(ex) {
       val cidr = ex.getRequestURI.getPath.stripPrefix("/pdns/cidr/")
       val limit = parseLimit(queryParam(ex, "limit"))
@@ -160,7 +138,7 @@ final class QueryServer(store: ObservationStore, port: Int = 0,
       else if (limit.isEmpty) respond(ex, 400, "invalid limit\n")
       else {
         // parse errors (bad prefix length, malformed address) are client
-        // errors, caught before either path reads anything
+        // errors, caught before anything is read
         val bad =
           try {
             if (cidr.contains(':')) Net.cidrBounds6(cidr) else Net.cidrBounds(cidr)
@@ -172,11 +150,8 @@ final class QueryServer(store: ObservationStore, port: Int = 0,
             case e: MatchError => Some(e.getMessage)
           }
         if (bad.isDefined) respond(ex, 400, s"bad cidr: ${bad.get}\n")
-        else store.serveCidr(cidr, limit.get) match {
-          case Some(obs) => streamNdjsonObs(ex, obs, notFoundOnEmpty = true)
-          case None => streamNdjson(ex, store.cidrQuery(cidr, limit.get),
-            notFoundOnEmpty = true)
-        }
+        else writeNdjson(ex, store.answerCidr(cidr, limit.get),
+          notFoundOnEmpty = true)
       }
     })
 
@@ -254,29 +229,10 @@ final class QueryServer(store: ObservationStore, port: Int = 0,
     finally ex.close()
   }
 
-  /** Stream rows as NDJSON without materializing the result set on the
-    * driver: unix-seconds rendering via [[Tools.jsonize]], rows pulled
-    * partition-by-partition with `toLocalIterator`. */
-  private def streamNdjson(ex: HttpExchange, df: DataFrame,
+  /** NDJSON in the reference's dump shape: field order, unix-seconds
+    * ints (`observation/observation.go:26-37`). */
+  private def writeNdjson(ex: HttpExchange, obs: Seq[Observation],
       notFoundOnEmpty: Boolean): Unit = {
-    val it = Tools.jsonizeAuto(df).toLocalIterator()
-    if (!it.hasNext && notFoundOnEmpty) { respond(ex, 404, "not found\n"); return }
-    ex.getResponseHeaders.set("Content-Type", "application/x-ndjson")
-    ex.sendResponseHeaders(200, 0) // chunked
-    val out: OutputStream = ex.getResponseBody
-    while (it.hasNext) {
-      val line = it.next().getString(0).getBytes(UTF_8)
-      out.write(line)
-      out.write('\n')
-      stats.bytesOut.addAndGet(line.length + 1L)
-    }
-    out.close()
-  }
-
-  /** Fast-path NDJSON: same shape (field order, unix-seconds ints) as
-    * [[Tools.jsonize]], rendered on the serving thread. */
-  private def streamNdjsonObs(ex: HttpExchange,
-      obs: Seq[graft.model.Observation], notFoundOnEmpty: Boolean): Unit = {
     if (obs.isEmpty && notFoundOnEmpty) { respond(ex, 404, "not found\n"); return }
     ex.getResponseHeaders.set("Content-Type", "application/x-ndjson")
     ex.sendResponseHeaders(200, 0) // chunked
@@ -286,8 +242,8 @@ final class QueryServer(store: ObservationStore, port: Int = 0,
       n.put("rrname", o.rrname); n.put("rdata", o.rdata)
       n.put("rrtype", o.rrtype); n.put("sensor_id", o.sensor_id)
       n.put("count", o.count)
-      n.put("time_first", Math.floorDiv(o.first_seen.getTime, 1000L))
-      n.put("time_last", Math.floorDiv(o.last_seen.getTime, 1000L))
+      n.put("time_first", QueryServer.unixSeconds(o.first_seen))
+      n.put("time_last", QueryServer.unixSeconds(o.last_seen))
       val line = mapper.writeValueAsString(n).getBytes(UTF_8)
       out.write(line)
       out.write('\n')
@@ -309,6 +265,11 @@ final class QueryServer(store: ObservationStore, port: Int = 0,
 }
 
 object QueryServer {
+  /** The one seconds rule of every serving surface (REST, GraphQL, the
+    * TCP wire): floor, so 1969-12-31T23:59:59.5Z is -1, not 0. */
+  private[serve] def unixSeconds(ts: java.sql.Timestamp): Long =
+    Math.floorDiv(ts.getTime, 1000L)
+
   /** JDK HttpServer slow-client limits, the reference's 5 s read / 10 s
     * write (`query_graphql.go:410-412`). `sun.net.httpserver.maxReqTime`
     * bounds request receipt, `maxRspTime` bounds response delivery; both

@@ -16,6 +16,48 @@ import graft.serve.BalboaTcp._
 class BalboaTcpDiskSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
+  test("TCP answers from a disk store equal the in-memory plan fallback") {
+    import spark.implicits._
+    val ts = Timestamp.valueOf("2018-01-01 00:00:00")
+    val agg = ObservationStore.aggregate(Seq(
+      ("foo.bar", "s1", "A", "1.2.3.4", 3L, ts, ts),
+      ("baz.io", "s1", "A", "1.2.3.4", 1L, ts, ts),
+      ("foo.bar", "s2", "AAAA", "2001:db8::1", 2L, ts, ts)
+    ).toDF("rrname", "sensor_id", "rrtype", "rdata", "count",
+      "timestamp_start", "timestamp_end"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-tcpeq").toString
+    ObservationStore.writeDual(agg, dir, numBuckets = 4)
+    val disk = ObservationStore.load(spark, dir)
+    assert(disk.servePoint(rrname = Some("foo.bar")).isDefined)
+    val servers = Seq(ObservationStore.inMemory(agg), disk)
+      .map { st => val s = new BalboaTcpServer(st); s.start(); s }
+    try {
+      def answer(srv: BalboaTcpServer, q: QueryRequest): Seq[Entry] = {
+        val sock = new Socket("localhost", srv.boundPort)
+        try {
+          sock.getOutputStream.write(encodeQueryRequest(q))
+          sock.getOutputStream.flush()
+          val rd = new MsgReader(new DataInputStream(
+            new java.io.BufferedInputStream(sock.getInputStream)))
+          val (t0, _) = rd.readTyped()
+          assert(t0 == TypeQueryStreamStartResponse)
+          Iterator.continually(rd.readTyped())
+            .takeWhile(_._1 == TypeQueryStreamDataResponse)
+            .map(m => decodeEntry(m._2)).toSeq.sortBy(_.toString)
+        } finally sock.close()
+      }
+      for (q <- Seq(
+          QueryRequest(Some("foo.bar"), None, None, None, 1000),
+          QueryRequest(None, Some("1.2.3.4"), None, None, 1000),
+          QueryRequest(None, Some("1.2.3.4"), None, Some("s1"), 1000),
+          QueryRequest(Some("absent"), None, None, None, 1000))) {
+        val Seq(mem, dsk) = servers.map(answer(_, q))
+        assert(mem == dsk, q)
+        assert(mem.nonEmpty == q.rrname.forall(_ != "absent"), q)
+      }
+    } finally servers.foreach(_.stop())
+  }
+
   test("concurrent point queries against a disk store all stream cleanly") {
     import spark.implicits._
     val ts = Timestamp.valueOf("2018-01-01 00:00:00")

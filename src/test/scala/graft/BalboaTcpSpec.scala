@@ -34,23 +34,42 @@ class BalboaTcpSpec extends AnyFunSuite {
     val s = new BalboaTcpServer(store); s.start(); s
   }
 
-  private def roundTrip(req: Array[Byte]): Seq[(Int, Array[Byte])] = {
-    val sock = new Socket("localhost", server.boundPort)
+  private def roundTrip(req: Array[Byte],
+      port: Int = server.boundPort): Seq[(Int, Array[Byte])] = {
+    val sock = new Socket("localhost", port)
     try {
       sock.getOutputStream.write(req)
       sock.getOutputStream.flush()
-      val rd = new MsgReader(new DataInputStream(
-        new java.io.BufferedInputStream(sock.getInputStream)))
-      val out = Seq.newBuilder[(Int, Array[Byte])]
-      var done = false
-      while (!done) {
-        val (tpe, inner) = rd.readTyped()
-        out += ((tpe, inner))
-        if (tpe == TypeQueryStreamEndResponse || tpe == TypeErrorResponse)
-          done = true
-      }
-      out.result()
+      readResponse(new MsgReader(new DataInputStream(
+        new java.io.BufferedInputStream(sock.getInputStream))))
     } finally sock.close()
+  }
+
+  private def readTypedInner(msg: Array[Byte]): Array[Byte] =
+    new MsgReader(new DataInputStream(
+      new java.io.ByteArrayInputStream(msg))).readTyped()._2
+
+  /** Messages of one response read off an open connection: through the
+    * end frame, or the error frame. */
+  private def readResponse(rd: MsgReader): Seq[(Int, Array[Byte])] = {
+    val out = Seq.newBuilder[(Int, Array[Byte])]
+    var done = false
+    while (!done) {
+      val (tpe, inner) = rd.readTyped()
+      out += ((tpe, inner))
+      done = tpe == TypeQueryStreamEndResponse || tpe == TypeErrorResponse
+    }
+    out.result()
+  }
+
+  /** An aggregate written as a disk store, so a server answers on the
+    * PointReader fast path. */
+  private def diskStore(agg: org.apache.spark.sql.DataFrame): ObservationStore = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tcp").toString
+    ObservationStore.writeDual(agg, dir, numBuckets = 4)
+    val st = ObservationStore.load(spark, dir)
+    assert(st.servePoint(rrname = Some("x")).isDefined)
+    st
   }
 
   test("entry encoding is byte-identical to protocol.c's mpack output") {
@@ -104,6 +123,76 @@ class BalboaTcpSpec extends AnyFunSuite {
       QueryRequest(None, Some("1.2.3.4"), None, None, 1)))
       .filter(_._1 == TypeQueryStreamDataResponse)
     assert(limited.size == 1)
+  }
+
+  test("a Limit past Int.MaxValue clamps instead of wrapping") {
+    // hand-encoded QueryRequest {Limit, Qrdata, Hrdata}: uint32 2^32-1
+    // (wraps to -1 as an Int) and uint64 2^63 (negative as a Long)
+    def request(limit: Array[Int]): Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream()
+      def str(v: String): Unit = {
+        out.write(0xa0 | v.length); out.write(v.getBytes) // fixstr
+      }
+      out.write(0x83)
+      str("Limit"); limit.foreach(out.write)
+      str("Qrdata"); str("1.2.3.4")
+      str("Hrdata"); out.write(0xc3) // true
+      encodeTyped(TypeQueryRequest, out.toByteArray)
+    }
+    val u32 = Array(0xce, 0xff, 0xff, 0xff, 0xff)
+    val u64 = Array(0xcf, 0x80, 0, 0, 0, 0, 0, 0, 0)
+    assert(decodeQueryRequest(readTypedInner(request(u32))).limit == Int.MaxValue)
+    assert(decodeQueryRequest(readTypedInner(request(u64))).limit == Int.MaxValue)
+    val disk = new BalboaTcpServer(diskStore(store.forward))
+    disk.start()
+    try {
+      for (port <- Seq(server.boundPort, disk.boundPort); limit <- Seq(u32, u64)) {
+        val msgs = roundTrip(request(limit), port)
+        assert(msgs.head._1 == TypeQueryStreamStartResponse,
+          msgs.collect { case (TypeErrorResponse, m) => decodeErrorResponse(m) })
+        assert(msgs.last._1 == TypeQueryStreamEndResponse)
+        assert(msgs.filter(_._1 == TypeQueryStreamDataResponse)
+          .map(m => decodeEntry(m._2).rrname).sorted == Seq("baz.io", "foo.bar"))
+      }
+    } finally disk.stop()
+  }
+
+  test("an entry the wire cannot carry fails only its query, not the connection") {
+    import spark.implicits._
+    def at(s: String) = Timestamp.from(java.time.Instant.parse(s))
+    val far = at("2107-01-01T00:00:00Z")
+    val agg = ObservationStore.aggregate(Seq(
+      ("pre.example", "s1", "A", "10.0.0.1", 1L, at("1969-12-31T23:59:58Z")),
+      ("far.example", "s1", "A", "10.0.0.2", 1L, far),
+      ("ok.example", "s1", "A", "10.0.0.3", 1L, at("2018-01-01T00:00:00Z"))
+    ).toDF("rrname", "sensor_id", "rrtype", "rdata", "count", "ts"))
+    for (st <- Seq(ObservationStore.inMemory(agg), diskStore(agg))) {
+      val srv = new BalboaTcpServer(st)
+      srv.start()
+      val sock = new Socket("localhost", srv.boundPort)
+      try {
+        val rd = new MsgReader(new DataInputStream(
+          new java.io.BufferedInputStream(sock.getInputStream)))
+        def ask(rrname: String): Seq[(Int, Array[Byte])] = {
+          sock.getOutputStream.write(encodeQueryRequest(
+            QueryRequest(Some(rrname), None, None, None, 10)))
+          sock.getOutputStream.flush()
+          readResponse(rd)
+        }
+        for ((name, sec) <- Seq("pre.example" -> -2L,
+            "far.example" -> far.getTime / 1000L)) {
+          val msgs = ask(name)
+          assert(msgs.map(_._1) == Seq(TypeErrorResponse), name)
+          val err = decodeErrorResponse(msgs.head._2)
+          assert(err.contains("out of u32 range") && err.contains(sec.toString), err)
+          // the same connection keeps serving
+          val ok = ask("ok.example")
+          assert(ok.map(_._1) == Seq(TypeQueryStreamStartResponse,
+            TypeQueryStreamDataResponse, TypeQueryStreamEndResponse), name)
+          assert(decodeEntry(ok(1)._2).firstSeen == 1514764800L)
+        }
+      } finally { sock.close(); srv.stop() }
+    }
   }
 
   test("missing rrname AND rdata -> ErrorResponse, like the reference") {

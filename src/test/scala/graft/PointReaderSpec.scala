@@ -235,9 +235,10 @@ class PointReaderSpec extends AnyFunSuite {
           r.getAs[Timestamp]("last_seen")))) }
     def fastAliases(rrname: String, perEntryLimit: Int)
         : Map[(String, String, String), Seq[Seq[Any]]] = {
-      val rows = store.servePointRows(rrname = Some(rrname)).get
-      store.serveAliasRows(rows, perEntryLimit).get
-        .collect { case (k, v) if v.nonEmpty => k -> sortedSet(v) }
+      val rows = store.servePoint(rrname = Some(rrname)).get
+      store.answerAliases(rows, perEntryLimit)
+        .collect { case (k, v) if v.nonEmpty =>
+          k -> sortedSet(v.map(Row.fromTuple)) }
     }
     // foo/1.2.3.4 aliases to baz (same rdata+sensor abc); the AAAA entry
     // and the xyz-sensor entry resolve their own (possibly empty) groups
@@ -249,10 +250,10 @@ class PointReaderSpec extends AnyFunSuite {
     // cap 0 = no aliases survive anywhere
     assert(fastAliases("foo", 0).isEmpty)
     // non-aliasable parents (rrtype not in A/AAAA) produce no groups
-    val aaaaOnly = store.servePointRows(rrname = Some("foo"),
+    val aaaaOnly = store.servePoint(rrname = Some("foo"),
       rrtype = Some("AAAA")).get
-    assert(store.serveAliasRows(aaaaOnly, 1000, aliasableTypes = Seq("A"))
-      .get.isEmpty)
+    assert(store.answerAliases(aaaaOnly, 1000, aliasableTypes = Seq("A"))
+      .isEmpty)
   }
 
   test("servePoint honors limit") {
@@ -293,26 +294,6 @@ class PointReaderSpec extends AnyFunSuite {
     val re = ObservationStore.load(spark, dir)
     assert(sortedSet(store.servePointRows(rrname = Some("new")).get) ==
       sortedSet(re.entries(rrname = Some("new")).collect().toSeq))
-  }
-
-  test("servePointFanOut: bag union of per-store fast lookups, Q5 contract") {
-    val (_, a) = freshStore()
-    val (_, b) = freshStore() // same content → duplicates must be KEPT
-    val fast = a.servePointFanOut(Seq(a, b), rrname = Some("foo"),
-      rdata = None).get
-    val plan = a.fanOut(Seq(a, b), rrname = Some("foo"), rdata = None)
-      .collect().toSeq
-    assert(fast.size == 6) // 3 matching rows × 2 stores, duplicates kept
-    // same multiset as the plan-path fan-out
-    assert(fast.map(o => (o.rrname, o.sensor_id, o.rrtype, o.rdata,
-        o.count)).sorted ==
-      plan.map(r => (r.getAs[String]("rrname"), r.getAs[String]("sensor_id"),
-        r.getAs[String]("rrtype"), r.getAs[String]("rdata"),
-        r.getAs[Long]("count"))).sorted)
-    // any in-memory member disables the fast path
-    val mem = graft.operators.ObservationStore.inMemory(
-      a.forward.drop("bucket", "rdata_ip", "rdata_ip6"))
-    assert(a.servePointFanOut(Seq(a, mem), Some("foo"), None).isEmpty)
   }
 
   test("sorted-dictionary probes: unsigned order, prefix range, fallback") {

@@ -177,7 +177,9 @@ class QueryServerSpec extends AnyFunSuite {
           "/pdns/cidr/2001:db8::/64" -> 404, "/pdns/cidr/nonsense" -> 400,
           "/pdns/cidr/1.2.3.0/33" -> 400, "/pdns/cidr/::g/64" -> 400,
           "/pdns/cidr/1.2.3.0/24?limit=0" -> 400,
-          "/pdns/cidr/1.2.3.0/24?limit=x" -> 400)) {
+          "/pdns/cidr/1.2.3.0/24?limit=x" -> 400,
+          "/pdns/query/1.2.3.4" -> 200, "/pdns/query/absent" -> 404,
+          "/pdns/query/foo?limit=1" -> 200)) {
         val (mem, dsk) = (get(path), onDisk(path))
         assert(mem.statusCode() == status, s"$path in memory: ${mem.body()}")
         assert(dsk.statusCode() == status, s"$path on disk: ${dsk.body()}")
@@ -193,6 +195,37 @@ class QueryServerSpec extends AnyFunSuite {
         .split("\n").length == 2)
       assert(get("/pdns/cidr/1.2.3.0/24?limit=2").body().trim
         .split("\n").length == 2)
+      assert(onDisk("/pdns/query/1.2.3.4?limit=1").body().trim
+        .split("\n").length == 1)
+      assert(get("/pdns/query/1.2.3.4?limit=1").body().trim
+        .split("\n").length == 1)
+      // POST routes: residuals on a point and on a prefix, and GraphQL
+      // aliases; GraphQL answers one JSON document, so its entries are
+      // compared as a sorted list
+      def onDiskPost(path: String, body: String): HttpResponse[String] =
+        client.send(HttpRequest.newBuilder(
+          URI.create(s"http://localhost:${diskSrv.boundPort}$path"))
+          .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+          HttpResponse.BodyHandlers.ofString())
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      def lines(path: String, r: HttpResponse[String]): Seq[String] =
+        if (path != "/graphql") r.body().trim.split("\n").sorted.toSeq
+        else {
+          val es = mapper.readTree(r.body()).path("data").path("entries")
+          (0 until es.size()).map(i => es.get(i).toString).sorted
+        }
+      for ((path, body) <- Seq(
+          "/query" -> """{"rdata": "1.2.3.4", "rrtype": "A", "sensor_id": "abc"}""",
+          "/query" -> """{"rrname_prefix": "ba", "rrtype": "A", "sensor_id": "abc"}""",
+          "/graphql" -> """query { entries(rdata: "1.2.3.4") { rrname rdata
+            | count time_first time_last aliases(limit: 1) { rrname rrtype
+            | count time_last_rfc3339 } } }""".stripMargin)) {
+        val (mem, dsk) = (post(path, body), onDiskPost(path, body))
+        assert(mem.statusCode() == 200, s"$path $body in memory: ${mem.body()}")
+        assert(dsk.statusCode() == 200, s"$path $body on disk: ${dsk.body()}")
+        assert(lines(path, mem).size == 2, s"$path $body: ${mem.body()}")
+        assert(lines(path, mem) == lines(path, dsk), s"$path $body")
+      }
     } finally diskSrv.stop()
   }
 
@@ -562,6 +595,45 @@ class QueryServerSpec extends AnyFunSuite {
       // miss → 404 on REST
       assert(g("/pdns/query/absent").statusCode() == 404)
     } finally srv.stop()
+  }
+
+  test("timestamps floor to unix seconds on REST, POST /query and GraphQL, both paths") {
+    import spark.implicits._
+    // half a second before the epoch: floor gives -1, truncation 0
+    val ts = Timestamp.from(java.time.Instant.parse("1969-12-31T23:59:59.500Z"))
+    val agg = ObservationStore.aggregate(Seq(
+      ("pre.example", "s1", "A", "10.0.0.1", 1L, ts, ts)
+    ).toDF("rrname", "sensor_id", "rrtype", "rdata", "count",
+      "timestamp_start", "timestamp_end"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-qs-floor").toString
+    ObservationStore.writeDual(agg, dir, numBuckets = 4)
+    val disk = ObservationStore.load(spark, dir)
+    assert(disk.servePoint(rrname = Some("pre.example")).isDefined)
+    for (st <- Seq(ObservationStore.inMemory(agg), disk)) {
+      val srv = new QueryServer(st)
+      srv.start()
+      try {
+        def send(b: HttpRequest.Builder) = client.send(b.build(),
+          HttpResponse.BodyHandlers.ofString())
+        def at(path: String) = HttpRequest.newBuilder(
+          URI.create(s"http://localhost:${srv.boundPort}$path"))
+        val rest = send(at("/pdns/query/pre.example").GET())
+        val point = send(at("/query").POST(HttpRequest.BodyPublishers
+          .ofString("""{"rdata": "10.0.0.1"}""")))
+        val gql = send(at("/graphql").POST(HttpRequest.BodyPublishers
+          .ofString("""{ entries(rrname: "pre.example") { time_first
+            | time_last time_first_rfc3339 } }""".stripMargin)))
+        for (r <- Seq(rest, point)) {
+          assert(r.statusCode() == 200, r.body())
+          assert(r.body().contains("\"time_first\":-1,\"time_last\":-1}"),
+            r.body())
+        }
+        assert(gql.statusCode() == 200, gql.body())
+        assert(gql.body() == """{"data":{"entries":[{"time_first":-1,""" +
+          """"time_last":-1,"time_first_rfc3339":"1969-12-31T23:59:59Z"}]}}""",
+          gql.body())
+      } finally srv.stop()
+    }
   }
 
   test("slow-client timeouts configured to reference parity (5s/10s)") {
