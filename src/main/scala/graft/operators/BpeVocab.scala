@@ -23,32 +23,33 @@ import org.apache.spark.sql.SparkSession
 object BpeVocab {
 
   /** Write `merges` (learned order, as returned by the trainers) as the
-    * vocabulary at `path`, replacing any previous table atomically. */
+    * vocabulary at `path`, replacing any previous table atomically. A
+    * writer resolves committed leftovers first (the writeIndex rule: a
+    * stale committed staging must not replay over the new table). */
   def write(spark: SparkSession, merges: Seq[(String, String, Long)],
       path: String): Unit = {
     require(merges.nonEmpty, "BpeVocab.write: empty merge table")
-    // a writer resolves committed leftovers first (the writeIndex rule:
-    // a stale committed staging must not replay over the new table)
-    if (ObservationStore.pathExists(spark, path))
-      recover(spark, path, deleteUncommitted = true)
-    val targetEpoch = readEpoch(spark, path).getOrElse(0L) + 1L
-    val staging = s"$path/_staging_$targetEpoch"
-    val (f, sp) = ObservationStore.fs(spark, staging)
-    if (f.exists(sp)) f.delete(sp, true)
-    import spark.implicits._
-    merges.zipWithIndex
-      .map { case ((a, b, n), i) => (i + 1L, a, b, n) }
-      .toDF("rank", "a", "b", "n")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$staging/merges")
-    val (mf, mp) = ObservationStore.fs(spark, s"$staging/_manifest.json")
-    val out = mf.create(mp, true)
-    try out.write(
-      s"""{"target_epoch":$targetEpoch,"staged_tables":"merges"}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-    applyStaged(spark, path, staging)
+    StagedCommit.mutate(spark, path, Vocab)(
+      Some(stage(spark, merges, path)) -> ()): Unit
   }
+
+  /** Stage `merges` as the next generation's table and commit the
+    * manifest; package-visible so crash tests can stop here. */
+  private[graft] def stage(spark: SparkSession,
+      merges: Seq[(String, String, Long)], path: String): String =
+    StagedCommit.stage(spark, path, None) { stg =>
+      import spark.implicits._
+      merges.zipWithIndex
+        .map { case ((a, b, n), i) => (i + 1L, a, b, n) }
+        .toDF("rank", "a", "b", "n")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"${stg.dir}/merges")
+      Some(StagedCommit.Manifest(Seq("staged_tables" -> Seq("merges")))) -> ()
+    }._1.get
+
+  /** The vocabulary's commit shape: one whole table per generation. */
+  private val Vocab = StagedCommit.Family(Seq(
+    StagedCommit.PieceList("staged_tables")))
 
   /** Load the vocabulary back in learned order, `(a, b, n)` — the exact
     * shape the trainers return, so `write(load(...))` is identity and
@@ -70,41 +71,10 @@ object BpeVocab {
     load(spark, path).map { case (a, b, _) => (a, b) }
 
   /** Vocabulary generation: advanced once per committed [[write]]. */
-  def readEpoch(spark: SparkSession, path: String): Option[Long] = {
-    val (f, p) = ObservationStore.fs(spark, s"$path/_graft_meta.json")
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val content =
-        try new String(in.readAllBytes(), "UTF-8")
-        finally in.close()
-      """"epoch"\s*:\s*(\d+)""".r.findFirstMatchIn(content)
-        .map(_.group(1).toLong)
-    }
-  }
-
-  private def writeMeta(spark: SparkSession, path: String,
-      epoch: Long): Unit = {
-    val (f, p) = ObservationStore.fs(spark, s"$path/_graft_meta.json")
-    val out = f.create(p, true)
-    try out.write(s"""{"epoch":$epoch}""".getBytes("UTF-8"))
-    finally out.close()
-  }
+  def readEpoch(spark: SparkSession, path: String): Option[Long] =
+    StagedCommit.metaField(spark, path, "epoch")
 
   private def recover(spark: SparkSession, path: String,
       deleteUncommitted: Boolean): Unit =
-    StagedCommit.recover(spark, path, deleteUncommitted)(
-      staging => applyStaged(spark, path, staging))
-
-  private def applyStaged(spark: SparkSession, path: String,
-      staging: String): Unit = {
-    val manifest = StagedCommit.readManifest(spark, staging)
-    val targetEpoch = StagedCommit.numField(manifest, "target_epoch")
-    val pieces = StagedCommit.listField(manifest, "staged_tables")
-      .getOrElse(throw new StagedCommit.TornManifest(
-        s"staged vocab manifest missing staged_tables: $manifest"))
-    StagedCommit.applyPieces(spark, path, staging, pieces, targetEpoch,
-      () => readEpoch(spark, path),
-      gen => writeMeta(spark, path, gen))
-  }
+    StagedCommit.recover(spark, path, Vocab, deleteUncommitted)
 }

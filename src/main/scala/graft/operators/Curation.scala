@@ -909,15 +909,19 @@ object Curation {
     c1.agg(count(lit(1)).cast("long").as("vsz"))
       .write.mode("overwrite").parquet(s"$path/stats")
     // a rebuild advances the generation and PRESERVES the merge
-    // high-water mark (writeIndexMeta keeps a recorded batch id when
-    // none is passed) — the band-index replay lesson. The meta write is
-    // LAST and carries the builder's batch id atomically, so a
-    // streaming first batch that crashed mid-build replays as a clean
-    // rebuild (meta absent) or an exactly-once skip (meta present) —
-    // never as a double-counting merge.
-    Retrieval.writeIndexMeta(spark0, path,
-      Retrieval.readIndexEpoch(spark0, path).getOrElse(0L) + 1L, batchId)
+    // high-water mark (a meta write keeps a recorded batch id when none
+    // is passed) — the band-index replay lesson. The meta write is LAST
+    // and carries the builder's batch id atomically, so a streaming
+    // first batch that crashed mid-build replays as a clean rebuild
+    // (meta absent) or an exactly-once skip (meta present) — never as a
+    // double-counting merge.
+    StagedCommit.writeBuildMeta(spark0, path,
+      StagedCommit.readMeta(spark0, path), batchId = batchId)
   }
+
+  /** The LM's commit shape: three whole tables per generation. */
+  private val Lm = StagedCommit.Family(Seq(
+    StagedCommit.PieceList("staged_tables")))
 
   /** Incremental LM maintenance: fold a batch of NEW documents into the
     * persisted count tables — counts merge ADDITIVELY (one vocabulary-
@@ -926,18 +930,13 @@ object Curation {
     * tables elsewhere, commit by manifest, swap idempotently, bump the
     * generation LAST — a crash anywhere replays or discards cleanly and
     * a scorer never sees bigram counts from one generation with unigram
-    * counts from another. `batchId` gives foreachBatch-replay
-    * exactly-once (the [[Retrieval.mergeIndex]] contract: an
-    * already-committed batch id is skipped, not double-counted). */
+    * counts from another. `batchId` gives stream-replay exactly-once
+    * (the [[Retrieval.mergeIndex]] contract: an already-committed batch
+    * id is skipped, not double-counted). */
   def mergeLm(spark: SparkSession, path: String, batch: DataFrame,
-      textCol: String, batchId: Option[Long] = None): Unit = {
-    recoverLm(spark, path, deleteUncommitted = true)
-    if (batchId.exists(bid =>
-        Retrieval.readIndexBatchId(spark, path).exists(_ >= bid)))
-      return
-    applyStagedLmMerge(spark, path,
-      stageLmMerge(spark, path, batch, textCol, batchId))
-  }
+      textCol: String, batchId: Option[Long] = None): Unit =
+    StagedCommit.mutate(spark, path, Lm, batchId)(
+      Some(stageLmMerge(spark, path, batch, textCol, batchId)) -> ()): Unit
 
   /** Stage the merged LM tables and commit the manifest; package-visible
     * so crash tests can stop here (the stageIndexMerge convention). */
@@ -945,32 +944,32 @@ object Curation {
       batch: DataFrame, textCol: String,
       batchId: Option[Long] = None): String = {
     require(!batch.isEmpty, "mergeLm: batch is empty")
-    val targetGen = Retrieval.readIndexEpoch(spark, path).getOrElse(0L) + 1L
-    val staging = s"$path/_staging_$targetGen"
-    val (f, sp) = ObservationStore.fs(spark, staging)
-    if (f.exists(sp)) f.delete(sp, true)
-    spark.read.parquet(s"$path/bigrams")
-      .unionAll(lmBigramCounts(batch, textCol))
-      .groupBy(col("w1"), col("w2"))
-      .agg(sum(col("c2")).cast("long").as("c2"))
-      .write.mode("overwrite").parquet(s"$staging/bigrams")
-    val mergedC1 = spark.read.parquet(s"$path/unigrams")
-      .unionAll(lmUnigramCounts(batch, textCol))
-      .groupBy(col("word")).agg(sum(col("c1")).cast("long").as("c1"))
-      .localCheckpoint(false) // feeds the table AND the vocab recount
-    mergedC1.write.mode("overwrite").parquet(s"$staging/unigrams")
-    mergedC1.agg(count(lit(1)).cast("long").as("vsz"))
-      .write.mode("overwrite").parquet(s"$staging/stats")
-    val bid = batchId.map(b => s""","batch_id":$b""").getOrElse("")
-    val (mf, mp) = ObservationStore.fs(spark, s"$staging/_manifest.json")
-    val out = mf.create(mp, true)
-    try out.write(
-      (s"""{"target_epoch":$targetGen,""" +
-        s""""staged_tables":"bigrams,unigrams,stats"$bid}""")
-        .getBytes("UTF-8"))
-    finally out.close()
-    staging
+    StagedCommit.stage(spark, path, batchId) { stg =>
+      spark.read.parquet(s"$path/bigrams")
+        .unionAll(lmBigramCounts(batch, textCol))
+        .groupBy(col("w1"), col("w2"))
+        .agg(sum(col("c2")).cast("long").as("c2"))
+        .write.mode("overwrite").parquet(s"${stg.dir}/bigrams")
+      val mergedC1 = spark.read.parquet(s"$path/unigrams")
+        .unionAll(lmUnigramCounts(batch, textCol))
+        .groupBy(col("word")).agg(sum(col("c1")).cast("long").as("c1"))
+        .localCheckpoint(false) // feeds the table AND the vocab recount
+      writeLmUnigrams(mergedC1, stg)
+      Some(LmManifest) -> ()
+    }._1.get
   }
+
+  /** The unigram table and the vocabulary size counted from it. */
+  private def writeLmUnigrams(c1: DataFrame,
+      stg: StagedCommit.Staging): Unit = {
+    c1.write.mode("overwrite").parquet(s"${stg.dir}/unigrams")
+    c1.agg(count(lit(1)).cast("long").as("vsz"))
+      .write.mode("overwrite").parquet(s"${stg.dir}/stats")
+  }
+
+  private val LmManifest =
+    StagedCommit.Manifest(Seq("staged_tables" ->
+      Seq("bigrams", "unigrams", "stats")))
 
   /** Retraction on the persisted LM tables — the statistics-exact
     * delete ([[Retrieval.deleteFromIndex]]'s n-gram twin): the counts
@@ -986,73 +985,43 @@ object Curation {
     * never-indexed guard).
     *
     * `batchId` makes the delete-ONCE subtraction replay-safe — the
-    * mergeLm/foreachBatch contract applied to retraction: the id
-    * commits atomically with the generation, so a Spark-retried
-    * deletion batch (or a crashed-and-retried [[graft.operators.Forget
+    * mergeLm stream contract applied to retraction: the id commits
+    * atomically with the generation, so a Spark-retried deletion batch
+    * (or a crashed-and-retried [[graft.operators.Forget
     * .forgetDocuments]] fan-out) skips instead of refusing on the
     * negative-count guard. The id space is the artifact's one monotone
     * counter, shared with merges. */
   def deleteFromLm(spark: SparkSession, path: String, docs: DataFrame,
       textCol: String, batchId: Option[Long] = None): Unit = {
     require(!docs.isEmpty, "deleteFromLm: nothing to delete")
-    recoverLm(spark, path, deleteUncommitted = true)
-    if (batchId.exists(bid =>
-        Retrieval.readIndexBatchId(spark, path).exists(_ >= bid)))
-      return
-    val targetGen = Retrieval.readIndexEpoch(spark, path).getOrElse(0L) + 1L
-    val staging = s"$path/_staging_$targetGen"
-    val (f, sp) = ObservationStore.fs(spark, staging)
-    if (f.exists(sp)) f.delete(sp, true)
-    def subtracted(live: DataFrame, dead: DataFrame, keys: Seq[String],
-        cnt: String): DataFrame =
-      live.unionAll(dead.select((keys.map(col) :+ (-col(cnt)).as(cnt)): _*))
-        .groupBy(keys.map(col): _*)
-        .agg(sum(col(cnt)).cast("long").as(cnt))
-    val b2 = subtracted(spark.read.parquet(s"$path/bigrams"),
-      lmBigramCounts(docs, textCol), Seq("w1", "w2"), "c2")
-      .localCheckpoint(false) // feeds the guard AND the write
-    val c1 = subtracted(spark.read.parquet(s"$path/unigrams"),
-      lmUnigramCounts(docs, textCol), Seq("word"), "c1")
-      .localCheckpoint(false)
-    def minOf(d: DataFrame, cnt: String): Long =
-      Option(d.agg(min(col(cnt))).head().getAs[java.lang.Long](0))
-        .map(_.longValue).getOrElse(0L)
-    val worst = math.min(minOf(b2, "c2"), minOf(c1, "c1"))
-    if (worst < 0L) {
-      f.delete(sp, true)
-      throw new IllegalArgumentException(
-        "deleteFromLm: subtraction drove a count negative — the deleted " +
-          "documents were not (all) in the trained corpus; refusing to " +
-          "commit corrupted statistics")
-    }
-    b2.filter(col("c2") > 0)
-      .write.mode("overwrite").parquet(s"$staging/bigrams")
-    val live1 = c1.filter(col("c1") > 0).localCheckpoint(false)
-    live1.write.mode("overwrite").parquet(s"$staging/unigrams")
-    live1.agg(count(lit(1)).cast("long").as("vsz"))
-      .write.mode("overwrite").parquet(s"$staging/stats")
-    val bid = batchId.map(b => s""","batch_id":$b""").getOrElse("")
-    val (mf, mp) = ObservationStore.fs(spark, s"$staging/_manifest.json")
-    val out = mf.create(mp, true)
-    try out.write(
-      (s"""{"target_epoch":$targetGen,""" +
-        s""""staged_tables":"bigrams,unigrams,stats"$bid""" +
-        "}").getBytes("UTF-8"))
-    finally out.close()
-    applyStagedLmMerge(spark, path, staging)
-  }
-
-  private[graft] def applyStagedLmMerge(spark: SparkSession, path: String,
-      staging: String): Unit = {
-    val manifest = StagedCommit.readManifest(spark, staging)
-    val targetGen = StagedCommit.numField(manifest, "target_epoch")
-    val pieces = StagedCommit.listField(manifest, "staged_tables")
-      .getOrElse(throw new StagedCommit.TornManifest(
-        s"staged LM manifest missing staged_tables: $manifest"))
-    val batchId = StagedCommit.optNumField(manifest, "batch_id")
-    StagedCommit.applyPieces(spark, path, staging, pieces, targetGen,
-      () => Retrieval.readIndexEpoch(spark, path),
-      gen => Retrieval.writeIndexMeta(spark, path, gen, batchId))
+    StagedCommit.mutate(spark, path, Lm, batchId) {
+      StagedCommit.stage(spark, path, batchId) { stg =>
+        def subtracted(live: DataFrame, dead: DataFrame, keys: Seq[String],
+            cnt: String): DataFrame =
+          live.unionAll(dead.select((keys.map(col) :+ (-col(cnt)).as(cnt)): _*))
+            .groupBy(keys.map(col): _*)
+            .agg(sum(col(cnt)).cast("long").as(cnt))
+        val b2 = subtracted(spark.read.parquet(s"$path/bigrams"),
+          lmBigramCounts(docs, textCol), Seq("w1", "w2"), "c2")
+          .localCheckpoint(false) // feeds the guard AND the write
+        val c1 = subtracted(spark.read.parquet(s"$path/unigrams"),
+          lmUnigramCounts(docs, textCol), Seq("word"), "c1")
+          .localCheckpoint(false)
+        def minOf(d: DataFrame, cnt: String): Long =
+          Option(d.agg(min(col(cnt))).head().getAs[java.lang.Long](0))
+            .map(_.longValue).getOrElse(0L)
+        // the throw drops the staging dir: nothing can commit
+        if (math.min(minOf(b2, "c2"), minOf(c1, "c1")) < 0L)
+          throw new IllegalArgumentException(
+            "deleteFromLm: subtraction drove a count negative — the " +
+              "deleted documents were not (all) in the trained corpus; " +
+              "refusing to commit corrupted statistics")
+        b2.filter(col("c2") > 0)
+          .write.mode("overwrite").parquet(s"${stg.dir}/bigrams")
+        writeLmUnigrams(c1.filter(col("c1") > 0).localCheckpoint(false), stg)
+        Some(LmManifest) -> ()
+      }
+    }: Unit
   }
 
   /** Resolve an interrupted [[mergeLm]] (committed staging is finished,
@@ -1060,8 +1029,7 @@ object Curation {
     * contract shared with every staged artifact here). */
   def recoverLm(spark: SparkSession, path: String,
       deleteUncommitted: Boolean = false): Unit =
-    StagedCommit.recover(spark, path, deleteUncommitted)(
-      staging => applyStagedLmMerge(spark, path, staging))
+    StagedCommit.recover(spark, path, Lm, deleteUncommitted)
 
   /** Structured-Streaming maintenance of the LM tables — the
     * [[Retrieval.streamIndex]] twin: first batch trains, every later
@@ -1071,22 +1039,9 @@ object Curation {
   def streamLm(spark: SparkSession, docs: DataFrame, textCol: String,
       path: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        // probe the META file (writeLm's LAST write, carrying the batch
-        // id atomically): a first batch that crashed mid-build left no
-        // meta → replay REBUILDS (overwrite, idempotent); meta present →
-        // merge path, where the recorded id makes the replay a no-op.
-        // Probing a data table instead would open a window where a
-        // half-built artifact replays as a double-counting merge.
-        if (batch.isEmpty) ()
-        else if (!ObservationStore.pathExists(spark,
-            s"$path/_graft_meta.json"))
-          writeLm(batch, textCol, path, Some(bid))
-        else mergeLm(spark, path, batch, textCol, Some(bid))
-      }
-      .start()
+    StagedCommit.stream(spark, docs, path, checkpointDir)(
+      (batch, bid) => writeLm(batch, textCol, path, Some(bid)),
+      (batch, bid) => mergeLm(spark, path, batch, textCol, Some(bid)))
 
   /** [[lmScores]] against a [[writeLm]] artifact. On the training corpus
     * itself the result is IDENTICAL to [[lmScores]] (every observed

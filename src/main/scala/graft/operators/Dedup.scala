@@ -194,17 +194,23 @@ object Dedup {
     // captured BEFORE the overwrite truncates the path (meta included):
     // the generation must advance, never reset, and the batch high-water
     // survives a rebuild unless the caller supplies a fresh one
-    val prevEpoch = readBandEpoch(spark, path).getOrElse(0L)
-    val prevBatchId = readBandBatchId(spark, path)
+    val prior = StagedCommit.readMeta(spark, path)
     buildBandIndex(docs, textCol, idCol, numHashes, bands)
       .withColumn("batch", lit(0L))
       .repartition(col("band_idx"), col("band_hash"))
       .sortWithinPartitions(col("band_hash"))
       .write.mode("overwrite").partitionBy("band_idx", "batch")
       .parquet(path)
-    writeBandMeta(spark, path, prevEpoch + 1L, numHashes, bands,
-      batchId.orElse(prevBatchId))
+    StagedCommit.writeBuildMeta(spark, path, prior,
+      Seq("num_hashes" -> numHashes.toLong, "bands" -> bands.toLong), batchId)
   }
+
+  /** The band index's commit shape: staged `band_idx=<i>/batch=<id>`
+    * leaves at the index root, carrying the band parameters into the
+    * meta. */
+  private val Band = StagedCommit.Family(
+    Seq(StagedCommit.PieceList("staged_bands")),
+    carried = Seq("num_hashes", "bands"))
 
   /** Load the index for querying ([[deltaDedupAgainstIndex]]): resolves
     * committed-but-unapplied merges first (reader path) and hides the
@@ -232,112 +238,61 @@ object Dedup {
     * band rows merged (0 on replay skip). */
   def mergeBandIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame, textCol: String, idCol: String,
-      batchId: Long): Long = {
-    recoverBandMerge(spark, path, deleteUncommitted = true)
-    val (numHashes, bands) = readBandParams(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"band index at $path has no recorded parameters; rebuild it " +
-          "with writeBandIndex before merging increments"))
-    val last = readBandBatchId(spark, path).getOrElse(-1L)
-    if (batchId <= last) return 0L
-    val targetEpoch = readBandEpoch(spark, path).getOrElse(0L) + 1L
-    val staging = s"$path/_staging_$targetEpoch"
-    val (f, sp) = ObservationStore.fs(spark, staging)
-    if (f.exists(sp)) f.delete(sp, true)
-    val rows = buildBandIndex(batch, textCol, idCol, numHashes, bands)
-      .withColumn("batch", lit(batchId))
-      .repartition(col("band_idx"), col("band_hash"))
-      .sortWithinPartitions(col("band_hash"))
-    rows.write.mode("overwrite").partitionBy("band_idx", "batch")
-      .parquet(staging)
-    val pieces = StagedCommit.stagedPartDirs(spark, staging, "band_idx=")
-      .map(bd => s"$bd/batch=$batchId")
-    if (pieces.isEmpty) { // empty batch: nothing staged, marker unmoved
-      f.delete(sp, true)
-      return 0L
+      batchId: Long): Long =
+    StagedCommit.mutate(spark, path, Band, Some(batchId)) {
+      stageBandMerge(spark, path, batch, textCol, idCol, batchId)
+    }.getOrElse(0L)
+
+  /** Stage the batch's band rows as `batch=<batchId>` leaves and commit
+    * the manifest; package-visible so crash tests can stop here. Returns
+    * the staging dir (None for an empty batch: nothing staged, marker
+    * unmoved) and the band rows staged. */
+  private[graft] def stageBandMerge(spark: org.apache.spark.sql.SparkSession,
+      path: String, batch: DataFrame, textCol: String, idCol: String,
+      batchId: Long): (Option[String], Long) =
+    StagedCommit.stage(spark, path, Some(batchId)) { stg =>
+      val (numHashes, bands) = bandParams(stg.meta).getOrElse(
+        throw new IllegalArgumentException(
+          s"band index at $path has no recorded parameters; rebuild it " +
+            "with writeBandIndex before merging increments"))
+      buildBandIndex(batch, textCol, idCol, numHashes, bands)
+        .withColumn("batch", lit(batchId))
+        .repartition(col("band_idx"), col("band_hash"))
+        .sortWithinPartitions(col("band_hash"))
+        .write.mode("overwrite").partitionBy("band_idx", "batch")
+        .parquet(stg.dir)
+      val pieces = StagedCommit.stagedPartDirs(spark, stg.dir, "band_idx=")
+        .map(bd => s"$bd/batch=$batchId")
+      if (pieces.isEmpty) None -> 0L
+      else Some(StagedCommit.Manifest(Seq("staged_bands" -> pieces),
+        Seq("num_hashes" -> numHashes.toLong, "bands" -> bands.toLong))) ->
+        spark.read.parquet(stg.dir).count()
     }
-    val n = spark.read.parquet(staging).count()
-    val (mf, mp) = ObservationStore.fs(spark, s"$staging/_manifest.json")
-    val out = mf.create(mp, true)
-    try out.write(
-      (s"""{"target_epoch":$targetEpoch,""" +
-        s""""staged_bands":"${pieces.mkString(",")}",""" +
-        s""""batch_id":$batchId,"num_hashes":$numHashes,"bands":$bands}""")
-        .getBytes("UTF-8"))
-    finally out.close()
-    applyStagedBandMerge(spark, path, staging)
-    n
-  }
 
   /** Index generation: advanced once per committed write/merge. */
   def readBandEpoch(spark: org.apache.spark.sql.SparkSession,
       path: String): Option[Long] =
-    readBandMetaField(spark, path, "epoch")
+    StagedCommit.metaField(spark, path, "epoch")
 
   /** Highest batch id already merged (the exactly-once high-water mark). */
   def readBandBatchId(spark: org.apache.spark.sql.SparkSession,
       path: String): Option[Long] =
-    readBandMetaField(spark, path, "last_batch_id")
+    StagedCommit.metaField(spark, path, "last_batch_id")
 
   /** The recorded (numHashes, bands) the index was built with. */
   def readBandParams(spark: org.apache.spark.sql.SparkSession,
       path: String): Option[(Int, Int)] =
+    bandParams(StagedCommit.readMeta(spark, path))
+
+  private def bandParams(meta: Map[String, Long]): Option[(Int, Int)] =
     for {
-      nh <- readBandMetaField(spark, path, "num_hashes")
-      nb <- readBandMetaField(spark, path, "bands")
+      nh <- meta.get("num_hashes")
+      nb <- meta.get("bands")
     } yield (nh.toInt, nb.toInt)
-
-  private def readBandMetaField(spark: org.apache.spark.sql.SparkSession,
-      path: String, name: String): Option[Long] = {
-    val (f, p) = ObservationStore.fs(spark, s"$path/_graft_meta.json")
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val content =
-        try new String(in.readAllBytes(), "UTF-8")
-        finally in.close()
-      (""""""" + name + """"\s*:\s*(-?\d+)""").r.findFirstMatchIn(content)
-        .map(_.group(1).toLong)
-    }
-  }
-
-  private def writeBandMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, epoch: Long, numHashes: Int, bands: Int,
-      batchId: Option[Long] = None): Unit = {
-    val bid = batchId.orElse(readBandBatchId(spark, path))
-      .map(b => s""","last_batch_id":$b""").getOrElse("")
-    val (f, p) = ObservationStore.fs(spark, s"$path/_graft_meta.json")
-    val out = f.create(p, true)
-    try out.write(
-      (s"""{"epoch":$epoch,"num_hashes":$numHashes,""" +
-        s""""bands":$bands$bid}""").getBytes("UTF-8"))
-    finally out.close()
-  }
 
   private def recoverBandMerge(spark: org.apache.spark.sql.SparkSession,
       path: String, deleteUncommitted: Boolean): Unit =
-    StagedCommit.recover(spark, path, deleteUncommitted)(
-      staging => applyStagedBandMerge(spark, path, staging))
-
-  private def applyStagedBandMerge(spark: org.apache.spark.sql.SparkSession,
-      path: String, staging: String): Unit = {
-    val manifest = StagedCommit.readManifest(spark, staging)
-    val targetEpoch = StagedCommit.numField(manifest, "target_epoch")
-    val pieces = StagedCommit.listField(manifest, "staged_bands")
-      .getOrElse(throw new StagedCommit.TornManifest(
-        s"staged band manifest missing staged_bands: $manifest"))
-    val batchId = StagedCommit.optNumField(manifest, "batch_id")
-    val nh = StagedCommit.numField(manifest, "num_hashes").toInt
-    val nb = StagedCommit.numField(manifest, "bands").toInt
-    // piece renames land under band_idx= parents — ensure they exist
-    // (idempotent; an index can only lack one through manual surgery)
-    val (lf, _) = ObservationStore.fs(spark, path)
-    pieces.foreach(rel => lf.mkdirs(
-      new org.apache.hadoop.fs.Path(s"$path/$rel").getParent))
-    StagedCommit.applyPieces(spark, path, staging, pieces, targetEpoch,
-      () => readBandEpoch(spark, path),
-      gen => writeBandMeta(spark, path, gen, nh, nb, batchId))
-  }
+    StagedCommit.recover(spark, path, Band, deleteUncommitted)
 
   /** Retraction on the persisted band index — the takedown/GDPR path a
     * long-lived dedup corpus needs (the [[Similarity.deleteFromIvfIndex]]

@@ -9,7 +9,7 @@ import graft.model.{Model, Observation}
 import graft.functions.Net
 
 /** JVM-wide per-path lock serializing staged-merge apply/recover across
-  * the store, BM25 and IVF-PQ indexes: recovery runs on the DRIVER
+  * every [[StagedCommit]] family: recovery runs on the DRIVER
   * (every load/query/merge entry point), so within one driver concurrent
   * recoverers of the same path are serialized. Without it, two readers
   * self-healing the same committed staging could interleave — B's
@@ -108,11 +108,15 @@ object ObservationStore {
         Future(writeCopy(a, s"$path/by_rdata", "rdata",
           Seq("rdata", "sensor_id", "rrname", "rrtype"), numBuckets)))
       copies.foreach(Await.result(_, Duration.Inf))
-      // a rebuild of an existing store must advance the epoch, never reset
-      // it — readers using it for change detection would miss the rebuild
-      writeMeta(agg.sparkSession, path, numBuckets,
-        epoch = readEpoch(agg.sparkSession, path).getOrElse(0L) + 1L,
-        batchId = batchId)
+      // meta is written ONLY after both copies exist: `epoch` advances
+      // once per successful dual write/merge. `layout` versions the
+      // on-disk schema (2 = inverted copy carries `rdata_ip`, 3 = +
+      // `rdata_ip6`); merges carry the recorded layout so a store never
+      // holds mixed file schemas
+      StagedCommit.writeBuildMeta(agg.sparkSession, path,
+        StagedCommit.readMeta(agg.sparkSession, path),
+        Seq("num_buckets" -> numBuckets.toLong, "layout" -> CurrentLayout),
+        batchId)
     } finally { a.unpersist(); () }
   }
 
@@ -151,64 +155,25 @@ object ObservationStore {
     f.exists(p)
   }
 
-  /** Meta is written ONLY after both copies have committed: `epoch`
-    * advances once per successful dual write/merge. Full rebuilds
-    * ([[writeDual]]) are in-place overwrites, so a crash there needs a
-    * re-run; incremental merges are staged + manifest-committed (see
-    * [[mergeBatch]]) and replay automatically. `layout` versions the
-    * on-disk schema (2 = inverted copy carries `rdata_ip`, 3 = +
-    * `rdata_ip6`); merges preserve the store's recorded layout so a
-    * store never holds mixed file schemas. */
-  private def writeMeta(spark: SparkSession, path: String,
-      numBuckets: Int, epoch: Long, layout: Long = CurrentLayout,
-      batchId: Option[Long] = None): Unit = {
-    // the streaming batch-id marker commits ATOMICALLY with the epoch
-    // (one file create) — that is what makes foreachBatch replays
-    // detectable. A meta rewrite without a batch id must not erase a
-    // previously recorded one.
-    val bid = batchId.orElse(readBatchId(spark, path))
-      .map(b => s""","last_batch_id":$b""").getOrElse("")
-    val (f, p) = fs(spark, s"$path/_graft_meta.json")
-    val out = f.create(p, true)
-    try out.write(
-      s"""{"num_buckets":$numBuckets,"epoch":$epoch,"layout":$layout$bid}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-  }
-
   /** Highest streaming batch id already merged (the exactly-once marker
     * [[mergeBatch]] records when given one; None for batch-only stores). */
   def readBatchId(spark: SparkSession, path: String): Option[Long] =
-    readMetaField(spark, path, "last_batch_id")
+    StagedCommit.metaField(spark, path, "last_batch_id")
 
   /** Layout 3 = by_rdata carries persisted `rdata_ip` AND `rdata_ip6`. */
   val CurrentLayout = 3L
 
-  private def readMetaField(spark: SparkSession, path: String,
-      field: String): Option[Long] = {
-    val (f, p) = fs(spark, s"$path/_graft_meta.json")
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val content =
-        try new String(in.readAllBytes(), "UTF-8")
-        finally in.close()
-      (""""""" + field + """"\s*:\s*(\d+)""").r.findFirstMatchIn(content)
-        .map(_.group(1).toLong)
-    }
-  }
-
   /** Bucket count recorded at write time (None for pre-meta stores). */
   def readNumBuckets(spark: SparkSession, path: String): Option[Int] =
-    readMetaField(spark, path, "num_buckets").map(_.toInt)
+    StagedCommit.metaField(spark, path, "num_buckets").map(_.toInt)
 
   /** Store version: advanced once per committed dual write/merge. */
   def readEpoch(spark: SparkSession, path: String): Option[Long] =
-    readMetaField(spark, path, "epoch")
+    StagedCommit.metaField(spark, path, "epoch")
 
   /** On-disk schema version (None/1 for stores without `rdata_ip`). */
   def readLayout(spark: SparkSession, path: String): Option[Long] =
-    readMetaField(spark, path, "layout")
+    StagedCommit.metaField(spark, path, "layout")
 
   private def writeCopy(df: DataFrame, path: String, keyCol: String,
       sortCols: Seq[String], numBuckets: Int, dynamic: Boolean = false,
@@ -270,6 +235,17 @@ object ObservationStore {
     ("by_rrname", "rrname", Seq("rrname", "sensor_id", "rrtype", "rdata")),
     ("by_rdata", "rdata", Seq("rdata", "sensor_id", "rrname", "rrtype")))
 
+  /** The store's commit shape: one staged-bucket list per copy (a
+    * manifest written before the lists existed swaps whatever buckets
+    * its staging holds), carrying the bucket count and layout into the
+    * meta. */
+  private val Store = StagedCommit.Family(
+    Copies.map { case (sub, _, _) =>
+      StagedCommit.PieceList(s"staged_$sub", sub, Some((spark, staging) =>
+        StagedCommit.stagedPartDirs(spark, s"$staging/$sub", "bucket=")))
+    },
+    carried = Seq("num_buckets", "layout"))
+
   /** Incremental merge of a (raw, un-aggregated) observation batch into a
     * stored dual copy: aggregate the batch, read ONLY the touched buckets
     * of the existing store (partition pruning), re-merge (sum/min/max are
@@ -290,121 +266,89 @@ object ObservationStore {
     * shrinking but not eliminating the window recovery has to replay.
     */
   def mergeBatch(spark: SparkSession, path: String, batch: DataFrame,
-      numBuckets: Int = 64, batchId: Option[Long] = None): Unit = {
-    // a crashed previous merge must be resolved BEFORE reading the store:
-    // half-swapped buckets would feed wrong inputs to this merge. The
-    // WRITER also discards manifest-less (uncommitted) staging — readers
-    // never do, because a manifest-less dir may belong to a merge that is
-    // still being staged by a live writer.
-    recoverMerge(spark, path, deleteUncommitted = true)
-    // EXACTLY-ONCE under foreachBatch replays: when the caller supplies
-    // the streaming batch id and the store has already committed it (the
-    // marker rides the same single meta write as the epoch), the merge is
-    // a replay of committed work — skip it instead of double-counting.
-    if (batchId.exists(bid => readBatchId(spark, path).exists(_ >= bid)))
-      return
-    val exists = pathExists(spark, s"$path/by_rrname")
-    if (!exists) {
-      // first write: nothing on disk to corrupt — plain dual write
-      writeDual(aggregate(batch), path, numBuckets, batchId)
-    } else {
-      val staging = stageMerge(spark, path, batch, numBuckets, batchId)
-      applyStagedMerge(spark, path, staging)
-    }
-  }
+      numBuckets: Int = 64, batchId: Option[Long] = None): Unit =
+    // a crashed previous merge is resolved BEFORE reading the store
+    // (half-swapped buckets would feed wrong inputs to this merge), and
+    // a batch id the store already committed is a replay, skipped
+    StagedCommit.mutate(spark, path, Store, batchId) {
+      if (pathExists(spark, s"$path/by_rrname"))
+        Some(stageMerge(spark, path, batch, numBuckets, batchId)) -> ()
+      else {
+        // first write: nothing on disk to corrupt — plain dual write
+        writeDual(aggregate(batch), path, numBuckets, batchId)
+        None -> ()
+      }
+    }: Unit
+
+  /** A store mutation's write-time invariants: the recorded bucket count
+    * and layout (`fallbackBuckets` applies to pre-meta stores only). */
+  private def bucketsAndLayout(stg: StagedCommit.Staging,
+      fallbackBuckets: Int): (Int, Long) =
+    (stg.meta.get("num_buckets").map(_.toInt).getOrElse(fallbackBuckets),
+      stg.meta.getOrElse("layout", 1L))
+
+  /** The store's manifest: the exact bucket-directory list staged per
+    * copy, so apply can tell "already swapped" from "staged data lost"
+    * (a lost staged bucket must FAIL, not silently skip: skipping would
+    * commit an epoch with the two copies diverged). `wholeCopies` swaps
+    * each copy DIRECTORY as one piece (rebucket) — a piecewise bucket
+    * swap under a changed count would leave the old count's orphaned
+    * bucket dirs live. */
+  private def storeManifest(spark: SparkSession, stg: StagedCommit.Staging,
+      buckets: Int, layout: Long,
+      wholeCopies: Boolean = false): Option[StagedCommit.Manifest] =
+    Some(StagedCommit.Manifest(
+      Copies.map { case (sub, _, _) => s"staged_$sub" ->
+        StagedCommit.stagedPartDirs(spark, s"${stg.dir}/$sub", "bucket=") },
+      Seq("num_buckets" -> buckets.toLong, "layout" -> layout) ++
+        (if (wholeCopies) Seq("whole_copies" -> 1L) else Nil)))
 
   /** Write both merged copies (touched buckets only) under
     * `<path>/_staging_<targetEpoch>` and commit the manifest. Returns the
     * staging path. Package-visible so crash tests can stop here. */
-  /** Write-time invariants + staging-dir prep shared by every staged
-    * store mutation ([[stageMerge]], [[stageExpire]]): honor the
-    * recorded bucket count/layout (`fallbackBuckets` applies to pre-meta
-    * stores only), target the next epoch, and clear a stale staging dir
-    * (it can only be manifest-less here — recovery ran first). */
-  private def prepareStaging(spark: SparkSession, path: String,
-      fallbackBuckets: Int): (Int, Long, Long, String) = {
-    val effBuckets = readNumBuckets(spark, path).getOrElse(fallbackBuckets)
-    val effLayout = readLayout(spark, path).getOrElse(1L)
-    val targetEpoch = readEpoch(spark, path).getOrElse(0L) + 1L
-    val staging = s"$path/_staging_$targetEpoch"
-    val (f, sp) = fs(spark, staging)
-    if (f.exists(sp)) f.delete(sp, true)
-    (effBuckets, effLayout, targetEpoch, staging)
-  }
-
-  /** The ONE place the store's staged-mutation manifest is written (the
-    * StagedCommit stance: commit logic in one location or the layouts
-    * silently diverge). The manifest is the commit point: it records
-    * everything recovery needs — including the exact bucket-directory
-    * list staged per copy, so apply can tell "already swapped" from
-    * "staged data lost" (a lost staged bucket must FAIL, not silently
-    * skip: skipping would commit an epoch with the two copies diverged).
-    * Written via a single create call — a partial manifest fails to
-    * parse and counts as "not committed". */
-  private def writeStoreManifest(spark: SparkSession, staging: String,
-      targetEpoch: Long, effBuckets: Int, effLayout: Long,
-      batchId: Option[Long], wholeCopies: Boolean = false): Unit = {
-    val stagedLists = Copies.map { case (sub, _, _) =>
-      val names = StagedCommit.stagedPartDirs(spark, s"$staging/$sub",
-        "bucket=").mkString(",")
-      s""""staged_$sub":"$names""""
-    }.mkString(",")
-    val bid = batchId.map(b => s""","batch_id":$b""").getOrElse("")
-    // whole_copies: the swap replaces each copy DIRECTORY as one piece
-    // (rebucket) — a piecewise bucket swap under a changed count would
-    // leave the old count's orphaned bucket dirs live
-    val whole = if (wholeCopies) s""","whole_copies":1""" else ""
-    val (mf, mp) = fs(spark, s"$staging/_manifest.json")
-    val out = mf.create(mp, true)
-    try out.write(
-      (s"""{"target_epoch":$targetEpoch,"num_buckets":$effBuckets,""" +
-        s""""layout":$effLayout,$stagedLists$bid$whole}""").getBytes("UTF-8"))
-    finally out.close()
-  }
-
   private[graft] def stageMerge(spark: SparkSession, path: String,
       batch: DataFrame, numBuckets: Int,
-      batchId: Option[Long] = None): String = {
-    // referenced up to four times below (touched-bucket collect + the
-    // union branch, per copy): one materialization, not four
-    val newAgg = aggregate(batch).persist()
-    try {
-      newAgg.count(): Unit // materialize ONCE before the copies fork
-      val (effBuckets, effLayout, targetEpoch, staging) =
-        prepareStaging(spark, path, numBuckets)
-      // the two copies' touched-probe → merge → write pipelines are
-      // independent (disjoint directories, shared cached batch): run
-      // them on two threads so their jobs overlap in the scheduler —
-      // the same move stageExpire makes
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val staged = Copies.map { case (sub, keyCol, sortCols) => Future {
-        val withBucket = newAgg.withColumn("bucket", bucketOf(col(keyCol), effBuckets))
-        val touched = withBucket.select("bucket").distinct()
-          .collect().map(_.getLong(0))
-        val existing = spark.read.parquet(s"$path/$sub")
-          .filter(col("bucket").isin(touched.toIndexedSeq: _*))
-        val merged = existing.select(withBucket.columns.toIndexedSeq.map(col): _*)
-          .unionAll(withBucket)
-          .groupBy((Model.Key :+ "bucket").map(col): _*)
-          .agg(sum("count").cast("long").as("count"),
-            min("first_seen").as("first_seen"),
-            max("last_seen").as("last_seen"))
-          .select(withBucket.columns.toIndexedSeq.map(col): _*)
-        // drop the derived bucket col: writeCopy recomputes it (same
-        // hash). Staging reads the live store and writes elsewhere, so
-        // no lineage cut is needed (the old in-place dynamic overwrite
-        // had to localCheckpoint to avoid overwriting its own input)
-        writeCopy(merged.drop("bucket"), s"$staging/$sub", keyCol, sortCols,
-          effBuckets, layout = effLayout)
-      }}
-      Await.result(Future.sequence(staged),
-        scala.concurrent.duration.Duration.Inf): Unit
-      writeStoreManifest(spark, staging, targetEpoch, effBuckets,
-        effLayout, batchId)
-      staging
-    } finally { newAgg.unpersist(); () }
-  }
+      batchId: Option[Long] = None): String =
+    StagedCommit.stage(spark, path, batchId) { stg =>
+      // referenced up to four times below (touched-bucket collect + the
+      // union branch, per copy): one materialization, not four
+      val newAgg = aggregate(batch).persist()
+      try {
+        newAgg.count(): Unit // materialize ONCE before the copies fork
+        val (effBuckets, effLayout) = bucketsAndLayout(stg, numBuckets)
+        // the two copies' touched-probe → merge → write pipelines are
+        // independent (disjoint directories, shared cached batch): run
+        // them on two threads so their jobs overlap in the scheduler —
+        // the same move stageExpire makes
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.ExecutionContext.Implicits.global
+        val copies = Copies.map { case (sub, keyCol, sortCols) => Future {
+          val withBucket =
+            newAgg.withColumn("bucket", bucketOf(col(keyCol), effBuckets))
+          val touched = withBucket.select("bucket").distinct()
+            .collect().map(_.getLong(0))
+          val existing = spark.read.parquet(s"$path/$sub")
+            .filter(col("bucket").isin(touched.toIndexedSeq: _*))
+          val merged =
+            existing.select(withBucket.columns.toIndexedSeq.map(col): _*)
+              .unionAll(withBucket)
+              .groupBy((Model.Key :+ "bucket").map(col): _*)
+              .agg(sum("count").cast("long").as("count"),
+                min("first_seen").as("first_seen"),
+                max("last_seen").as("last_seen"))
+              .select(withBucket.columns.toIndexedSeq.map(col): _*)
+          // drop the derived bucket col: writeCopy recomputes it (same
+          // hash). Staging reads the live store and writes elsewhere, so
+          // no lineage cut is needed (the old in-place dynamic overwrite
+          // had to localCheckpoint to avoid overwriting its own input)
+          writeCopy(merged.drop("bucket"), s"${stg.dir}/$sub", keyCol,
+            sortCols, effBuckets, layout = effLayout)
+        }}
+        Await.result(Future.sequence(copies),
+          scala.concurrent.duration.Duration.Inf): Unit
+        storeManifest(spark, stg, effBuckets, effLayout) -> ()
+      } finally { newAgg.unpersist(); () }
+    }._1.get
 
   /** Retention expiry: drop every entry whose `last_seen` is strictly
     * before `cutoff` from BOTH copies — the pdns data-retention
@@ -432,12 +376,9 @@ object ObservationStore {
     * than the store was written with would mis-route survivors); stores
     * with metadata always use their recorded count. */
   def expire(spark: SparkSession, path: String,
-      cutoff: java.sql.Timestamp, numBuckets: Int = 64): Long = {
-    recoverMerge(spark, path, deleteUncommitted = true)
-    val (staged, dropped) = stageExpire(spark, path, cutoff, numBuckets)
-    staged.foreach(s => applyStagedMerge(spark, path, s))
-    dropped
-  }
+      cutoff: java.sql.Timestamp, numBuckets: Int = 64): Long =
+    StagedCommit.mutate(spark, path, Store)(
+      stageExpire(spark, path, cutoff, numBuckets)).get
 
   /** Predicate deletion: drop every entry matching `predicate` (over
     * the seven observation columns) from BOTH copies — the targeted
@@ -450,15 +391,12 @@ object ObservationStore {
     * nothing). Returns forward-copy entries dropped. */
   def deleteWhere(spark: SparkSession, path: String,
       predicate: Column, numBuckets: Int = 64): Long = {
-    recoverMerge(spark, path, deleteUncommitted = true)
     val probe = (sub: String) =>
       spark.read.parquet(s"$path/$sub").filter(predicate)
         .select(col("bucket").cast("long")).distinct()
         .collect().map(_.getLong(0))
-    val (staged, dropped) =
-      stageRowDelete(spark, path, predicate, probe, numBuckets)
-    staged.foreach(s => applyStagedMerge(spark, path, s))
-    dropped
+    StagedCommit.mutate(spark, path, Store)(
+      stageRowDelete(spark, path, predicate, probe, numBuckets)).get
   }
 
   /** First half of [[expire]]: stage surviving buckets + manifest, commit
@@ -478,88 +416,85 @@ object ObservationStore {
     * survives, commit through the ONE store manifest. */
   private def stageRowDelete(spark: SparkSession, path: String,
       dropPred: Column, touchedProbe: String => Array[Long],
-      numBuckets: Int): (Option[String], Long) = {
-    // a row is dropped only when the predicate is DEFINITELY true: a
-    // NULL evaluation (e.g. `rdata === "x"` over null rdata) must keep
-    // the row — `!NULL` is NULL and a bare `filter(!dropPred)` would
-    // silently delete those rows while the dropped-count ignored them
-    val dropDef = coalesce(dropPred, lit(false))
-    val (effBuckets, effLayout, targetEpoch, staging) =
-      prepareStaging(spark, path, numBuckets)
-    val (f, sp) = fs(spark, staging)
-    val dataCols = (Model.Key ++ Seq("count", "first_seen", "last_seen"))
-      .map(col)
-    // the two copies are independent pipelines over disjoint
-    // directories: run them on two threads so their (small) jobs overlap
-    // in the scheduler instead of serializing the job launches
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val perCopy = Copies.map { case (sub, keyCol, sortCols) => Future {
-      // "which buckets hold expired rows" is answered from parquet
-      // FOOTER statistics alone (min(last_seen) per row group is exact
-      // under TIMESTAMP_MICROS) — no counting scan; the dropped-row
-      // count rides the survivor-write job below as an observe()
-      // metric, so each copy costs ONE Spark job total
-      val touched = touchedProbe(sub)
-      // nanoTime uniquifier: Observation registers its name with the
-      // session's listener bus, and a failed expire run that registered
-      // but never drained would make a same-epoch RETRY throw on the
-      // duplicate name — the name is never read back, so uniqueness is
-      // all that matters
-      val obs = org.apache.spark.sql.Observation(
-        s"expire-$sub-$targetEpoch-${System.nanoTime()}")
-      if (touched.nonEmpty) {
-        val existing = spark.read.parquet(s"$path/$sub")
-          .filter(col("bucket").isin(touched.toIndexedSeq.map(Long.box): _*))
-          .observe(obs, sum(when(dropDef, 1L)
-            .otherwise(0L)).as("dropped"))
-        // Survivors STAY in their buckets, so the staged rewrite needs
-        // no shuffle and no re-derivation: reuse the scan's `bucket`
-        // partition column and the persisted derived columns
-        // (rdata_ip/rdata_ip6 live in-file for layout ≥2), local-sort by
-        // (bucket, key order) — which also satisfies the dynamic
-        // partition writer's required ordering — and write. A bucket
-        // whose files split across scan tasks yields several sorted
-        // files; readers list every file per bucket, and row-group
-        // stats stay tight because each file is sorted.
-        val persisted = derivedCols(keyCol, effLayout).map(_._1)
-        val survivors = existing
-          .filter(!dropDef)
-          .select(dataCols ++ persisted.map(col) :+ col("bucket"): _*)
-        bloomOpts(survivors
-          .sortWithinPartitions(("bucket" +: sortCols).map(col): _*)
-          .write, keyCol).mode("overwrite").partitionBy("bucket")
-          .parquet(s"$staging/$sub")
-        // a fully-expired bucket has no survivors, so the write stages
-        // nothing for it — stage an explicit empty bucket (a
-        // schema-only parquet file) so the apply swap REPLACES the live
-        // bucket instead of leaving the expired rows behind
-        val staged = StagedCommit.stagedPartDirs(spark, s"$staging/$sub",
-          "bucket=").toSet
-        // built from a FRESH read, not `survivors`: the observe() node
-        // in that plan would block the limit-0 short-circuit and keep
-        // re-running the metric query per empty bucket
-        val fileSchema = spark.read.parquet(s"$path/$sub")
-          .select(dataCols ++ persisted.map(col): _*)
-        StagedCommit.stageEmptyPieces(spark, fileSchema,
-          touched.toIndexedSeq.map(b => s"bucket=$b").filterNot(staged)
-            .map(bd => s"$staging/$sub/$bd"))
-      }
-      sub -> (if (touched.isEmpty) 0L
-        else obs.get.get("dropped") match {
-          case Some(l: Long) => l
-          case _             => 0L
-        })
-    }}
-    val dropped = Await.result(Future.sequence(perCopy),
-      scala.concurrent.duration.Duration.Inf).toMap.apply("by_rrname")
-    if (!f.exists(sp)) return (None, 0L) // nothing to expire
-    // same manifest shape (ONE writer) as stageMerge → the SAME
-    // apply/recover replay path commits it
-    writeStoreManifest(spark, staging, targetEpoch, effBuckets, effLayout,
-      batchId = None)
-    (Some(staging), dropped)
-  }
+      numBuckets: Int): (Option[String], Long) =
+    StagedCommit.stage(spark, path, None) { stg =>
+      // a row is dropped only when the predicate is DEFINITELY true: a
+      // NULL evaluation (e.g. `rdata === "x"` over null rdata) must keep
+      // the row — `!NULL` is NULL and a bare `filter(!dropPred)` would
+      // silently delete those rows while the dropped-count ignored them
+      val dropDef = coalesce(dropPred, lit(false))
+      val (effBuckets, effLayout) = bucketsAndLayout(stg, numBuckets)
+      val dataCols = (Model.Key ++ Seq("count", "first_seen", "last_seen"))
+        .map(col)
+      // the two copies are independent pipelines over disjoint
+      // directories: run them on two threads so their (small) jobs overlap
+      // in the scheduler instead of serializing the job launches
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val perCopy = Copies.map { case (sub, keyCol, sortCols) => Future {
+        // "which buckets hold expired rows" is answered from parquet
+        // FOOTER statistics alone (min(last_seen) per row group is exact
+        // under TIMESTAMP_MICROS) — no counting scan; the dropped-row
+        // count rides the survivor-write job below as an observe()
+        // metric, so each copy costs ONE Spark job total
+        val touched = touchedProbe(sub)
+        // nanoTime uniquifier: Observation registers its name with the
+        // session's listener bus, and a failed expire run that registered
+        // but never drained would make a same-epoch RETRY throw on the
+        // duplicate name — the name is never read back, so uniqueness is
+        // all that matters
+        val obs = org.apache.spark.sql.Observation(
+          s"expire-$sub-${stg.epoch}-${System.nanoTime()}")
+        if (touched.nonEmpty) {
+          val existing = spark.read.parquet(s"$path/$sub")
+            .filter(col("bucket").isin(touched.toIndexedSeq.map(Long.box): _*))
+            .observe(obs, sum(when(dropDef, 1L)
+              .otherwise(0L)).as("dropped"))
+          // Survivors STAY in their buckets, so the staged rewrite needs
+          // no shuffle and no re-derivation: reuse the scan's `bucket`
+          // partition column and the persisted derived columns
+          // (rdata_ip/rdata_ip6 live in-file for layout ≥2), local-sort by
+          // (bucket, key order) — which also satisfies the dynamic
+          // partition writer's required ordering — and write. A bucket
+          // whose files split across scan tasks yields several sorted
+          // files; readers list every file per bucket, and row-group
+          // stats stay tight because each file is sorted.
+          val persisted = derivedCols(keyCol, effLayout).map(_._1)
+          val survivors = existing
+            .filter(!dropDef)
+            .select(dataCols ++ persisted.map(col) :+ col("bucket"): _*)
+          bloomOpts(survivors
+            .sortWithinPartitions(("bucket" +: sortCols).map(col): _*)
+            .write, keyCol).mode("overwrite").partitionBy("bucket")
+            .parquet(s"${stg.dir}/$sub")
+          // a fully-expired bucket has no survivors, so the write stages
+          // nothing for it — stage an explicit empty bucket (a
+          // schema-only parquet file) so the apply swap REPLACES the live
+          // bucket instead of leaving the expired rows behind
+          val staged = StagedCommit.stagedPartDirs(spark, s"${stg.dir}/$sub",
+            "bucket=").toSet
+          // built from a FRESH read, not `survivors`: the observe() node
+          // in that plan would block the limit-0 short-circuit and keep
+          // re-running the metric query per empty bucket
+          val fileSchema = spark.read.parquet(s"$path/$sub")
+            .select(dataCols ++ persisted.map(col): _*)
+          StagedCommit.stageEmptyPieces(spark, fileSchema,
+            touched.toIndexedSeq.map(b => s"bucket=$b").filterNot(staged)
+              .map(bd => s"${stg.dir}/$sub/$bd"))
+        }
+        sub -> (if (touched.isEmpty) 0L
+          else obs.get.get("dropped") match {
+            case Some(l: Long) => l
+            case _             => 0L
+          })
+      }}
+      val dropped = Await.result(Future.sequence(perCopy),
+        scala.concurrent.duration.Duration.Inf).toMap.apply("by_rrname")
+      // same manifest shape as stageMerge → the SAME apply/recover
+      // replay path commits it; nothing staged = nothing to expire
+      if (!pathExists(spark, stg.dir)) None -> 0L
+      else storeManifest(spark, stg, effBuckets, effLayout) -> dropped
+    }
 
   /** Bucket numbers under `base` holding at least one row with
     * `last_seen` < `cutoff`, decided from parquet FOOTER statistics
@@ -625,33 +560,13 @@ object ObservationStore {
 
   /** Replay the staged merge: swap each staged bucket directory into the
     * live copies (idempotent — a staged dir disappears exactly when its
-    * rename lands), bump the epoch once, drop the staging dir. */
+    * rename lands), bump the epoch once, drop the staging dir. The
+    * manifest's staged-bucket lists are authoritative: a listed bucket
+    * present in NEITHER staging nor the destination fails loudly rather
+    * than commit a half-applied epoch. */
   private[graft] def applyStagedMerge(spark: SparkSession, path: String,
-      staging: String): Unit = {
-    val manifest = StagedCommit.readManifest(spark, staging)
-    val (targetEpoch, buckets, layout) =
-      (StagedCommit.numField(manifest, "target_epoch"),
-        StagedCommit.numField(manifest, "num_buckets"),
-        StagedCommit.numField(manifest, "layout"))
-    // the manifest's staged-bucket list is authoritative: a listed
-    // bucket present in NEITHER staging nor the destination means the
-    // staged data was lost — StagedCommit fails loudly rather than
-    // commit a half-applied epoch. Pre-list manifests (older writers)
-    // fall back to enumerating staging.
-    val pieces =
-      if (StagedCommit.optNumField(manifest, "whole_copies").contains(1L))
-        Copies.map(_._1) // rebucket: swap each copy dir as one piece
-      else Copies.flatMap { case (sub, _, _) =>
-        StagedCommit.listField(manifest, s"staged_$sub")
-          .getOrElse(
-            StagedCommit.stagedPartDirs(spark, s"$staging/$sub", "bucket="))
-          .map(name => s"$sub/$name")
-      }
-    val batchId = StagedCommit.optNumField(manifest, "batch_id")
-    StagedCommit.applyPieces(spark, path, staging, pieces, targetEpoch,
-      () => readEpoch(spark, path),
-      gen => writeMeta(spark, path, buckets.toInt, gen, layout, batchId))
-  }
+      staging: String): Unit =
+    StagedCommit.apply(spark, path, Store, staging)
 
   /** Resolve any interrupted [[mergeBatch]]: a staging dir WITH a manifest
     * is committed — finish its swap and epoch bump. One WITHOUT a manifest
@@ -661,8 +576,12 @@ object ObservationStore {
     * contract) may discard it; readers ([[load]]) leave it alone, else a
     * concurrent `load` could delete a fully-staged copy mid-stage and the
     * writer would then commit a manifest whose buckets are gone (the
-    * bucket-list verification above turns that into a loud failure, but
-    * the reader must not cause it). Safe to call any time. */
+    * bucket-list verification turns that into a loud failure, but the
+    * reader must not cause it). Safe to call any time. */
+  def recoverMerge(spark: SparkSession, path: String,
+      deleteUncommitted: Boolean = false): Unit =
+    StagedCommit.recover(spark, path, Store, deleteUncommitted)
+
   /** Compaction — the RocksDB-compaction analogue for the parquet
     * store: every bucket directory that has accumulated MORE than one
     * file (epoch churn — expiry rewrites split across scan tasks,
@@ -675,60 +594,53 @@ object ObservationStore {
     * directories compacted across both copies; 0 leaves the store
     * untouched (no epoch bump — readers' caches stay warm). */
   def compact(spark: SparkSession, path: String,
-      buckets: Option[Int] = None): Long = {
-    recoverMerge(spark, path, deleteUncommitted = true)
-    // a wrong bucket count committed into the manifest poisons every
-    // later merge's bucket hashing — refuse to guess on pre-meta stores
-    val declared = readNumBuckets(spark, path).orElse(buckets).getOrElse(
-      throw new IllegalArgumentException(
-        s"store at $path has no num_buckets metadata; pass --buckets " +
-          "explicitly (compacting under a wrong count corrupts merges)"))
-    val (effBuckets, effLayout, targetEpoch, staging) =
-      prepareStaging(spark, path, declared)
-    val (f, sp) = fs(spark, staging)
-    val dataCols = (Model.Key ++ Seq("count", "first_seen", "last_seen"))
-      .map(col)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val perCopy = Copies.map { case (sub, keyCol, sortCols) => Future {
-      val (fsC, base) = fs(spark, s"$path/$sub")
-      val multi =
-        if (!fsC.exists(base)) Seq.empty[Long]
-        else fsC.listStatus(base).toSeq
-          .filter(s => s.isDirectory &&
-            s.getPath.getName.startsWith("bucket="))
-          .filter(d => fsC.listStatus(d.getPath)
-            .count(x => x.isFile &&
-              x.getPath.getName.endsWith(".parquet")) > 1)
-          .map(_.getPath.getName.stripPrefix("bucket=").toLong)
-      if (multi.nonEmpty) {
-        val persisted = derivedCols(keyCol, effLayout).map(_._1)
-        bloomOpts(spark.read.parquet(s"$path/$sub")
-          .filter(col("bucket").isin(multi.map(Long.box): _*))
-          .select(dataCols ++ persisted.map(col) :+ col("bucket"): _*)
-          // all rows of a bucket land in one task, so the dynamic
-          // partition writer emits exactly ONE file per bucket dir
-          .repartition(col("bucket"))
-          .sortWithinPartitions(("bucket" +: sortCols).map(col): _*)
-          .write, keyCol)
-          .mode("overwrite").partitionBy("bucket")
-          .parquet(s"$staging/$sub")
+      buckets: Option[Int] = None): Long =
+    StagedCommit.mutate(spark, path, Store) {
+      StagedCommit.stage(spark, path, None) { stg =>
+        // a wrong bucket count committed into the manifest poisons every
+        // later merge's bucket hashing — refuse to guess on pre-meta
+        // stores
+        val declared = stg.meta.get("num_buckets").map(_.toInt)
+          .orElse(buckets).getOrElse(throw new IllegalArgumentException(
+            s"store at $path has no num_buckets metadata; pass --buckets " +
+              "explicitly (compacting under a wrong count corrupts merges)"))
+        val (_, effLayout) = bucketsAndLayout(stg, declared)
+        val dataCols = (Model.Key ++ Seq("count", "first_seen", "last_seen"))
+          .map(col)
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.ExecutionContext.Implicits.global
+        val perCopy = Copies.map { case (sub, keyCol, sortCols) => Future {
+          val (fsC, base) = fs(spark, s"$path/$sub")
+          val multi =
+            if (!fsC.exists(base)) Seq.empty[Long]
+            else fsC.listStatus(base).toSeq
+              .filter(s => s.isDirectory &&
+                s.getPath.getName.startsWith("bucket="))
+              .filter(d => fsC.listStatus(d.getPath)
+                .count(x => x.isFile &&
+                  x.getPath.getName.endsWith(".parquet")) > 1)
+              .map(_.getPath.getName.stripPrefix("bucket=").toLong)
+          if (multi.nonEmpty) {
+            val persisted = derivedCols(keyCol, effLayout).map(_._1)
+            bloomOpts(spark.read.parquet(s"$path/$sub")
+              .filter(col("bucket").isin(multi.map(Long.box): _*))
+              .select(dataCols ++ persisted.map(col) :+ col("bucket"): _*)
+              // all rows of a bucket land in one task, so the dynamic
+              // partition writer emits exactly ONE file per bucket dir
+              .repartition(col("bucket"))
+              .sortWithinPartitions(("bucket" +: sortCols).map(col): _*)
+              .write, keyCol)
+              .mode("overwrite").partitionBy("bucket")
+              .parquet(s"${stg.dir}/$sub")
+          }
+          multi.size.toLong
+        }}
+        val total = Await.result(Future.sequence(perCopy),
+          scala.concurrent.duration.Duration.Inf).sum
+        if (!pathExists(spark, stg.dir)) None -> 0L
+        else storeManifest(spark, stg, declared, effLayout) -> total
       }
-      multi.size.toLong
-    }}
-    val total = Await.result(Future.sequence(perCopy),
-      scala.concurrent.duration.Duration.Inf).sum
-    if (!f.exists(sp)) return 0L
-    writeStoreManifest(spark, staging, targetEpoch, effBuckets, effLayout,
-      batchId = None)
-    applyStagedMerge(spark, path, staging)
-    total
-  }
-
-  def recoverMerge(spark: SparkSession, path: String,
-      deleteUncommitted: Boolean = false): Unit =
-    StagedCommit.recover(spark, path, deleteUncommitted)(
-      staging => applyStagedMerge(spark, path, staging))
+    }.get
 
   /** Re-bucket the store to a different bucket count — the lifecycle
     * piece between compact (defragment, same hashing) and expire: a
@@ -746,30 +658,32 @@ object ObservationStore {
     * guess a count into the manifest). Returns the previous count. */
   def rebucket(spark: SparkSession, path: String, newBuckets: Int): Int = {
     require(newBuckets > 0, s"newBuckets must be positive: $newBuckets")
-    recoverMerge(spark, path, deleteUncommitted = true)
-    val old = readNumBuckets(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"store at $path has no num_buckets metadata; refusing to " +
-          "rebucket without a committed count"))
-    if (old == newBuckets) return old
-    val (_, effLayout, targetEpoch, staging) =
-      prepareStaging(spark, path, old)
-    val dataCols = (Model.Key ++ Seq("count", "first_seen", "last_seen"))
-      .map(col)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val perCopy = Copies.map { case (sub, keyCol, sortCols) => Future {
-      writeCopy(
-        spark.read.parquet(s"$path/$sub").select(dataCols: _*),
-        s"$staging/$sub", keyCol, sortCols, newBuckets,
-        layout = effLayout)
-    }}
-    Await.result(Future.sequence(perCopy),
-      scala.concurrent.duration.Duration.Inf)
-    writeStoreManifest(spark, staging, targetEpoch, newBuckets, effLayout,
-      batchId = None, wholeCopies = true)
-    applyStagedMerge(spark, path, staging)
-    old
+    StagedCommit.mutate(spark, path, Store) {
+      StagedCommit.stage(spark, path, None) { stg =>
+        val old = stg.meta.get("num_buckets").map(_.toInt).getOrElse(
+          throw new IllegalArgumentException(
+            s"store at $path has no num_buckets metadata; refusing to " +
+              "rebucket without a committed count"))
+        if (old == newBuckets) None -> old
+        else {
+          val (_, effLayout) = bucketsAndLayout(stg, old)
+          val dataCols =
+            (Model.Key ++ Seq("count", "first_seen", "last_seen")).map(col)
+          import scala.concurrent.{Await, Future}
+          import scala.concurrent.ExecutionContext.Implicits.global
+          val perCopy = Copies.map { case (sub, keyCol, sortCols) => Future {
+            writeCopy(
+              spark.read.parquet(s"$path/$sub").select(dataCols: _*),
+              s"${stg.dir}/$sub", keyCol, sortCols, newBuckets,
+              layout = effLayout)
+          }}
+          Await.result(Future.sequence(perCopy),
+            scala.concurrent.duration.Duration.Inf)
+          storeManifest(spark, stg, newBuckets, effLayout,
+            wholeCopies = true) -> old
+        }
+      }
+    }.get
   }
 
   /** CDC-style diff of two aggregated store snapshots — the audit

@@ -132,8 +132,8 @@ object Retrieval {
     val (tbf, tbp) = ObservationStore.fs(spark, s"$path/_tombstones")
     if (tbf.exists(tbp)) tbf.delete(tbp, true)
     // LAST write, batch id atomic with it — the writeLm stream contract
-    writeIndexMeta(spark, path,
-      readIndexEpoch(spark, path).getOrElse(0L) + 1L, batchId)
+    StagedCommit.writeBuildMeta(spark, path,
+      StagedCommit.readMeta(spark, path), batchId = batchId)
   }
 
   /** Bucketed (doc_id, p, word) postings — ONE definition shared by the
@@ -146,24 +146,28 @@ object Retrieval {
       .withColumn("word_bucket",
         pmod(xxhash64(col("word")), lit(nBuckets)))
 
+  /** The positional index's commit shape: staged position buckets;
+    * vacuums also swap whole tables (the emptied tombstone set), plain
+    * merges list none. */
+  private val Positional = StagedCommit.Family(Seq(
+    StagedCommit.PieceList("staged_positions", "positions"),
+    StagedCommit.PieceList("staged_tables", ifAbsent = Some((_, _) => Nil))))
+
   /** Incremental positional-index maintenance: postings are
     * PER-DOCUMENT (positions are offsets within each doc), so a batch of
     * NEW documents folds in by rewriting only its terms' touched
     * buckets — the [[mergeIndex]] shape minus the df/stats arithmetic
     * (the positional layout keeps only `n_buckets`, which never
     * changes). Staged + manifest + idempotent swap + generation bump
-    * LAST; `batchId` gives foreachBatch exactly-once. Batches must carry
-    * previously-unseen doc ids (the append-only contract every
+    * LAST; `batchId` gives stream replays exactly-once. Batches must
+    * carry previously-unseen doc ids (the append-only contract every
     * incremental artifact here shares). */
   def mergePositionalIndex(spark: SparkSession, path: String,
       batch: DataFrame, textCol: String, idCol: String,
-      batchId: Option[Long] = None): Unit = {
-    recoverPositionalIndex(spark, path, deleteUncommitted = true)
-    if (batchId.exists(bid => readIndexBatchId(spark, path).exists(_ >= bid)))
-      return
-    applyStagedPositionalMerge(spark, path,
-      stagePositionalMerge(spark, path, batch, textCol, idCol, batchId))
-  }
+      batchId: Option[Long] = None): Unit =
+    StagedCommit.mutate(spark, path, Positional, batchId)(Some(
+      stagePositionalMerge(spark, path, batch, textCol, idCol, batchId)) ->
+      ()): Unit
 
   /** Stage the touched positional buckets and commit the manifest;
     * package-visible so crash tests can stop here. */
@@ -171,52 +175,30 @@ object Retrieval {
       path: String, batch: DataFrame, textCol: String, idCol: String,
       batchId: Option[Long] = None): String = {
     require(!batch.isEmpty, "mergePositionalIndex: batch is empty")
-    val nBuckets = spark.read.parquet(s"$path/stats")
-      .head().getAs[Long]("n_buckets")
-    val targetGen = readIndexEpoch(spark, path).getOrElse(0L) + 1L
-    val staging = s"$path/_staging_$targetGen"
-    val (f, sp) = ObservationStore.fs(spark, staging)
-    if (f.exists(sp)) f.delete(sp, true)
-    val newPos = bucketedPostings(batch, textCol, idCol, nBuckets)
-      .localCheckpoint(false) // feeds the touched-bucket list AND the write
-    val touched = newPos.select("word_bucket").distinct()
-      .collect().map(_.getLong(0))
-    spark.read.parquet(s"$path/positions")
-      .filter(col("word_bucket").isin(touched.toIndexedSeq: _*))
-      .select(newPos.columns.toIndexedSeq.map(col): _*)
-      .unionAll(newPos)
-      .repartition(col("word_bucket"))
-      .sortWithinPartitions(col("word"), col("doc_id"), col("p"))
-      .write.mode("overwrite").partitionBy("word_bucket")
-      .parquet(s"$staging/positions")
-    val stagedBuckets = StagedCommit.stagedPartDirs(spark,
-      s"$staging/positions", "word_bucket=").mkString(",")
-    val bid = batchId.map(b => s""","batch_id":$b""").getOrElse("")
-    val (mf, mp) = ObservationStore.fs(spark, s"$staging/_manifest.json")
-    val out = mf.create(mp, true)
-    try out.write(
-      (s"""{"target_epoch":$targetGen,""" +
-        s""""staged_positions":"$stagedBuckets"$bid}""").getBytes("UTF-8"))
-    finally out.close()
-    staging
+    StagedCommit.stage(spark, path, batchId) { stg =>
+      val nBuckets = spark.read.parquet(s"$path/stats")
+        .head().getAs[Long]("n_buckets")
+      val newPos = bucketedPostings(batch, textCol, idCol, nBuckets)
+        .localCheckpoint(false) // feeds the touched-bucket list AND the write
+      val touched = newPos.select("word_bucket").distinct()
+        .collect().map(_.getLong(0))
+      spark.read.parquet(s"$path/positions")
+        .filter(col("word_bucket").isin(touched.toIndexedSeq: _*))
+        .select(newPos.columns.toIndexedSeq.map(col): _*)
+        .unionAll(newPos)
+        .repartition(col("word_bucket"))
+        .sortWithinPartitions(col("word"), col("doc_id"), col("p"))
+        .write.mode("overwrite").partitionBy("word_bucket")
+        .parquet(s"${stg.dir}/positions")
+      Some(positionalManifest(spark, stg)) -> ()
+    }._1.get
   }
 
-  private[graft] def applyStagedPositionalMerge(spark: SparkSession,
-      path: String, staging: String): Unit = {
-    val manifest = StagedCommit.readManifest(spark, staging)
-    val targetGen = StagedCommit.numField(manifest, "target_epoch")
-    val pieces = StagedCommit.listField(manifest, "staged_positions")
-      .getOrElse(throw new StagedCommit.TornManifest(
-        s"staged positional manifest missing staged_positions: $manifest"))
-      .map(b => s"positions/$b") ++
-      // vacuum generations also swap whole tables (the emptied
-      // tombstone set); plain merges list none
-      StagedCommit.listField(manifest, "staged_tables").getOrElse(Nil)
-    val batchId = StagedCommit.optNumField(manifest, "batch_id")
-    StagedCommit.applyPieces(spark, path, staging, pieces, targetGen,
-      () => readIndexEpoch(spark, path),
-      gen => writeIndexMeta(spark, path, gen, batchId))
-  }
+  private def positionalManifest(spark: SparkSession,
+      stg: StagedCommit.Staging, tables: String*): StagedCommit.Manifest =
+    StagedCommit.Manifest(Seq("staged_positions" -> StagedCommit
+      .stagedPartDirs(spark, s"${stg.dir}/positions", "word_bucket=")) ++
+      (if (tables.isEmpty) Nil else Seq("staged_tables" -> tables)))
 
   /** Retraction on the positional index — pure VISIBILITY (phrase and
     * proximity search carry no corpus statistics, unlike BM25): deleted
@@ -239,60 +221,47 @@ object Retrieval {
     * table swap together under the positional manifest — the
     * [[vacuumIndex]] crash argument, minus the statistics (none here).
     * Returns position rows removed. */
-  def vacuumPositionalIndex(spark: SparkSession, path: String): Long = {
-    recoverPositionalIndex(spark, path, deleteUncommitted = true)
-    val (f, tp) = ObservationStore.fs(spark, s"$path/_tombstones")
-    if (!f.exists(tp)) return 0L
-    val tomb = spark.read.parquet(s"$path/_tombstones")
-      .select(col("doc_id")).distinct().localCheckpoint(false)
-    if (tomb.isEmpty) { f.delete(tp, true); return 0L }
-    val positions = spark.read.parquet(s"$path/positions")
-    val tombIds = TombstoneMask.hinted(spark, tomb,
-      TombstoneMask.footerRowCount(spark, s"$path/_tombstones"))
-    val dead = positions.join(tombIds, Seq("doc_id"), "left_semi")
-      .localCheckpoint(false)
-    val removed = dead.count()
-    val touched = dead.select(col("word_bucket").cast("long"))
-      .distinct().collect().map(_.getLong(0)).toIndexedSeq
-    val targetGen = readIndexEpoch(spark, path).getOrElse(0L) + 1L
-    val staging = s"$path/_staging_$targetGen"
-    val (sf, sp) = ObservationStore.fs(spark, staging)
-    if (sf.exists(sp)) sf.delete(sp, true)
-    val survivors = positions
-      .filter(col("word_bucket").isin(touched: _*))
-      .join(tombIds, Seq("doc_id"), "left_anti")
-      .localCheckpoint(false) // reads the files the swap replaces
-    survivors
-      .repartition(col("word_bucket"))
-      .sortWithinPartitions(col("word"), col("doc_id"), col("p"))
-      .write.mode("overwrite").partitionBy("word_bucket")
-      .parquet(s"$staging/positions")
-    val staying = survivors.select(col("word_bucket").cast("long"))
-      .distinct().collect().map(_.getLong(0)).toSet
-    StagedCommit.stageEmptyPieces(spark, survivors.drop("word_bucket"),
-      touched.filterNot(staying)
-        .map(b => s"$staging/positions/word_bucket=$b"))
-    tomb.limit(0).coalesce(1)
-      .write.mode("overwrite").parquet(s"$staging/_tombstones")
-    val stagedBuckets = StagedCommit.stagedPartDirs(spark,
-      s"$staging/positions", "word_bucket=").mkString(",")
-    val (mf, mp) = ObservationStore.fs(spark, s"$staging/_manifest.json")
-    val out = mf.create(mp, true)
-    try out.write(
-      (s"""{"target_epoch":$targetGen,""" +
-        s""""staged_positions":"$stagedBuckets",""" +
-        s""""staged_tables":"_tombstones"}""").getBytes("UTF-8"))
-    finally out.close()
-    applyStagedPositionalMerge(spark, path, staging)
-    removed
-  }
+  def vacuumPositionalIndex(spark: SparkSession, path: String): Long =
+    StagedCommit.mutate(spark, path, Positional) {
+      val (f, tp) = ObservationStore.fs(spark, s"$path/_tombstones")
+      lazy val tomb = spark.read.parquet(s"$path/_tombstones")
+        .select(col("doc_id")).distinct().localCheckpoint(false)
+      if (!f.exists(tp)) None -> 0L
+      else if (tomb.isEmpty) { f.delete(tp, true); None -> 0L }
+      else StagedCommit.stage(spark, path, None) { stg =>
+        val positions = spark.read.parquet(s"$path/positions")
+        val tombIds = TombstoneMask.hinted(spark, tomb,
+          TombstoneMask.footerRowCount(spark, s"$path/_tombstones"))
+        val dead = positions.join(tombIds, Seq("doc_id"), "left_semi")
+          .localCheckpoint(false)
+        val removed = dead.count()
+        val touched = dead.select(col("word_bucket").cast("long"))
+          .distinct().collect().map(_.getLong(0)).toIndexedSeq
+        val survivors = positions
+          .filter(col("word_bucket").isin(touched: _*))
+          .join(tombIds, Seq("doc_id"), "left_anti")
+          .localCheckpoint(false) // reads the files the swap replaces
+        survivors
+          .repartition(col("word_bucket"))
+          .sortWithinPartitions(col("word"), col("doc_id"), col("p"))
+          .write.mode("overwrite").partitionBy("word_bucket")
+          .parquet(s"${stg.dir}/positions")
+        val staying = survivors.select(col("word_bucket").cast("long"))
+          .distinct().collect().map(_.getLong(0)).toSet
+        StagedCommit.stageEmptyPieces(spark, survivors.drop("word_bucket"),
+          touched.filterNot(staying)
+            .map(b => s"${stg.dir}/positions/word_bucket=$b"))
+        tomb.limit(0).coalesce(1)
+          .write.mode("overwrite").parquet(s"${stg.dir}/_tombstones")
+        Some(positionalManifest(spark, stg, "_tombstones")) -> removed
+      }
+    }.get
 
   /** Resolve an interrupted [[mergePositionalIndex]] (the
     * [[recoverIndexMerge]] single-writer contract). */
   def recoverPositionalIndex(spark: SparkSession, path: String,
       deleteUncommitted: Boolean = false): Unit =
-    StagedCommit.recover(spark, path, deleteUncommitted)(
-      staging => applyStagedPositionalMerge(spark, path, staging))
+    StagedCommit.recover(spark, path, Positional, deleteUncommitted)
 
   /** Structured-Streaming maintenance of the positional index — the
     * [[streamIndex]] twin: first batch builds, every later micro-batch
@@ -302,23 +271,11 @@ object Retrieval {
   def streamPositionalIndex(spark: SparkSession, docs: DataFrame,
       textCol: String, idCol: String, path: String, checkpointDir: String,
       nBuckets: Int = 64): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        // probe the META file (the build's LAST write, batch id riding
-        // it): a crashed first build replays as a clean rebuild, a
-        // committed one as an exactly-once skip — probing a data table
-        // would let a half-built artifact replay as a double-counting
-        // merge (the streamLm rationale)
-        if (batch.isEmpty) ()
-        else if (!ObservationStore.pathExists(spark,
-            s"$path/_graft_meta.json"))
-          writePositionalIndex(batch, textCol, idCol, path, nBuckets,
-            Some(bid))
-        else mergePositionalIndex(spark, path, batch, textCol, idCol,
-          Some(bid))
-      }
-      .start()
+    StagedCommit.stream(spark, docs, path, checkpointDir)(
+      (batch, bid) => writePositionalIndex(batch, textCol, idCol, path,
+        nBuckets, Some(bid)),
+      (batch, bid) => mergePositionalIndex(spark, path, batch, textCol,
+        idCol, Some(bid)))
 
   /** [[phraseSearch]] against a [[writePositionalIndex]] artifact:
     * bucket-directory pruning + pushed word filters instead of a corpus
@@ -496,53 +453,27 @@ object Retrieval {
     // stayed fully live
     val (tbf, tbp) = ObservationStore.fs(spark, s"$path/_tombstones")
     if (tbf.exists(tbp)) tbf.delete(tbp, true)
-    // a rebuild of an existing index advances the generation, never
-    // resets; the meta write is LAST and carries the builder's batch id
+    // the meta write is LAST and carries the builder's batch id
     // atomically (the writeLm stream contract)
-    writeIndexMeta(spark, path,
-      readIndexEpoch(spark, path).getOrElse(0L) + 1L, batchId)
+    StagedCommit.writeBuildMeta(spark, path,
+      StagedCommit.readMeta(spark, path), batchId = batchId)
   }
 
-  /** Index generation: advanced once per committed write/merge. */
-  def readIndexEpoch(spark: SparkSession, path: String): Option[Long] = {
-    val (f, p) = ObservationStore.fs(spark, s"$path/_graft_meta.json")
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val content =
-        try new String(in.readAllBytes(), "UTF-8")
-        finally in.close()
-      """"epoch"\s*:\s*(\d+)""".r.findFirstMatchIn(content)
-        .map(_.group(1).toLong)
-    }
-  }
-
-  private[operators] def writeIndexMeta(spark: SparkSession, path: String,
-      epoch: Long, batchId: Option[Long] = None): Unit = {
-    // the batch-id marker commits atomically with the generation; a
-    // rewrite without one preserves what is recorded (the store's
-    // writeMeta contract)
-    val bid = batchId.orElse(readIndexBatchId(spark, path))
-      .map(b => s""","last_batch_id":$b""").getOrElse("")
-    val (f, p) = ObservationStore.fs(spark, s"$path/_graft_meta.json")
-    val out = f.create(p, true)
-    try out.write(s"""{"epoch":$epoch$bid}""".getBytes("UTF-8"))
-    finally out.close()
-  }
+  /** Index generation: advanced once per committed write/merge — of
+    * every family sharing this meta shape (BM25, positional, IVF-PQ,
+    * n-gram LM). */
+  def readIndexEpoch(spark: SparkSession, path: String): Option[Long] =
+    StagedCommit.metaField(spark, path, "epoch")
 
   /** Highest streaming batch id already merged into the index. */
-  def readIndexBatchId(spark: SparkSession, path: String): Option[Long] = {
-    val (f, p) = ObservationStore.fs(spark, s"$path/_graft_meta.json")
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val content =
-        try new String(in.readAllBytes(), "UTF-8")
-        finally in.close()
-      """"last_batch_id"\s*:\s*(\d+)""".r.findFirstMatchIn(content)
-        .map(_.group(1).toLong)
-    }
-  }
+  def readIndexBatchId(spark: SparkSession, path: String): Option[Long] =
+    StagedCommit.metaField(spark, path, "last_batch_id")
+
+  /** The BM25 index's commit shape: staged postings buckets plus whole
+    * tables (terms and stats; a vacuum adds the emptied tombstones). */
+  private val Bm25 = StagedCommit.Family(Seq(
+    StagedCommit.PieceList("staged_postings", "postings"),
+    StagedCommit.PieceList("staged_tables")))
 
   /** Incrementally merge a batch of NEW documents into a persisted
     * index — the text-index twin of `ObservationStore.mergeBatch`: a
@@ -570,16 +501,12 @@ object Retrieval {
     * would silently mis-score every subsequent query. */
   def mergeIndex(spark: SparkSession, path: String, batch: DataFrame,
       textCol: String, idCol: String,
-      batchId: Option[Long] = None): Unit = {
-    recoverIndexMerge(spark, path, deleteUncommitted = true)
-    // exactly-once under foreachBatch replays, the mergeBatch contract:
-    // a batch the index already committed (marker rides the generation
+      batchId: Option[Long] = None): Unit =
+    // exactly-once under stream replays, the mergeBatch contract: a
+    // batch the index already committed (marker rides the generation
     // write) is skipped, not double-merged
-    if (batchId.exists(bid => readIndexBatchId(spark, path).exists(_ >= bid)))
-      return
-    val staging = stageIndexMerge(spark, path, batch, textCol, idCol, batchId)
-    applyStagedIndexMerge(spark, path, staging)
-  }
+    StagedCommit.mutate(spark, path, Bm25, batchId)(Some(
+      stageIndexMerge(spark, path, batch, textCol, idCol, batchId)) -> ()): Unit
 
   /** Stage merged postings/terms/stats under `_staging_<gen>` and commit
     * the manifest. Package-visible so crash tests can stop here. */
@@ -587,88 +514,61 @@ object Retrieval {
       batch: DataFrame, textCol: String, idCol: String,
       batchId: Option[Long] = None): String = {
     require(!batch.isEmpty, "mergeIndex: batch is empty")
-    val st = spark.read.parquet(s"$path/stats").head()
-    val (nDocs, sumDl, nBuckets) =
-      (st.getAs[Long]("n_docs"), st.getAs[Long]("sum_dl"),
-        st.getAs[Long]("n_buckets"))
-    val targetGen = readIndexEpoch(spark, path).getOrElse(0L) + 1L
-    val staging = s"$path/_staging_$targetGen"
-    val (f, sp) = ObservationStore.fs(spark, staging)
-    // stale staging at our own target can only be an uncommitted previous
-    // attempt (recoverIndexMerge ran first on the writer path) — discard
-    if (f.exists(sp)) f.delete(sp, true)
-    val newIdx = tokenIndex(batch, textCol, idCol)
-      .withColumn("term_bucket", pmod(xxhash64(col("term")), lit(nBuckets)))
-      .localCheckpoint(false) // feeds buckets, postings, df and stats once
-    val touched = newIdx.select("term_bucket").distinct()
-      .collect().map(_.getLong(0))
-    // staging reads the live tables and writes ELSEWHERE, so none of the
-    // lineage cuts the old in-place dynamic overwrite needed remain.
-    // The three staged tables are independent jobs over the (already
-    // materialized by the touched-probe) checkpointed batch index into
-    // disjoint directories — overlap them, the writeDual/stageMerge move
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(Future.sequence(Seq(
-      Future(spark.read.parquet(s"$path/postings")
-        .filter(col("term_bucket").isin(touched.toIndexedSeq: _*))
-        .select(newIdx.columns.toIndexedSeq.map(col): _*)
-        .unionAll(newIdx)
-        .repartition(col("term_bucket"))
-        .sortWithinPartitions(col("term_bucket"), col("term"))
-        .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(s"$staging/postings")),
-      // vocabulary-sized: merge document frequencies in one aggregation
-      Future(spark.read.parquet(s"$path/terms")
-        .unionAll(newIdx.groupBy(col("term")).agg(count(lit(1)).as("df")))
-        .groupBy(col("term")).agg(sum(col("df")).cast("long").as("df"))
-        .write.mode("overwrite").parquet(s"$staging/terms")),
-      Future {
-        val batchStats = batch.agg(count(lit(1)).as("n"),
-          sum(size(tokens(col(textCol)))).as("dl")).head()
-        spark.range(1).select(
-            lit(nDocs + batchStats.getLong(0)).as("n_docs"),
-            lit(sumDl + batchStats.getLong(1)).as("sum_dl"),
-            lit(nBuckets).as("n_buckets"))
-          .write.mode("overwrite").parquet(s"$staging/stats")
-      })),
-      scala.concurrent.duration.Duration.Inf): Unit
-    // manifest = commit point; it lists the staged pieces so apply can
-    // tell "already swapped" from "staged data lost" (the latter must
-    // fail loudly, not skip — a skip would commit postings without their
-    // matching df). A partial manifest fails to parse = not committed.
-    val stagedBuckets = StagedCommit.stagedPartDirs(spark,
-      s"$staging/postings", "term_bucket=").mkString(",")
-    val bid = batchId.map(b => s""","batch_id":$b""").getOrElse("")
-    val (mf, mp) = ObservationStore.fs(spark, s"$staging/_manifest.json")
-    val out = mf.create(mp, true)
-    try out.write(
-      (s"""{"target_epoch":$targetGen,""" +
-        s""""staged_postings":"$stagedBuckets","staged_tables":"terms,stats"$bid}""")
-        .getBytes("UTF-8"))
-    finally out.close()
-    staging
+    StagedCommit.stage(spark, path, batchId) { stg =>
+      val st = spark.read.parquet(s"$path/stats").head()
+      val (nDocs, sumDl, nBuckets) =
+        (st.getAs[Long]("n_docs"), st.getAs[Long]("sum_dl"),
+          st.getAs[Long]("n_buckets"))
+      val newIdx = tokenIndex(batch, textCol, idCol)
+        .withColumn("term_bucket", pmod(xxhash64(col("term")), lit(nBuckets)))
+        .localCheckpoint(false) // feeds buckets, postings, df and stats once
+      val touched = newIdx.select("term_bucket").distinct()
+        .collect().map(_.getLong(0))
+      // staging reads the live tables and writes ELSEWHERE, so none of the
+      // lineage cuts the old in-place dynamic overwrite needed remain.
+      // The three staged tables are independent jobs over the (already
+      // materialized by the touched-probe) checkpointed batch index into
+      // disjoint directories — overlap them, the writeDual/stageMerge move
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      Await.result(Future.sequence(Seq(
+        Future(spark.read.parquet(s"$path/postings")
+          .filter(col("term_bucket").isin(touched.toIndexedSeq: _*))
+          .select(newIdx.columns.toIndexedSeq.map(col): _*)
+          .unionAll(newIdx)
+          .repartition(col("term_bucket"))
+          .sortWithinPartitions(col("term_bucket"), col("term"))
+          .write.mode("overwrite").partitionBy("term_bucket")
+          .parquet(s"${stg.dir}/postings")),
+        // vocabulary-sized: merge document frequencies in one aggregation
+        Future(spark.read.parquet(s"$path/terms")
+          .unionAll(newIdx.groupBy(col("term")).agg(count(lit(1)).as("df")))
+          .groupBy(col("term")).agg(sum(col("df")).cast("long").as("df"))
+          .write.mode("overwrite").parquet(s"${stg.dir}/terms")),
+        Future {
+          val batchStats = batch.agg(count(lit(1)).as("n"),
+            sum(size(tokens(col(textCol)))).as("dl")).head()
+          spark.range(1).select(
+              lit(nDocs + batchStats.getLong(0)).as("n_docs"),
+              lit(sumDl + batchStats.getLong(1)).as("sum_dl"),
+              lit(nBuckets).as("n_buckets"))
+            .write.mode("overwrite").parquet(s"${stg.dir}/stats")
+        })),
+        scala.concurrent.duration.Duration.Inf): Unit
+      // the manifest lists the staged pieces so apply can tell "already
+      // swapped" from "staged data lost" (the latter must fail loudly,
+      // not skip — a skip would commit postings without their matching
+      // df)
+      Some(bm25Manifest(spark, stg, "terms", "stats")) -> ()
+    }._1.get
   }
 
-  /** Replay the staged merge: swap each staged postings bucket, then the
-    * terms and stats tables, into the live index (each swap idempotent —
-    * a staged piece disappears exactly when its rename lands), bump the
-    * generation once, drop the staging dir. */
-  private[graft] def applyStagedIndexMerge(spark: SparkSession, path: String,
-      staging: String): Unit = {
-    val manifest = StagedCommit.readManifest(spark, staging)
-    val targetGen = StagedCommit.numField(manifest, "target_epoch")
-    def req(name: String): Seq[String] =
-      StagedCommit.listField(manifest, name)
-        .getOrElse(throw new StagedCommit.TornManifest(
-          s"staged index manifest missing $name: $manifest"))
-    val pieces = req("staged_postings").map(b => s"postings/$b") ++
-      req("staged_tables")
-    val batchId = StagedCommit.optNumField(manifest, "batch_id")
-    StagedCommit.applyPieces(spark, path, staging, pieces, targetGen,
-      () => readIndexEpoch(spark, path),
-      gen => writeIndexMeta(spark, path, gen, batchId))
-  }
+  private def bm25Manifest(spark: SparkSession, stg: StagedCommit.Staging,
+      tables: String*): StagedCommit.Manifest =
+    StagedCommit.Manifest(Seq(
+      "staged_postings" -> StagedCommit.stagedPartDirs(spark,
+        s"${stg.dir}/postings", "term_bucket="),
+      "staged_tables" -> tables))
 
   /** Structured-Streaming maintenance of the persisted index: each
     * micro-batch of NEW documents folds in with [[mergeIndex]] (the first
@@ -678,28 +578,15 @@ object Retrieval {
     * index generation per micro-batch: a query between or during batches
     * never scores against postings and df/stats from different
     * generations. Batches must carry previously-unseen doc ids (the
-    * [[mergeIndex]] append-only contract; a Spark-retried batch would
-    * re-merge its postings — the same caveat as the observation-store
-    * ingest). */
+    * [[mergeIndex]] append-only contract). */
   def streamIndex(spark: SparkSession, docs: DataFrame, textCol: String,
       idCol: String, path: String, checkpointDir: String,
       nBuckets: Int = 64): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        // probe the META file, not a data table: writeIndex writes the
-        // meta LAST with the batch id atomic on it, so a first batch
-        // that crashed mid-build replays as a clean rebuild and a
-        // committed one as an exactly-once skip — a stats-table probe
-        // had a window where a half-built index replayed as a
-        // double-counting merge
-        if (batch.isEmpty) () // empty micro-batch: nothing to merge
-        else if (!ObservationStore.pathExists(spark,
-            s"$path/_graft_meta.json"))
-          writeIndex(batch, textCol, idCol, path, nBuckets, Some(bid))
-        else mergeIndex(spark, path, batch, textCol, idCol, Some(bid))
-      }
-      .start()
+    StagedCommit.stream(spark, docs, path, checkpointDir)(
+      (batch, bid) =>
+        writeIndex(batch, textCol, idCol, path, nBuckets, Some(bid)),
+      (batch, bid) =>
+        mergeIndex(spark, path, batch, textCol, idCol, Some(bid)))
 
   /** Resolve any interrupted [[mergeIndex]]: a staging dir WITH a manifest
     * is committed — finish its swaps and generation bump. One WITHOUT a
@@ -709,8 +596,7 @@ object Retrieval {
     * `ObservationStore.recoverMerge` single-writer contract). */
   def recoverIndexMerge(spark: SparkSession, path: String,
       deleteUncommitted: Boolean = false): Unit =
-    StagedCommit.recover(spark, path, deleteUncommitted)(
-      staging => applyStagedIndexMerge(spark, path, staging))
+    StagedCommit.recover(spark, path, Bm25, deleteUncommitted)
 
   /** Reciprocal-rank fusion of ranked candidate lists — the standard
     * hybrid-retrieval combiner (lexical BM25 ∪ vector ANN for RAG-style
@@ -849,108 +735,98 @@ object Retrieval {
     * the dead files live). Verifies every tombstoned id actually holds
     * postings before staging — an id never indexed would silently skew
     * df/n_docs/sum_dl forever. Returns postings rows removed. */
-  def vacuumIndex(spark: SparkSession, path: String): Long = {
-    recoverIndexMerge(spark, path, deleteUncommitted = true)
-    val (f, tp) = ObservationStore.fs(spark, s"$path/_tombstones")
-    if (!f.exists(tp)) return 0L
-    val tomb = spark.read.parquet(s"$path/_tombstones")
-      .groupBy(col("doc_id")).agg(max(col("dl")).as("t_dl"))
-      .localCheckpoint(false)
-    val ts = tomb.agg(count(lit(1)).as("n"), sum(col("t_dl")).as("dl")).head()
-    val (nTomb, dlTomb) = (ts.getLong(0), if (ts.isNullAt(1)) 0L else ts.getLong(1))
-    if (nTomb == 0L) { f.delete(tp, true); return 0L }
-    val st = spark.read.parquet(s"$path/stats").head()
-    val (nDocs, sumDl, nBuckets) =
-      (st.getAs[Long]("n_docs"), st.getAs[Long]("sum_dl"),
-        st.getAs[Long]("n_buckets"))
-    val postings = spark.read.parquet(s"$path/postings")
-    val tombIds = TombstoneMask.hinted(spark, tomb.select(col("doc_id")),
-      TombstoneMask.footerRowCount(spark, s"$path/_tombstones"))
-    val dead = postings.join(tombIds, Seq("doc_id"), "left_semi")
-      .localCheckpoint(false) // feeds the per-term counts, touched set,
-                              // row count and the id check once
-    // a legitimately indexed ZERO-TOKEN document is counted in
-    // n_docs/sum_dl yet owns no postings rows — its tombstone records
-    // dl=0 and must match zero postings, or deleting it would wedge
-    // vacuum forever. Only dl>0 tombstones must hold postings; a dl=0
-    // tombstone on a doc that DOES hold postings (a mis-recorded dl)
-    // still trips the require, because matchedIds then exceeds the
-    // dl>0 tombstone count.
-    val matchedIds = dead.select(col("doc_id")).distinct().count()
-    val nTombTokened = tomb.filter(col("t_dl") > 0).count()
-    require(matchedIds == nTombTokened,
-      s"vacuumIndex: $nTombTokened tombstoned ids carry tokens but " +
-        s"$matchedIds hold postings — deleting a never-indexed id " +
-        "would corrupt the index statistics; remove the bad " +
-        "tombstones first")
-    val removed = dead.count()
-    val touched = dead.select(col("term_bucket").cast("long"))
-      .distinct().collect().map(_.getLong(0)).toIndexedSeq
-    val targetGen = readIndexEpoch(spark, path).getOrElse(0L) + 1L
-    val staging = s"$path/_staging_$targetGen"
-    val (sf, sp) = ObservationStore.fs(spark, staging)
-    if (sf.exists(sp)) sf.delete(sp, true)
-    val survivors = postings
-      .filter(col("term_bucket").isin(touched: _*))
-      .join(tombIds, Seq("doc_id"), "left_anti")
-      .localCheckpoint(false) // reads the files the swap replaces
-    // the four staged tables are independent jobs into disjoint
-    // directories — overlap them (the writeIndex move); the manifest
-    // below is still the only commit point
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(Future.sequence(Seq(
-      Future {
-        survivors
-          .repartition(col("term_bucket"))
-          .sortWithinPartitions(col("term_bucket"), col("term"))
-          .write.mode("overwrite").partitionBy("term_bucket")
-          .parquet(s"$staging/postings")
-        // fully-dead buckets wrote nothing above — stage explicit empty
-        // pieces so the swap replaces (not strands) their live files
-        val staying = survivors.select(col("term_bucket").cast("long"))
-          .distinct().collect().map(_.getLong(0)).toSet
-        StagedCommit.stageEmptyPieces(spark,
-          survivors.drop("term_bucket"),
-          touched.filterNot(staying)
-            .map(b => s"$staging/postings/term_bucket=$b"))
-      },
-      Future {
-        val deadDf = dead.groupBy(col("term"))
-          .agg(count(lit(1)).as("dead_df"))
-        spark.read.parquet(s"$path/terms")
-          .join(deadDf, Seq("term"), "left")
-          .select(col("term"),
-            (col("df") - coalesce(col("dead_df"), lit(0L))).as("df"))
-          .filter(col("df") > 0)
-          .write.mode("overwrite").parquet(s"$staging/terms")
-      },
-      Future(spark.range(1).select(
-          lit(nDocs - nTomb).as("n_docs"),
-          lit(sumDl - dlTomb).as("sum_dl"),
-          lit(nBuckets).as("n_buckets"))
-        .write.mode("overwrite").parquet(s"$staging/stats")),
-      // the emptied tombstone table swaps WITH the adjusted tables: any
-      // earlier ordering double-subtracts on one side of a crash.
-      // Schema must be the (doc_id, dl) that deleteFromIndex appends
-      // and the query path reads.
-      Future(tomb.select(col("doc_id"), col("t_dl").as("dl"))
-        .limit(0).coalesce(1)
-        .write.mode("overwrite").parquet(s"$staging/_tombstones")))),
-      scala.concurrent.duration.Duration.Inf): Unit
-    val stagedBuckets = StagedCommit.stagedPartDirs(spark,
-      s"$staging/postings", "term_bucket=").mkString(",")
-    val (mf, mp) = ObservationStore.fs(spark, s"$staging/_manifest.json")
-    val out = mf.create(mp, true)
-    try out.write(
-      (s"""{"target_epoch":$targetGen,""" +
-        s""""staged_postings":"$stagedBuckets",""" +
-        s""""staged_tables":"terms,stats,_tombstones"}""")
-        .getBytes("UTF-8"))
-    finally out.close()
-    applyStagedIndexMerge(spark, path, staging)
-    removed
-  }
+  def vacuumIndex(spark: SparkSession, path: String): Long =
+    StagedCommit.mutate(spark, path, Bm25) {
+      val (f, tp) = ObservationStore.fs(spark, s"$path/_tombstones")
+      lazy val tomb = spark.read.parquet(s"$path/_tombstones")
+        .groupBy(col("doc_id")).agg(max(col("dl")).as("t_dl"))
+        .localCheckpoint(false)
+      lazy val ts =
+        tomb.agg(count(lit(1)).as("n"), sum(col("t_dl")).as("dl")).head()
+      if (!f.exists(tp)) None -> 0L
+      else if (ts.getLong(0) == 0L) { f.delete(tp, true); None -> 0L }
+      else StagedCommit.stage(spark, path, None) { stg =>
+        val (nTomb, dlTomb) =
+          (ts.getLong(0), if (ts.isNullAt(1)) 0L else ts.getLong(1))
+        val st = spark.read.parquet(s"$path/stats").head()
+        val (nDocs, sumDl, nBuckets) =
+          (st.getAs[Long]("n_docs"), st.getAs[Long]("sum_dl"),
+            st.getAs[Long]("n_buckets"))
+        val postings = spark.read.parquet(s"$path/postings")
+        val tombIds = TombstoneMask.hinted(spark, tomb.select(col("doc_id")),
+          TombstoneMask.footerRowCount(spark, s"$path/_tombstones"))
+        val dead = postings.join(tombIds, Seq("doc_id"), "left_semi")
+          .localCheckpoint(false) // feeds the per-term counts, touched set,
+                                  // row count and the id check once
+        // a legitimately indexed ZERO-TOKEN document is counted in
+        // n_docs/sum_dl yet owns no postings rows — its tombstone records
+        // dl=0 and must match zero postings, or deleting it would wedge
+        // vacuum forever. Only dl>0 tombstones must hold postings; a dl=0
+        // tombstone on a doc that DOES hold postings (a mis-recorded dl)
+        // still trips the require, because matchedIds then exceeds the
+        // dl>0 tombstone count.
+        val matchedIds = dead.select(col("doc_id")).distinct().count()
+        val nTombTokened = tomb.filter(col("t_dl") > 0).count()
+        require(matchedIds == nTombTokened,
+          s"vacuumIndex: $nTombTokened tombstoned ids carry tokens but " +
+            s"$matchedIds hold postings — deleting a never-indexed id " +
+            "would corrupt the index statistics; remove the bad " +
+            "tombstones first")
+        val removed = dead.count()
+        val touched = dead.select(col("term_bucket").cast("long"))
+          .distinct().collect().map(_.getLong(0)).toIndexedSeq
+        val survivors = postings
+          .filter(col("term_bucket").isin(touched: _*))
+          .join(tombIds, Seq("doc_id"), "left_anti")
+          .localCheckpoint(false) // reads the files the swap replaces
+        // the four staged tables are independent jobs into disjoint
+        // directories — overlap them (the writeIndex move); the manifest
+        // below is still the only commit point
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.ExecutionContext.Implicits.global
+        Await.result(Future.sequence(Seq(
+          Future {
+            survivors
+              .repartition(col("term_bucket"))
+              .sortWithinPartitions(col("term_bucket"), col("term"))
+              .write.mode("overwrite").partitionBy("term_bucket")
+              .parquet(s"${stg.dir}/postings")
+            // fully-dead buckets wrote nothing above — stage explicit empty
+            // pieces so the swap replaces (not strands) their live files
+            val staying = survivors.select(col("term_bucket").cast("long"))
+              .distinct().collect().map(_.getLong(0)).toSet
+            StagedCommit.stageEmptyPieces(spark,
+              survivors.drop("term_bucket"),
+              touched.filterNot(staying)
+                .map(b => s"${stg.dir}/postings/term_bucket=$b"))
+          },
+          Future {
+            val deadDf = dead.groupBy(col("term"))
+              .agg(count(lit(1)).as("dead_df"))
+            spark.read.parquet(s"$path/terms")
+              .join(deadDf, Seq("term"), "left")
+              .select(col("term"),
+                (col("df") - coalesce(col("dead_df"), lit(0L))).as("df"))
+              .filter(col("df") > 0)
+              .write.mode("overwrite").parquet(s"${stg.dir}/terms")
+          },
+          Future(spark.range(1).select(
+              lit(nDocs - nTomb).as("n_docs"),
+              lit(sumDl - dlTomb).as("sum_dl"),
+              lit(nBuckets).as("n_buckets"))
+            .write.mode("overwrite").parquet(s"${stg.dir}/stats")),
+          // the emptied tombstone table swaps WITH the adjusted tables: any
+          // earlier ordering double-subtracts on one side of a crash.
+          // Schema must be the (doc_id, dl) that deleteFromIndex appends
+          // and the query path reads.
+          Future(tomb.select(col("doc_id"), col("t_dl").as("dl"))
+            .limit(0).coalesce(1)
+            .write.mode("overwrite").parquet(s"${stg.dir}/_tombstones")))),
+          scala.concurrent.duration.Duration.Inf): Unit
+        Some(bm25Manifest(spark, stg, "terms", "stats", "_tombstones")) ->
+          removed
+      }
+    }.get
 
   /** Ranked-retrieval EVALUATION — the recall-gate discipline the ANN
     * stack already has (`lsh_recall`, `pq_recall`, …) applied to text

@@ -994,10 +994,14 @@ object Similarity {
     *
     * Scale shape: one broadcast-argmax assignment pass + `iters` Lloyd
     * rounds (each one narrow encode + a m·ks·dsub-row aggregate) + one
-    * partitioned write — nothing joins vector-against-vector. */
+    * partitioned write — nothing joins vector-against-vector.
+    *
+    * `batchId`: the micro-batch id when the build IS a streaming batch
+    * ([[streamIvfPqIndex]]'s first), recorded in the build's one meta
+    * write so a replay of that batch is an exactly-once skip. */
   def writeIvfPqIndex(embeddings: DataFrame, idCol: String, embCol: String,
       centroidIds: Seq[Long], path: String, m: Int = 4, ks: Int = 8,
-      iters: Int = 1, dim: Int = 64): Unit = {
+      iters: Int = 1, dim: Int = 64, batchId: Option[Long] = None): Unit = {
     // a rebuild is a writer: resolve committed staging and clear
     // leftovers, or a stale committed merge could replay over the
     // rebuilt index (the writeIndex/writeDual rule)
@@ -1031,9 +1035,9 @@ object Similarity {
     // bad input while the old tables stayed fully live
     val (tbf, tbp) = ObservationStore.fs(spark, s"$path/_tombstones")
     if (tbf.exists(tbp)) tbf.delete(tbp, true)
-    // a rebuild of an existing index advances the generation, never resets
-    Retrieval.writeIndexMeta(spark, path,
-      Retrieval.readIndexEpoch(spark, path).getOrElse(0L) + 1L)
+    // LAST write, batch id atomic with it — the writeLm stream contract
+    StagedCommit.writeBuildMeta(spark, path,
+      StagedCommit.readMeta(spark, path), batchId = batchId)
   }
 
   /** Incrementally merge NEW vectors into a persisted IVF-PQ index —
@@ -1051,17 +1055,13 @@ object Similarity {
     * cluster spread, never the index. */
   def mergeIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, idCol: String, embCol: String,
-      batchId: Option[Long] = None): Unit = {
-    recoverIvfPqMerge(spark, path, deleteUncommitted = true)
-    // EXACTLY-ONCE under foreachBatch replays — the batch-id marker
-    // commits atomically with the generation (the mergeBatch/mergeIndex
-    // contract): an already-committed id is a replay, skipped
-    if (batchId.exists(bid =>
-        Retrieval.readIndexBatchId(spark, path).exists(_ >= bid)))
-      return
-    val staging = stageIvfPqMerge(spark, path, batch, idCol, embCol, batchId)
-    applyStagedIvfPqMerge(spark, path, staging)
-  }
+      batchId: Option[Long] = None): Unit =
+    StagedCommit.mutate(spark, path, IvfPq, batchId)(Some(
+      stageIvfPqMerge(spark, path, batch, idCol, embCol, batchId)) -> ()): Unit
+
+  /** The IVF-PQ index's commit shape: the staged cluster directories. */
+  private val IvfPq = StagedCommit.Family(Seq(
+    StagedCommit.PieceList("staged_vectors", "vectors")))
 
   /** Continuous vector-index maintenance: every micro-batch of NEW
     * embeddings lands in the persisted IVF-PQ index as one committed
@@ -1072,7 +1072,8 @@ object Similarity {
     * batch is assigned/encoded with the STORED model and staged-merged
     * ([[mergeIvfPqIndex]]), so a query between batches never sees a
     * half-applied generation, and a Spark-retried batch replays as a
-    * no-op via the recorded batch id. Batches must carry
+    * no-op via the recorded batch id. A first batch whose build died
+    * before its meta write replays as a rebuild. Batches must carry
     * previously-unseen vector ids (the append-only contract shared by
     * every persisted index here). */
   def streamIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
@@ -1080,19 +1081,11 @@ object Similarity {
       checkpointDir: String, centroidIds: Seq[Long], m: Int = 4,
       ks: Int = 8, iters: Int = 1, dim: Int = 64)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (batch.isEmpty) ()
-        else if (!ObservationStore.pathExists(spark, s"$path/vectors")) {
-          writeIvfPqIndex(batch, idCol, embCol, centroidIds, path,
-            m, ks, iters, dim)
-          // record the training batch's id too: its replay is a no-op
-          Retrieval.writeIndexMeta(spark, path,
-            Retrieval.readIndexEpoch(spark, path).getOrElse(1L), Some(bid))
-        } else mergeIvfPqIndex(spark, path, batch, idCol, embCol, Some(bid))
-      }
-      .start()
+    StagedCommit.stream(spark, vectors, path, checkpointDir)(
+      (batch, bid) => writeIvfPqIndex(batch, idCol, embCol, centroidIds,
+        path, m, ks, iters, dim, Some(bid)),
+      (batch, bid) =>
+        mergeIvfPqIndex(spark, path, batch, idCol, embCol, Some(bid)))
 
   private def loadCodebooks(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[Array[Array[Double]]] = {
@@ -1110,58 +1103,33 @@ object Similarity {
       path: String, batch: DataFrame, idCol: String,
       embCol: String, batchId: Option[Long] = None): String = {
     require(!batch.isEmpty, "mergeIvfPqIndex: batch is empty")
-    val cb = loadCodebooks(spark, path)
-    val centroids = spark.read.parquet(s"$path/centroids")
-    val targetGen = Retrieval.readIndexEpoch(spark, path).getOrElse(0L) + 1L
-    val staging = s"$path/_staging_$targetGen"
-    val (f, sp) = ObservationStore.fs(spark, staging)
-    if (f.exists(sp)) f.delete(sp, true)
-    // assignment: the SAME broadcast-argmax as writeIvfPqIndex, against
-    // the persisted centroid vectors — bit-identical cluster choice
-    val withCodes = batch
-      .select(col(idCol).cast("long").as("id"), scaled(col(embCol)).as("v"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("c_cos", cosine(col("v"), col("c_v")))
-      .groupBy(col("id"), col("v"))
-      .agg(max_by(col("c_id"), struct(col("c_cos"), -col("c_id")))
-        .as("cluster"))
-      .withColumn("codes", pqEncode(col("v"), cb))
-      .select(col("id"), col("codes"), col("v"), col("cluster"))
-      .localCheckpoint(false) // feeds touched-cluster collect + the write
-    val touched = withCodes.select("cluster").distinct()
-      .collect().map(_.getLong(0))
-    spark.read.parquet(s"$path/vectors")
-      .filter(col("cluster").isin(touched.toIndexedSeq: _*))
-      .select(withCodes.columns.toIndexedSeq.map(col): _*)
-      .unionAll(withCodes)
-      .repartition(col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster")
-      .parquet(s"$staging/vectors")
-    val stagedClusters = StagedCommit.stagedPartDirs(spark,
-      s"$staging/vectors", "cluster=").mkString(",")
-    val (mf, mp) = ObservationStore.fs(spark, s"$staging/_manifest.json")
-    val out = mf.create(mp, true)
-    val bid = batchId.map(b => s""","batch_id":$b""").getOrElse("")
-    try out.write(
-      (s"""{"target_epoch":$targetGen,""" +
-        s""""staged_vectors":"$stagedClusters"$bid}""").getBytes("UTF-8"))
-    finally out.close()
-    staging
-  }
-
-  private[graft] def applyStagedIvfPqMerge(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      staging: String): Unit = {
-    val manifest = StagedCommit.readManifest(spark, staging)
-    val targetGen = StagedCommit.numField(manifest, "target_epoch")
-    val pieces = StagedCommit.listField(manifest, "staged_vectors")
-      .getOrElse(throw new StagedCommit.TornManifest(
-        s"staged ivfpq manifest missing staged_vectors: $manifest"))
-      .map(name => s"vectors/$name")
-    val batchId = StagedCommit.optNumField(manifest, "batch_id")
-    StagedCommit.applyPieces(spark, path, staging, pieces, targetGen,
-      () => Retrieval.readIndexEpoch(spark, path),
-      gen => Retrieval.writeIndexMeta(spark, path, gen, batchId))
+    StagedCommit.stage(spark, path, batchId) { stg =>
+      val cb = loadCodebooks(spark, path)
+      val centroids = spark.read.parquet(s"$path/centroids")
+      // assignment: the SAME broadcast-argmax as writeIvfPqIndex, against
+      // the persisted centroid vectors — bit-identical cluster choice
+      val withCodes = batch
+        .select(col(idCol).cast("long").as("id"), scaled(col(embCol)).as("v"))
+        .crossJoin(broadcast(centroids))
+        .withColumn("c_cos", cosine(col("v"), col("c_v")))
+        .groupBy(col("id"), col("v"))
+        .agg(max_by(col("c_id"), struct(col("c_cos"), -col("c_id")))
+          .as("cluster"))
+        .withColumn("codes", pqEncode(col("v"), cb))
+        .select(col("id"), col("codes"), col("v"), col("cluster"))
+        .localCheckpoint(false) // feeds touched-cluster collect + the write
+      val touched = withCodes.select("cluster").distinct()
+        .collect().map(_.getLong(0))
+      spark.read.parquet(s"$path/vectors")
+        .filter(col("cluster").isin(touched.toIndexedSeq: _*))
+        .select(withCodes.columns.toIndexedSeq.map(col): _*)
+        .unionAll(withCodes)
+        .repartition(col("cluster"))
+        .write.mode("overwrite").partitionBy("cluster")
+        .parquet(s"${stg.dir}/vectors")
+      Some(StagedCommit.Manifest(Seq("staged_vectors" -> StagedCommit
+        .stagedPartDirs(spark, s"${stg.dir}/vectors", "cluster=")))) -> ()
+    }._1.get
   }
 
   /** The [[Retrieval.recoverIndexMerge]] contract for the IVF-PQ index:
@@ -1169,8 +1137,7 @@ object Similarity {
     * discarded by a writer. */
   def recoverIvfPqMerge(spark: org.apache.spark.sql.SparkSession,
       path: String, deleteUncommitted: Boolean = false): Unit =
-    StagedCommit.recover(spark, path, deleteUncommitted)(
-      staging => applyStagedIvfPqMerge(spark, path, staging))
+    StagedCommit.recover(spark, path, IvfPq, deleteUncommitted)
 
   /** Top-k through a persisted IVF-PQ index: centroids are collected
     * (tiny) and ranked driver-side → `nprobe` cluster directories are the

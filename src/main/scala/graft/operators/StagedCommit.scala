@@ -1,13 +1,19 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The ONE staged-commit engine shared by every persisted layout (the
-  * dual observation store, the BM25 text index, the IVF-PQ vector
-  * index). Each layout stages its expensive writes under
-  * `_staging_<generation>`, commits by writing a manifest that LISTS
-  * every staged piece, and this object supplies the common second half:
+/** The ONE staged-commit engine shared by every persisted family: the
+  * dual observation store, the BM25 index, the positional index, the
+  * IVF-PQ index, the n-gram LM, the MinHash band index and the BPE
+  * vocabulary. A family writes its expensive pieces under
+  * `_staging_<generation>` and describes itself with a [[Family]] value;
+  * everything around those writes lives here:
   *
+  *  - the `_graft_meta.json` codec ([[readMeta]], [[writeMeta]]): the
+  *    epoch, the fields a family carries over from its manifest, and the
+  *    streaming `last_batch_id`, which a write without a batch id keeps;
+  *  - the manifest: [[stage]] writes it in one create call — the commit
+  *    point, LISTING every staged piece — and [[apply]] reads it back;
   *  - [[applyPieces]]: swap each staged piece into the live tree by an
   *    idempotent rename (staged present → swap; already applied → skip;
   *    present in NEITHER place → fail loudly rather than commit a
@@ -16,12 +22,16 @@ import org.apache.spark.sql.SparkSession
   *  - [[recover]]: resolve interrupted merges on open — a staging dir
   *    WITH a manifest is committed and replays; one WITHOUT is either a
   *    crash leftover or a merge a live writer is staging right now, so
-  *    only the writer path (`deleteUncommitted = true`) may discard it.
+  *    only the writer path (`deleteUncommitted = true`) may discard it;
+  *  - [[mutate]]: the one writer sequence (recover, skip a committed
+  *    batch id, stage, apply);
+  *  - [[stream]]: the one Structured-Streaming driver (build on the first
+  *    batch, merge on the rest).
   *
   * Everything runs under [[RecoveryLock]] (recovery always executes on
   * the driver), closing the delete+rename window between concurrent
   * recoverers of the same path. Keeping this logic in one place is
-  * load-bearing: a crash-safety fix must reach every index at once, or
+  * load-bearing: a crash-safety fix must reach every family at once, or
   * the layouts silently diverge in exactly the scenarios this exists
   * for. */
 private[operators] object StagedCommit {
@@ -33,29 +43,195 @@ private[operators] object StagedCommit {
     * shutdown) propagate instead of deleting a committed merge. */
   final class TornManifest(msg: String) extends IllegalStateException(msg)
 
-  def readManifest(spark: SparkSession, staging: String): String = {
-    val (f, p) = ObservationStore.fs(spark, s"$staging/_manifest.json")
-    val in = f.open(p)
-    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  /** A manifest list field naming staged pieces under `dir` — relative
+    * to both the staging dir and the live root, "" for the root itself.
+    * An absent field marks a torn manifest, unless `ifAbsent` derives
+    * the pieces from the staging dir instead. */
+  final case class PieceList(field: String, dir: String = "",
+      ifAbsent: Option[(SparkSession, String) => Seq[String]] = None)
+
+  /** A persisted family's commit shape: its manifest lists, and the
+    * manifest fields its meta carries (e.g. the store's `num_buckets`
+    * and `layout`), read back on every apply. */
+  final case class Family(lists: Seq[PieceList], carried: Seq[String] = Nil)
+
+  /** What a stage step wrote: the staged names per list field, and any
+    * other numbers the manifest records (a family's carried fields, the
+    * store's `whole_copies` flag). */
+  final case class Manifest(lists: Seq[(String, Seq[String])],
+      fields: Seq[(String, Long)] = Nil)
+
+  /** Where a stage step writes: the staging `dir`, the `epoch` it
+    * commits, and the artifact's `meta` as it stood. */
+  final case class Staging(dir: String, epoch: Long, meta: Map[String, Long])
+
+  private val MetaFile = "_graft_meta.json"
+  private val ManifestFile = "_manifest.json"
+  // one number rule for every meta and manifest field: optional sign,
+  // then digits
+  private val NumPair = """"(\w+)"\s*:\s*(-?\d+)""".r
+
+  private def readText(spark: SparkSession, file: String): Option[String] = {
+    val (f, p) = ObservationStore.fs(spark, file)
+    try {
+      val in = f.open(p)
+      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
   }
 
-  /** Numeric manifest field; an absent field means the manifest write
-    * was torn → [[TornManifest]] = "not committed". */
-  def numField(manifest: String, name: String): Long =
-    (""""""" + name + """"\s*:\s*(\d+)""").r.findFirstMatchIn(manifest)
-      .getOrElse(throw new TornManifest(
-        s"staged manifest missing $name: $manifest"))
-      .group(1).toLong
+  /** One JSON object written by a single create call — a torn write
+    * fails to parse and reads as absent. */
+  private def writeJson(spark: SparkSession, file: String,
+      nums: Seq[(String, Long)], lists: Seq[(String, Seq[String])]): Unit = {
+    val body = (nums.map { case (k, v) => s""""$k":$v""" } ++
+      lists.map { case (k, v) => s""""$k":"${v.mkString(",")}"""" })
+      .mkString("{", ",", "}")
+    val (f, p) = ObservationStore.fs(spark, file)
+    val out = f.create(p, true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+  }
 
-  /** Optional numeric field (e.g. the streaming batch-id marker). */
-  def optNumField(manifest: String, name: String): Option[Long] =
-    (""""""" + name + """"\s*:\s*(\d+)""").r.findFirstMatchIn(manifest)
-      .map(_.group(1).toLong)
+  private def nums(json: String): Map[String, Long] =
+    NumPair.findAllMatchIn(json).map(m => m.group(1) -> m.group(2).toLong)
+      .toMap
 
-  /** Comma-separated list field, None when absent (older manifests). */
-  def listField(manifest: String, name: String): Option[Seq[String]] =
+  /** The numeric fields of `path`'s `_graft_meta.json`; empty when the
+    * artifact has none (not built yet, or written before meta files). */
+  def readMeta(spark: SparkSession, path: String): Map[String, Long] =
+    readText(spark, s"$path/$MetaFile").map(nums).getOrElse(Map.empty)
+
+  def metaField(spark: SparkSession, path: String,
+      name: String): Option[Long] =
+    readMeta(spark, path).get(name)
+
+  /** The one meta write: `epoch`, the `carried` fields, then
+    * `last_batch_id` — `batchId`, else the one `prior` (the meta this
+    * write replaces) records, so a write without a batch id never erases
+    * the exactly-once marker. The marker commits atomically with the
+    * epoch (one create call): that is what makes stream replays
+    * detectable. */
+  private def writeMeta(spark: SparkSession, path: String,
+      prior: Map[String, Long], epoch: Long, carried: Seq[(String, Long)],
+      batchId: Option[Long]): Unit =
+    writeJson(spark, s"$path/$MetaFile", ("epoch" -> epoch) +: carried ++:
+      batchId.orElse(prior.get("last_batch_id"))
+        .map("last_batch_id" -> _).toSeq, Nil)
+
+  /** A build's LAST write: a rebuild over an existing artifact advances
+    * the epoch, never resets it (readers use it for change detection). */
+  def writeBuildMeta(spark: SparkSession, path: String,
+      prior: Map[String, Long], carried: Seq[(String, Long)] = Nil,
+      batchId: Option[Long] = None): Unit =
+    writeMeta(spark, path, prior, prior.getOrElse("epoch", 0L) + 1L,
+      carried, batchId)
+
+  private def readManifest(spark: SparkSession, staging: String): String =
+    readText(spark, s"$staging/$ManifestFile").getOrElse(
+      throw new java.io.FileNotFoundException(s"$staging/$ManifestFile"))
+
+  /** Comma-separated list field, None when absent. */
+  private def listField(manifest: String, name: String): Option[Seq[String]] =
     (""""""" + name + """"\s*:\s*"([^"]*)"""").r.findFirstMatchIn(manifest)
       .map(_.group(1).split(",").toSeq.filter(_.nonEmpty))
+
+  /** Steps 3–5 of [[mutate]], callable alone so crash tests can stop
+    * after the manifest: clear `_staging_<epoch+1>` (it can only be
+    * manifest-less leftovers here), let `body` write the family's pieces
+    * into it, and commit the [[Manifest]] it returns together with
+    * `batchId`. A `body` that returns no manifest, or throws, leaves no
+    * staging dir behind. Returns the staging dir (None when nothing was
+    * staged) and `body`'s result. */
+  def stage[T](spark: SparkSession, path: String, batchId: Option[Long])(
+      body: Staging => (Option[Manifest], T)): (Option[String], T) = {
+    val meta = readMeta(spark, path)
+    val epoch = meta.getOrElse("epoch", 0L) + 1L
+    val dir = s"$path/_staging_$epoch"
+    val (f, sp) = ObservationStore.fs(spark, dir)
+    def drop(): Unit = if (f.exists(sp)) { f.delete(sp, true); () }
+    drop()
+    val (manifest, result) =
+      try body(Staging(dir, epoch, meta))
+      catch { case e: Throwable => drop(); throw e }
+    manifest match {
+      case None => drop(); (None, result)
+      case Some(m) =>
+        // the epoch and batch id first, the lists last: a torn write
+        // loses a list's closing quote and reads as torn
+        writeJson(spark, s"$dir/$ManifestFile", ("target_epoch" -> epoch) +:
+          batchId.map("batch_id" -> _).toSeq ++: m.fields, m.lists)
+        (Some(dir), result)
+    }
+  }
+
+  /** Replay a committed staging dir: swap every piece its manifest lists
+    * into the live tree, then commit the manifest's epoch, carried fields
+    * and batch id as the meta — once. */
+  def apply(spark: SparkSession, path: String, family: Family,
+      staging: String): Unit = {
+    val manifest = readManifest(spark, staging)
+    val m = nums(manifest)
+    def num(name: String): Long = m.getOrElse(name,
+      throw new TornManifest(s"staged manifest missing $name: $manifest"))
+    val epoch = num("target_epoch")
+    val carried = family.carried.map(name => name -> num(name))
+    val pieces =
+      // whole-copy swaps (the store's rebucket): each list's directory
+      // is ONE piece
+      if (m.get("whole_copies").contains(1L)) family.lists.map(_.dir)
+      else family.lists.flatMap { l =>
+        listField(manifest, l.field)
+          .orElse(l.ifAbsent.map(_(spark, staging)))
+          .getOrElse(throw new TornManifest(
+            s"staged manifest missing ${l.field}: $manifest"))
+          .map(n => if (l.dir.isEmpty) n else s"${l.dir}/$n")
+      }
+    applyPieces(spark, path, staging, pieces, epoch) {
+      val prior = readMeta(spark, path)
+      if (prior.getOrElse("epoch", 0L) < epoch)
+        writeMeta(spark, path, prior, epoch, carried, m.get("batch_id"))
+    }
+  }
+
+  /** The one writer sequence behind every staged mutation: recover as
+    * the writer, skip a batch id the artifact already committed (the
+    * exactly-once replay rule — the marker rides the epoch's meta
+    * write), then run `stageStep` (the family's stage step, which ends
+    * in [[stage]]) and [[apply]] what it staged. None when the batch was
+    * skipped. */
+  def mutate[T](spark: SparkSession, path: String, family: Family,
+      batchId: Option[Long] = None)(
+      stageStep: => (Option[String], T)): Option[T] = {
+    recover(spark, path, family, deleteUncommitted = true)
+    if (batchId.exists(b => metaField(spark, path, "last_batch_id")
+        .exists(_ >= b))) None
+    else {
+      val (staging, result) = stageStep
+      staging.foreach(apply(spark, path, family, _))
+      Some(result)
+    }
+  }
+
+  /** The one Structured-Streaming driver for a persisted family: every
+    * non-empty micro-batch `build`s the artifact when it has no
+    * `_graft_meta.json` yet and `merge`s into it otherwise, both under
+    * the micro-batch id. The meta is a build's LAST write and carries
+    * that id, so a first batch that died mid-build replays as a clean
+    * rebuild and a committed one as an exactly-once skip — probing a
+    * data directory instead would let a half-built artifact replay as a
+    * double-counting merge. */
+  def stream(spark: SparkSession, data: DataFrame, path: String,
+      checkpointDir: String)(build: (DataFrame, Long) => Unit,
+      merge: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    data.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, bid: Long) =>
+        if (batch.isEmpty) ()
+        else if (!ObservationStore.pathExists(spark, s"$path/$MetaFile"))
+          build(batch, bid)
+        else merge(batch, bid)
+      }
+      .start()
 
   /** Stage schema-only EMPTY pieces into every directory in `targets`
     * with ONE Spark job: the limit-0 frame writes once (into the first
@@ -113,9 +289,9 @@ private[operators] object StagedCommit {
     * {staging, live, aside} at every instant, interleavings at worst
     * strand a piece in the aside slot, and the aside branch below heals
     * that on replay. The aside copies die with the staging dir. */
-  def applyPieces(spark: SparkSession, path: String, staging: String,
-      pieces: Seq[String], targetGen: Long,
-      readGen: () => Option[Long], writeGen: Long => Unit): Unit =
+  private def applyPieces(spark: SparkSession, path: String,
+      staging: String, pieces: Seq[String], targetGen: Long)(
+      commitGen: => Unit): Unit =
     RecoveryLock.withLock(path) {
       val (f, _) = ObservationStore.fs(spark, staging)
       pieces.foreach { rel =>
@@ -130,7 +306,7 @@ private[operators] object StagedCommit {
             // park the committed piece in a manifest-less staging dir
             // (which a later writer-path recover would discard)
             if (!f.exists(new org.apache.hadoop.fs.Path(staging,
-              "_manifest.json")))
+              ManifestFile)))
               throw new java.io.IOException(
                 s"staging $staging vanished mid-apply (concurrent " +
                   "recoverer finished this manifest) — aborting replay")
@@ -142,7 +318,7 @@ private[operators] object StagedCommit {
             if (!f.rename(dest, aside) && f.exists(dest))
               throw new java.io.IOException(
                 s"cannot move live piece aside: $dest -> $aside")
-          }
+          } else f.mkdirs(dest.getParent) // a new piece's parent (band_idx=)
           if (!f.rename(src, dest) && !(f.exists(dest) && !f.exists(src)))
             // a concurrent recoverer may win the rename between our
             // exists-checks — dest present + src gone is success
@@ -158,10 +334,10 @@ private[operators] object StagedCommit {
                 s"generation $targetGen")
         }
       }
-      // the generation commits LAST, and only once — recovery after a
-      // crash between the swaps and this write re-enters with the same
-      // target
-      if (readGen().getOrElse(0L) < targetGen) writeGen(targetGen)
+      // the generation commits LAST, and only once (commitGen checks
+      // the recorded epoch) — recovery after a crash between the swaps
+      // and this write re-enters with the same target
+      commitGen
       f.delete(new org.apache.hadoop.fs.Path(staging), true)
       ()
     }
@@ -200,12 +376,12 @@ private[operators] object StagedCommit {
   }
 
   /** Resolve interrupted merges under `path`: committed staging (has a
-    * manifest) replays through `applyFn`; unparsable manifests and
+    * manifest) replays through [[apply]]; unparsable manifests and
     * manifest-less staging are discarded ONLY on the writer path —
     * a reader may be looking at a live writer mid-stage/mid-manifest.
     * Every discard first salvages stranded `_replaced` pieces. */
-  def recover(spark: SparkSession, path: String,
-      deleteUncommitted: Boolean)(applyFn: String => Unit): Unit =
+  def recover(spark: SparkSession, path: String, family: Family,
+      deleteUncommitted: Boolean): Unit =
     RecoveryLock.withLock(path) {
       val (f, p) = ObservationStore.fs(spark, path)
       if (!f.exists(p)) return
@@ -214,8 +390,8 @@ private[operators] object StagedCommit {
         .foreach { s =>
           val staging = s.getPath
           if (f.exists(new org.apache.hadoop.fs.Path(staging,
-            "_manifest.json"))) {
-            try applyFn(staging.toString)
+            ManifestFile))) {
+            try apply(spark, path, family, staging.toString)
             catch { case _: TornManifest =>
               // ONLY a provably-torn manifest may be discarded; any
               // other failure (including transient IllegalStateException

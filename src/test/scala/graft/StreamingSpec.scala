@@ -360,6 +360,34 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("streaming IVF-PQ: a first build that died before its meta replays as a rebuild") {
+    import graft.operators.Similarity
+    val dir = Files.createTempDirectory("graft-sivfpq-replay").toString
+    val dim = 8
+    def vec(i: Long): Seq[Float] =
+      (0 until dim).map(d => (((i * 31 + d * 17) % 13) - 6).toFloat / 3f)
+    // the first batch's build, cut just before its last write (the meta)
+    Similarity.writeIvfPqIndex(
+      (0L to 5L).map(i => (i, vec(i))).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", Seq(0L, 1L), s"$dir/idx", m = 2, ks = 4,
+      iters = 1, dim = dim)
+    assert(new java.io.File(s"$dir/idx/_graft_meta.json").delete())
+    // the stream redelivers that batch: it must rebuild, not merge the
+    // same six vectors into the half-built index a second time
+    implicit val sqlCtx = spark.sqlContext
+    val stream = MemoryStream[(Long, Seq[Float])]
+    val q = Similarity.streamIvfPqIndex(spark,
+      stream.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
+      s"$dir/idx", s"$dir/ckpt", centroidIds = Seq(0L, 1L),
+      m = 2, ks = 4, iters = 1, dim = dim)
+    try {
+      stream.addData((0L to 5L).map(i => (i, vec(i))): _*)
+      q.processAllAvailable()
+      assert(spark.read.parquet(s"$dir/idx/vectors").select("id")
+        .as[Long].collect().sorted.toSeq == (0L to 5L))
+    } finally q.stop()
+  }
+
   test("streaming curation: quality gate + within-batch + cross-corpus dedup") {
     import org.apache.spark.sql.types.{LongType, StringType, StructType}
     import graft.streaming.CurationPipeline
