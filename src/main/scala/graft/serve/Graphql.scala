@@ -6,27 +6,43 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import graft.model.Observation
 import graft.operators.ObservationStore
 
-/** Minimal executor for the reference's GraphQL query surface
-  * (`query/query_graphql.go:25-192`): the root fields
-  * `entries(rdata?, rrname?, rrtype?, sensor_id?, limit?)` and `stats`,
-  * with scalar field selection (`rrname rrtype rdata sensor_id count
-  * time_first time_last time_first_rfc3339 time_last_rfc3339 id`), the
-  * nested `aliases { ... }` sub-selection (Q6), GraphQL variables,
-  * MULTIPLE root fields per document, root-level field aliases
-  * (`mine: entries(...)`), and named + inline fragments — the grammar a
-  * standard client emits, implemented with a hand-rolled tokenizer
-  * instead of a GraphQL engine dependency. */
+/** Executor for the reference's GraphQL query surface
+  * (`query/query_graphql.go:25-192`), without a GraphQL engine
+  * dependency. A request is tokenized once and parsed by recursive
+  * descent into a small syntax tree: one operation (`query`, optionally
+  * named, with variable definitions and defaults, or the `{ ... }`
+  * shorthand), fields with an alias, arguments, `@skip`/`@include` and a
+  * sub-selection, fragment spreads, inline fragments and fragment
+  * definitions. One walk over that tree resolves variables to typed
+  * values, drops the nodes the directives exclude, expands fragments
+  * (a fragment spread inside itself is an error), checks every field
+  * and argument against the served schema and yields one [[GqlQuery]] per
+  * root field:
+  *  - `Query`: `entries(rrname, rdata, rrtype, sensor_id, limit)`,
+  *    `stats` and `__schema` (the introspection document);
+  *  - `Entry`: `id rrname rrtype rdata sensor_id count time_first
+  *    time_last time_first_rfc3339 time_last_rfc3339` and
+  *    `aliases(limit) { ... }` over `LeafEntry` (the same scalars);
+  *  - `Stats`: `total_count num_goroutines`.
+  * `__typename` is served on `Entry`, `LeafEntry` and `Stats`. Response
+  * keys follow field aliases and selection order at every level. Argument
+  * values are only ever data: a string may hold any text. Every error
+  * (syntax, unknown field or argument, duplicate argument, wrong value
+  * kind, a `limit` outside [0, 2^31-1], more than one operation) is a
+  * `Left(message)` returned before the store is read. */
 object Graphql {
 
   private val mapper = new ObjectMapper()
 
   sealed trait GqlQuery
+  /** `fields` are (response key, field name) pairs in selection order;
+    * an `aliases` field among them renders `aliasFields` per alias. */
   final case class EntriesQuery(
       rrname: Option[String], rdata: Option[String], rrtype: Option[String],
       sensorId: Option[String], limit: Int,
-      fields: Seq[String], aliasFields: Seq[String],
+      fields: Seq[(String, String)], aliasFields: Seq[(String, String)],
       aliasLimit: Int = 1000) extends GqlQuery
-  final case class StatsQuery(fields: Seq[String]) extends GqlQuery
+  final case class StatsQuery(fields: Seq[(String, String)]) extends GqlQuery
   case object IntrospectionQuery extends GqlQuery
 
   /** The RRType enum of the reference schema, verbatim
@@ -40,7 +56,22 @@ object Graphql {
     "RRSIG", "RP", "SIG", "SOA", "SPF", "SRV", "SSHFP", "TA", "TKEY",
     "TLSA", "TSIG", "TXT", "URI")
 
-  private val statsFields = Set("total_count", "num_goroutines")
+  private val entryFields = Set("id", "rrname", "rrtype", "rdata",
+    "sensor_id", "count", "time_first", "time_last", "time_first_rfc3339",
+    "time_last_rfc3339", "__typename")
+
+  /** The fields of each served object type. */
+  private val schema: Map[String, Set[String]] = Map(
+    "Query" -> Set("entries", "stats", "__schema"),
+    "Entry" -> (entryFields + "aliases"),
+    "LeafEntry" -> entryFields,
+    "Stats" -> Set("total_count", "num_goroutines", "__typename"))
+
+  /** Selection sets nest at most this deep, and one request expands at
+    * most [[MaxSpreads]] fragment spreads: a hostile document cannot
+    * exhaust the stack or grow exponentially. */
+  private val MaxDepth = 64
+  private val MaxSpreads = 500
 
   /** Parse + run + render. Left(error) on malformed queries or missing
     * required args (`query_graphql.go:242-246`). */
@@ -51,573 +82,370 @@ object Graphql {
     * standard JSON envelope — the single most common client pattern:
     * `{"query":"query($n:String){entries(rrname:$n){...}}",
     * "variables":{"n":"x"}}`; the reference gets this from graph-gophers,
-    * `query/query_graphql.go:194-206`). Variables are spliced into the
-    * document as literals BEFORE parsing, so every downstream rule
-    * (enum validation, limit parsing, quoted-paren scanning) applies to
-    * variable-supplied values exactly as to inline ones. */
+    * `query/query_graphql.go:194-206`). A variable resolves to the same
+    * typed value as the literal it stands for, so every argument rule
+    * applies to it alike. */
   def execute(query: String, variables: Option[JsonNode],
       store: ObservationStore): Either[String, String] =
-    substituteVariables(query, variables).flatMap(applyDirectives)
-      .flatMap { doc =>
-        // every ROOT field @skip'd away leaves a literally empty root
-        // selection — a legal document with an empty response. Checked
-        // structurally (not by catching the parse error: a NESTED
-        // selection emptied by @skip shares the error message, and
-        // masking that would silently drop un-skipped sibling roots).
-        val s0 = doc.indexOf('{')
-        val e0 = if (s0 >= 0) matchDelim(doc, s0, '{', '}') else -1
-        if (query.contains('@') && e0 > s0 &&
-          doc.substring(s0 + 1, e0).trim.isEmpty)
-          Right(Seq.empty[(String, GqlQuery)])
-        else expandFragments(doc).flatMap(parseDocument)
-      }.flatMap {
-      case Seq() => Right("""{"data":{}}""")
-      case fields =>
-        if (fields.exists(_._2 == IntrospectionQuery))
-          Right(renderIntrospection())
-        else {
-          val root = mapper.createObjectNode()
-          val data = root.putObject("data")
-          val err = fields.foldLeft(Option.empty[String]) {
-            case (e @ Some(_), _) => e
-            case (None, (key, q: EntriesQuery)) =>
-              if (q.rrname.isEmpty && q.rdata.isEmpty)
-                Some("one of rrname or rdata must be given")
-              else { renderEntries(data, key, q, store); None }
-            case (None, (key, StatsQuery(sFields))) =>
-              renderStatsInto(data, key, sFields, store); None
-            case (None, (_, IntrospectionQuery)) => None // handled above
-          }
-          err.toLeft(mapper.writeValueAsString(root))
+    parse(query, variables).map { fields =>
+      if (fields.exists(_._2 == IntrospectionQuery)) renderIntrospection()
+      else {
+        val root = mapper.createObjectNode()
+        val data = root.putObject("data")
+        fields.foreach {
+          case (key, q: EntriesQuery) => renderEntries(data, key, q, store)
+          case (key, StatsQuery(sFields)) => renderStatsInto(data, key, sFields, store)
+          case (_, IntrospectionQuery) => // handled above
         }
-    }
-
-  /** Strip the optional operation header (`query Name($n: String = "d")`)
-    * and replace each `$var` in the body with its JSON-envelope value
-    * (string values re-quoted/escaped through the JSON mapper — so a
-    * quote inside a variable cannot break out of its argument) or its
-    * declared default. `$` inside string literals is left untouched (the
-    * GraphQL rule). Errors on an unsupplied variable with no default and
-    * on non-scalar values — the schema has no list/object arguments. */
-  private[graft] def substituteVariables(query: String,
-      variables: Option[JsonNode]): Either[String, String] = {
-    val header = """^\s*query\b\s*[A-Za-z0-9_]*\s*(\(([^)]*)\))?\s*"""
-      .r.findFirstMatchIn(query)
-    val varDefaults: Map[String, Option[String]] =
-      header.flatMap(h => Option(h.group(2))).map { defs =>
-        """\$([A-Za-z_][A-Za-z0-9_]*)\s*:\s*[\w\[\]!]+(?:\s*=\s*("(?:[^"\\]|\\.)*"|[^,)\s]+))?"""
-          .r.findAllMatchIn(defs)
-          .map(d => d.group(1) -> Option(d.group(2))).toMap
-      }.getOrElse(Map.empty)
-    val body = header.map(h => query.substring(h.end)).getOrElse(query)
-    if (!body.contains('$')) return Right(body)
-
-    def renderVar(name: String): Either[String, String] =
-      variables.flatMap(v => Option(v.get(name))).filterNot(_.isNull) match {
-        case Some(v) if v.isTextual => Right(mapper.writeValueAsString(v))
-        case Some(v) if v.isNumber || v.isBoolean => Right(v.asText)
-        case Some(_) =>
-          Left(s"""Variable "$$$name" has a non-scalar value; only scalars are supported.""")
-        case None => varDefaults.get(name) match {
-          case Some(Some(default)) => Right(default)
-          case _ => Left(s"""Variable "$$$name" is not defined.""")
-        }
+        mapper.writeValueAsString(root)
       }
-
-    val sb = new StringBuilder(body.length)
-    var i = 0
-    var inStr = false
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (inStr) {
-        sb.append(c)
-        if (c == '\\' && i + 1 < body.length) { sb.append(body.charAt(i + 1)); i += 1 }
-        else if (c == '"') inStr = false
-        i += 1
-      } else if (c == '"') { inStr = true; sb.append(c); i += 1 }
-      else if (c == '$') {
-        var j = i + 1
-        while (j < body.length &&
-          (body.charAt(j).isLetterOrDigit || body.charAt(j) == '_')) j += 1
-        val name = body.substring(i + 1, j)
-        if (name.isEmpty) { sb.append(c); i += 1 }
-        else renderVar(name) match {
-          case Left(err) => return Left(err)
-          case Right(lit) => sb.append(lit); i = j
-        }
-      } else { sb.append(c); i += 1 }
     }
-    Right(sb.toString)
-  }
+
+  /** The document's root fields as (response key, query), in selection
+    * order; empty when directives exclude every root field. */
+  def parse(query: String, variables: Option[JsonNode] = None)
+      : Either[String, Seq[(String, GqlQuery)]] =
+    try Right(new Walk(new Parser(tokenize(query)).document(), variables).roots())
+    catch { case e: GqlError => Left(e.getMessage) }
 
   // ------------------------------------------------------------- parse
 
-  /** Single-query convenience used by tests and [[execute]]'s older
-    * callers: the first root field of the document. */
-  def parse(query: String): Either[String, GqlQuery] =
-    applyDirectives(query).flatMap(expandFragments)
-      .flatMap(parseDocument).map(_.head._2)
+  private final class GqlError(msg: String)
+      extends Exception(msg, null, false, false)
+  private def fail(msg: String): Nothing = throw new GqlError(msg)
 
-  /** `@skip(if:)` / `@include(if:)` — the two built-in directives every
-    * stock client may decorate any field, fragment spread or inline
-    * fragment with (the reference gets them from graph-gophers,
-    * `query/query_graphql.go:194-206`). Runs AFTER variable substitution
-    * (so `if: $flag` is a literal by now) and BEFORE fragment expansion
-    * (so a directive on a spread drops the spread itself): a recursive
-    * rewrite of every selection set that removes skipped elements and
-    * strips the directive text from kept ones. Unknown directives and a
-    * missing/non-boolean `if:` are schema errors, as graphql-go reports
-    * them. */
-  private[serve] def applyDirectives(doc: String): Either[String, String] = {
-    if (!doc.contains('@')) return Right(doc)
-    val s = doc
-    var err: Option[String] = None
-    def fail(msg: String): Int = { if (err.isEmpty) err = Some(msg); s.length }
+  /** A token: kind is Name, Punct, Int, Float, String or EOF; a String's
+    * text is its decoded value. */
+  private final case class Tok(kind: String, text: String)
 
-    // copies s[from..) into out until `stop`, honoring string literals
-    // (an '@' inside a quoted TXT rdata is data, not a directive)
-    def isIdent(c: Char) = c.isLetterOrDigit || c == '_'
-    def skipWs(out: StringBuilder, from: Int): Int = {
-      var i = from
-      while (i < s.length &&
-        (s.charAt(i).isWhitespace || s.charAt(i) == ',')) {
-        out.append(s.charAt(i)); i += 1
-      }
-      i
-    }
-    def ident(out: StringBuilder, from: Int): Int = {
-      var i = from
-      while (i < s.length && isIdent(s.charAt(i))) {
-        out.append(s.charAt(i)); i += 1
-      }
-      i
-    }
+  private def describe(t: Tok) = if (t.kind == "EOF") "<EOF>" else s"""${t.kind} "${t.text}""""
 
-    // parse `@name(args)?`* at `from`; returns (keep, next). Directive
-    // text itself is never copied to the output.
-    def directives(from: Int): (Boolean, Int) = {
-      var i = from
-      var keep = true
-      val scratch = new StringBuilder
-      var again = true
-      while (again) {
-        scratch.clear()
-        val j = skipWs(scratch, i)
-        if (j < s.length && s.charAt(j) == '@') {
-          val nameSb = new StringBuilder
-          val k = ident(nameSb, j + 1)
-          val name = nameSb.toString
-          var n = k
-          var args = ""
-          if (n < s.length && s.charAt(n) == '(') {
-            val close = matchDelim(s, n, '(', ')')
-            if (close < 0) return (keep, fail("unbalanced directive arguments"))
-            args = s.substring(n + 1, close)
-            n = close + 1
-          }
-          name match {
-            case "skip" | "include" =>
-              """if\s*:\s*(true|false)""".r.findFirstMatchIn(args)
-                .map(_.group(1).toBoolean) match {
-                case Some(v) =>
-                  if (name == "skip" && v) keep = false
-                  if (name == "include" && !v) keep = false
-                case None =>
-                  return (keep, fail(
-                    s"""Directive "@$name" requires argument "if" of type "Boolean!"."""))
-              }
-            case other =>
-              return (keep, fail(s"""Unknown directive "@$other"."""))
-          }
-          i = n
-        } else again = false
-      }
-      (keep, i)
-    }
-
-    // one element of a selection set: field or spread; appends the kept
-    // rewrite to `out`, returns the index after the element
-    def element(out: StringBuilder, from: Int): Int = {
-      val elem = new StringBuilder
-      var i = from
-      var keep = true
-      if (s.startsWith("...", i)) {
-        elem.append("..."); i += 3
-        i = skipWs(elem, i)
-        if (s.startsWith("on", i) &&
-          (i + 2 >= s.length || !isIdent(s.charAt(i + 2)))) {
-          elem.append("on "); i += 2
-          i = skipWs(elem, i)
-          i = ident(elem, i) // type condition
-          val (k1, n1) = directives(i)
-          keep &= k1; i = n1
-          val scratch = new StringBuilder
-          val j = skipWs(scratch, i)
-          if (j >= s.length || s.charAt(j) != '{')
-            return fail("malformed inline fragment")
-          elem.append(scratch)
-          i = selection(elem, j)
-        } else {
-          val st = i
-          i = ident(elem, i)
-          if (i == st) return fail("malformed fragment spread")
-          val (k1, n1) = directives(i)
-          keep &= k1; i = n1
-        }
-      } else {
-        val st = i
-        i = ident(elem, i) // field name (or alias)
-        if (i == st)
-          return fail(s"unexpected character '${s.charAt(i)}' in selection set")
-        var scratch = new StringBuilder
-        var j = skipWs(scratch, i)
-        if (j < s.length && s.charAt(j) == ':') { // alias: real name
-          elem.append(scratch).append(':'); i = j + 1
-          i = skipWs(elem, i)
-          i = ident(elem, i)
-          scratch = new StringBuilder
-          j = skipWs(scratch, i)
-        }
-        if (j < s.length && s.charAt(j) == '(') { // arguments, verbatim
-          val close = matchDelim(s, j, '(', ')')
-          if (close < 0) return fail("unbalanced argument list")
-          elem.append(scratch).append(s.substring(j, close + 1))
-          i = close + 1
-        }
-        val (k1, n1) = directives(i)
-        keep &= k1; i = n1
-        scratch = new StringBuilder
-        j = skipWs(scratch, i)
-        if (j < s.length && s.charAt(j) == '{') { // nested selection
-          elem.append(scratch)
-          i = selection(elem, j)
-        }
-      }
-      if (keep) out.append(elem) else out.append(' ')
-      out.append(' ')
-      i
-    }
-
-    // `{ element* }` starting at the '{' at `from`; returns index after '}'
-    def selection(out: StringBuilder, from: Int): Int = {
-      out.append('{')
-      var i = from + 1
-      var done = false
-      while (!done && err.isEmpty) {
-        i = skipWs(out, i)
-        if (i >= s.length) return fail("unbalanced selection set")
-        else if (s.charAt(i) == '}') { out.append('}'); i += 1; done = true }
-        else i = element(out, i)
-      }
-      i
-    }
-
-    // top level: copy everything verbatim (operation keywords, fragment
-    // headers), recursing into each selection set
-    val out = new StringBuilder(s.length)
+  /** GraphQL's lexical grammar: whitespace, commas and `#` comments are
+    * ignored; strings take the JSON escapes and `\uXXXX`. */
+  private def tokenize(s: String): IndexedSeq[Tok] = {
+    val out = Vector.newBuilder[Tok]
     var i = 0
-    var inStr = false
-    while (i < s.length && err.isEmpty) {
-      val c = s.charAt(i)
-      if (inStr) {
-        out.append(c)
-        if (c == '\\' && i + 1 < s.length) { out.append(s.charAt(i + 1)); i += 1 }
-        else if (c == '"') inStr = false
-        i += 1
-      } else if (c == '"') { inStr = true; out.append(c); i += 1 }
-      else if (c == '{') i = selection(out, i)
-      else { out.append(c); i += 1 }
+    def at(j: Int) = if (j < s.length) s.charAt(j) else '\u0000'
+    def isDigit(c: Char) = c >= '0' && c <= '9'
+    def isNameStart(c: Char) =
+      c == '_' || (c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z')
+    def digits(): Unit = {
+      val st = i
+      while (isDigit(at(i))) i += 1
+      if (i == st) fail(s"Syntax Error: Invalid number, expected digit at $i.")
     }
-    err.toLeft(out.toString)
-  }
-
-  /** Fragment support, textually: `fragment F on T { ... }` definitions
-    * are lifted out of the document and every spread (`...F`, or the
-    * inline `... on T { ... }`) is spliced in place, outside string
-    * literals, to a bounded depth (cycles error out). Type conditions are
-    * not enforced per-position — the schema's selections are validated
-    * field-by-field downstream, which catches a fragment used on the
-    * wrong type the same way it catches a bad field. */
-  private[serve] def expandFragments(doc0: String): Either[String, String] = {
-    if (!doc0.contains("fragment") && !doc0.contains("...")) return Right(doc0)
-    var doc = doc0
-    val defs = scala.collection.mutable.Map[String, String]()
-    val defRe =
-      """fragment\s+([A-Za-z_][A-Za-z0-9_]*)\s+on\s+[A-Za-z_][A-Za-z0-9_]*\s*\{""".r
-    var m = defRe.findFirstMatchIn(doc)
-    while (m.isDefined) {
-      val mm = m.get
-      val open = mm.end - 1
-      val close = matchDelim(doc, open, '{', '}')
-      if (close < 0) return Left("unbalanced fragment body")
-      defs += mm.group(1) -> doc.substring(open + 1, close)
-      doc = doc.substring(0, mm.start) + " " + doc.substring(close + 1)
-      m = defRe.findFirstMatchIn(doc)
-    }
-
-    // one splice pass over the document, outside string literals
-    def expandOnce(s: String): Either[String, (String, Boolean)] = {
-      val sb = new StringBuilder(s.length)
-      var i = 0
-      var inStr = false
-      var changed = false
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (inStr) {
-          sb.append(c)
-          if (c == '\\' && i + 1 < s.length) { sb.append(s.charAt(i + 1)); i += 1 }
-          else if (c == '"') inStr = false
-          i += 1
-        } else if (c == '"') { inStr = true; sb.append(c); i += 1 }
-        else if (c == '.' && s.startsWith("...", i)) {
-          i += 3
-          while (i < s.length && s.charAt(i).isWhitespace) i += 1
-          // inline fragment: `... on Type { body }` — splice the body
-          if (s.startsWith("on", i) &&
-            (i + 2 >= s.length || !s.charAt(i + 2).isLetterOrDigit)) {
-            i += 2
-            while (i < s.length && s.charAt(i).isWhitespace) i += 1
-            while (i < s.length &&
-              (s.charAt(i).isLetterOrDigit || s.charAt(i) == '_')) i += 1 // type
-            while (i < s.length && s.charAt(i).isWhitespace) i += 1
-            if (i >= s.length || s.charAt(i) != '{')
-              return Left("malformed inline fragment")
-            val close = matchDelim(s, i, '{', '}')
-            if (close < 0) return Left("unbalanced inline fragment")
-            sb.append(' ').append(s.substring(i + 1, close)).append(' ')
-            i = close + 1
-            changed = true
-          } else {
-            val st = i
-            while (i < s.length &&
-              (s.charAt(i).isLetterOrDigit || s.charAt(i) == '_')) i += 1
-            val name = s.substring(st, i)
-            if (name.isEmpty) return Left("malformed fragment spread")
-            defs.get(name) match {
-              case Some(body) =>
-                sb.append(' ').append(body).append(' '); changed = true
-              case None => return Left(s"""Unknown fragment "$name".""")
-            }
-          }
-        } else { sb.append(c); i += 1 }
-      }
-      Right((sb.toString, changed))
-    }
-
-    var rounds = 0
-    var changed = true
-    while (changed) {
-      rounds += 1
-      if (rounds > 16) return Left("fragment spreads too deep (cycle?)")
-      expandOnce(doc) match {
-        case Left(e) => return Left(e)
-        case Right((next, ch)) => doc = next; changed = ch
-      }
-    }
-    Right(doc)
-  }
-
-  /** Parse a whole document: one or more root fields (`entries`, `stats`),
-    * each with an optional ALIAS (`mine: entries(...) { ... }` — response
-    * key = alias) — the standard multi-root-field shape graph-gophers
-    * serves for the reference. Returns (responseKey, query) in document
-    * order. Introspection probes anywhere yield the schema document. */
-  private[serve] def parseDocument(
-      query: String): Either[String, Seq[(String, GqlQuery)]] = {
-    // introspection probes (`{ __schema { ... } }`) get a schema
-    // document instead of an error — capability discovery is the first
-    // thing a real GraphQL client sends (the reference serves this via
-    // graphql-go's schema-first engine)
-    if (query.contains("__schema"))
-      return Right(Seq("__schema" -> IntrospectionQuery))
-    val start = query.indexOf('{')
-    if (start < 0) return Left("missing selection set")
-    val end = matchDelim(query, start, '{', '}')
-    if (end < 0) return Left("unbalanced selection set")
-    val body = query.substring(start + 1, end)
-
-    val out = Seq.newBuilder[(String, GqlQuery)]
-    var i = 0
-    def skipWs(): Unit = {
-      while (i < body.length &&
-        (body.charAt(i).isWhitespace || body.charAt(i) == ',')) i += 1
-    }
-    def ident(): String = {
-      val s = i
-      while (i < body.length &&
-        (body.charAt(i).isLetterOrDigit || body.charAt(i) == '_')) i += 1
-      body.substring(s, i)
-    }
-    skipWs()
-    while (i < body.length) {
-      val first = ident()
-      if (first.isEmpty)
-        return Left(s"unexpected character '${body.charAt(i)}' in selection set")
-      skipWs()
-      // `alias: field` — a ':' after the first identifier names the
-      // response key (GraphQL field alias, root level)
-      val (key, name) =
-        if (i < body.length && body.charAt(i) == ':') {
-          i += 1; skipWs()
-          val n = ident()
-          if (n.isEmpty) return Left(s"missing field name after alias '$first'")
-          (first, n)
-        } else (first, first)
-      skipWs()
-      val args =
-        if (i < body.length && body.charAt(i) == '(') {
-          val close = matchDelim(body, i, '(', ')')
-          if (close < 0) return Left("unbalanced argument list")
-          val a = body.substring(i + 1, close)
-          i = close + 1
-          Some(a)
-        } else None
-      skipWs()
-      val sel =
-        if (i < body.length && body.charAt(i) == '{') {
-          val close = matchDelim(body, i, '{', '}')
-          if (close < 0) return Left("unbalanced selection set")
-          val s = body.substring(i + 1, close)
-          i = close + 1
-          Some(s)
-        } else None
-      name match {
-        case "entries" =>
-          parseEntries(args.getOrElse(
-            return Left("missing argument list")),
-            sel.getOrElse(return Left("missing selection set"))) match {
-            case Left(e) => return Left(e)
-            case Right(q) => out += key -> q
-          }
-        case "stats" =>
-          parseStatsFields(sel.getOrElse(
-            return Left("empty selection set"))) match {
-            case Left(e) => return Left(e)
-            case Right(q) => out += key -> q
-          }
-        case other =>
-          return Left(s"""Cannot query field "$other" on type "Query".""")
-      }
-      skipWs()
-    }
-    val fields = out.result()
-    if (fields.isEmpty) Left("empty selection set")
-    else if (fields.map(_._1).distinct.size != fields.size)
-      Left("duplicate response key; alias one of the fields")
-    else Right(fields)
-  }
-
-  /** Index of the delimiter closing `open` at `from`, skipping quoted
-    * spans — a ')' or '}' inside a string argument (legal in TXT rdata)
-    * must not close the scope. -1 when unbalanced. */
-  private def matchDelim(s: String, from: Int, open: Char, close: Char): Int = {
-    var depth = 0
-    var inStr = false
-    var i = from
     while (i < s.length) {
       val c = s.charAt(i)
-      if (inStr) {
-        if (c == '\\') i += 1
-        else if (c == '"') inStr = false
-      } else if (c == '"') inStr = true
-      else if (c == open) depth += 1
-      else if (c == close) { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    -1
-  }
-
-  /** Undo GraphQL/JSON string escapes. [[substituteVariables]] splices
-    * variable strings through the JSON mapper (escaping quotes and
-    * backslashes), and inline literals may carry the same escapes — the
-    * argument parser must reverse them or a value containing '"' (legal
-    * in TXT rdata) silently truncates at the backslash. */
-  private def unescapeString(v: String): String = {
-    if (!v.contains('\\')) return v
-    val sb = new StringBuilder(v.length)
-    var i = 0
-    while (i < v.length) {
-      val c = v.charAt(i)
-      if (c == '\\' && i + 1 < v.length) {
-        v.charAt(i + 1) match {
-          case 'n' => sb.append('\n'); i += 2
-          case 't' => sb.append('\t'); i += 2
-          case 'r' => sb.append('\r'); i += 2
-          case 'b' => sb.append('\b'); i += 2
-          case 'f' => sb.append('\f'); i += 2
-          case 'u' if i + 5 < v.length &&
-            v.substring(i + 2, i + 6).forall(ch =>
-              ch.isDigit || ('a' <= ch.toLower && ch.toLower <= 'f')) =>
-            sb.append(Integer.parseInt(v.substring(i + 2, i + 6), 16).toChar)
-            i += 6
-          case other => sb.append(other); i += 2 // covers \" \\ \/ and lenient rest
+      if (" \t\r\n,\uFEFF".indexOf(c) >= 0) i += 1
+      else if (c == '#') while (i < s.length && at(i) != '\n' && at(i) != '\r') i += 1
+      else if (s.startsWith("...", i)) { out += Tok("Punct", "..."); i += 3 }
+      else if ("!$&()=:@[]{}|".indexOf(c) >= 0) { out += Tok("Punct", c.toString); i += 1 }
+      else if (isNameStart(c)) {
+        val st = i
+        while (isNameStart(at(i)) || isDigit(at(i))) i += 1
+        out += Tok("Name", s.substring(st, i))
+      } else if (c == '-' || isDigit(c)) {
+        val st = i
+        if (c == '-') i += 1
+        digits()
+        if (at(i) == '.') { i += 1; digits() }
+        if (at(i) == 'e' || at(i) == 'E') {
+          i += 1
+          if (at(i) == '+' || at(i) == '-') i += 1
+          digits()
         }
-      } else { sb.append(c); i += 1 }
+        if (at(i) == '.' || isNameStart(at(i)))
+          fail(s"Syntax Error: Invalid number, unexpected character at $i.")
+        val num = s.substring(st, i)
+        out += Tok(if (num.exists(".eE".contains(_))) "Float" else "Int", num)
+      } else if (c == '"') {
+        val sb = new StringBuilder
+        i += 1
+        while (at(i) != '"') {
+          if (i >= s.length || at(i) == '\n' || at(i) == '\r')
+            fail("Syntax Error: Unterminated string.")
+          if (at(i) != '\\') { sb.append(at(i)); i += 1 }
+          else if (at(i + 1) == 'u') {
+            val hex = s.slice(i + 2, i + 6)
+            if (hex.length < 4 ||
+              !hex.forall(h => "0123456789abcdefABCDEF".indexOf(h) >= 0))
+              fail(s"Syntax Error: Invalid Unicode escape sequence at $i.")
+            sb.append(Integer.parseInt(hex, 16).toChar); i += 6
+          } else "\"\\/bfnrt".indexOf(at(i + 1)) match {
+            case -1 => fail(s"Syntax Error: Invalid character escape sequence at $i.")
+            case k => sb.append("\"\\/\b\f\n\r\t".charAt(k)); i += 2
+          }
+        }
+        out += Tok("String", sb.toString); i += 1
+      } else fail(s"Syntax Error: Unexpected character '$c' at $i.")
     }
-    sb.toString
+    (out += Tok("EOF", "")).result()
   }
 
-  private def parseEntries(argStr: String,
-      sel: String): Either[String, GqlQuery] = {
-    // escape-aware value match: stops at the closing quote, not at an
-    // escaped one — `rrname: "x\"y"` must yield the 3-char value x"y
-    def strArg(name: String): Option[String] =
-      (s"""$name\\s*:\\s*"((?:[^"\\\\]|\\\\.)*)"""").r
-        .findFirstMatchIn(argStr).map(m => unescapeString(m.group(1)))
-    // rrtype is a GraphQL enum: bare token OR quoted string both accepted
-    val rrtype = strArg("rrtype").orElse(
-      """rrtype\s*:\s*([A-Za-z0-9]+)""".r.findFirstMatchIn(argStr).map(_.group(1)))
-    // toIntOption: digits beyond Int.MaxValue are a client error, not a
-    // NumberFormatException-turned-500
-    val limitOpt = """limit\s*:\s*(\d+)""".r.findFirstMatchIn(argStr)
-    if (limitOpt.exists(_.group(1).toIntOption.isEmpty))
-      return Left(s"invalid limit: ${limitOpt.get.group(1)}")
-    val limit = limitOpt.flatMap(_.group(1).toIntOption).getOrElse(1000)
+  /** An argument value: a literal (kind Int, Float, String, Boolean, Enum
+    * or Null) or a variable reference. */
+  private sealed trait Value
+  private final case class Lit(kind: String, text: String) extends Value
+  private final case class Var(name: String) extends Value
 
-    // `aliases(limit: Int = 1000) { ... }` — the per-entry cap is a field
-    // argument in the reference schema (`query_graphql.go:105`)
-    val aliasSel =
-      """aliases\s*(?:\(\s*limit\s*:\s*(\d+)\s*\))?\s*\{([^}]*)\}""".r
-        .findFirstMatchIn(sel)
-    val aliasFields = aliasSel.map(_.group(2).trim.split("\\s+").toSeq
-      .filter(_.nonEmpty)).getOrElse(Seq.empty)
-    val aliasLimitRaw = aliasSel.flatMap(m => Option(m.group(1)))
-    if (aliasLimitRaw.exists(_.toIntOption.isEmpty))
-      return Left(s"invalid aliases limit: ${aliasLimitRaw.get}")
-    val aliasLimit = aliasLimitRaw.flatMap(_.toIntOption).getOrElse(1000)
-    val scalarSel = aliasSel.map(m => sel.replace(m.matched, " ")).getOrElse(sel)
-    val fields = scalarSel.split("[\\s,]+").toSeq.filter(_.nonEmpty)
-    if (fields.isEmpty && aliasFields.isEmpty) return Left("empty selection set")
+  private type Args = Seq[(String, Value)]
+  private final case class Directive(name: String, args: Args)
+  private sealed trait Selection
+  /** `key` is the alias, else the field name. */
+  private final case class Field(key: String, name: String, args: Args,
+      dirs: Seq[Directive], sel: Seq[Selection]) extends Selection
+  private final case class Spread(name: String, dirs: Seq[Directive])
+      extends Selection
+  /** Type conditions are parsed, not kept: each field is checked
+    * against the type it is selected on. */
+  private final case class InlineFragment(dirs: Seq[Directive],
+      sel: Seq[Selection]) extends Selection
+  private final case class Document(vars: Seq[(String, Option[Value])],
+      sel: Seq[Selection], fragments: Map[String, Seq[Selection]])
 
-    // enum validation (`query_graphql.go:26-73`): a value outside RRType
-    // is a schema error, as graphql-go would report it — not a silent
-    // empty result. Quoted strings are accepted leniently but validated
-    // against the same enum.
-    rrtype.filterNot(RRTypes.contains) match {
-      case Some(bad) =>
-        Left(s"""Argument "rrtype" has invalid value $bad, expected type "RRType".""")
-      case None =>
-        Right(EntriesQuery(strArg("rrname"), strArg("rdata"), rrtype,
-          strArg("sensor_id"), limit, fields, aliasFields, aliasLimit))
+  /** Recursive descent over the tokens into a [[Document]]. */
+  private final class Parser(toks: IndexedSeq[Tok]) {
+    private var p = 0
+    private def peek = toks(p)
+    private def isPunct(s: String) = peek.kind == "Punct" && peek.text == s
+    /** Consumes the punctuator or keyword `s` when it is next. */
+    private def accept(s: String): Boolean =
+      if (peek.kind != "String" && peek.text == s) { p += 1; true } else false
+    private def expect(s: String): Unit =
+      if (!accept(s)) fail(s"Syntax Error: Expected \"$s\", found ${describe(peek)}.")
+    private def name(): String =
+      if (peek.kind == "Name") { p += 1; toks(p - 1).text }
+      else fail(s"Syntax Error: Expected Name, found ${describe(peek)}.")
+    /** `open item+ close` */
+    private def many[T](open: String, close: String)(item: => T): Seq[T] = {
+      expect(open)
+      val b = Seq.newBuilder[T]
+      do b += item while (!accept(close))
+      b.result()
+    }
+
+    def document(): Document = {
+      val ops = Seq.newBuilder[Document]
+      val frags = scala.collection.mutable.Map[String, Seq[Selection]]()
+      while (peek.kind != "EOF") {
+        if (accept("fragment")) {
+          val n = name()
+          expect("on")
+          name()
+          if (frags.put(n, selectionSet(1)).isDefined)
+            fail(s"""There can be only one fragment named "$n".""")
+        } else if (accept("query")) {
+          if (peek.kind == "Name") p += 1
+          val vars = if (isPunct("(")) many("(", ")")(variable()) else Nil
+          ops += Document(vars, selectionSet(1), Map.empty)
+        } else if (isPunct("{")) ops += Document(Nil, selectionSet(1), Map.empty)
+        else fail(s"Syntax Error: Unexpected ${describe(peek)}.")
+      }
+      ops.result() match {
+        case Seq(op) => op.copy(fragments = frags.toMap)
+        case Seq() => fail("The document holds no operation.")
+        case _ => fail("The document holds more than one operation; send one per request.")
+      }
+    }
+
+    /** `$name: Type (= default)?`; the type is parsed, never read. */
+    private def variable(): (String, Option[Value]) = {
+      expect("$")
+      val n = name()
+      expect(":")
+      var open = 0
+      while (accept("[")) open += 1
+      name()
+      accept("!")
+      for (_ <- 1 to open) { expect("]"); accept("!") }
+      n -> (if (accept("=")) Some(value(const = true)) else None)
+    }
+
+    private def selectionSet(depth: Int): Seq[Selection] =
+      if (depth > MaxDepth) fail(s"Selection sets nest deeper than $MaxDepth.")
+      else many("{", "}")(selection(depth))
+
+    private def selection(depth: Int): Selection =
+      if (accept("...")) {
+        val typed = accept("on")
+        if (typed) name()
+        if (typed || isPunct("{") || isPunct("@"))
+          InlineFragment(directives(), selectionSet(depth + 1))
+        else Spread(name(), directives())
+      } else {
+        val first = name()
+        val fieldName = if (accept(":")) name() else first
+        val args = if (isPunct("(")) arguments() else Nil
+        val dirs = directives()
+        Field(first, fieldName, args, dirs,
+          if (isPunct("{")) selectionSet(depth + 1) else Nil)
+      }
+
+    private def arguments(): Args =
+      many("(", ")") { val n = name(); expect(":"); n -> value(const = false) }
+
+    private def directives(): Seq[Directive] = {
+      val b = Seq.newBuilder[Directive]
+      while (accept("@")) {
+        val n = name()
+        b += Directive(n, if (isPunct("(")) arguments() else Nil)
+      }
+      b.result()
+    }
+
+    private def value(const: Boolean): Value = {
+      val t = peek
+      if (t.kind != "EOF") p += 1
+      t.kind match {
+        case "Int" | "Float" | "String" => Lit(t.kind, t.text)
+        case "Name" => t.text match {
+          case "true" | "false" => Lit("Boolean", t.text)
+          case "null" => Lit("Null", "null")
+          case e => Lit("Enum", e)
+        }
+        case "Punct" if t.text == "$" && !const => Var(name())
+        case "Punct" if t.text == "[" || t.text == "{" =>
+          fail("List and object values are not supported; every argument is a scalar.")
+        case _ => fail(s"Syntax Error: Unexpected ${describe(t)}.")
+      }
     }
   }
 
-  /** `stats { total_count num_goroutines }` (`query_graphql.go:166-172,
-    * 297-311`): the second root field of the reference schema. */
-  private def parseStatsFields(sel: String): Either[String, GqlQuery] = {
-    val fields = sel.split("[\\s,]+").toSeq.filter(_.nonEmpty)
-    if (fields.isEmpty) return Left("empty selection set")
-    fields.find(f => !statsFields.contains(f)) match {
-      case Some(bad) => Left(s"""Cannot query field "$bad" on type "Stats".""")
-      case None => Right(StatsQuery(fields))
+  /** The one walk over a parsed document: variables resolve, directives
+    * prune, fragments expand and every field and argument is checked
+    * against [[schema]] as the root queries are built. */
+  private final class Walk(doc: Document, variables: Option[JsonNode]) {
+    private val declared = doc.vars.toMap
+    if (declared.size != doc.vars.size) fail("There can be only one variable per name.")
+    private var spreads = 0
+
+    private def resolve(v: Value): Lit = v match {
+      case l: Lit => l
+      case Var(n) =>
+        if (!declared.contains(n)) fail(s"""Variable "$$$n" is not defined.""")
+        variables.flatMap(j => Option(j.get(n))).filterNot(_.isNull) match {
+          case Some(j) if j.isTextual => Lit("String", j.asText)
+          case Some(j) if j.isIntegralNumber => Lit("Int", j.asText)
+          case Some(j) if j.isNumber => Lit("Float", j.asText)
+          case Some(j) if j.isBoolean => Lit("Boolean", j.asText)
+          case Some(_) =>
+            fail(s"""Variable "$$$n" has a non-scalar value; only scalars are supported.""")
+          case None => declared(n).map(resolve)
+            .getOrElse(fail(s"""Variable "$$$n" is not defined."""))
+        }
     }
+
+    /** Resolved arguments by name; a null value is an absent argument. */
+    private def argMap(args: Args, allowed: Set[String],
+        owner: String): Map[String, Lit] =
+      args.foldLeft(Map.empty[String, Lit]) { case (m, (n, v)) =>
+        if (!allowed(n)) fail(s"""Unknown argument "$n" on $owner.""")
+        if (m.contains(n)) fail(s"""There can be only one argument named "$n".""")
+        m + (n -> resolve(v))
+      }.filter(_._2.kind != "Null")
+
+    private def invalid(arg: String, l: Lit, expected: String): Nothing = {
+      val shown = if (l.kind == "String") mapper.writeValueAsString(l.text) else l.text
+      fail(s"""Argument "$arg" has invalid value $shown, expected $expected.""")
+    }
+
+    private def included(dirs: Seq[Directive]): Boolean = dirs.map { d =>
+      if (d.name != "skip" && d.name != "include")
+        fail(s"""Unknown directive "@${d.name}".""")
+      argMap(d.args, Set("if"), s"""directive "@${d.name}"""").get("if") match {
+        case Some(Lit("Boolean", b)) => b.toBoolean != (d.name == "skip")
+        case _ => fail(
+          s"""Directive "@${d.name}" requires argument "if" of type "Boolean!".""")
+      }
+    }.forall(identity)
+
+    /** `sel` with directives applied and fragments expanded; `path` holds
+      * the fragments being expanded, so a spread inside itself fails. */
+    private def collect(sel: Seq[Selection], path: Set[String]): Seq[Field] =
+      sel.flatMap {
+        case f: Field => if (included(f.dirs)) Seq(f) else Nil
+        case Spread(n, dirs) =>
+          if (!included(dirs)) Nil
+          else {
+            val frag = doc.fragments.getOrElse(n, fail(s"""Unknown fragment "$n"."""))
+            if (path(n)) fail(s"""Cannot spread fragment "$n" within itself.""")
+            spreads += 1
+            if (spreads > MaxSpreads) fail(s"More than $MaxSpreads fragment spreads.")
+            collect(frag, path + n)
+          }
+        case InlineFragment(dirs, s) => if (included(dirs)) collect(s, path) else Nil
+      }
+
+    /** The fields `sel` selects on `typeName`, checked against [[schema]]:
+      * fields under one response key merge only when they are the same
+      * field with the same arguments and selection, only `aliases` below
+      * the root takes arguments or a sub-selection, and the selection is
+      * empty only at the root, when directives excluded every field. */
+    private def fields(sel: Seq[Selection], typeName: String,
+        owner: String): Seq[Field] = {
+      val fs = collect(sel, Set.empty)
+      if (fs.isEmpty && typeName != "Query") fail(
+        s"""Field "$owner" of type "$typeName" must have a selection of subfields.""")
+      fs.groupBy(_.key).foreach { case (k, g) =>
+        if (g.map(f => (f.name, f.args, f.sel)).distinct.size > 1)
+          fail(s"""Fields "$k" conflict: they differ in name, arguments or selection; alias one.""")
+      }
+      fs.foreach { f =>
+        if (!schema(typeName)(f.name))
+          fail(s"""Cannot query field "${f.name}" on type "$typeName".""")
+        if (typeName != "Query" && f.name != "aliases") {
+          argMap(f.args, Set.empty, s"""field "$typeName.${f.name}"""")
+          if (f.sel.nonEmpty) fail(
+            s"""Field "${f.name}" must not have a selection since its type has no subfields.""")
+        }
+      }
+      fs.distinctBy(_.key)
+    }
+
+    private def limit(args: Map[String, Lit]): Int = args.get("limit") match {
+      case None => 1000
+      case Some(Lit("Int", n)) if n.toIntOption.exists(_ >= 0) => n.toInt
+      case Some(l) => invalid("limit", l, "an Int in [0, 2147483647]")
+    }
+
+    private def entries(f: Field): EntriesQuery = {
+      val args = argMap(f.args,
+        Set("rrname", "rdata", "rrtype", "sensor_id", "limit"), "field \"Query.entries\"")
+      def string(n: String) = args.get(n).map {
+        case Lit("String", s) => s
+        case l => invalid(n, l, "type \"String\"")
+      }
+      // RRType is an enum; a string naming a member is accepted too
+      val rrtype = args.get("rrtype").map {
+        case Lit("Enum" | "String", t) if RRTypes(t) => t
+        case l => invalid("rrtype", l, "type \"RRType\"")
+      }
+      val (rrname, rdata) = (string("rrname"), string("rdata"))
+      if (rrname.isEmpty && rdata.isEmpty) fail("one of rrname or rdata must be given")
+      val sub = fields(f.sel, "Entry", f.name)
+      val aliases = sub.filter(_.name == "aliases")
+      if (aliases.size > 1) fail("""Field "aliases" may be selected once per entry.""")
+      val aliasArgs = aliases.headOption.map(a =>
+        argMap(a.args, Set("limit"), "field \"Entry.aliases\"")).getOrElse(Map.empty)
+      EntriesQuery(rrname, rdata, rrtype, string("sensor_id"), limit(args),
+        sub.map(s => s.key -> s.name),
+        aliases.flatMap(a => fields(a.sel, "LeafEntry", a.name)).map(s => s.key -> s.name),
+        limit(aliasArgs))
+    }
+
+    def roots(): Seq[(String, GqlQuery)] =
+      fields(doc.sel, "Query", "query").map { f =>
+        f.key -> (f.name match {
+          case "entries" => entries(f)
+          case "stats" =>
+            argMap(f.args, Set.empty, "field \"Query.stats\"")
+            StatsQuery(fields(f.sel, "Stats", f.name).map(s => s.key -> s.name))
+          case _ => IntrospectionQuery // __schema
+        })
+      }
   }
 
   // ------------------------------------------------------------ render
-
-  private val validFields = Set("id", "rrname", "rrtype", "rdata",
-    "sensor_id", "count", "time_first", "time_last",
-    "time_first_rfc3339", "time_last_rfc3339")
 
   private def renderEntries(data: ObjectNode, key: String, q: EntriesQuery,
       store: ObservationStore): Unit = {
@@ -629,13 +457,9 @@ object Graphql {
 
     val arr = data.putArray(key)
     rows.foreach { row =>
-      val o = arr.addObject()
-      writeFields(o, row, q.fields)
-      if (q.aliasFields.nonEmpty) {
-        val aArr = o.putArray("aliases")
-        aliasesByKey.getOrElse((row.rrname, row.sensor_id, row.rdata),
-          Seq.empty).foreach(ar => writeFields(aArr.addObject(), ar, q.aliasFields))
-      }
+      writeFields(arr.addObject(), row, q.fields, "Entry", aArr =>
+        aliasesByKey.getOrElse((row.rrname, row.sensor_id, row.rdata), Seq.empty)
+          .foreach(ar => writeFields(aArr.addObject(), ar, q.aliasFields, "LeafEntry")))
     }
   }
 
@@ -643,13 +467,12 @@ object Graphql {
     * num_goroutines' JVM analogue is the live thread count
     * (`query_graphql.go:307-311` reports runtime.NumGoroutine()). */
   private def renderStatsInto(data: ObjectNode, key: String,
-      fields: Seq[String], store: ObservationStore): Unit = {
+      fields: Seq[(String, String)], store: ObservationStore): Unit = {
     val stats = data.putObject(key)
     fields.foreach {
-      case "total_count" => stats.put("total_count", store.totalCount()); ()
-      case "num_goroutines" =>
-        stats.put("num_goroutines", Thread.activeCount()); ()
-      case _ => // validated at parse time
+      case (k, "total_count") => stats.put(k, store.totalCount()); ()
+      case (k, "num_goroutines") => stats.put(k, Thread.activeCount()); ()
+      case (k, _) => stats.put(k, "Stats"); () // __typename
     }
   }
 
@@ -701,25 +524,30 @@ object Graphql {
     mapper.writeValueAsString(root)
   }
 
+  /** Writes `fields` (response key, field name) of `e`; an `aliases`
+    * field's array is filled by `aliases`. */
   private def writeFields(o: ObjectNode, e: Observation,
-      fields: Seq[String]): Unit = {
+      fields: Seq[(String, String)], typeName: String,
+      aliases: ArrayNode => Unit = _ => ()): Unit = {
     import QueryServer.unixSeconds
     def rfc3339(ts: java.sql.Timestamp) =
       java.time.Instant.ofEpochSecond(unixSeconds(ts)).toString
-    fields.filter(validFields.contains).foreach {
-      case "count" => o.put("count", e.count)
-      case "time_first" => o.put("time_first", unixSeconds(e.first_seen))
-      case "time_last" => o.put("time_last", unixSeconds(e.last_seen))
-      case "time_first_rfc3339" => o.put("time_first_rfc3339", rfc3339(e.first_seen))
-      case "time_last_rfc3339" => o.put("time_last_rfc3339", rfc3339(e.last_seen))
+    fields.foreach { case (k, name) => name match {
+      case "count" => o.put(k, e.count)
+      case "time_first" => o.put(k, unixSeconds(e.first_seen))
+      case "time_last" => o.put(k, unixSeconds(e.last_seen))
+      case "time_first_rfc3339" => o.put(k, rfc3339(e.first_seen))
+      case "time_last_rfc3339" => o.put(k, rfc3339(e.last_seen))
       case "id" => // synthetic, not persisted (observation.go:16): stable hash
-        o.put("id", java.util.UUID.nameUUIDFromBytes(
+        o.put(k, java.util.UUID.nameUUIDFromBytes(
           (e.rrname + "\u001f" + e.sensor_id + "\u001f" + e.rrtype +
             "\u001f" + e.rdata).getBytes("UTF-8")).toString)
-      case "rrname" => o.put("rrname", e.rrname)
-      case "rrtype" => o.put("rrtype", e.rrtype)
-      case "rdata" => o.put("rdata", e.rdata)
-      case "sensor_id" => o.put("sensor_id", e.sensor_id)
-    }
+      case "rrname" => o.put(k, e.rrname)
+      case "rrtype" => o.put(k, e.rrtype)
+      case "rdata" => o.put(k, e.rdata)
+      case "sensor_id" => o.put(k, e.sensor_id)
+      case "aliases" => aliases(o.putArray(k))
+      case _ => o.put(k, typeName) // __typename
+    }}
   }
 }

@@ -4,7 +4,8 @@ import java.io.OutputStream
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import graft.functions.Net
@@ -16,14 +17,22 @@ import graft.operators.ObservationStore
   * endpoint over a long-lived SparkSession.
   *
   * Endpoints:
-  *  - `POST /query` with `{"rrname"?, "rdata"?, "rrtype"?, "sensor_id"?,
-  *    "limit"?}` — the `entries` query surface (conjunctive equality
-  *    filters, ≥1 of rrname/rdata required → 400 otherwise, default limit
-  *    1000 like `query_graphql.go:179`); NDJSON response.
+  *  - `POST /graphql` — the reference's GraphQL schema ([[Graphql]]), as
+  *    a bare document or a `{"query", "variables"?}` JSON envelope; one
+  *    JSON document, or 400 with a GraphQL error object.
+  *  - `POST /query` with a JSON object `{"rrname"?, "rdata"?, "rrtype"?,
+  *    "sensor_id"?, "limit"?}` — the `entries` query surface (conjunctive
+  *    equality filters, ≥1 of rrname/rdata required → 400 otherwise,
+  *    default limit 1000 like `query_graphql.go:179`), or `rrname_prefix`
+  *    alone with the residual `rrtype`/`sensor_id`; NDJSON response. A
+  *    body that is not a JSON object, or an object or array where a
+  *    string belongs, is a 400; a null member is an absent one.
   *  - `GET /pdns/query/<subject>[?limit=]` — CIRCL passive-DNS: subject
   *    tried as rrname THEN as rdata, results concatenated, 404 when both
   *    empty, NDJSON with unix-seconds ints (`query_rest.go:41-82`).
-  *  - `GET /stats` — `{"total_count": N}` (Q11).
+  *  - `GET /pdns/cidr/<block>[?limit=]` — the rows whose rdata falls in a
+  *    v4 or v6 CIDR block, NDJSON like `/pdns/query`.
+  *  - `GET /stats` — `{"total_count": N}` (Q11) plus the serving totals.
   *
   * Every route answers through one [[ObservationStore]] method per
   * query shape (`answerPoint`, `answerPrefix`, `answerCidr`): at most
@@ -85,14 +94,21 @@ final class QueryServer(store: ObservationStore, port: Int = 0,
         respond(ex, 405, "method not allowed\n")
       else {
         val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-        val node = mapper.readTree(if (body.isEmpty) "{}" else body)
+        val node =
+          try mapper.readTree(if (body.isEmpty) "{}" else body)
+          catch { case _: JsonProcessingException => mapper.missingNode() }
         def opt(f: String): Option[String] =
           Option(node.get(f)).filterNot(_.isNull).map(_.asText)
         val (rrname, rdata) = (opt("rrname"), opt("rdata"))
         val prefix = opt("rrname_prefix")
         val limit = parseLimit(
           Option(node.get("limit")).filterNot(_.isNull).map(_.asText))
-        if (limit.isEmpty)
+        if (!node.isObject) respond(ex, 400, "body must be a JSON object\n")
+        else if (Seq("rrname", "rdata", "rrtype", "sensor_id", "rrname_prefix")
+            .exists(node.path(_).isContainerNode))
+          respond(ex, 400,
+            "rrname, rdata, rrtype, sensor_id and rrname_prefix take scalars\n")
+        else if (limit.isEmpty)
           respond(ex, 400, "invalid limit\n")
         else if (prefix.isDefined) {
           if (rrname.isDefined || rdata.isDefined || prefix.get.isEmpty)
@@ -171,8 +187,8 @@ final class QueryServer(store: ObservationStore, port: Int = 0,
     // Q1 — the reference's GraphQL surface (README.md:250-283): the
     // `entries` query with field selection, enum-or-string rrtype,
     // unix-seconds + rfc3339 timestamp fields, and the nested `aliases`
-    // virtual self-join. Covers the reference's published query shape
-    // (one root field, scalar args) without a full GraphQL engine.
+    // virtual self-join, parsed and checked against the schema by
+    // [[Graphql]] without a GraphQL engine dependency.
     server.createContext("/graphql", (ex: HttpExchange) => handle(ex) {
       if (ex.getRequestURI.getPath != "/graphql")
         respond(ex, 404, "not found\n")
@@ -206,7 +222,7 @@ final class QueryServer(store: ObservationStore, port: Int = 0,
     * with a string `query` member; `variables` is its optional object
     * member (the standard GraphQL-over-HTTP envelope). */
   private def parseEnvelope(raw: String)
-      : Option[(String, Option[com.fasterxml.jackson.databind.JsonNode])] =
+      : Option[(String, Option[JsonNode])] =
     if (!raw.trim.startsWith("{")) None
     else
       try {

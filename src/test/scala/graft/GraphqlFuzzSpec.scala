@@ -2,8 +2,10 @@ package graft
 
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.propBoolean
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.ObservationStore
 import graft.serve.Graphql
 
 /** The GraphQL parser must map ANY input to a parse result or a client
@@ -17,10 +19,9 @@ class GraphqlFuzzSpec extends AnyFunSuite {
 
   private def substitutionNeverThrows(q: String): Boolean =
     try {
-      Graphql.substituteVariables(q,
+      Graphql.parse(q,
         Some(new com.fasterxml.jackson.databind.ObjectMapper()
           .readTree("""{"n": "x\")breakout", "l": 7, "b": true}""")))
-        .foreach(s => Graphql.parse(s))
       true
     } catch { case _: Throwable => false }
 
@@ -83,6 +84,59 @@ class GraphqlFuzzSpec extends AnyFunSuite {
       neverThrows(q) && substitutionNeverThrows(q))
     val r = SCTest.check(SCTest.Parameters.default
       .withMinSuccessfulTests(200), p)
+    assert(r.passed, r.status.toString)
+  }
+
+  test("hostile nesting and fragment fan-out fail as client errors") {
+    val deep = "{ " + "a { " * 100000 + "b " + "} " * 100001
+    assert(Graphql.parse(deep).left.exists(_.contains("nest deeper")))
+    // each fragment spreads the next twice: 2^40 fields if expanded
+    val doubling = (0 until 40).map(i =>
+      s"fragment f$i on Entry { ...f${i + 1} ...f${i + 1} }").mkString(" ")
+    val fanOut = s"""{ entries(rrname: "x") { ...f0 } } $doubling
+      |fragment f40 on Entry { rrname }""".stripMargin
+    assert(Graphql.parse(fanOut).left.exists(_.contains("fragment spreads")))
+    // a long chain expands on the way down without exhausting the stack
+    val chain = (0 until 499).map(i =>
+      s"fragment f$i on Entry { ...f${i + 1} }").mkString(" ")
+    val ok = Graphql.parse(s"""{ entries(rrname: "x") { ...f0 } } $chain
+      |fragment f499 on Entry { rrname }""".stripMargin)
+    assert(ok.isRight, ok)
+  }
+
+  test("a string value is data: inline and as a variable it answers its one row") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    // text that a reader of raw request text would take for syntax
+    val piece = Gen.frequency(3 -> Gen.oneOf("\"", "\\", "$", "@", "#", "{",
+      "}", "(", ")", "limit: 3", "rrname:", "fragment f on Entry {",
+      "__schema", "é", "日本語", "\uD83D\uDE00", "\t", "\n", " "),
+      1 -> Gen.alphaNumStr)
+    val values = Gen.listOfN(60, Gen.nonEmptyListOf(piece).map(_.mkString))
+      .pureApply(Gen.Parameters.default.withSize(12), Seed.random()).distinct
+    val ts = java.sql.Timestamp.valueOf("2018-01-01 00:00:00")
+    val store = ObservationStore.inMemory(ObservationStore.aggregate(
+      values.zipWithIndex.map { case (v, i) =>
+        (s"v$i.example", "s1", "TXT", v, 1L, ts, ts)
+      }.toDF("rrname", "sensor_id", "rrtype", "rdata", "count",
+        "timestamp_start", "timestamp_end")))
+    val p = Prop.forAll(Gen.oneOf(values.indices)) { i =>
+      val v = values(i)
+      val want = mapper.createObjectNode()
+      want.putObject("data").putArray("entries").addObject()
+        .put("rrname", s"v$i.example").put("rdata", v)
+      val inline = Graphql.execute(
+        s"{ entries(rdata: ${mapper.writeValueAsString(v)}) { rrname rdata } }",
+        store)
+      val viaVar = Graphql.execute(
+        "query($r: String!) { entries(rdata: $r) { rrname rdata } }",
+        Some(mapper.createObjectNode().put("r", v)), store)
+      (inline == Right(mapper.writeValueAsString(want))) :| s"inline $v: $inline" &&
+        (viaVar == inline) :| s"variable $v: $viaVar"
+    }
+    val r = SCTest.check(SCTest.Parameters.default
+      .withMinSuccessfulTests(100), p)
     assert(r.passed, r.status.toString)
   }
 }

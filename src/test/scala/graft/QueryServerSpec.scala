@@ -636,6 +636,112 @@ class QueryServerSpec extends AnyFunSuite {
     }
   }
 
+  test("graphql regression table: argument values are data, the schema is checked") {
+    import spark.implicits._
+    val ts = Timestamp.valueOf("2018-01-01 00:00:00")
+    val agg = ObservationStore.aggregate(Seq(
+      ("foo", "abc", "A", "1.2.3.4", 10L, ts, ts),
+      ("bar", "abc", "A", "1.2.3.5", 10L, ts, ts),
+      ("baz", "abc", "A", "1.2.3.4", 1L, ts, ts),
+      ("l1.example", "abc", "TXT", "limit: 1", 1L, ts, ts),
+      ("l2.example", "abc", "TXT", "limit: 1", 1L, ts, ts),
+      ("l3.example", "abc", "TXT", "limit: 1", 1L, ts, ts),
+      ("__schema.example", "abc", "A", "1.2.3.9", 1L, ts, ts),
+      ("frag.example", "abc", "TXT", "fragment x on Entry { rrname }", 1L, ts, ts)
+    ).toDF("rrname", "sensor_id", "rrtype", "rdata", "count",
+      "timestamp_start", "timestamp_end"))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def names(ns: String*) = Right(ns.map(n => s"""{"rrname":"$n"}"""))
+    val withVar = mapper.createObjectNode()
+    withVar.put("query",
+      """query($l: Int) { entries(rdata: "1.2.3.4", limit: $l) { rrname } }""")
+    withVar.putObject("variables").put("l", -2)
+    // request -> the sorted `entries` objects, or a fragment of the one
+    // error message
+    val table: Seq[(String, Either[String, Seq[String]])] = Seq(
+      """{ entries(rdata: "limit: 1") { rrname } }""" ->
+        names("l1.example", "l2.example", "l3.example"),
+      """{ entries(rrname: "__schema.example") { rrname } }""" ->
+        names("__schema.example"),
+      """{ entries(rdata: "fragment x on Entry { rrname }") { rrname } }""" ->
+        names("frag.example"),
+      "# find foo {\n{ entries(rrname: \"foo\") { rrname } }" -> names("foo"),
+      """{ entries(rdata: "1.2.3.4", limit: -1) { rrname } }""" ->
+        Left("""Argument "limit" has invalid value -1,"""),
+      """{ entries(rdata: "1.2.3.4", limit: "1") { rrname } }""" ->
+        Left("""Argument "limit" has invalid value "1","""),
+      mapper.writeValueAsString(withVar) ->
+        Left("""Argument "limit" has invalid value -2,"""),
+      """{ entries(rdata: "1.2.3.4", limit: 1.9) { rrname } }""" ->
+        Left("""Argument "limit" has invalid value 1.9,"""),
+      """{ entries(rdata: "1.2.3.4", limit: 2147483648) { rrname } }""" ->
+        Left("""Argument "limit" has invalid value 2147483648,"""),
+      """{ entries(rrname: "foo", limit: 2147483647) { rrname } }""" -> names("foo"),
+      """{ entries(rrname: "foo", limit: 0) { rrname } }""" -> names(),
+      """{ entries(rrname: "foo") { name: rrname } }""" ->
+        Right(Seq("""{"name":"foo"}""")),
+      """{ entries(rrname: "foo") { __typename rrname } }""" ->
+        Right(Seq("""{"__typename":"Entry","rrname":"foo"}""")),
+      """{ entries(rrname: "foo") { rrname aliases(limit: -1) { rrname } } }""" ->
+        Left("""Argument "limit" has invalid value -1,"""),
+      """{ entries(rrname: "foo") { rrname nope } }""" ->
+        Left("""Cannot query field "nope" on type "Entry"."""),
+      """{ entries(rrname: "foo", rrnme: "foo") { rrname } }""" ->
+        Left("""Unknown argument "rrnme" on field "Query.entries"."""),
+      """{ entries(rrname: "foo", sensor_id: "abc", sensor_id: "x") { rrname } }""" ->
+        Left("""There can be only one argument named "sensor_id"."""),
+      """{ entries(rrname: "foo") { rrname } } { stats { total_count } }""" ->
+        Left("more than one operation"))
+    def check(srv: QueryServer, rows: Seq[(String, Either[String, Seq[String]])]) =
+      rows.flatMap { case (req, want) =>
+        val r = client.send(HttpRequest.newBuilder(
+          URI.create(s"http://localhost:${srv.boundPort}/graphql"))
+          .POST(HttpRequest.BodyPublishers.ofString(req)).build(),
+          HttpResponse.BodyHandlers.ofString())
+        val n = mapper.readTree(r.body())
+        val got: Either[String, Seq[String]] =
+          if (r.statusCode() == 400) Left(n.path("errors").path(0).path("message").asText)
+          else Right((0 until n.path("data").path("entries").size())
+            .map(n.path("data").path("entries").get(_).toString).sorted)
+        val ok = (got, want) match {
+          case (Left(msg), Left(part)) => msg.contains(part)
+          case _ => got == want && r.statusCode() == 200
+        }
+        if (ok) None else Some(s"$req\n  -> ${r.statusCode()} ${r.body()}")
+      }
+    val mem = new QueryServer(ObservationStore.inMemory(agg))
+    mem.start()
+    try {
+      val bad = check(mem, table)
+      assert(bad.isEmpty, bad.mkString("\n"))
+    } finally mem.stop()
+    // the value-as-syntax rows and the zero limit again on the disk fast path
+    val dir = java.nio.file.Files.createTempDirectory("graft-qs-table").toString
+    ObservationStore.writeDual(agg, dir, numBuckets = 4)
+    val disk = ObservationStore.load(spark, dir)
+    assert(disk.servePoint(rdata = Some("limit: 1")).isDefined)
+    val diskSrv = new QueryServer(disk)
+    diskSrv.start()
+    try {
+      val bad = check(diskSrv, Seq(table(0), table(1), table(10)))
+      assert(bad.isEmpty, bad.mkString("\n"))
+    } finally diskSrv.stop()
+  }
+
+  test("POST /query: a non-object body or a non-scalar filter is a 400") {
+    for (body <- Seq("{", "not json", "[1]", "\"foo\"", "5",
+        """{"rrname": {"a": 1}}""", """{"rdata": ["1.2.3.4"]}""",
+        """{"rrname": "foo", "rrtype": {"t": "A"}}""",
+        """{"rrname": "foo", "sensor_id": []}""",
+        """{"rrname_prefix": {"p": "ba"}}""")) {
+      val r = post("/query", body)
+      assert(r.statusCode() == 400, s"$body -> ${r.statusCode()} ${r.body()}")
+    }
+    // a null member is an absent one
+    val r = post("/query", """{"rrname": null, "rdata": "1.2.3.5"}""")
+    assert(r.statusCode() == 200 && r.body().contains("\"bar\""), r.body())
+  }
+
   test("slow-client timeouts configured to reference parity (5s/10s)") {
     server.boundPort: Unit // force server construction first
     // query_graphql.go:410-412 — the JDK server reads these once at
