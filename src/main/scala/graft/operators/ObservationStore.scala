@@ -204,12 +204,16 @@ object ObservationStore {
     * answers negative lookups from its block blooms
     * (`rocksdb-impl.c`'s default table policy); parquet row-group
     * blooms give the same story — an absent key skips every row group
-    * without touching data pages — and BOTH serving paths use them
-    * automatically (parquet-mr's RowGroupFilter under the fast path's
-    * `readNextFilteredRowGroup`, Spark's parquet pushdown under the
-    * plan path). Adaptive sizing: bloom bytes follow the observed NDV
-    * instead of the 1 MB static default. Kept in ONE place so a bucket
-    * rewritten by expiry/compaction never silently loses its bloom. */
+    * without touching data pages. Only the PLAN path reads them (Spark's
+    * parquet pushdown). The driver-local [[PointReader]] reads with
+    * bloom and dictionary filtering off and prunes files and row groups
+    * with the key dictionaries it caches instead, exact and with no I/O
+    * per query; a row group whose key chunk fell back to plain pages
+    * is read and its keys tested by value. Parquet writes no bloom for
+    * a fully dictionary-encoded chunk. Adaptive sizing: bloom bytes
+    * follow the observed NDV instead of the 1 MB static default. Kept in
+    * ONE place so a bucket rewritten by expiry/compaction never silently
+    * loses its bloom. */
   private def bloomOpts[T](w: org.apache.spark.sql.DataFrameWriter[T],
       keyCol: String): org.apache.spark.sql.DataFrameWriter[T] =
     w.option(s"parquet.bloom.filter.enabled#$keyCol", "true")

@@ -7,16 +7,19 @@ import scala.collection.concurrent.TrieMap
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.ParquetReadOptions
-import org.apache.parquet.conf.HadoopParquetConfiguration
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.bytes.BytesInput
+import org.apache.parquet.column.{ColumnDescriptor, ColumnReader, Dictionary, Encoding}
+import org.apache.parquet.column.impl.ColumnReadStoreImpl
+import org.apache.parquet.column.page.{DataPage, DictionaryPage, PageReadStore, PageReader}
+import org.apache.parquet.compression.CompressionCodecFactory
+import org.apache.parquet.conf.{HadoopParquetConfiguration, ParquetConfiguration}
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.metadata.ParquetMetadata
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.metadata.{CompressionCodecName, ParquetMetadata}
+import org.apache.parquet.hadoop.util.{HadoopCodecs, HadoopInputFile}
+import org.apache.parquet.io.ParquetDecodingException
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.io.{ColumnIOFactory, MessageColumnIO}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
@@ -33,26 +36,34 @@ import graft.model.Observation
   * scheduling (~10 ms floor in local mode; perfbench `lookup` and
   * `Bench.benchPointLookups` report both paths) for
   * a read that only ever touches ONE bucket directory. This reader does
-  * exactly what that pruned plan would do — bucket-prune with the same
-  * `xxhash64(key) % n`, Parquet row-group stats + dictionary filtering on
-  * the sorted leading key, residual equality predicates pushed into the
-  * record filter, stop at `limit` — on the serving thread with parquet-mr
-  * (the same reader library Spark's scan uses underneath).
+  * what that pruned plan would do — bucket-prune with the same
+  * `xxhash64(key) % n`, Parquet row-group stats and column-index page
+  * pruning on the sorted leading key, an exact key test answered from
+  * the cached key dictionaries, residual equality on the matching rows,
+  * stop at `limit` — on the serving thread with parquet-mr's column
+  * readers (the same reader library Spark's scan uses underneath).
   *
-  * Measured cost structure (sf0.1, 113 KB bucket file, local disk) and
-  * the resulting design:
-  *  - Hadoop's ChecksumFileSystem costs ~7 ms per file open → local
-  *    paths read via java.nio ([[inputFile]]).
+  * Measured cost structure and the resulting design:
+  *  - Hadoop's ChecksumFileSystem costs ~7 ms per file open (sf0.1,
+  *    113 KB bucket file) → local paths read via java.nio
+  *    ([[inputFile]]).
   *  - `ParquetReadOptions.builder()` constructs a fresh Hadoop
   *    `Configuration` per call (~7.7 ms) → ONE [[HadoopParquetConfiguration]]
   *    is built per reader and shared.
   *  - footer parse is ~1–15 ms → footers cache per file ([[footerCache]]),
   *    invalidated with the file map on epoch change.
-  *  - with those amortized, a lookup is ~2 ms: dictionary-page check
-  *    (misses prune the whole row group) + filtered assembly of matches.
-  * Column-index (page-level) filtering is ON (see [[readFiles]]): the
-  * store writes 64 KB pages sorted on the key, so a hit decodes the
-  * 1–2 pages overlapping the key range, not the whole row group.
+  *  - with those amortized, a hit reads the 1–2 pages per column that
+  *    the column index leaves (the store writes pages of at most 512
+  *    rows, sorted on the key), walks only the key column's dictionary
+  *    ids and decodes the other columns for the matching rows alone
+  *    ([[readFiles]]). Pages decompress heap to heap
+  *    ([[PointReader.ReadCodecs]]). On perfbench's 100k-row store (64
+  *    buckets, ~1.6k rows per file, one thread, 4-core container) that
+  *    is ~0.24 ms of CPU per point lookup; assembling every row of those
+  *    pages into a parquet-mr `Group` and decompressing each page
+  *    through a 64 KB stream buffer costs ~0.65 ms. What is left is page
+  *    decompression, the per-query column/offset-index reads that page
+  *    pruning needs, and the key walk.
   *
   * Scale stance: the bytes read are the SAME pruned set the Spark plan
   * reads (one bucket ≈ store/numBuckets, row-group-pruned below that);
@@ -84,12 +95,11 @@ final class PointReader private[operators] (
   /** bucket id → parquet file paths, listed lazily per bucket. */
   private val filesByBucket = new TrieMap[Long, Seq[Path]]()
 
-  /** file path → parsed footer + column IO (reused across lookups; both
-    * are immutable after construction and safe to share across serving
-    * threads). Bounded by the store's file count; dropped on epoch
-    * change alongside [[filesByBucket]]. */
-  private val footerCache =
-    new TrieMap[String, (ParquetMetadata, MessageColumnIO)]()
+  /** file path → parsed footer (reused across lookups; immutable after
+    * parsing and safe to share across serving threads). Bounded by the
+    * store's file count; dropped on epoch change alongside
+    * [[filesByBucket]]. */
+  private val footerCache = new TrieMap[String, ParquetMetadata]()
 
   /** file path → ((decoded key-column dictionary per row group, whether
     * its entries are ascending), approx bytes). None for a row group
@@ -127,8 +137,7 @@ final class PointReader private[operators] (
   // other shape disables the fast path (projection = None) instead of
   // returning differently-typed results than the plan path.
   private lazy val projection: Option[MessageType] = {
-    val cols = Seq("rrname", "sensor_id", "rrtype", "rdata", "count",
-      "first_seen", "last_seen")
+    val cols = PointReader.Cols
     try {
       anyDataFile().flatMap { f =>
         val r = ParquetFileReader.open(inputFile(f))
@@ -236,16 +245,6 @@ final class PointReader private[operators] (
     }
   }
 
-  private def tsOf(micros: Long): Timestamp = {
-    val t = new Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
-    t.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-    t
-  }
-
-  private def str(g: Group, c: String): String =
-    if (g.getFieldRepetitionCount(c) == 0) null
-    else g.getBinary(c, 0).toStringUsingUTF8
-
   /** Point lookup: key equality on this copy's leading column plus
     * residual string-equality filters, capped at `limit`. Semantics match
     * `ObservationStore.entries` on the same store exactly (the
@@ -255,12 +254,11 @@ final class PointReader private[operators] (
     val proj = projection.getOrElse(
       throw new IllegalStateException("fast path unavailable"))
     ensureFresh()
-    val kb = key.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    readBucket(bucketOf(key), proj, predicate(key, residual),
-      new PointReader.Budget(limit),
-      (entries, sorted) =>
-        if (sorted) PointReader.containsSorted(entries, kb)
-        else entries.exists(java.util.Arrays.equals(_, kb)))
+    readBucket(bucketOf(key), proj,
+      PointReader.Read(FilterCompat.get(predicate(key, residual)),
+        PointReader.KeyTest.point(
+          key.getBytes(java.nio.charset.StandardCharsets.UTF_8)),
+        residual, new PointReader.Budget(limit)))
   }
 
   /** Prefix range scan: every observation whose `keyCol` starts with
@@ -269,69 +267,63 @@ final class PointReader private[operators] (
     * (`backend/balboa-rocksdb/rocksdb-impl.c:345-354`), so serving it
     * should not pay the Spark-plan floor either. `xxhash64(key) % n`
     * bucketing cannot prune a prefix (hashing destroys key order), so
-    * the reader fans over ALL buckets; within each sorted bucket file
-    * the [[PointReader.StartsWithPredicate]] bounds the candidate row
-    * groups from footer min/max stats (a `[prefix, nextPrefix)` range
-    * check), prunes via dictionary pages, and keeps only true prefix
-    * matches — the same pruning the pruned Spark scan would do, minus
-    * the per-query planning/scheduling. Result order is per-bucket file
-    * order (callers needing an order sort, exactly as with the plan
+    * the reader fans over ALL buckets; within each sorted file the
+    * [[PointReader.StartsWithPredicate]] bounds the candidate row groups
+    * and pages from footer min/max stats (a `[prefix, nextPrefix)`
+    * range check), and the key test keeps the dictionary ids of the
+    * prefix range — the same pruning the pruned Spark scan would do,
+    * minus the per-query planning/scheduling. Result order is per-bucket
+    * file order (callers needing an order sort, exactly as with the plan
     * path's unordered scan + limit). */
   def prefixLookup(prefix: String, residual: Seq[(String, String)],
-      limit: Int): Vector[Observation] = {
-    val pb = prefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    fan(prefixPredicate(prefix, residual), limit,
-      (entries, sorted) =>
-        if (sorted) PointReader.anyPrefixSorted(entries, pb)
-        else entries.exists(PointReader.startsWith(_, pb)))
-  }
+      limit: Int): Vector[Observation] =
+    fan(FilterCompat.get(prefixPredicate(prefix, residual)),
+      PointReader.KeyTest.prefix(
+        prefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)),
+      residual, limit)
 
   /** Key-test scan: every observation whose `keyCol` value satisfies
     * `keep`, capped at `limit` — the shape of a CIDR block over the
     * inverted copy, where no key order (string or hash) bounds the
-    * matches, so every bucket fans and every row's key is tested. Files
-    * whose cached dictionaries hold no kept key are skipped with zero
-    * I/O; rows are kept by a [[PointReader.KeyTestPredicate]] in the
-    * record filter. Result order is per-bucket file order, as in
-    * [[prefixLookup]]. A selective block still decodes every file its
-    * dictionaries cannot rule out; only a binding `limit` cuts the read
+    * matches, so every bucket fans and no statistic prunes a row group
+    * or page. Files whose cached dictionaries hold no kept key are
+    * skipped with zero I/O; in the rest, a row is a match when its key's
+    * dictionary id is in the kept set. Result order is per-bucket file
+    * order, as in [[prefixLookup]]. Only a binding `limit` cuts the read
     * short. */
   def keyTestLookup(keep: Array[Byte] => Boolean,
       limit: Int): Vector[Observation] =
-    fan(FilterApi.userDefined(FilterApi.binaryColumn(keyCol),
-        new PointReader.KeyTestPredicate(keep)), limit,
-      (entries, _) => entries.exists(keep))
+    fan(FilterCompat.NOOP, new PointReader.KeyTest(keep, None), Nil, limit)
 
-  /** Reads every bucket with `pred`, stopping all of them once `limit`
-    * rows exist in total. The buckets are INDEPENDENT reads (every cache
-    * here is a TrieMap — the same concurrency the multi-worker serving
-    * path already exercises), so they fan over the shared bounded pool:
-    * a serial walk pays bucket-count × per-file latency for what is
+  /** Reads every bucket, stopping all of them once `limit` rows exist in
+    * total. The buckets are INDEPENDENT reads (every cache here is a
+    * TrieMap — the same concurrency the multi-worker serving path
+    * already exercises), so they fan over the shared bounded pool: a
+    * serial walk pays bucket-count × per-file latency for what is
     * mostly dictionary-pruned no-ops plus a handful of real reads.
     * Concatenation keeps bucket order, so a non-binding limit returns
     * the serial walk's rows in its order; a binding one returns exactly
     * `limit` matches (an arbitrary subset, as on the plan path's
     * unordered scan + limit). */
-  private def fan(pred: FilterPredicate, limit: Int,
-      anyEntry: (Array[Array[Byte]], Boolean) => Boolean)
-      : Vector[Observation] = {
+  private def fan(filter: FilterCompat.Filter, test: PointReader.KeyTest,
+      residual: Seq[(String, String)], limit: Int): Vector[Observation] = {
     val proj = projection.getOrElse(
       throw new IllegalStateException("fast path unavailable"))
     ensureFresh()
     def once(): (Vector[Observation], PointReader.Budget) = {
-      val budget = new PointReader.Budget(limit)
+      val read = PointReader.Read(filter, test, residual,
+        new PointReader.Budget(limit))
       val rows =
-        if (numBuckets <= 1)
-          readBucket(0L, proj, pred, budget, anyEntry, trackFan = true)
+        if (numBuckets <= 1) readBucket(0L, proj, read, trackFan = true)
         else
           (0L until numBuckets).map { b =>
             PointReader.prefixFanPool.submit(
               new java.util.concurrent.Callable[Vector[Observation]] {
                 def call(): Vector[Observation] =
-                  readBucket(b, proj, pred, budget, anyEntry, trackFan = true)
+                  readBucket(b, proj, read, trackFan = true)
               })
           }.flatMap(_.get()).take(limit).toVector
-      (rows, budget)
+      (rows, read.budget)
     }
     // a bucket whose file vanished mid-read (concurrent commit) gives
     // back the rows it had counted; buckets that stopped on that count
@@ -340,12 +332,13 @@ final class PointReader private[operators] (
     if (rows.size < limit && budget.refunded) once()._1 else rows
   }
 
-  /** May this file contain a matching key? Answered from the cached
-    * decoded dictionary with zero I/O after the first consultation —
-    * a row group whose key chunk is not fully dictionary-encoded (or
-    * whose dictionary failed to read) conservatively answers yes. */
-  private def mayContain(p: Path,
-      anyEntry: (Array[Array[Byte]], Boolean) => Boolean): Boolean = {
+  /** Each row group of `p`'s decoded key dictionary and the ids `test`
+    * keeps in it (None for a row group without a usable dictionary: its
+    * keys are tested by value), worked out from the cached decoded
+    * dictionary with zero I/O after the first consultation; None when no
+    * row group can hold a match. */
+  private def candidates(p: Path, test: PointReader.KeyTest)
+      : Option[Seq[Option[PointReader.KeyIds]]] = {
     val dicts = dictCache.get(p.toString) match {
       case Some((d, _)) =>
         PointReader.dictCacheHits.incrementAndGet()
@@ -376,10 +369,9 @@ final class PointReader private[operators] (
         }
         d
     }
-    dicts.exists {
-      case Some((entries, sorted)) => anyEntry(entries, sorted)
-      case None                    => true
-    }
+    val ids = dicts.map(_.map { case (entries, sorted) =>
+      PointReader.KeyIds(entries, test.ids(entries, sorted)) })
+    if (ids.forall(_.exists(_.kept.isEmpty))) None else Some(ids)
   }
 
   private def readDicts(p: Path): Seq[Option[(Array[Array[Byte]], Boolean)]] =
@@ -415,9 +407,8 @@ final class PointReader private[operators] (
     } catch { case _: Exception => Seq(None) }
 
   private def readBucket(bucket: Long, proj: MessageType,
-      pred: FilterPredicate, budget: PointReader.Budget,
-      anyEntry: (Array[Array[Byte]], Boolean) => Boolean,
-      trackFan: Boolean = false): Vector[Observation] = {
+      read: PointReader.Read, trackFan: Boolean = false)
+      : Vector[Observation] = {
     // An EMPTY cached list never touches a file, so the vanished-file
     // retry below can't fire for it — a merge that populates the bucket
     // would otherwise serve stale misses for up to EpochCheckMillis.
@@ -431,12 +422,14 @@ final class PointReader private[operators] (
         filesByBucket.put(bucket, fresh)
         fresh
       }
-    val live = files.filter(mayContain(_, anyEntry))
+    def live(fs: Seq[Path]) =
+      fs.flatMap(f => candidates(f, read.test).map(f -> _))
+    val first = live(files)
     if (trackFan) {
       PointReader.fanBucketsTotal.incrementAndGet()
-      if (live.nonEmpty) PointReader.fanBucketsRead.incrementAndGet(): Unit
+      if (first.nonEmpty) PointReader.fanBucketsRead.incrementAndGet(): Unit
     }
-    try readFiles(live, proj, pred, budget)
+    try readFiles(first, proj, read)
     catch {
       // vanished file = concurrent committed merge swapped this bucket:
       // drop caches for it, relist once and retry (see staleness note)
@@ -450,76 +443,97 @@ final class PointReader private[operators] (
         }
         val fresh = listBucket(bucket)
         filesByBucket.put(bucket, fresh)
-        readFiles(fresh.filter(mayContain(_, anyEntry)), proj, pred, budget)
+        readFiles(live(fresh), proj, read)
     }
   }
 
-  private def footerAndIo(p: Path, proj: MessageType)
-      : (ParquetMetadata, MessageColumnIO) =
+  private def footerOf(p: Path): ParquetMetadata =
     footerCache.getOrElseUpdate(p.toString, {
       val r = ParquetFileReader.open(inputFile(p))
-      val footer = try r.getFooter finally r.close()
-      val io = new ColumnIOFactory()
-        .getColumnIO(proj, footer.getFileMetaData.getSchema)
-      (footer, io)
+      try r.getFooter finally r.close()
     })
 
-  private def readFiles(files: Seq[Path], proj: MessageType,
-      pred: FilterPredicate, budget: PointReader.Budget)
-      : Vector[Observation] = {
+  /** Reads the matching rows of `files` column by column. The read
+    * filter prunes row groups (footer stats) and pages (column index);
+    * over each surviving row group one [[ColumnReader]] per projected
+    * column is built on demand, and only the key column is walked row by
+    * row: a row matches when its key's dictionary id is in the row
+    * group's kept set, or — for a row group whose key chunk has plain
+    * pages — when its key bytes pass the test. The other six columns'
+    * readers are built on the first match and skip the rows between
+    * matches without materializing them; a matching row's values are
+    * decoded, held to the residual equalities, and counted against the
+    * budget. Dictionary and bloom row-group filtering are
+    * OFF: [[candidates]] already answered membership from the cached
+    * decoded dictionary with no I/O, while parquet's own levels re-read
+    * dictionary/bloom pages every query (profiled at ~15% of a prefix
+    * seek). Page filtering leaves each column with the same row set, so
+    * parquet-mr's synchronizing readers keep the columns aligned (pinned
+    * by PointReaderSpec's multi-page store cases). */
+  private def readFiles(files: Seq[(Path, Seq[Option[PointReader.KeyIds]])],
+      proj: MessageType, read: PointReader.Read): Vector[Observation] = {
+    import scala.jdk.CollectionConverters._
     val out = Vector.newBuilder[Observation]
     var n = 0
-    val filter = FilterCompat.get(pred)
-    // one cheap options object per lookup (the filter is per-query);
+    // one cheap options object per read (the filter is per-query);
     // building from the prebuilt ParquetConfiguration avoids the
-    // fresh-Configuration cost. Column-index (page-level) filtering is
-    // ON: with 512-row pages (bloomOpts) a lookup decodes only the
-    // pages overlapping the key range — parquet-mr ≥1.11 aligns rows
-    // across columns itself when the page store carries row indexes
-    // (MessageColumnIO.getRecordReader + pages.getRowIndexes), so the
-    // manual record loop below needs no extra bookkeeping; pinned by
-    // PointReaderSpec's multi-page store case. Dictionary and bloom
-    // row-group filtering are OFF: [[mayContain]]'s cached decoded
-    // dictionary already answered exact membership with no I/O, while
-    // parquet's own levels re-read dictionary/bloom pages every query
-    // (profiled at ~15% of a prefix seek).
+    // fresh-Configuration cost
     val opts = ParquetReadOptions.builder(parquetConf)
-      .withRecordFilter(filter)
+      .withCodecFactory(new PointReader.ReadCodecs(parquetConf))
+      .withRecordFilter(read.filter)
       .useColumnIndexFilter(true)
       .useDictionaryFilter(false)
       .useBloomFilter(false)
       .build()
+    val keyAt = PointReader.Cols.indexOf(keyCol)
+    val residual = read.residual.map { case (c, v) =>
+      (PointReader.Cols.indexOf(c), v) }
+    val budget = read.budget
     val it = files.iterator
     try while (it.hasNext && budget.open) {
-      val path = it.next()
-      val (footer, columnIO) = footerAndIo(path, proj)
+      val (path, ids) = it.next()
+      val footer = footerOf(path)
+      val blocks = footer.getBlocks.asScala
       val in = inputFile(path)
       val reader = new ParquetFileReader(in, footer, opts, in.newStream())
+      var decoded = 0L
       try {
         reader.setRequestedSchema(proj)
         var pages = reader.readNextFilteredRowGroup()
         while (pages != null && budget.open) {
-          val rr = columnIO.getRecordReader(pages,
-            new GroupRecordConverter(proj), filter)
-          val rows = pages.getRowCount
-          var i = 0L
-          while (i < rows && budget.open) {
-            val g = rr.read()
-            if (!rr.shouldSkipCurrentRecord && g != null) {
-              out += Observation(
-                str(g, "rrname"), str(g, "sensor_id"), str(g, "rrtype"),
-                str(g, "rdata"), g.getLong("count", 0),
-                tsOf(g.getLong("first_seen", 0)),
-                tsOf(g.getLong("last_seen", 0)))
-              n += 1
-              budget.take()
+          // this row group's key dictionary and kept ids; None tests
+          // key bytes
+          val offset: Long = pages.getRowIndexOffset.orElse(-1L)
+          val keyIds = ids.lift(blocks.indexWhere(_.getRowIndexOffset == offset))
+            .flatten
+          if (!keyIds.exists(_.kept.isEmpty)) {
+            val columns = new PointReader.RowGroupColumns(pages, proj,
+              footer.getFileMetaData.getCreatedBy, keyAt, keyIds.map(_.entries))
+            val key = columns.cells(keyAt)
+            val rows = pages.getRowCount
+            var row = 0L
+            while (row < rows && budget.open) {
+              if (columns.read(keyAt, row) && (
+                  if (key.id >= 0 && keyIds.isDefined) keyIds.get.kept.get(key.id)
+                  else read.test.keep(key.binary.getBytesUnsafe))) {
+                val o = columns.observation(row)
+                decoded += 1
+                if (residual.forall { case (i, v) => o.productElement(i) == v }) {
+                  out += o
+                  n += 1
+                  budget.take()
+                }
+              }
+              row += 1
             }
-            i += 1
           }
           pages =
             if (budget.open) reader.readNextFilteredRowGroup() else null
         }
-      } finally reader.close()
+      } finally {
+        PointReader.rowsDecoded.addAndGet(decoded)
+        reader.close()
+      }
     } catch {
       case e: Throwable => budget.refund(n); throw e
     }
@@ -532,6 +546,10 @@ object PointReader {
     * against the store's committed epoch. */
   val EpochCheckMillis: Long = 2000L
 
+  /** The served columns, in [[Observation]]'s field order. */
+  private[operators] val Cols: Seq[String] = Seq("rrname", "sensor_id",
+    "rrtype", "rdata", "count", "first_seen", "last_seen")
+
   /** Bucket-fan pruning telemetry (cumulative across all readers):
     * of the buckets a prefix or key-test fan visited, how many actually had a
     * candidate file after the cached-dictionary prune (i.e. opened
@@ -541,6 +559,13 @@ object PointReader {
   private[graft] val fanBucketsTotal =
     new java.util.concurrent.atomic.AtomicLong(0)
   private[graft] val fanBucketsRead =
+    new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Rows whose non-key columns a read decoded (cumulative across all
+    * readers): the rows whose key matched, before residual filters. A
+    * point lookup of a key with r rows adds exactly r, however many rows
+    * share its pages. */
+  private[graft] val rowsDecoded =
     new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Dictionary-cache telemetry (cumulative across all readers):
@@ -585,21 +610,54 @@ object PointReader {
     lo
   }
 
-  private[graft] def containsSorted(entries: Array[Array[Byte]],
-      key: Array[Byte]): Boolean = {
-    val i = lowerBound(entries, key)
-    i < entries.length && java.util.Arrays.equals(entries(i), key)
+  /** One test on the key column, in the two forms a read needs: on a
+    * value's raw bytes (`keep`, for plain-encoded key pages), and as the
+    * set of dictionary ids it keeps ([[ids]]). With an ascending
+    * dictionary and a `seek` target the kept ids are the run that starts
+    * at the target's lower bound — one id for a point key, the
+    * contiguous range of a prefix — found by binary search; otherwise
+    * (a CIDR block, a foreign unsorted dictionary) every entry is
+    * tested. */
+  private[operators] final class KeyTest(val keep: Array[Byte] => Boolean,
+      seek: Option[Array[Byte]]) {
+    def ids(entries: Array[Array[Byte]], sorted: Boolean): java.util.BitSet = {
+      val out = new java.util.BitSet()
+      seek match {
+        case Some(s) if sorted =>
+          var i = lowerBound(entries, s)
+          while (i < entries.length && keep(entries(i))) {
+            out.set(i)
+            i += 1
+          }
+        case _ =>
+          var i = 0
+          while (i < entries.length) {
+            if (keep(entries(i))) out.set(i)
+            i += 1
+          }
+      }
+      out
+    }
   }
+
+  private[operators] object KeyTest {
+    def point(key: Array[Byte]): KeyTest =
+      new KeyTest(java.util.Arrays.equals(_, key), Some(key))
+    def prefix(p: Array[Byte]): KeyTest = new KeyTest(startsWith(_, p), Some(p))
+  }
+
+  /** Does an ascending dictionary hold `key`? */
+  private[graft] def containsSorted(entries: Array[Array[Byte]],
+      key: Array[Byte]): Boolean =
+    !KeyTest.point(key).ids(entries, sorted = true).isEmpty
 
   /** Any entry starting with `prefix`? Sorted case: entries with the
     * prefix form the contiguous range [prefix, prefix∞), so the entry
     * at the prefix's lower bound either starts with it or nothing
     * does. */
   private[graft] def anyPrefixSorted(entries: Array[Array[Byte]],
-      prefix: Array[Byte]): Boolean = {
-    val i = lowerBound(entries, prefix)
-    i < entries.length && startsWith(entries(i), prefix)
-  }
+      prefix: Array[Byte]): Boolean =
+    !KeyTest.prefix(prefix).ids(entries, sorted = true).isEmpty
 
   private[graft] def startsWith(e: Array[Byte],
       prefix: Array[Byte]): Boolean = {
@@ -637,21 +695,155 @@ object PointReader {
     }
   }
 
-  /** Keeps the values of a BINARY column that satisfy `keep` (raw
-    * bytes). No order bounds the kept set, so row groups and pages are
-    * never dropped from stats; the caller prunes whole files with the
-    * decoded dictionaries instead. */
-  private[operators] final class KeyTestPredicate(test: Array[Byte] => Boolean)
-      extends org.apache.parquet.filter2.predicate.UserDefinedPredicate[Binary]
-      with java.io.Serializable {
-    override def keep(value: Binary): Boolean =
-      value != null && test(value.getBytesUnsafe)
-    override def canDrop(
-        st: org.apache.parquet.filter2.predicate.Statistics[Binary])
-        : Boolean = false
-    override def inverseCanDrop(
-        st: org.apache.parquet.filter2.predicate.Statistics[Binary])
-        : Boolean = false
+  /** One query's read: the row-group/page pruning filter, the key test,
+    * the residual (column, value) equalities and the shared budget. */
+  private[operators] final case class Read(filter: FilterCompat.Filter,
+      test: KeyTest, residual: Seq[(String, String)], budget: Budget)
+
+  /** A row group's decoded key dictionary and the ids a key test keeps. */
+  private[operators] final case class KeyIds(entries: Array[Array[Byte]],
+      kept: java.util.BitSet)
+
+  /** The projected columns of one row group as column readers the key
+    * walk drives forward: a reader is built on first use (a row group
+    * with no match never decodes the non-key columns' pages) and skips
+    * the rows before the one asked for without materializing them. A
+    * value read lands in its column's [[Cell]]. With `keyEntries` (the
+    * cached decoded dictionary of column `key`) the key reader is handed
+    * an empty dictionary page and its ids resolve against those entries,
+    * so the stored dictionary page is never decompressed again. */
+  private[operators] final class RowGroupColumns(pages: PageReadStore,
+      proj: MessageType, createdBy: String, key: Int,
+      keyEntries: Option[Array[Array[Byte]]]) {
+    private val cols = proj.getColumns
+    val cells: Array[Cell] = Array.tabulate(Cols.size)(c =>
+      new Cell(if (c == key) keyEntries.map(new EntriesDictionary(_)).orNull
+        else null))
+    private val store = new ColumnReadStoreImpl(
+      if (keyEntries.isEmpty) pages else new PageReadStore {
+        override def getPageReader(d: ColumnDescriptor): PageReader = {
+          val r = pages.getPageReader(d)
+          if (d != cols.get(key)) r
+          else new PageReader {
+            override def readDictionaryPage(): DictionaryPage =
+              new DictionaryPage(BytesInput.empty(), 0, Encoding.PLAIN)
+            override def getTotalValueCount: Long = r.getTotalValueCount
+            override def readPage(): DataPage = r.readPage()
+          }
+        }
+        override def getRowCount: Long = pages.getRowCount
+        override def getRowIndexOffset = pages.getRowIndexOffset
+        override def getRowIndexes = pages.getRowIndexes
+      },
+      new org.apache.parquet.io.api.GroupConverter {
+        override def getConverter(i: Int) = cells(i)
+        override def start(): Unit = ()
+        override def end(): Unit = ()
+      }, proj, createdBy)
+    private val readers = new Array[ColumnReader](Cols.size)
+    private val rowOf = new Array[Long](Cols.size)
+
+    /** Reads column `c` at `row` (rows only move forward) into
+      * `cells(c)`; false when the value is null. */
+    def read(c: Int, row: Long): Boolean = {
+      var r = readers(c)
+      if (r == null) {
+        r = store.getColumnReader(cols.get(c))
+        readers(c) = r
+      }
+      val maxDef = cols.get(c).getMaxDefinitionLevel
+      while (rowOf(c) < row) {
+        if (r.getCurrentDefinitionLevel == maxDef) r.skip()
+        r.consume()
+        rowOf(c) += 1
+      }
+      val defined = r.getCurrentDefinitionLevel == maxDef
+      if (defined) r.writeCurrentValueToConverter()
+      defined
+    }
+
+    private def str(c: Int, row: Long): String =
+      if (read(c, row)) cells(c).binary.toStringUsingUTF8 else null
+
+    private def long(c: Int, row: Long): Long =
+      if (read(c, row)) cells(c).long
+      else throw new ParquetDecodingException(s"null ${Cols(c)} at row $row")
+
+    /** Every column's value at `row`. */
+    def observation(row: Long): Observation =
+      Observation(str(0, row), str(1, row), str(2, row), str(3, row),
+        long(4, row), tsOf(long(5, row)), tsOf(long(6, row)))
+  }
+
+  /** The last value a column reader wrote: its dictionary id on a
+    * dictionary-encoded page (decoded only when asked for, against
+    * `fixed` when given, else the reader's dictionary), else the plain
+    * value. */
+  private[operators] final class Cell(fixed: Dictionary)
+      extends org.apache.parquet.io.api.PrimitiveConverter {
+    private var dict: Dictionary = fixed
+    /** Dictionary id of the last value; -1 when it came from a plain page. */
+    var id: Int = -1
+    private var bin: Binary = null
+    private var plainLong = 0L
+    override def hasDictionarySupport: Boolean = true
+    override def setDictionary(d: Dictionary): Unit =
+      if (fixed == null) dict = d
+    override def addValueFromDictionary(i: Int): Unit = id = i
+    override def addBinary(b: Binary): Unit = { id = -1; bin = b }
+    override def addLong(v: Long): Unit = { id = -1; plainLong = v }
+    def binary: Binary = if (id >= 0) dict.decodeToBinary(id) else bin
+    def long: Long = if (id >= 0) dict.decodeToLong(id) else plainLong
+  }
+
+  private final class EntriesDictionary(entries: Array[Array[Byte]])
+      extends Dictionary(Encoding.PLAIN) {
+    override def getMaxId: Int = entries.length - 1
+    override def decodeToBinary(id: Int): Binary =
+      Binary.fromConstantByteArray(entries(id))
+  }
+
+  /** The codecs of one read. SNAPPY, the codec every store copy is
+    * written with, decompresses heap to heap in one snappy-java call per
+    * page; parquet-mr's stream codec instead allocates a staging buffer
+    * of `io.file.buffer.size` (64 KB under Spark) for every page, which
+    * profiled at 83 % of a point lookup's allocation. Any other codec
+    * goes to parquet-mr's own factory. */
+  private[operators] final class ReadCodecs(conf: ParquetConfiguration)
+      extends CompressionCodecFactory {
+    private var others: CompressionCodecFactory = null
+    private def other: CompressionCodecFactory = {
+      if (others == null) others = HadoopCodecs.newFactory(conf, 0)
+      others
+    }
+    override def getDecompressor(c: CompressionCodecName)
+        : CompressionCodecFactory.BytesInputDecompressor =
+      if (c == CompressionCodecName.SNAPPY) HeapSnappy
+      else other.getDecompressor(c)
+    override def getCompressor(c: CompressionCodecName)
+        : CompressionCodecFactory.BytesInputCompressor = other.getCompressor(c)
+    override def release(): Unit = if (others != null) others.release()
+  }
+
+  private object HeapSnappy extends CompressionCodecFactory.BytesInputDecompressor {
+    override def decompress(bytes: BytesInput, size: Int): BytesInput = {
+      val in = bytes.toByteArray
+      val out = new Array[Byte](size)
+      val n = org.xerial.snappy.Snappy.uncompress(in, 0, in.length, out, 0)
+      if (n != size) throw new java.io.IOException(
+        s"snappy page decompressed to $n bytes, expected $size")
+      BytesInput.from(out)
+    }
+    override def decompress(in: java.nio.ByteBuffer, compressedSize: Int,
+        out: java.nio.ByteBuffer, size: Int): Unit =
+      out.put(decompress(BytesInput.from(in), size).toByteBuffer)
+    override def release(): Unit = ()
+  }
+
+  private def tsOf(micros: Long): Timestamp = {
+    val t = new Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
+    t.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
+    t
   }
 
   /** Shared bounded pool for the bucket fan-out — sized small

@@ -9,15 +9,15 @@ import graft.operators.ObservationStore
 /** Executor for the reference's GraphQL query surface
   * (`query/query_graphql.go:25-192`), without a GraphQL engine
   * dependency. A request is tokenized once and parsed by recursive
-  * descent into a small syntax tree: one operation (`query`, optionally
+  * descent into a small syntax tree: operations (`query`, optionally
   * named, with variable definitions and defaults, or the `{ ... }`
-  * shorthand), fields with an alias, arguments, `@skip`/`@include` and a
-  * sub-selection, fragment spreads, inline fragments and fragment
-  * definitions. One walk over that tree resolves variables to typed
-  * values, drops the nodes the directives exclude, expands fragments
-  * (a fragment spread inside itself is an error), checks every field
-  * and argument against the served schema and yields one [[GqlQuery]] per
-  * root field:
+  * shorthand; of several, the one `operationName` names runs), fields
+  * with an alias, arguments, `@skip`/`@include` and a sub-selection,
+  * fragment spreads, inline fragments and fragment definitions. One
+  * walk over that tree resolves variables to typed values, drops the
+  * nodes the directives exclude, expands fragments (a fragment spread
+  * inside itself is an error), checks every field and argument against
+  * the served schema and yields one [[GqlQuery]] per root field:
   *  - `Query`: `entries(rrname, rdata, rrtype, sensor_id, limit)`,
   *    `stats` and `__schema` (the introspection document);
   *  - `Entry`: `id rrname rrtype rdata sensor_id count time_first
@@ -28,8 +28,9 @@ import graft.operators.ObservationStore
   * keys follow field aliases and selection order at every level. Argument
   * values are only ever data: a string may hold any text. Every error
   * (syntax, unknown field or argument, duplicate argument, wrong value
-  * kind, a `limit` outside [0, 2^31-1], more than one operation) is a
-  * `Left(message)` returned before the store is read. */
+  * kind, a `limit` outside [0, 2^31-1], several operations and no
+  * `operationName` that picks one of them) is a `Left(message)` returned
+  * before the store is read. */
 object Graphql {
 
   private val mapper = new ObjectMapper()
@@ -86,8 +87,9 @@ object Graphql {
     * typed value as the literal it stands for, so every argument rule
     * applies to it alike. */
   def execute(query: String, variables: Option[JsonNode],
-      store: ObservationStore): Either[String, String] =
-    parse(query, variables).map { fields =>
+      store: ObservationStore,
+      operationName: Option[String] = None): Either[String, String] =
+    parse(query, variables, operationName).map { fields =>
       if (fields.exists(_._2 == IntrospectionQuery)) renderIntrospection()
       else {
         val root = mapper.createObjectNode()
@@ -101,11 +103,15 @@ object Graphql {
       }
     }
 
-  /** The document's root fields as (response key, query), in selection
-    * order; empty when directives exclude every root field. */
-  def parse(query: String, variables: Option[JsonNode] = None)
+  /** The root fields of the document's operation — the one named
+    * `operationName`, which a document of several operations must give —
+    * as (response key, query), in selection order; empty when directives
+    * exclude every root field. */
+  def parse(query: String, variables: Option[JsonNode] = None,
+      operationName: Option[String] = None)
       : Either[String, Seq[(String, GqlQuery)]] =
-    try Right(new Walk(new Parser(tokenize(query)).document(), variables).roots())
+    try Right(new Walk(new Parser(tokenize(query)).document(operationName),
+      variables).roots())
     catch { case e: GqlError => Left(e.getMessage) }
 
   // ------------------------------------------------------------- parse
@@ -224,8 +230,8 @@ object Graphql {
       b.result()
     }
 
-    def document(): Document = {
-      val ops = Seq.newBuilder[Document]
+    def document(operationName: Option[String]): Document = {
+      val ops = Seq.newBuilder[(Option[String], Document)]
       val frags = scala.collection.mutable.Map[String, Seq[Selection]]()
       while (peek.kind != "EOF") {
         if (accept("fragment")) {
@@ -235,17 +241,28 @@ object Graphql {
           if (frags.put(n, selectionSet(1)).isDefined)
             fail(s"""There can be only one fragment named "$n".""")
         } else if (accept("query")) {
-          if (peek.kind == "Name") p += 1
+          val n = if (peek.kind == "Name") Some(name()) else None
           val vars = if (isPunct("(")) many("(", ")")(variable()) else Nil
-          ops += Document(vars, selectionSet(1), Map.empty)
-        } else if (isPunct("{")) ops += Document(Nil, selectionSet(1), Map.empty)
+          ops += n -> Document(vars, selectionSet(1), Map.empty)
+        } else if (isPunct("{"))
+          ops += None -> Document(Nil, selectionSet(1), Map.empty)
         else fail(s"Syntax Error: Unexpected ${describe(peek)}.")
       }
-      ops.result() match {
-        case Seq(op) => op.copy(fragments = frags.toMap)
-        case Seq() => fail("The document holds no operation.")
-        case _ => fail("The document holds more than one operation; send one per request.")
+      val all = ops.result()
+      if (all.isEmpty) fail("The document holds no operation.")
+      if (all.size > 1 && all.exists(_._1.isEmpty))
+        fail("The document holds more than one operation; each must be named.")
+      val op = operationName match {
+        case Some(n) => all.filter(_._1.contains(n)) match {
+          case Seq((_, op)) => op
+          case Seq() => fail(s"""Unknown operation named "$n".""")
+          case _ => fail(s"""There can be only one operation named "$n".""")
+        }
+        case None if all.size == 1 => all.head._2
+        case None => fail(
+          "The document holds more than one operation; name one in operationName.")
       }
+      op.copy(fragments = frags.toMap)
     }
 
     /** `$name: Type (= default)?`; the type is parsed, never read. */
@@ -478,10 +495,11 @@ object Graphql {
 
   /** Minimal-but-honest introspection document for the served subset of
     * the reference schema (`query_graphql.go:25-192`): the Query root
-    * with entries/stats, the Entry/LeafEntry/Stats objects, and the full
-    * 46-value RRType enum. Field types are rendered flat (no NON_NULL/
-    * LIST wrappers) — enough for capability discovery, not a full
-    * graphql-js compliance surface. */
+    * with entries/stats, the Entry/LeafEntry/Stats objects with every
+    * served field and argument (`__typename` is a meta-field, never
+    * listed), and the full 46-value RRType enum. Types are rendered flat
+    * (no NON_NULL/LIST wrappers) — enough for capability discovery, not a
+    * full graphql-js compliance surface. */
   private def renderIntrospection(): String = {
     val root = mapper.createObjectNode()
     val schema = root.putObject("data").putObject("__schema")
@@ -490,35 +508,50 @@ object Graphql {
     schema.putNull("subscriptionType")
     val types = schema.putArray("types")
 
-    def objectType(name: String, fields: Seq[(String, String)]): Unit = {
+    def typeRef(o: ObjectNode, t: String): Unit =
+      o.put("kind", if (t == "RRType") "ENUM" else if (t.startsWith("[")) "LIST"
+        else if (Set("Entry", "LeafEntry", "Stats")(t)) "OBJECT" else "SCALAR")
+        .put("name", t)
+    /** (field, type, arguments as (name, type, default)) */
+    def objectType(name: String,
+        fields: Seq[(String, String, Seq[(String, String, Option[String])])]): Unit = {
       val t = types.addObject()
       t.put("kind", "OBJECT").put("name", name)
       val fs = t.putArray("fields")
-      fields.foreach { case (fname, ftype) =>
+      fields.foreach { case (fname, ftype, args) =>
         val f = fs.addObject()
         f.put("name", fname)
-        f.putArray("args")
-        val ft = f.putObject("type")
-        ft.put("kind", if (ftype == "RRType") "ENUM"
-          else if (ftype.startsWith("[")) "LIST" else "SCALAR")
-        ft.put("name", ftype)
+        val as = f.putArray("args")
+        args.foreach { case (aname, atype, default) =>
+          val a = as.addObject()
+          a.put("name", aname)
+          typeRef(a.putObject("type"), atype)
+          default.fold(a.putNull("defaultValue"))(a.put("defaultValue", _))
+        }
+        typeRef(f.putObject("type"), ftype)
       }
     }
 
-    objectType("Query", Seq("entries" -> "[Entry]", "stats" -> "Stats"))
-    val entryFields = Seq("count" -> "Int", "rrname" -> "String",
-      "rrtype" -> "RRType", "rdata" -> "String", "time_first" -> "Int",
-      "time_first_rfc3339" -> "String", "time_last" -> "Int",
-      "time_last_rfc3339" -> "String", "sensor_id" -> "String")
-    objectType("Entry", entryFields :+ ("aliases" -> "[LeafEntry]"))
+    val limit = ("limit", "Int", Some("1000"))
+    objectType("Query", Seq(
+      ("entries", "[Entry]", Seq(("rrname", "String", None),
+        ("rdata", "String", None), ("rrtype", "RRType", None),
+        ("sensor_id", "String", None), limit)),
+      ("stats", "Stats", Nil)))
+    val entryFields = Seq("id" -> "ID", "count" -> "Int",
+      "rrname" -> "String", "rrtype" -> "RRType", "rdata" -> "String",
+      "time_first" -> "Int", "time_first_rfc3339" -> "String",
+      "time_last" -> "Int", "time_last_rfc3339" -> "String",
+      "sensor_id" -> "String").map { case (f, t) => (f, t, Nil) }
+    objectType("Entry", entryFields :+ (("aliases", "[LeafEntry]", Seq(limit))))
     objectType("LeafEntry", entryFields)
-    objectType("Stats",
-      Seq("total_count" -> "Int", "num_goroutines" -> "Int"))
+    objectType("Stats", Seq(("total_count", "Int", Nil),
+      ("num_goroutines", "Int", Nil)))
     val enumT = types.addObject()
     enumT.put("kind", "ENUM").put("name", "RRType")
     val evs = enumT.putArray("enumValues")
     RRTypes.toSeq.sorted.foreach(v => evs.addObject().put("name", v))
-    Seq("String", "Int", "Boolean").foreach { s =>
+    Seq("ID", "String", "Int", "Boolean").foreach { s =>
       types.addObject().put("kind", "SCALAR").put("name", s)
     }
     mapper.writeValueAsString(root)

@@ -201,8 +201,8 @@ final class QueryServer(store: ObservationStore, port: Int = 0,
         // sniffing the first characters — `{ "query": ... }` with inner
         // whitespace is still an envelope, while a bare GraphQL body
         // starting with '{' fails JSON parsing and falls through untouched
-        val (gql, vars) = parseEnvelope(raw).getOrElse((raw, None))
-        Graphql.execute(gql, vars, store) match {
+        val (gql, vars, op) = parseEnvelope(raw).getOrElse((raw, None, None))
+        Graphql.execute(gql, vars, store, op) match {
           case Left(err) => respond(ex, 400, errorJson(err))
           case Right(json) => respond(ex, 200, json)
         }
@@ -218,18 +218,21 @@ final class QueryServer(store: ObservationStore, port: Int = 0,
     mapper.writeValueAsString(root)
   }
 
-  /** Some((query, variables)) iff the body is a valid JSON object envelope
-    * with a string `query` member; `variables` is its optional object
-    * member (the standard GraphQL-over-HTTP envelope). */
+  /** Some((query, variables, operationName)) iff the body is a valid JSON
+    * object envelope with a string `query` member; `variables` is its
+    * optional object member and `operationName` its optional string one,
+    * which picks the operation to run from a document of several (the
+    * standard GraphQL-over-HTTP envelope). */
   private def parseEnvelope(raw: String)
-      : Option[(String, Option[JsonNode])] =
+      : Option[(String, Option[JsonNode], Option[String])] =
     if (!raw.trim.startsWith("{")) None
     else
       try {
         val n = mapper.readTree(raw)
         Option(n.get("query")).filter(_.isTextual).map { q =>
           (q.asText,
-            Option(n.get("variables")).filter(_.isObject))
+            Option(n.get("variables")).filter(_.isObject),
+            Option(n.get("operationName")).filter(_.isTextual).map(_.asText))
         }
       } catch { case _: Exception => None }
 

@@ -208,6 +208,138 @@ class PointReaderSpec extends AnyFunSuite {
     }
   }
 
+  /** A store whose hot keys' rows cross page and row-group boundaries:
+    * in each copy a 700-row key run sits behind 300 smaller keys' rows,
+    * so it spans the 512-row page edge and the 800-row row-group edge
+    * (`parquet.block.row.count.limit`). Every page repeats keys enough to
+    * stay dictionary-encoded; `plainKeys` shrinks the dictionary page cap
+    * so the key chunks fall back to plain pages instead. */
+  private def boundaryStore(plainKeys: Boolean): (String, ObservationStore) = {
+    val t = Timestamp.valueOf("2020-01-01 00:00:00")
+    val hotName = (0 until 700).map(i => ("hot.example", s"s${i / 7}",
+      if (i % 2 == 0) "A" else "AAAA", s"10.1.0.${i % 7}", 1L + i, t))
+    val hotData = (0 until 700).map(i =>
+      (f"r$i%04d.example", s"s${i % 3}", "A", "10.9.9.9", 2L, t))
+    val filler = for (i <- 0 until 100; s <- Seq("s0", "s1", "s2"))
+      yield Seq((f"a$i%04d.example", s, "A", s"10.2.0.$i", 3L, t),
+        (f"z$i%04d.example", s, "TXT", s"10.99.0.$i", 4L, t))
+    val input = (hotName ++ hotData ++ filler.flatten)
+      .toDF("rrname", "sensor_id", "rrtype", "rdata", "count", "ts")
+    val dir = java.nio.file.Files.createTempDirectory("graft-pr-edge").toString
+    val confs = Seq("parquet.block.row.count.limit" -> "800") ++
+      (if (plainKeys) Seq("parquet.dictionary.page.size" -> "256") else Nil)
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try ObservationStore.writeDual(ObservationStore.aggregate(input), dir,
+      numBuckets = 1)
+    finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    (dir, ObservationStore.load(spark, dir))
+  }
+
+  /** Per row group of `copy`'s file: (rows, pages whose key range holds
+    * `key`, whether the key chunk has plain pages). */
+  private def keyLayout(dir: String, copy: String, keyCol: String,
+      key: String): Seq[(Long, Int, Boolean)] = {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, copy))
+      .iterator.asScala.filter(_.toString.endsWith(".parquet")).toSeq
+    assert(files.size == 1, files)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(files.head.toUri),
+        new org.apache.hadoop.conf.Configuration()))
+    def str(b: java.nio.ByteBuffer) =
+      java.nio.charset.StandardCharsets.UTF_8.decode(b.duplicate()).toString
+    try r.getFooter.getBlocks.asScala.toSeq.map { block =>
+      val chunk = block.getColumns.asScala.find(_.getPath.toDotString == keyCol).get
+      val ci = r.readColumnIndex(chunk)
+      val pages = ci.getMinValues.asScala.zip(ci.getMaxValues.asScala)
+        .count { case (lo, hi) => str(lo) <= key && key <= str(hi) }
+      (block.getRowCount, pages, chunk.getEncodingStats.hasNonDictionaryEncodedPages)
+    } finally r.close()
+  }
+
+  for (plainKeys <- Seq(false, true))
+  test(s"columnar read across page and row-group edges (plain key pages: $plainKeys)") {
+    import graft.operators.PointReader
+    val (dir, store) = boundaryStore(plainKeys)
+    // the layout the test relies on: each hot run spans two row groups,
+    // and more than one page inside one of them
+    for ((copy, keyCol, key) <- Seq(("by_rrname", "rrname", "hot.example"),
+        ("by_rdata", "rdata", "10.9.9.9"))) {
+      val layout = keyLayout(dir, copy, keyCol, key)
+      assert(layout.count(_._2 > 0) >= 2, s"$copy $layout")
+      assert(layout.exists(_._2 >= 2), s"$copy $layout")
+      assert(layout.exists(_._3) == plainKeys, s"$copy $layout")
+    }
+    def rows(obs: Seq[graft.model.Observation]): Seq[Seq[Any]] =
+      sortedSet(obs.map(o => Row(o.rrname, o.sensor_id, o.rrtype, o.rdata,
+        o.count, o.first_seen, o.last_seen)))
+    // point answers, with residuals that keep none, some and all rows
+    val points = Seq(
+      (Some("hot.example"), None, None, None, 700),
+      (Some("hot.example"), None, Some("A"), None, 350),
+      (Some("hot.example"), None, None, Some("s3"), 7),
+      (Some("hot.example"), None, None, Some("nope"), 0),
+      (Some("hot.example"), None, Some("TXT"), None, 0),
+      (Some("hot.example"), Some("10.1.0.3"), None, Some("s3"), 1),
+      (None, Some("10.9.9.9"), None, None, 700),
+      (None, Some("10.9.9.9"), Some("A"), None, 700),
+      (None, Some("10.9.9.9"), None, Some("s0"), 234),
+      (None, Some("10.9.9.9"), Some("A"), Some("s1"), 233),
+      (None, Some("10.9.9.9"), Some("TXT"), None, 0),
+      (Some("a0099.example"), None, None, None, 3),
+      (Some("z0050.example"), None, None, None, 3),
+      (Some("missing.example"), None, None, None, 0),
+      (None, Some("10.2.0.49"), None, None, 3))
+    for ((rrname, rdata, rrtype, sensor, expect) <- points) {
+      val fast = store.servePointRows(rrname, rdata, rrtype, sensor).get
+      val plan = store.entries(rrname, rdata, rrtype, sensor).collect().toSeq
+      assert(sortedSet(fast) == sortedSet(plan), s"$rrname $rdata $rrtype $sensor")
+      assert(plan.size == expect, s"$rrname $rdata $rrtype $sensor: ${plan.size}")
+    }
+    // a binding limit cuts a run in the middle: exactly `limit` distinct
+    // rows, every one of them an answer
+    for ((rrname, rdata, rrtype, limit) <- Seq(
+        (Some("hot.example"), None, None, 350),
+        (Some("hot.example"), None, Some("A"), 100),
+        (None, Some("10.9.9.9"), None, 650))) {
+      val all = sortedSet(store.entries(rrname, rdata, rrtype).collect().toSeq).toSet
+      val got = sortedSet(store.servePointRows(rrname, rdata, rrtype, None, limit).get)
+      assert(got.size == limit && got.distinct.size == limit, s"$rrname $rdata limit=$limit")
+      assert(got.forall(all), s"$rrname $rdata limit=$limit")
+    }
+    // prefix answers
+    for ((prefix, expect) <- Seq("hot" -> 700, "r0" -> 700, "r06" -> 100,
+        "a005" -> 30, "z" -> 300, "q" -> 0)) {
+      val fast = rows(store.servePrefix(prefix, limit = Int.MaxValue).get)
+      val plan = sortedSet(store.entriesPrefix(prefix, limit = Int.MaxValue)
+        .collect().toSeq)
+      assert(fast == plan, s"prefix=$prefix")
+      assert(plan.size == expect, s"prefix=$prefix: ${plan.size}")
+    }
+    assert(store.servePrefix("r0", limit = 333).get.size == 333)
+    // CIDR answers
+    for ((block, expect) <- Seq("10.9.9.9/32" -> 700, "10.1.0.0/16" -> 700,
+        "10.1.0.0/30" -> 400, "10.2.0.0/24" -> 300, "10.0.0.0/8" -> 2000,
+        "11.0.0.0/8" -> 0)) {
+      val fast = rows(store.serveCidr(block, limit = Int.MaxValue).get)
+      val plan = sortedSet(store.cidrQuery(block, limit = Int.MaxValue)
+        .collect().toSeq)
+      assert(fast == plan, s"block=$block")
+      assert(plan.size == expect, s"block=$block: ${plan.size}")
+    }
+    assert(store.serveCidr("10.9.9.9/32", limit = 401).get.size == 401)
+    // a point lookup decodes the non-key columns of its own rows only,
+    // however many rows share their pages
+    for ((rrname, rdata, r) <- Seq((Some("hot.example"), None, 700),
+        (Some("a0050.example"), None, 3), (None, Some("10.9.9.9"), 700),
+        (None, Some("10.99.0.7"), 3), (Some("missing.example"), None, 0))) {
+      val before = PointReader.rowsDecoded.get
+      assert(store.servePoint(rrname, rdata).get.size == r)
+      assert(PointReader.rowsDecoded.get - before == r, s"$rrname $rdata")
+    }
+  }
+
   test("servePoint preserves merge roll-up values and sub-second precision") {
     val (_, store) = freshStore()
     val foo = store.servePoint(rrname = Some("foo"), rrtype = Some("A"),

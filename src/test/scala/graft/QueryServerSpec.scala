@@ -308,6 +308,69 @@ class QueryServerSpec extends AnyFunSuite {
     assert(rrtype.path("enumValues").size() == 46)
   }
 
+  test("POST /graphql: introspection lists every served field's arguments and id") {
+    val r = post("/graphql",
+      "{ __schema { types { name fields { name args { name type { name } } } } } }")
+    assert(r.statusCode() == 200, r.body())
+    val types = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(r.body()).path("data").path("__schema").path("types")
+    def fields(typeName: String): Map[String, Seq[(String, String)]] = {
+      val t = (0 until types.size()).map(types.get)
+        .find(_.path("name").asText() == typeName).get
+      (0 until t.path("fields").size()).map(t.path("fields").get).map { f =>
+        f.path("name").asText() -> (0 until f.path("args").size())
+          .map(f.path("args").get)
+          .map(a => a.path("name").asText() -> a.path("type").path("name").asText())
+      }.toMap
+    }
+    assert(fields("Query")("entries") == Seq("rrname" -> "String",
+      "rdata" -> "String", "rrtype" -> "RRType", "sensor_id" -> "String",
+      "limit" -> "Int"))
+    assert(fields("Query")("stats").isEmpty)
+    assert(fields("Entry")("aliases") == Seq("limit" -> "Int"))
+    for (t <- Seq("Entry", "LeafEntry")) {
+      assert(fields(t).contains("id"), t)
+      assert(fields(t).removed("aliases").values.forall(_.isEmpty), t)
+    }
+    // every listed field is one the executor serves
+    val served = post("/graphql", """{ entries(rrname: "foo") { id count rrname
+      rrtype rdata time_first time_first_rfc3339 time_last time_last_rfc3339
+      sensor_id aliases(limit: 1) { id rrname } } }""")
+    assert(served.statusCode() == 200, served.body())
+  }
+
+  test("POST /graphql: operationName picks one operation of several") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def envelope(op: Option[String]): String = {
+      val n = mapper.createObjectNode()
+      n.put("query", """query Names { entries(rdata: "1.2.3.4") { rrname } }
+        query Total { stats { total_count } }
+        query Foo($n: String = "foo") { entries(rrname: $n) { count } }""")
+      op.foreach(n.put("operationName", _))
+      mapper.writeValueAsString(n)
+    }
+    def ok(op: String): String = {
+      val r = post("/graphql", envelope(Some(op)))
+      assert(r.statusCode() == 200, s"$op: ${r.body()}")
+      r.body()
+    }
+    assert(ok("Total") == """{"data":{"stats":{"total_count":3}}}""")
+    assert(ok("Foo") == """{"data":{"entries":[{"count":10}]}}""")
+    assert(ok("Names").contains("\"baz\"") && !ok("Names").contains("stats"))
+    for ((op, msg) <- Seq(None -> "name one in operationName",
+        Some("Nope") -> "Unknown operation named \"Nope\"")) {
+      val r = post("/graphql", envelope(op))
+      assert(r.statusCode() == 400 && mapper.readTree(r.body())
+        .path("errors").path(0).path("message").asText.contains(msg), s"$op: ${r.body()}")
+    }
+    // a one-operation document runs whatever its name, unless another is asked for
+    val one = mapper.createObjectNode()
+      .put("query", "query Only { stats { total_count } }")
+    assert(post("/graphql", mapper.writeValueAsString(one)).statusCode() == 200)
+    one.put("operationName", "Other")
+    assert(post("/graphql", mapper.writeValueAsString(one)).statusCode() == 400)
+  }
+
   test("POST /graphql: stats root field (query_graphql.go:166-172)") {
     val r = post("/graphql", "query { stats { total_count num_goroutines } }")
     assert(r.statusCode() == 200)
