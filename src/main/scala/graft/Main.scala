@@ -17,6 +17,7 @@ import graft.serve.QueryServer
   * graft.Main dump   --store <dir> --out <dir>
   * graft.Main replay --dump <dir> --store <dir> [--buckets 64]
   * graft.Main backup --store <dir> --out <dir>
+  * graft.Main rebucket --store <dir> --buckets <n>
   * }}}
   *
   * `serve` ≙ `balboa serve` (GraphQL + REST endpoints, QueryServer);
@@ -27,6 +28,11 @@ import graft.serve.QueryServer
   * tools (`backend/balboa-backend-console/main.c:44-150`). `build` and
   * `merge` are the Spark-native bulk paths (there is no wire protocol —
   * observation batches arrive as parquet/stream micro-batches).
+  *
+  * A store has one on-disk shape (a meta recording its bucket count and
+  * the current layout). Every store command refuses a legacy store — one
+  * without a meta, or of an older layout — and `rebucket` upgrades it in
+  * one whole-copy rewrite.
   */
 object Main {
 
@@ -52,9 +58,9 @@ object Main {
       |  dump   --store <dir> --out <dir>
       |  replay --dump <dir> --store <dir> [--buckets 64]
       |  backup --store <dir> --out <dir>
-      |  expire --store <dir> --before <ISO date/date-time/instant, UTC> [--buckets 64]
-      |  compact --store <dir> [--buckets <n, required for pre-meta stores>]
-      |  rebucket --store <dir> --buckets <new count>
+      |  expire --store <dir> --before <ISO date/date-time/instant, UTC>
+      |  compact --store <dir>
+      |  rebucket --store <dir> --buckets <new count>   (also upgrades a legacy store)
       |  curate --docs <parquet> --out <dir> [--shards 64] [--budget 8192]
       |  dedup  --docs <parquet> --out <dir>
       |  dump-balboa   --store <dir> --out <dir>         (native wire format)
@@ -182,13 +188,11 @@ object Main {
                   s"(${e.getMessage})\n$usage")
           }
         val cutoff = java.sql.Timestamp.from(instant)
-        val n = ObservationStore.expire(spark, required(flags, "store"),
-          cutoff, flags.get("buckets").map(_.toInt).getOrElse(64))
+        val n = ObservationStore.expire(spark, required(flags, "store"), cutoff)
         System.err.println(s"[graft] expired $n entries")
         null
       case "compact" =>
-        val n = ObservationStore.compact(spark, required(flags, "store"),
-          flags.get("buckets").map(_.toInt))
+        val n = ObservationStore.compact(spark, required(flags, "store"))
         System.err.println(s"[graft] compacted $n bucket directories")
         null
       case "rebucket" =>

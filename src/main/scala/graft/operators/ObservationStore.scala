@@ -78,59 +78,67 @@ object ObservationStore {
     * min/max stats are selective. At 100 TB: bucket count scales with data
     * (buckets ≈ data / target-partition-size); queries prune to 1 bucket,
     * merges rewrite only touched buckets (see [[mergeBatch]]).
+    *
+    * A build commits like every other store write: both copies are
+    * staged whole ([[stageBuild]]) and swap in with the meta as one
+    * manifest, so a build that dies midway leaves only a staging dir —
+    * never copies without a meta. Over an existing store of any shape it
+    * is a full rebuild.
     */
-  def writeDual(agg: DataFrame, path: String, numBuckets: Int = 64,
-      batchId: Option[Long] = None): Unit = {
-    // a rebuild is a writer: resolve committed staging and clear leftovers
-    // first, or a stale committed merge could later replay over the
-    // freshly rebuilt copies
-    if (pathExists(spark = agg.sparkSession, path))
-      recoverMerge(agg.sparkSession, path, deleteUncommitted = true)
-    // both copies consume the same aggregation — pay its shuffle ONCE
-    // (unpersisted, each writeCopy would re-execute the full groupBy)
-    val a = agg.persist()
-    try {
-      // the two copies are independent jobs over the same cached
-      // aggregate writing to disjoint directories — run them
-      // CONCURRENTLY: each is only numBuckets tasks wide (its bucket
-      // repartition), so serial execution leaves the rest of the
-      // cluster idle for half the build; overlapped, the sorts and
-      // parquet encodes interleave (FAIR scheduler pools them)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      // materialize the cache BEFORE forking: two jobs racing an empty
-      // cache both compute (then block on) the same partitions
-      a.count()
-      val copies = Seq(
-        Future(writeCopy(a, s"$path/by_rrname", "rrname",
-          Seq("rrname", "sensor_id", "rrtype", "rdata"), numBuckets)),
-        Future(writeCopy(a, s"$path/by_rdata", "rdata",
-          Seq("rdata", "sensor_id", "rrname", "rrtype"), numBuckets)))
-      copies.foreach(Await.result(_, Duration.Inf))
-      // meta is written ONLY after both copies exist: `epoch` advances
-      // once per successful dual write/merge. `layout` versions the
-      // on-disk schema (2 = inverted copy carries `rdata_ip`, 3 = +
-      // `rdata_ip6`); merges carry the recorded layout so a store never
-      // holds mixed file schemas
-      StagedCommit.writeBuildMeta(agg.sparkSession, path,
-        StagedCommit.readMeta(agg.sparkSession, path),
-        Seq("num_buckets" -> numBuckets.toLong, "layout" -> CurrentLayout),
-        batchId)
-    } finally { a.unpersist(); () }
+  def writeDual(agg: DataFrame, path: String, numBuckets: Int = 64): Unit =
+    StagedCommit.mutate(agg.sparkSession, path, Store)(
+      stageBuild(agg, path, numBuckets, None)): Unit
+
+  /** [[writeDual]]'s stage step: both copies of `agg` staged whole and
+    * their manifest committed under `batchId`, nothing applied.
+    * Package-visible so crash tests can stop here. */
+  private[graft] def stageBuild(agg: DataFrame, path: String,
+      numBuckets: Int, batchId: Option[Long]): (Option[String], Unit) =
+    StagedCommit.stage(agg.sparkSession, path, batchId) { stg =>
+      // both copies consume the same aggregation — pay its shuffle ONCE
+      // (unpersisted, each writeCopy would re-execute the full groupBy)
+      val a = agg.persist()
+      try {
+        // materialize the cache BEFORE forking: two jobs racing an empty
+        // cache both compute (then block on) the same partitions
+        a.count()
+        stageCopies(stg, a, numBuckets) -> ()
+      } finally { a.unpersist(); () }
+    }
+
+  /** The one whole-copy stage step ([[writeDual]], [[rebucket]]): write
+    * both copies of `agg` under `stg.dir` and return the manifest that
+    * swaps each copy DIRECTORY as one piece — a piecewise bucket swap
+    * would leave the replaced store's other bucket dirs live. */
+  private def stageCopies(stg: StagedCommit.Staging, agg: DataFrame,
+      numBuckets: Int): Option[StagedCommit.Manifest] = {
+    eachCopy { case (sub, keyCol, sortCols) =>
+      writeCopy(agg, s"${stg.dir}/$sub", keyCol, sortCols, numBuckets)
+    }
+    storeManifest(agg.sparkSession, stg, numBuckets, wholeCopies = true)
   }
 
-  /** Derived columns persisted per copy, by layout version. The inverted
-    * copy materializes `rdata_ip` (nullable long, null for non-IPv4
-    * rdata; layout ≥ 2) and `rdata_ip6` (nullable 32-char hex key, null
-    * for non-IPv6 rdata; layout ≥ 3) so CIDR/range queries hit Parquet
-    * row-group min/max stats on an ORDERED column instead of computing
-    * the parse at read time — at 100 TB the difference between a pruned
-    * scan and a full one. */
-  private def derivedCols(keyCol: String, layout: Long): Seq[(String, Column)] =
+  /** `f` over both copies on two threads: the copies are independent
+    * pipelines over disjoint directories, each only as wide as its bucket
+    * count, so serial jobs would leave the cluster idle; overlapped, their
+    * sorts and parquet encodes interleave (FAIR scheduler pools them). */
+  private def eachCopy[T](f: ((String, String, Seq[String])) => T): Seq[T] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    Await.result(Future.sequence(Copies.map(c => Future(f(c)))),
+      scala.concurrent.duration.Duration.Inf)
+  }
+
+  /** Derived columns persisted in the inverted copy: `rdata_ip`
+    * (nullable long, null for non-IPv4 rdata) and `rdata_ip6` (nullable
+    * 32-char hex key, null for non-IPv6 rdata), so CIDR/range queries hit
+    * Parquet row-group min/max stats on an ORDERED column instead of
+    * computing the parse at read time — at 100 TB the difference between
+    * a pruned scan and a full one. */
+  private def derivedCols(keyCol: String): Seq[(String, Column)] =
     if (keyCol == "rdata")
-      (if (layout >= 2) Seq("rdata_ip" -> Net.ip_to_long(col("rdata"))) else Nil) ++
-        (if (layout >= 3) Seq("rdata_ip6" -> Net.ipv6_to_hex(col("rdata"))) else Nil)
+      Seq("rdata_ip" -> Net.ip_to_long(col("rdata")),
+        "rdata_ip6" -> Net.ipv6_to_hex(col("rdata")))
     else Nil
 
   /** Columns that exist only in the on-disk layout, never in results. */
@@ -160,10 +168,11 @@ object ObservationStore {
   def readBatchId(spark: SparkSession, path: String): Option[Long] =
     StagedCommit.metaField(spark, path, "last_batch_id")
 
-  /** Layout 3 = by_rdata carries persisted `rdata_ip` AND `rdata_ip6`. */
+  /** Layout 3 = by_rdata carries persisted `rdata_ip` AND `rdata_ip6`:
+    * the one shape this code writes, recorded in every store's meta. */
   val CurrentLayout = 3L
 
-  /** Bucket count recorded at write time (None for pre-meta stores). */
+  /** Bucket count recorded at write time. */
   def readNumBuckets(spark: SparkSession, path: String): Option[Int] =
     StagedCommit.metaField(spark, path, "num_buckets").map(_.toInt)
 
@@ -171,32 +180,40 @@ object ObservationStore {
   def readEpoch(spark: SparkSession, path: String): Option[Long] =
     StagedCommit.metaField(spark, path, "epoch")
 
-  /** On-disk schema version (None/1 for stores without `rdata_ip`). */
+  /** On-disk schema version, [[CurrentLayout]] for a current store. */
   def readLayout(spark: SparkSession, path: String): Option[Long] =
     StagedCommit.metaField(spark, path, "layout")
 
+  /** The bucket count of a store in the one shape this code writes: a
+    * meta recording `num_buckets` and `layout` = [[CurrentLayout]].
+    * Anything else — no meta, or an older layout — is a legacy store,
+    * refused with the command that upgrades it. */
+  private def bucketsOf(path: String, meta: Map[String, Long]): Int =
+    meta.get("num_buckets").filter(_ =>
+      meta.get("layout").contains(CurrentLayout)).map(_.toInt)
+      .getOrElse(throw new IllegalArgumentException(
+        s"store at $path has no current meta (none, or a layout before " +
+          s"$CurrentLayout): a legacy store upgrades once with " +
+          s"`graft.Main rebucket --store $path --buckets <n>`"))
+
+  /** Open a disk store for reading: resolve any interrupted write
+    * ([[recoverMerge]], reader path), then return its recorded bucket
+    * count — a legacy store throws (see [[bucketsOf]]). */
+  def openBuckets(spark: SparkSession, path: String): Int = {
+    recoverMerge(spark, path)
+    bucketsOf(path, StagedCommit.readMeta(spark, path))
+  }
+
   private def writeCopy(df: DataFrame, path: String, keyCol: String,
-      sortCols: Seq[String], numBuckets: Int, dynamic: Boolean = false,
-      layout: Long = CurrentLayout): Unit = {
-    // older-layout stores (written before rdata_ip/rdata_ip6 existed)
-    // must stay free of the newer columns under incremental merges:
-    // dynamic overwrite touches only some buckets, and a store with
-    // MIXED file schemas would read the missing column as null for old
-    // files — silently wrong CIDR results
-    val derived = derivedCols(keyCol, layout)
-    val withDerived = derived.foldLeft(df) {
-      case (d, (name, c)) => d.withColumn(name, c)
-    }
-    val w = bloomOpts(withDerived
+      sortCols: Seq[String], numBuckets: Int): Unit =
+    bloomOpts(derivedCols(keyCol).foldLeft(df) {
+        case (d, (name, c)) => d.withColumn(name, c)
+      }
       .withColumn("bucket", bucketOf(col(keyCol), numBuckets))
       .repartition(col("bucket"))
       .sortWithinPartitions(("bucket" +: sortCols).map(col): _*)
       .write, keyCol)
-    (if (dynamic)
-       w.option("partitionOverwriteMode", "dynamic")
-     else w)
       .mode("overwrite").partitionBy("bucket").parquet(path)
-  }
 
   /** Store-copy writer options EVERY bucket rewrite shares (initial
     * build, merge staging, expiry survivors, compaction): a PARQUET
@@ -235,19 +252,17 @@ object ObservationStore {
       // same reason). Analytics outputs keep zstd's better ratio.
       .option("compression", "snappy")
 
+  /** The seven observation columns every copy's files hold. */
+  private val DataCols = Model.Key ++ Seq("count", "first_seen", "last_seen")
+
   private val Copies = Seq(
     ("by_rrname", "rrname", Seq("rrname", "sensor_id", "rrtype", "rdata")),
     ("by_rdata", "rdata", Seq("rdata", "sensor_id", "rrname", "rrtype")))
 
-  /** The store's commit shape: one staged-bucket list per copy (a
-    * manifest written before the lists existed swaps whatever buckets
-    * its staging holds), carrying the bucket count and layout into the
-    * meta. */
+  /** The store's commit shape: one staged-bucket list per copy, carrying
+    * the bucket count and layout into the meta. */
   private val Store = StagedCommit.Family(
-    Copies.map { case (sub, _, _) =>
-      StagedCommit.PieceList(s"staged_$sub", sub, Some((spark, staging) =>
-        StagedCommit.stagedPartDirs(spark, s"$staging/$sub", "bucket=")))
-    },
+    Copies.map { case (sub, _, _) => StagedCommit.PieceList(s"staged_$sub", sub) },
     carried = Seq("num_buckets", "layout"))
 
   /** Incremental merge of a (raw, un-aggregated) observation batch into a
@@ -268,67 +283,59 @@ object ObservationStore {
     * Renames are metadata operations on HDFS/local filesystems; on
     * object stores without atomic rename (S3A) they degrade to copies,
     * shrinking but not eliminating the window recovery has to replay.
+    *
+    * Build or merge is decided by the META (the [[StagedCommit.stream]]
+    * rule): no meta and no copies builds the store ([[stageBuild]], under
+    * `numBuckets` — the parameter's only use), a current meta merges, and
+    * anything else is a legacy store and refused before anything stages.
     */
   def mergeBatch(spark: SparkSession, path: String, batch: DataFrame,
       numBuckets: Int = 64, batchId: Option[Long] = None): Unit =
-    // a crashed previous merge is resolved BEFORE reading the store
+    // a crashed previous write is resolved BEFORE reading the store
     // (half-swapped buckets would feed wrong inputs to this merge), and
     // a batch id the store already committed is a replay, skipped
     StagedCommit.mutate(spark, path, Store, batchId) {
-      if (pathExists(spark, s"$path/by_rrname"))
-        Some(stageMerge(spark, path, batch, numBuckets, batchId)) -> ()
-      else {
-        // first write: nothing on disk to corrupt — plain dual write
-        writeDual(aggregate(batch), path, numBuckets, batchId)
-        None -> ()
-      }
+      if (StagedCommit.readMeta(spark, path).isEmpty &&
+          !Copies.exists(c => pathExists(spark, s"$path/${c._1}")))
+        stageBuild(aggregate(batch), path, numBuckets, batchId)
+      else Some(stageMerge(spark, path, batch, numBuckets, batchId)) -> ()
     }: Unit
-
-  /** A store mutation's write-time invariants: the recorded bucket count
-    * and layout (`fallbackBuckets` applies to pre-meta stores only). */
-  private def bucketsAndLayout(stg: StagedCommit.Staging,
-      fallbackBuckets: Int): (Int, Long) =
-    (stg.meta.get("num_buckets").map(_.toInt).getOrElse(fallbackBuckets),
-      stg.meta.getOrElse("layout", 1L))
 
   /** The store's manifest: the exact bucket-directory list staged per
     * copy, so apply can tell "already swapped" from "staged data lost"
     * (a lost staged bucket must FAIL, not silently skip: skipping would
     * commit an epoch with the two copies diverged). `wholeCopies` swaps
-    * each copy DIRECTORY as one piece (rebucket) — a piecewise bucket
-    * swap under a changed count would leave the old count's orphaned
-    * bucket dirs live. */
+    * each copy DIRECTORY as one piece ([[stageCopies]]). */
   private def storeManifest(spark: SparkSession, stg: StagedCommit.Staging,
-      buckets: Int, layout: Long,
+      buckets: Int,
       wholeCopies: Boolean = false): Option[StagedCommit.Manifest] =
     Some(StagedCommit.Manifest(
       Copies.map { case (sub, _, _) => s"staged_$sub" ->
         StagedCommit.stagedPartDirs(spark, s"${stg.dir}/$sub", "bucket=") },
-      Seq("num_buckets" -> buckets.toLong, "layout" -> layout) ++
+      Seq("num_buckets" -> buckets.toLong, "layout" -> CurrentLayout) ++
         (if (wholeCopies) Seq("whole_copies" -> 1L) else Nil)))
 
   /** Write both merged copies (touched buckets only) under
     * `<path>/_staging_<targetEpoch>` and commit the manifest. Returns the
-    * staging path. Package-visible so crash tests can stop here. */
+    * staging path. Package-visible so crash tests (and perfbench's traced
+    * ingest loop, which times stage and apply apart) can stop here. A
+    * merge hashes under the store's RECORDED bucket count: `numBuckets`
+    * is unused, and stays only for that benchmark caller. */
   private[graft] def stageMerge(spark: SparkSession, path: String,
       batch: DataFrame, numBuckets: Int,
       batchId: Option[Long] = None): String =
     StagedCommit.stage(spark, path, batchId) { stg =>
+      val buckets = bucketsOf(path, stg.meta)
       // referenced up to four times below (touched-bucket collect + the
       // union branch, per copy): one materialization, not four
       val newAgg = aggregate(batch).persist()
       try {
         newAgg.count(): Unit // materialize ONCE before the copies fork
-        val (effBuckets, effLayout) = bucketsAndLayout(stg, numBuckets)
         // the two copies' touched-probe → merge → write pipelines are
-        // independent (disjoint directories, shared cached batch): run
-        // them on two threads so their jobs overlap in the scheduler —
-        // the same move stageExpire makes
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val copies = Copies.map { case (sub, keyCol, sortCols) => Future {
+        // independent (disjoint directories, shared cached batch)
+        eachCopy { case (sub, keyCol, sortCols) =>
           val withBucket =
-            newAgg.withColumn("bucket", bucketOf(col(keyCol), effBuckets))
+            newAgg.withColumn("bucket", bucketOf(col(keyCol), buckets))
           val touched = withBucket.select("bucket").distinct()
             .collect().map(_.getLong(0))
           val existing = spark.read.parquet(s"$path/$sub")
@@ -343,14 +350,11 @@ object ObservationStore {
               .select(withBucket.columns.toIndexedSeq.map(col): _*)
           // drop the derived bucket col: writeCopy recomputes it (same
           // hash). Staging reads the live store and writes elsewhere, so
-          // no lineage cut is needed (the old in-place dynamic overwrite
-          // had to localCheckpoint to avoid overwriting its own input)
+          // no lineage cut is needed
           writeCopy(merged.drop("bucket"), s"${stg.dir}/$sub", keyCol,
-            sortCols, effBuckets, layout = effLayout)
-        }}
-        Await.result(Future.sequence(copies),
-          scala.concurrent.duration.Duration.Inf): Unit
-        storeManifest(spark, stg, effBuckets, effLayout) -> ()
+            sortCols, buckets)
+        }
+        storeManifest(spark, stg, buckets) -> ()
       } finally { newAgg.unpersist(); () }
     }._1.get
 
@@ -375,14 +379,12 @@ object ObservationStore {
     * like all merges.
     *
     * Returns the number of (aggregated) entries dropped from the forward
-    * copy. `numBuckets` is the fallback for PRE-META stores only (the
-    * [[mergeBatch]] convention — rewriting with a different bucket count
-    * than the store was written with would mis-route survivors); stores
-    * with metadata always use their recorded count. */
+    * copy. Survivors stay in their buckets under the store's recorded
+    * count; a legacy store is refused (see [[bucketsOf]]). */
   def expire(spark: SparkSession, path: String,
-      cutoff: java.sql.Timestamp, numBuckets: Int = 64): Long =
+      cutoff: java.sql.Timestamp): Long =
     StagedCommit.mutate(spark, path, Store)(
-      stageExpire(spark, path, cutoff, numBuckets)).get
+      stageExpire(spark, path, cutoff)).get
 
   /** Predicate deletion: drop every entry matching `predicate` (over
     * the seven observation columns) from BOTH copies — the targeted
@@ -394,24 +396,22 @@ object ObservationStore {
     * copy sorted by the predicate's column the probe reads almost
     * nothing). Returns forward-copy entries dropped. */
   def deleteWhere(spark: SparkSession, path: String,
-      predicate: Column, numBuckets: Int = 64): Long = {
+      predicate: Column): Long = {
     val probe = (sub: String) =>
       spark.read.parquet(s"$path/$sub").filter(predicate)
         .select(col("bucket").cast("long")).distinct()
         .collect().map(_.getLong(0))
     StagedCommit.mutate(spark, path, Store)(
-      stageRowDelete(spark, path, predicate, probe, numBuckets)).get
+      stageRowDelete(spark, path, predicate, probe)).get
   }
 
   /** First half of [[expire]]: stage surviving buckets + manifest, commit
     * nothing. Package-visible so crash tests can stop here; returns
     * (staging dir if anything expired, forward entries dropped). */
   private[graft] def stageExpire(spark: SparkSession, path: String,
-      cutoff: java.sql.Timestamp,
-      numBuckets: Int = 64): (Option[String], Long) =
+      cutoff: java.sql.Timestamp): (Option[String], Long) =
     stageRowDelete(spark, path, col("last_seen") < lit(cutoff),
-      sub => bucketsExpiringBefore(spark, s"$path/$sub", cutoff),
-      numBuckets)
+      sub => bucketsExpiringBefore(spark, s"$path/$sub", cutoff))
 
   /** The staged row-deletion engine behind [[expire]] (footer-stats
     * touched probe, last_seen predicate) and [[deleteWhere]] (scan
@@ -419,23 +419,16 @@ object ObservationStore {
     * the matching rows, stage explicit empty buckets where nothing
     * survives, commit through the ONE store manifest. */
   private def stageRowDelete(spark: SparkSession, path: String,
-      dropPred: Column, touchedProbe: String => Array[Long],
-      numBuckets: Int): (Option[String], Long) =
+      dropPred: Column,
+      touchedProbe: String => Array[Long]): (Option[String], Long) =
     StagedCommit.stage(spark, path, None) { stg =>
+      val buckets = bucketsOf(path, stg.meta)
       // a row is dropped only when the predicate is DEFINITELY true: a
       // NULL evaluation (e.g. `rdata === "x"` over null rdata) must keep
       // the row — `!NULL` is NULL and a bare `filter(!dropPred)` would
       // silently delete those rows while the dropped-count ignored them
       val dropDef = coalesce(dropPred, lit(false))
-      val (effBuckets, effLayout) = bucketsAndLayout(stg, numBuckets)
-      val dataCols = (Model.Key ++ Seq("count", "first_seen", "last_seen"))
-        .map(col)
-      // the two copies are independent pipelines over disjoint
-      // directories: run them on two threads so their (small) jobs overlap
-      // in the scheduler instead of serializing the job launches
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val perCopy = Copies.map { case (sub, keyCol, sortCols) => Future {
+      val perCopy = eachCopy { case (sub, keyCol, sortCols) =>
         // "which buckets hold expired rows" is answered from parquet
         // FOOTER statistics alone (min(last_seen) per row group is exact
         // under TIMESTAMP_MICROS) — no counting scan; the dropped-row
@@ -457,16 +450,16 @@ object ObservationStore {
           // Survivors STAY in their buckets, so the staged rewrite needs
           // no shuffle and no re-derivation: reuse the scan's `bucket`
           // partition column and the persisted derived columns
-          // (rdata_ip/rdata_ip6 live in-file for layout ≥2), local-sort by
+          // (rdata_ip/rdata_ip6 live in-file), local-sort by
           // (bucket, key order) — which also satisfies the dynamic
           // partition writer's required ordering — and write. A bucket
           // whose files split across scan tasks yields several sorted
           // files; readers list every file per bucket, and row-group
           // stats stay tight because each file is sorted.
-          val persisted = derivedCols(keyCol, effLayout).map(_._1)
+          val fileCols = (DataCols ++ derivedCols(keyCol).map(_._1)).map(col)
           val survivors = existing
             .filter(!dropDef)
-            .select(dataCols ++ persisted.map(col) :+ col("bucket"): _*)
+            .select(fileCols :+ col("bucket"): _*)
           bloomOpts(survivors
             .sortWithinPartitions(("bucket" +: sortCols).map(col): _*)
             .write, keyCol).mode("overwrite").partitionBy("bucket")
@@ -481,7 +474,7 @@ object ObservationStore {
           // in that plan would block the limit-0 short-circuit and keep
           // re-running the metric query per empty bucket
           val fileSchema = spark.read.parquet(s"$path/$sub")
-            .select(dataCols ++ persisted.map(col): _*)
+            .select(fileCols: _*)
           StagedCommit.stageEmptyPieces(spark, fileSchema,
             touched.toIndexedSeq.map(b => s"bucket=$b").filterNot(staged)
               .map(bd => s"${stg.dir}/$sub/$bd"))
@@ -491,13 +484,12 @@ object ObservationStore {
             case Some(l: Long) => l
             case _             => 0L
           })
-      }}
-      val dropped = Await.result(Future.sequence(perCopy),
-        scala.concurrent.duration.Duration.Inf).toMap.apply("by_rrname")
+      }
+      val dropped = perCopy.toMap.apply("by_rrname")
       // same manifest shape as stageMerge → the SAME apply/recover
       // replay path commits it; nothing staged = nothing to expire
       if (!pathExists(spark, stg.dir)) None -> 0L
-      else storeManifest(spark, stg, effBuckets, effLayout) -> dropped
+      else storeManifest(spark, stg, buckets) -> dropped
     }
 
   /** Bucket numbers under `base` holding at least one row with
@@ -593,27 +585,15 @@ object ObservationStore {
     * through the same staged manifest-committed swap as merges — crash
     * safe, readers never see a half-compacted store, and a compaction
     * replay after a crash is idempotent. Single-file buckets cost only
-    * the directory listing. Both copies compact on parallel threads
-    * (the stageExpire/stageMerge move). Returns the number of bucket
-    * directories compacted across both copies; 0 leaves the store
-    * untouched (no epoch bump — readers' caches stay warm). */
-  def compact(spark: SparkSession, path: String,
-      buckets: Option[Int] = None): Long =
+    * the directory listing. Both copies compact on parallel threads.
+    * Returns the number of bucket directories compacted across both
+    * copies; 0 leaves the store untouched (no epoch bump — readers'
+    * caches stay warm). A legacy store is refused (see [[bucketsOf]]). */
+  def compact(spark: SparkSession, path: String): Long =
     StagedCommit.mutate(spark, path, Store) {
       StagedCommit.stage(spark, path, None) { stg =>
-        // a wrong bucket count committed into the manifest poisons every
-        // later merge's bucket hashing — refuse to guess on pre-meta
-        // stores
-        val declared = stg.meta.get("num_buckets").map(_.toInt)
-          .orElse(buckets).getOrElse(throw new IllegalArgumentException(
-            s"store at $path has no num_buckets metadata; pass --buckets " +
-              "explicitly (compacting under a wrong count corrupts merges)"))
-        val (_, effLayout) = bucketsAndLayout(stg, declared)
-        val dataCols = (Model.Key ++ Seq("count", "first_seen", "last_seen"))
-          .map(col)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val perCopy = Copies.map { case (sub, keyCol, sortCols) => Future {
+        val buckets = bucketsOf(path, stg.meta)
+        val total = eachCopy { case (sub, keyCol, sortCols) =>
           val (fsC, base) = fs(spark, s"$path/$sub")
           val multi =
             if (!fsC.exists(base)) Seq.empty[Long]
@@ -624,11 +604,11 @@ object ObservationStore {
                 .count(x => x.isFile &&
                   x.getPath.getName.endsWith(".parquet")) > 1)
               .map(_.getPath.getName.stripPrefix("bucket=").toLong)
-          if (multi.nonEmpty) {
-            val persisted = derivedCols(keyCol, effLayout).map(_._1)
+          if (multi.nonEmpty)
             bloomOpts(spark.read.parquet(s"$path/$sub")
               .filter(col("bucket").isin(multi.map(Long.box): _*))
-              .select(dataCols ++ persisted.map(col) :+ col("bucket"): _*)
+              .select((DataCols ++ derivedCols(keyCol).map(_._1) :+ "bucket")
+                .map(col): _*)
               // all rows of a bucket land in one task, so the dynamic
               // partition writer emits exactly ONE file per bucket dir
               .repartition(col("bucket"))
@@ -636,13 +616,10 @@ object ObservationStore {
               .write, keyCol)
               .mode("overwrite").partitionBy("bucket")
               .parquet(s"${stg.dir}/$sub")
-          }
           multi.size.toLong
-        }}
-        val total = Await.result(Future.sequence(perCopy),
-          scala.concurrent.duration.Duration.Inf).sum
+        }.sum
         if (!pathExists(spark, stg.dir)) None -> 0L
-        else storeManifest(spark, stg, declared, effLayout) -> total
+        else storeManifest(spark, stg, buckets) -> total
       }
     }.get
 
@@ -651,41 +628,25 @@ object ObservationStore {
     * store keeps its build-time count forever otherwise, and at scale
     * both too-few buckets (giant partitions, no pruning selectivity)
     * and too-many (tiny files, listing overhead) hurt. Rewrites BOTH
-    * copies fully under the new hashing (sorted, bloomed, derived
-    * columns re-emitted by the shared [[writeCopy]]) through the same
-    * staged commit as every other mutation — but as WHOLE-COPY pieces
-    * (`whole_copies` manifest flag): a piecewise bucket swap under a
-    * CHANGED count cannot remove the old count's now-orphaned
-    * directories (64→16 would leave bucket=16..63 live). Crash-safe
-    * and replay-idempotent; a same-count call is a no-op with no
-    * epoch bump. Refuses pre-meta stores (the compact stance: never
-    * guess a count into the manifest). Returns the previous count. */
+    * copies fully from the forward copy's rows under the new hashing
+    * through [[stageCopies]], the whole-copy stage step a build takes.
+    * Crash-safe and replay-idempotent.
+    *
+    * It is also the one upgrade of a legacy store (no meta, or an older
+    * layout): a whole rewrite needs no old count, and writes the current
+    * layout. A no-op with no epoch bump only when both the count and the
+    * layout are already current. Returns the previous recorded count, 0
+    * when the store recorded none. */
   def rebucket(spark: SparkSession, path: String, newBuckets: Int): Int = {
     require(newBuckets > 0, s"newBuckets must be positive: $newBuckets")
     StagedCommit.mutate(spark, path, Store) {
       StagedCommit.stage(spark, path, None) { stg =>
-        val old = stg.meta.get("num_buckets").map(_.toInt).getOrElse(
-          throw new IllegalArgumentException(
-            s"store at $path has no num_buckets metadata; refusing to " +
-              "rebucket without a committed count"))
-        if (old == newBuckets) None -> old
-        else {
-          val (_, effLayout) = bucketsAndLayout(stg, old)
-          val dataCols =
-            (Model.Key ++ Seq("count", "first_seen", "last_seen")).map(col)
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val perCopy = Copies.map { case (sub, keyCol, sortCols) => Future {
-            writeCopy(
-              spark.read.parquet(s"$path/$sub").select(dataCols: _*),
-              s"${stg.dir}/$sub", keyCol, sortCols, newBuckets,
-              layout = effLayout)
-          }}
-          Await.result(Future.sequence(perCopy),
-            scala.concurrent.duration.Duration.Inf)
-          storeManifest(spark, stg, newBuckets, effLayout,
-            wholeCopies = true) -> old
-        }
+        val old = stg.meta.get("num_buckets").map(_.toInt)
+        if (old.contains(newBuckets) &&
+            stg.meta.get("layout").contains(CurrentLayout))
+          None -> newBuckets
+        else stageCopies(stg, spark.read.parquet(s"$path/by_rrname")
+          .select(DataCols.map(col): _*), newBuckets) -> old.getOrElse(0)
       }
     }.get
   }
@@ -726,17 +687,16 @@ object ObservationStore {
     diffSnapshots(load(spark, beforePath).forward.drop("bucket"),
       load(spark, afterPath).forward.drop("bucket"))
 
-  /** Load a dual store. Bucket pruning uses the count recorded in the
-    * store's metadata; without metadata (pre-meta store) no bucket
-    * predicate is applied — slower point lookups, never silently-empty
-    * results from a wrong guess. Any interrupted merge is resolved first
-    * ([[recoverMerge]]) so a reader never sees a half-swapped store. */
+  /** Load a dual store ([[openBuckets]]: any interrupted write is
+    * resolved first, so a reader never sees a half-swapped store, and a
+    * legacy store is refused rather than served). Bucket pruning and the
+    * driver-local readers use the count recorded in the store's meta. */
   def load(spark: SparkSession, path: String): ObservationStore = {
-    recoverMerge(spark, path)
+    val n = openBuckets(spark, path)
     new ObservationStore(
       spark.read.parquet(s"$path/by_rrname"),
       spark.read.parquet(s"$path/by_rdata"),
-      readNumBuckets(spark, path),
+      Some(n),
       diskPath = Some(path)
     )
   }
@@ -755,10 +715,10 @@ final class ObservationStore(byRrname: DataFrame, byRdata: DataFrame,
     numBuckets: Option[Int] = None, diskPath: Option[String] = None) {
 
   // ---------------------------------------------------------- fast path
-  // Driver-local point readers (see [[PointReader]]): built lazily, only
-  // for disk-backed stores whose metadata records the bucket count. A
-  // reader that finds an incompatible on-disk shape reports
-  // available=false and the store falls back to the Spark plan path.
+  // Driver-local point readers (see [[PointReader]]): built lazily for
+  // every disk-backed store. A reader that finds an incompatible file
+  // shape reports available=false and the store falls back to the Spark
+  // plan path.
   private lazy val pointReaders: Option[(PointReader, PointReader)] =
     for {
       path <- diskPath
@@ -774,9 +734,8 @@ final class ObservationStore(byRrname: DataFrame, byRdata: DataFrame,
     * rrname-present, conjunctive residual equality, limit), but executed
     * on the calling thread via a pruned parquet read instead of a Spark
     * job, dropping the per-query planning+scheduling floor. Returns None
-    * when the fast path is unavailable (in-memory store, pre-meta store,
-    * or a non-standard on-disk shape) — [[answerPoint]] then runs
-    * [[entries]].
+    * when the fast path is unavailable (in-memory store, or files of a
+    * shape the readers refuse) — [[answerPoint]] then runs [[entries]].
     */
   def servePoint(
       rrname: Option[String] = None,
@@ -1047,13 +1006,12 @@ final class ObservationStore(byRrname: DataFrame, byRdata: DataFrame,
     * IPv4 over the numeric form. Disk stores carry the persisted
     * `rdata_ip`/`rdata_ip6` columns, so the range predicate is a plain
     * column comparison that Parquet min/max row-group stats can prune;
-    * in-memory (and older-layout) stores fall back to computing the
-    * parse at read time.
+    * in-memory stores compute the parse at read time.
     *
     * Serving answers CIDR blocks with [[serveCidr]] (same rows, no Spark
     * job); this plan is its fallback for stores without driver-local
-    * readers — in-memory stores, pre-meta stores with no recorded bucket
-    * count, and files of a shape the readers refuse.
+    * readers — in-memory stores, and files of a shape the readers
+    * refuse.
     */
   def cidrQuery(cidr: String, limit: Int = 1000): DataFrame = {
     val pred =

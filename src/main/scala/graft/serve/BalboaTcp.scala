@@ -188,9 +188,14 @@ object BalboaTcp {
       while (i < n) { acc = (acc << 8) | (u8() & 0xffL); i += 1 }
       acc
     }
+    /** `n` bytes, buffered as they arrive: memory follows the bytes the
+      * peer actually sends, never the length it declares. */
     private def bytesN(n: Int): Array[Byte] = {
-      val b = new Array[Byte](n)
-      in.readFully(b)
+      if (n < 0) fail(s"negative length $n")
+      val b = in.readNBytes(n)
+      if (b.length < n)
+        throw new EOFException(
+          s"connection closed after ${b.length} of $n bytes")
       b
     }
     private def fail(msg: String): Nothing =

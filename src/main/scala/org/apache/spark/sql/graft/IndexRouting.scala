@@ -99,20 +99,20 @@ object IndexRouting {
     * rerouted, and attach the rule to this session (idempotent).
     *
     * The bucket count is a LAYOUT invariant of the written store, so it is
-    * read from the store's `_graft_meta.json` (the same source
-    * `ObservationStore.load` trusts); the `numBuckets` argument is only a
-    * fallback for pre-meta stores. Trusting the caller here would inject a
-    * wrong `bucket = pmod(xxhash64(rdata), N)` predicate and silently drop
-    * matching rows whenever the argument disagreed with the layout. */
-  def install(spark: SparkSession, storePath: String,
-      numBuckets: Int = 64): Unit = {
-    val effBuckets = graft.operators.ObservationStore
-      .readNumBuckets(spark, storePath).getOrElse(numBuckets)
+    * read from the store's `_graft_meta.json` after any interrupted write
+    * is resolved (`ObservationStore.openBuckets`, the same source
+    * `ObservationStore.load` trusts) — never taken from the caller, which
+    * would inject a wrong `bucket = pmod(xxhash64(rdata), N)` predicate
+    * and silently drop matching rows. A legacy store is refused with the
+    * `rebucket` upgrade command. */
+  def install(spark: SparkSession, storePath: String): Unit = {
+    val numBuckets = graft.operators.ObservationStore
+      .openBuckets(spark, storePath)
     val fwd = new org.apache.hadoop.fs.Path(s"$storePath/by_rrname")
     val qualified = fwd
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .makeQualified(fwd)
-    registry.put(storePath, Registration(storePath, effBuckets, qualified))
+    registry.put(storePath, Registration(storePath, numBuckets, qualified))
     val already = spark.experimental.extraOptimizations
       .exists(_.isInstanceOf[IndexRouting])
     if (!already)

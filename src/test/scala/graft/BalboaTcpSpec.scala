@@ -313,4 +313,39 @@ class BalboaTcpSpec extends AnyFunSuite {
       assert(line != null && line.contains("[balboa-tcp] queries="), line)
     } finally srv.stop()
   }
+
+  test("a declared str/bin length allocates only the bytes that arrive") {
+    def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
+    // bin32 declaring ~2 GB, followed by two bytes and the end of input
+    val frame = bytes(0xc6, 0x7f, 0xff, 0xff, 0xf0, 0x61, 0x62)
+    def reader(b: Array[Byte]) =
+      new MsgReader(new DataInputStream(new java.io.ByteArrayInputStream(b)))
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    val before = mx.getThreadAllocatedBytes(tid)
+    intercept[java.io.EOFException](reader(frame).readRaw())
+    val allocated = mx.getThreadAllocatedBytes(tid) - before
+    assert(allocated < (1L << 20), s"allocated $allocated bytes")
+    // a length with the top bit set is a protocol error, not an
+    // array-size failure
+    val neg = intercept[IllegalArgumentException](
+      reader(bytes(0xc6, 0xff, 0xff, 0xff, 0xff)).readRaw())
+    assert(neg.getMessage.startsWith("balboa tcp: "), neg.getMessage)
+
+    // a live server drops such a connection (inside a typed message:
+    // fixmap(2), then the frame as its first key) and answers the next
+    val sock = new Socket("localhost", server.boundPort)
+    try {
+      sock.getOutputStream.write(0x82.toByte +: frame)
+      sock.getOutputStream.flush()
+      sock.shutdownOutput()
+      sock.getInputStream.readAllBytes(): Unit // until the server closes
+    } finally sock.close()
+    val msgs = roundTrip(encodeQueryRequest(
+      QueryRequest(Some("foo.bar"), None, None, None, 100)))
+    assert(msgs.map(_._1) == Seq(TypeQueryStreamStartResponse,
+      TypeQueryStreamDataResponse, TypeQueryStreamDataResponse,
+      TypeQueryStreamEndResponse))
+  }
 }

@@ -36,7 +36,7 @@ class IndexRoutingSpec extends AnyFunSuite {
   }
 
   test("rdata lookup on the forward copy is rerouted to the inverted copy") {
-    IndexRouting.install(spark, storePath, numBuckets = 8)
+    IndexRouting.install(spark, storePath)
     val forward = spark.read.parquet(s"$storePath/by_rrname")
     val q = forward.filter(col("rdata") === "192.0.2.7")
 
@@ -56,7 +56,7 @@ class IndexRoutingSpec extends AnyFunSuite {
   }
 
   test("rerouted queries preserve forward bucket semantics and survive merges") {
-    IndexRouting.install(spark, storePath, numBuckets = 8)
+    IndexRouting.install(spark, storePath)
     val forward = spark.read.parquet(s"$storePath/by_rrname")
     // bucket column value must stay hash(rrname) even after the reroute
     val viaRoute = forward.filter(col("rdata") === "192.0.2.7")
@@ -96,7 +96,7 @@ class IndexRoutingSpec extends AnyFunSuite {
   }
 
   test("rrname-filtered queries are NOT rerouted") {
-    IndexRouting.install(spark, storePath, numBuckets = 8)
+    IndexRouting.install(spark, storePath)
     val forward = spark.read.parquet(s"$storePath/by_rrname")
     val q = forward.filter(col("rrname") === "host-7.net" &&
       col("rdata") === "192.0.2.7")

@@ -95,7 +95,7 @@ class MainSpec extends AnyFunSuite {
     }
   }
 
-  test("expire --buckets governs the rewrite layout of a pre-meta store") {
+  test("a pre-meta store refuses expire until rebucket upgrades it") {
     val dir = Files.createTempDirectory("graft-main-expb").toString
     val old = Timestamp.valueOf("2019-01-01 00:00:00")
     val young = Timestamp.valueOf("2021-06-01 00:00:00")
@@ -107,12 +107,18 @@ class MainSpec extends AnyFunSuite {
     Main.run(spark, Seq("build", "--obs", s"$dir/obs",
       "--store", s"$dir/store", "--buckets", "4"))
     // simulate a store written before metadata existed: drop the meta
-    // file, so the expire rewrite has no recorded bucket count to use
+    // file, so the store has no recorded bucket count
     Files.delete(java.nio.file.Paths.get(s"$dir/store/_graft_meta.json"))
+    val refused = intercept[IllegalArgumentException](
+      Main.run(spark, Seq("expire", "--store", s"$dir/store",
+        "--before", "2020-01-01")))
+    assert(refused.getMessage.contains("rebucket"), refused.getMessage)
+    // the one-command upgrade, then the same expiry
+    Main.run(spark, Seq("rebucket", "--store", s"$dir/store",
+      "--buckets", "4"))
     Main.run(spark, Seq("expire", "--store", s"$dir/store",
-      "--before", "2020-01-01", "--buckets", "4"))
-    // survivors re-bucketed under the ORIGINAL 4-bucket layout (the
-    // default-64 fallback would have mis-routed them across 64 dirs)
+      "--before", "2020-01-01"))
+    // survivors stay under the 4-bucket layout the upgrade recorded
     val bucketDirs = new java.io.File(s"$dir/store/by_rrname").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
     assert(bucketDirs.forall(_.getName.stripPrefix("bucket=").toInt < 4))

@@ -216,4 +216,51 @@ class StagedCommitSpec extends AnyFunSuite {
       assert(fam.epoch(p) == before)
     }
   }
+
+  // The store's first build commits through the same whole-copy staged
+  // swap: a crash before its manifest leaves only a staging dir, and one
+  // after it replays — never copies without a meta.
+  private def storeTables(p: String): Seq[Seq[String]] =
+    Seq("by_rrname", "by_rdata").map(t => rows(spark.read.parquet(s"$p/$t")))
+
+  private lazy val oneBuild = {
+    val p = java.nio.file.Files.createTempDirectory("graft-sc-build")
+      .toString + "/a"
+    ObservationStore.mergeBatch(spark, p, storeBase, 4, Some(0L))
+    storeTables(p)
+  }
+
+  private def stagedFirstBuild(): (String, String) = {
+    val p = java.nio.file.Files.createTempDirectory("graft-sc-build")
+      .toString + "/a"
+    val staging = ObservationStore.stageBuild(
+      ObservationStore.aggregate(storeBase), p, 4, Some(0L))._1.get
+    (p, staging)
+  }
+
+  test("store first build: (a) staging without a manifest is rebuilt by the next writer") {
+    val (p, staging) = stagedFirstBuild()
+    assert(new File(s"$staging/_manifest.json").delete())
+    ObservationStore.recoverMerge(spark, p)
+    assert(new File(staging).exists())
+    assert(!new File(s"$p/by_rrname").exists())
+    ObservationStore.mergeBatch(spark, p, storeBase, 4, Some(0L))
+    assert(!new File(staging).exists())
+    assert(storeTables(p) == oneBuild)
+    assert(ObservationStore.readEpoch(spark, p).contains(1L))
+  }
+
+  test("store first build: (b) a committed manifest replays on the reader path; its batch is then skipped") {
+    val (p, staging) = stagedFirstBuild()
+    assert(ObservationStore.readEpoch(spark, p).isEmpty)
+    ObservationStore.load(spark, p)
+    assert(!new File(staging).exists())
+    assert(ObservationStore.readEpoch(spark, p).contains(1L))
+    assert(ObservationStore.readBatchId(spark, p).contains(0L))
+    assert(storeTables(p) == oneBuild)
+    // the stream redelivers batch 0: skipped, not summed in twice
+    ObservationStore.mergeBatch(spark, p, storeBase, 4, Some(0L))
+    assert(ObservationStore.readEpoch(spark, p).contains(1L))
+    assert(storeTables(p) == oneBuild)
+  }
 }

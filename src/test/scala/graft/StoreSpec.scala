@@ -551,10 +551,124 @@ class StoreSpec extends AnyFunSuite {
     assert(st2.entries(rrname = Some("new")).count() == 1)
     assert(st2.servePoint(rrname = Some("new")).get.size == 1)
 
-    // pre-meta stores refuse (never guess a count into the manifest)
+    // a pre-meta store is upgraded by the same command: a whole rewrite
+    // needs no recorded count
+    val beforeUpgrade = rows()
     assert(new java.io.File(s"$dir/st/_graft_meta.json").delete())
-    intercept[IllegalArgumentException](
-      ObservationStore.rebucket(spark, s"$dir/st", 4))
+    assert(ObservationStore.rebucket(spark, s"$dir/st", 4) == 0)
+    assert(ObservationStore.readNumBuckets(spark, s"$dir/st").contains(4))
+    assert(ObservationStore.readLayout(spark, s"$dir/st")
+      .contains(ObservationStore.CurrentLayout))
+    assert(rows() == beforeUpgrade)
+  }
+
+  /** Every file under `dir` with its bytes: a byte-level snapshot. */
+  private def tree(dir: String): Map[String, Seq[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    java.nio.file.Files.walk(root).iterator().asScala
+      .filter(java.nio.file.Files.isRegularFile(_))
+      .map(f => root.relativize(f).toString ->
+        java.nio.file.Files.readAllBytes(f).toSeq).toMap
+  }
+
+  test("a first build that lost its meta is refused, never merged twice") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-firstbuild")
+      .toString + "/st"
+    val batch = Seq(
+      ("foo", "s1", "A", "1.1.1.1", 2L, ts("2020-01-01 00:00:00")),
+      ("bar", "s1", "A", "2.2.2.2", 3L, ts("2020-01-02 00:00:00"))
+    ).toDF("rrname", "sensor_id", "rrtype", "rdata", "count", "ts")
+    ObservationStore.mergeBatch(spark, dir, batch, numBuckets = 4,
+      batchId = Some(0L))
+    // the state a crash between the copies and the meta used to leave
+    assert(new java.io.File(s"$dir/_graft_meta.json").delete())
+    val before = tree(dir)
+    // the stream redelivers batch 0
+    val e = intercept[IllegalArgumentException](
+      ObservationStore.mergeBatch(spark, dir, batch, numBuckets = 4,
+        batchId = Some(0L)))
+    assert(e.getMessage.contains("rebucket"), e.getMessage)
+    assert(tree(dir) == before)
+  }
+
+  test("legacy stores are refused by every store command until rebucket upgrades them") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graft.IndexRouting
+    val input = Seq(
+      ("foo.example", "s1", "A", "10.0.0.1", 2L, ts("2019-03-01 00:00:00")),
+      ("foo.example", "s2", "AAAA", "2001:db8::1", 1L, ts("2019-04-01 00:00:00")),
+      ("bar.example", "s1", "A", "10.0.0.2", 3L, ts("2020-06-01 00:00:00")),
+      ("baz.other", "s1", "A", "10.0.0.1", 4L, ts("2021-01-01 00:00:00"))
+    ).toDF("rrname", "sensor_id", "rrtype", "rdata", "count", "ts")
+    val agg = ObservationStore.aggregate(input)
+    // plan answers, taken before any legacy store exists
+    val mem = ObservationStore.inMemory(agg)
+    def answers(st: ObservationStore) =
+      (st.answerPoint(rrname = Some("foo.example")).toSet,
+        st.answerPoint(rdata = Some("10.0.0.1")).toSet,
+        st.answerPrefix("foo.").toSet,
+        st.answerCidr("10.0.0.0/24").toSet,
+        st.answerCidr("2001:db8::/32").toSet)
+    val expected = answers(mem)
+    assert(expected._2.size == 2 && expected._4.size == 3)
+
+    def legacy(name: String)(damage: String => Unit): String = {
+      val d = java.nio.file.Files.createTempDirectory(s"graft-$name")
+        .toString + "/st"
+      ObservationStore.writeDual(agg, d, numBuckets = 8)
+      damage(d)
+      d
+    }
+    val preMeta = legacy("premeta") { d =>
+      assert(new java.io.File(s"$d/_graft_meta.json").delete())
+    }
+    val layout2 = legacy("layout2") { d =>
+      // by_rdata rewritten without rdata_ip6, and the meta says layout 2
+      spark.read.parquet(s"$d/by_rdata").drop("rdata_ip6")
+        .write.partitionBy("bucket").parquet(s"$d/by_rdata_v2")
+      val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+        spark.sparkContext.hadoopConfiguration)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$d/by_rdata"), true)
+      assert(fs.rename(new org.apache.hadoop.fs.Path(s"$d/by_rdata_v2"),
+        new org.apache.hadoop.fs.Path(s"$d/by_rdata")))
+      val meta = java.nio.file.Paths.get(s"$d/_graft_meta.json")
+      java.nio.file.Files.writeString(meta,
+        java.nio.file.Files.readString(meta).replace(""""layout":3""",
+          """"layout":2"""))
+      // the local filesystem's checksum of the old bytes
+      assert(new java.io.File(s"$d/._graft_meta.json.crc").delete())
+      assert(ObservationStore.readLayout(spark, d).contains(2L))
+      assert(!spark.read.parquet(s"$d/by_rdata").columns.contains("rdata_ip6"))
+    }
+
+    Seq(preMeta, layout2).foreach { d =>
+      val before = tree(d)
+      val commands: Seq[(String, () => Any)] = Seq(
+        "load" -> (() => ObservationStore.load(spark, d)),
+        "mergeBatch" -> (() => ObservationStore.mergeBatch(spark, d, input)),
+        "expire" -> (() => ObservationStore.expire(spark, d,
+          ts("2020-01-01 00:00:00"))),
+        "deleteWhere" -> (() => ObservationStore.deleteWhere(spark, d,
+          col("rrname") === "bar.example")),
+        "compact" -> (() => ObservationStore.compact(spark, d)),
+        "IndexRouting.install" -> (() => IndexRouting.install(spark, d)))
+      commands.foreach { case (name, run) =>
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains("rebucket"), s"$name: ${e.getMessage}")
+      }
+      // nothing staged, nothing changed
+      assert(!new java.io.File(d).list().exists(_.startsWith("_staging_")))
+      assert(tree(d) == before)
+
+      Main.run(spark, Seq("rebucket", "--store", d, "--buckets", "4"))
+      assert(ObservationStore.readNumBuckets(spark, d).contains(4))
+      assert(ObservationStore.readLayout(spark, d)
+        .contains(ObservationStore.CurrentLayout))
+      val st = ObservationStore.load(spark, d)
+      assert(st.servePoint(rrname = Some("foo.example")).isDefined)
+      assert(answers(st) == expected)
+    }
   }
 
   test("rebucket crash replay: a committed whole-copy manifest applies") {
