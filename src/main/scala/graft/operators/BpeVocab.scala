@@ -23,9 +23,9 @@ import org.apache.spark.sql.SparkSession
 object BpeVocab {
 
   /** Write `merges` (learned order, as returned by the trainers) as the
-    * vocabulary at `path`, replacing any previous table atomically. A
-    * writer resolves committed leftovers first (the writeIndex rule: a
-    * stale committed staging must not replay over the new table). */
+    * vocabulary at `path`, replacing any previous table atomically
+    * ([[StagedCommit.mutate]] resolves committed leftovers first: a stale
+    * committed staging must not replay over the new table). */
   def write(spark: SparkSession, merges: Seq[(String, String, Long)],
       path: String): Unit = {
     require(merges.nonEmpty, "BpeVocab.write: empty merge table")

@@ -864,15 +864,6 @@ object Curation {
       .withColumn("lm_mean", expr("lm_score div n_bigrams"))
   }
 
-  /** Persist the bigram-LM count tables trained on `df` at `path` —
-    * `(w1, w2, c2)` bigram counts, `(word, c1)` unigram counts, and the
-    * 1-row vocabulary size — the train-once-score-many artifact
-    * ([[graft.operators.BpeVocab]]'s stance for the tokenizer, applied
-    * to the LM): production scores every new batch against ONE trained
-    * model instead of re-counting the reference corpus per run.
-    * Rebuild-only lifecycle (counts merge additively if incremental
-    * maintenance is ever needed — the [[ObservationStore]] merge shape).
-    * Tables are vocabulary-sized, not corpus-sized. */
   /** Corpus bigram counts — ONE definition shared by [[writeLm]] and
     * [[stageLmMerge]] (the phraseFold rule: a tokenization change can
     * never make the rebuilt and incrementally-merged artifacts
@@ -892,31 +883,32 @@ object Curation {
     df.select(explode(split(col(textCol), " ")).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).cast("long").as("c1"))
 
+  /** Persist the bigram-LM count tables trained on `df` at `path` —
+    * `(w1, w2, c2)` bigram counts, `(word, c1)` unigram counts, and the
+    * 1-row vocabulary size — the train-once-score-many artifact
+    * ([[graft.operators.BpeVocab]]'s stance for the tokenizer, applied
+    * to the LM): production scores every new batch against ONE trained
+    * model instead of re-counting the reference corpus per run. A
+    * (re)build is one staged generation of all three tables; a `batchId`
+    * the tables already committed is skipped ([[mergeLm]] folds later
+    * batches in). Tables are vocabulary-sized, not corpus-sized. */
   def writeLm(df: DataFrame, textCol: String, path: String,
-      batchId: Option[Long] = None): Unit = {
+      batchId: Option[Long] = None): Unit =
+    StagedCommit.mutate(df.sparkSession, path, Lm, batchId)(
+      Some(stageLmBuild(df, textCol, path, batchId)) -> ()): Unit
+
+  /** [[writeLm]]'s stage step: the three tables counted from `df` and
+    * staged whole; package-visible so crash tests can stop here. */
+  private[graft] def stageLmBuild(df: DataFrame, textCol: String,
+      path: String, batchId: Option[Long] = None): String = {
     require(!df.isEmpty, "writeLm: corpus is empty")
-    // a rebuild is a writer: resolve committed staging leftovers first,
-    // or a stale committed merge could replay over the fresh tables
-    // (the writeBandIndex/writeIndex rule)
-    val spark0 = df.sparkSession
-    if (ObservationStore.pathExists(spark0, path))
-      recoverLm(spark0, path, deleteUncommitted = true)
-    lmBigramCounts(df, textCol)
-      .write.mode("overwrite").parquet(s"$path/bigrams")
-    val c1 = lmUnigramCounts(df, textCol)
-      .localCheckpoint(false) // feeds the table AND the vocab size
-    c1.write.mode("overwrite").parquet(s"$path/unigrams")
-    c1.agg(count(lit(1)).cast("long").as("vsz"))
-      .write.mode("overwrite").parquet(s"$path/stats")
-    // a rebuild advances the generation and PRESERVES the merge
-    // high-water mark (a meta write keeps a recorded batch id when none
-    // is passed) — the band-index replay lesson. The meta write is LAST
-    // and carries the builder's batch id atomically, so a streaming
-    // first batch that crashed mid-build replays as a clean rebuild
-    // (meta absent) or an exactly-once skip (meta present) — never as a
-    // double-counting merge.
-    StagedCommit.writeBuildMeta(spark0, path,
-      StagedCommit.readMeta(spark0, path), batchId = batchId)
+    StagedCommit.stage(df.sparkSession, path, batchId) { stg =>
+      lmBigramCounts(df, textCol)
+        .write.mode("overwrite").parquet(s"${stg.dir}/bigrams")
+      writeLmUnigrams(lmUnigramCounts(df, textCol)
+        .localCheckpoint(false), stg) // feeds the table AND the vocab size
+      Some(LmManifest) -> ()
+    }._1.get
   }
 
   /** The LM's commit shape: three whole tables per generation. */

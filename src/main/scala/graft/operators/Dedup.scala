@@ -179,35 +179,50 @@ object Dedup {
     * num_buckets lesson: a drifting layout parameter silently corrupts).
     *
     * `batchId`: the micro-batch id when the initial build IS itself a
-    * streaming batch (the curation pipeline's bootstrap) — recorded as
-    * the exactly-once high-water mark so a foreachBatch RETRY of that
-    * same batch no-ops in [[mergeBandIndex]] instead of folding the
-    * identical documents in twice. A rebuild over an existing index
-    * preserves the previously recorded high-water mark (rebuilds change
-    * layout, not merge history); pass `batchId` explicitly to reset it. */
+    * streaming batch (the curation pipeline's bootstrap) — committed with
+    * the build's generation as the exactly-once high-water mark, so a
+    * foreachBatch RETRY of that same batch is skipped instead of folding
+    * the identical documents in twice. A rebuild without a `batchId`
+    * keeps the recorded high-water mark (rebuilds change layout, not
+    * merge history); one with a `batchId` the index already committed is
+    * skipped. */
   def writeBandIndex(docs: DataFrame, textCol: String, idCol: String,
       path: String, numHashes: Int = 16, bands: Int = 4,
-      batchId: Option[Long] = None): Unit = {
-    val spark = docs.sparkSession
-    if (ObservationStore.pathExists(spark, path))
-      recoverBandMerge(spark, path, deleteUncommitted = true)
-    // captured BEFORE the overwrite truncates the path (meta included):
-    // the generation must advance, never reset, and the batch high-water
-    // survives a rebuild unless the caller supplies a fresh one
-    val prior = StagedCommit.readMeta(spark, path)
-    buildBandIndex(docs, textCol, idCol, numHashes, bands)
-      .withColumn("batch", lit(0L))
-      .repartition(col("band_idx"), col("band_hash"))
-      .sortWithinPartitions(col("band_hash"))
-      .write.mode("overwrite").partitionBy("band_idx", "batch")
-      .parquet(path)
-    StagedCommit.writeBuildMeta(spark, path, prior,
-      Seq("num_hashes" -> numHashes.toLong, "bands" -> bands.toLong), batchId)
-  }
+      batchId: Option[Long] = None): Unit =
+    StagedCommit.mutate(docs.sparkSession, path, Band, batchId)(Some(
+      stageBandBuild(docs, textCol, idCol, path, numHashes, bands,
+        batchId)) -> ()): Unit
 
-  /** The band index's commit shape: staged `band_idx=<i>/batch=<id>`
-    * leaves at the index root, carrying the band parameters into the
-    * meta. */
+  /** [[writeBandIndex]]'s stage step: every band directory staged whole
+    * (so the merged `batch=<id>` leaves under the live one go with it),
+    * a band the old index had and this one lacks removed, the tombstone
+    * parts it saw removed (one appended later stays). Package-visible so
+    * crash tests can stop here. */
+  private[graft] def stageBandBuild(docs: DataFrame, textCol: String,
+      idCol: String, path: String, numHashes: Int, bands: Int,
+      batchId: Option[Long] = None): String =
+    StagedCommit.stage(docs.sparkSession, path, batchId) { stg =>
+      buildBandIndex(docs, textCol, idCol, numHashes, bands)
+        .withColumn("batch", lit(0L))
+        .repartition(col("band_idx"), col("band_hash"))
+        .sortWithinPartitions(col("band_hash"))
+        .write.mode("overwrite").partitionBy("band_idx", "batch")
+        .parquet(stg.dir)
+      val staged = StagedCommit.stagedPartDirs(docs.sparkSession, stg.dir,
+        "band_idx=")
+      val stale = (0L until stg.meta.getOrElse("bands", 0L))
+        .map(b => s"band_idx=$b").filterNot(staged.contains)
+      Some(StagedCommit.Manifest(Seq("staged_bands" -> staged),
+        bandFields(numHashes, bands),
+        stale ++ TombstoneMask.parts(docs.sparkSession, path))) -> ()
+    }._1.get
+
+  private def bandFields(numHashes: Int, bands: Int): Seq[(String, Long)] =
+    Seq("num_hashes" -> numHashes.toLong, "bands" -> bands.toLong)
+
+  /** The band index's commit shape: staged band directories (a build)
+    * or `band_idx=<i>/batch=<id>` leaves (a merge or vacuum) at the index
+    * root, carrying the band parameters into the meta. */
   private val Band = StagedCommit.Family(
     Seq(StagedCommit.PieceList("staged_bands")),
     carried = Seq("num_hashes", "bands"))
@@ -217,13 +232,12 @@ object Dedup {
     * `batch` bookkeeping column. */
   def loadBandIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    recoverBandMerge(spark, path, deleteUncommitted = false)
+    StagedCommit.recover(spark, path, Band, deleteUncommitted = false)
     val base = spark.read.parquet(path).drop("batch")
     // retracted documents ([[deleteFromBandIndex]]) mask out via an
     // anti-join (broadcast under [[TombstoneMask]]'s driver-memory
     // bound, shuffled past it) until the next vacuum folds them in
-    TombstoneMask.antiJoin(spark, base, s"$path/_tombstones",
-      "corpus_id", "corpus_id")
+    TombstoneMask.antiJoin(spark, base, path, "corpus_id", "corpus_id")
   }
 
   /** Fold a batch of NEW documents into a persisted band index — the
@@ -251,10 +265,7 @@ object Dedup {
       path: String, batch: DataFrame, textCol: String, idCol: String,
       batchId: Long): (Option[String], Long) =
     StagedCommit.stage(spark, path, Some(batchId)) { stg =>
-      val (numHashes, bands) = bandParams(stg.meta).getOrElse(
-        throw new IllegalArgumentException(
-          s"band index at $path has no recorded parameters; rebuild it " +
-            "with writeBandIndex before merging increments"))
+      val (numHashes, bands) = recordedParams(path, stg)
       buildBandIndex(batch, textCol, idCol, numHashes, bands)
         .withColumn("batch", lit(batchId))
         .repartition(col("band_idx"), col("band_hash"))
@@ -265,8 +276,7 @@ object Dedup {
         .map(bd => s"$bd/batch=$batchId")
       if (pieces.isEmpty) None -> 0L
       else Some(StagedCommit.Manifest(Seq("staged_bands" -> pieces),
-        Seq("num_hashes" -> numHashes.toLong, "bands" -> bands.toLong))) ->
-        spark.read.parquet(stg.dir).count()
+        bandFields(numHashes, bands))) -> spark.read.parquet(stg.dir).count()
     }
 
   /** Index generation: advanced once per committed write/merge. */
@@ -290,9 +300,12 @@ object Dedup {
       nb <- meta.get("bands")
     } yield (nh.toInt, nb.toInt)
 
-  private def recoverBandMerge(spark: org.apache.spark.sql.SparkSession,
-      path: String, deleteUncommitted: Boolean): Unit =
-    StagedCommit.recover(spark, path, Band, deleteUncommitted)
+  /** The parameters a merge or vacuum carries into its manifest. */
+  private def recordedParams(path: String,
+      stg: StagedCommit.Staging): (Int, Int) =
+    bandParams(stg.meta).getOrElse(throw new IllegalArgumentException(
+      s"band index at $path has no recorded parameters; rebuild it " +
+        "with writeBandIndex first"))
 
   /** Retraction on the persisted band index — the takedown/GDPR path a
     * long-lived dedup corpus needs (the [[Similarity.deleteFromIvfIndex]]
@@ -317,88 +330,36 @@ object Dedup {
     deleteFromBandIndex(spark, path, ids.toDF("corpus_id"))
   }
 
-  /** Fold band-index tombstones into the partition files: ONLY
-    * `(band_idx, batch)` leaves that actually hold a deleted id are
-    * rewritten (dynamic partition overwrite — the touched-bucket
-    * discipline), leaves whose every row died have their directories
-    * removed outright, and the tombstone set is dropped LAST — a crash
-    * anywhere leaves the tombstones masking queries, and a replay is
-    * idempotent (the [[Similarity.vacuumIvfIndex]] contract). The index
-    * epoch does not move: vacuum changes no VISIBLE content (masking
-    * already hid the rows); epochs count visible generations. Returns
-    * the number of band rows removed. */
+  /** Fold band-index tombstones into the partition files as ONE staged
+    * generation ([[TombstoneMask.stageFold]], the
+    * [[Similarity.vacuumIvfIndex]] contract): ONLY `(band_idx, batch)`
+    * leaves that hold a deleted id restage their survivors, leaves whose
+    * every row died are removed, and the tombstone parts it folded go in
+    * the same swap (a delete appended meanwhile stays) — a crash
+    * anywhere leaves the tombstones masking queries or the fully
+    * vacuumed index. Any committed merge replays first, so its rows fold
+    * too. The epoch advances once, like every other vacuum.
+    * Returns the number of band rows removed. */
   def vacuumBandIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    import spark.implicits._
-    val (f, tp) = ObservationStore.fs(spark, s"$path/_tombstones")
-    if (!f.exists(tp)) return 0L
-    val tomb = TombstoneMask.hinted(spark,
-      spark.read.parquet(s"$path/_tombstones")
-        .select(col("corpus_id")).distinct().localCheckpoint(false),
-      TombstoneMask.footerRowCount(spark, s"$path/_tombstones"))
-    val idx = spark.read.parquet(path)
-    val dead = idx.join(tomb, Seq("corpus_id"), "left_semi")
-      .groupBy(col("band_idx").cast("long").as("b"),
-        col("batch").cast("long").as("t"))
-      .agg(count(lit(1)).as("n")).collect()
-    val removed = dead.map(_.getAs[Long]("n")).sum
-    if (dead.nonEmpty) {
-      val touched = broadcast(dead.toIndexedSeq
-        .map(r => (r.getAs[Long]("b"), r.getAs[Long]("t")))
-        .toDF("t_band", "t_batch"))
-      val survivors = idx
-        .join(touched, col("band_idx").cast("long") === col("t_band") &&
-          col("batch").cast("long") === col("t_batch"), "left_semi")
-        .join(tomb, Seq("corpus_id"), "left_anti")
-        .localCheckpoint(false) // reads the files the write replaces
-      survivors
-        .repartition(col("band_idx"), col("band_hash"))
-        .sortWithinPartitions(col("band_hash"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("band_idx", "batch").parquet(path)
-      // leaves that kept nothing stage no files under dynamic overwrite
-      // — their old directories must go explicitly; and an index
-      // vacuumed down to NOTHING must stay readable (schema-only file
-      // before the last directory goes)
-      val staying = survivors
-        .select(col("band_idx").cast("long"), col("batch").cast("long"))
-        .distinct().as[(Long, Long)].collect().toSet
-      val dying = dead.toIndexedSeq
-        .map(r => (r.getAs[Long]("b"), r.getAs[Long]("t")))
-        .filterNot(staying).toSet
-      val (bf, bp) = ObservationStore.fs(spark, path)
-      val existing = bf.listStatus(bp).toIndexedSeq
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("band_idx="))
-        .flatMap { bandDir =>
-          val band = bandDir.getPath.getName
-            .stripPrefix("band_idx=").toLong
-          bf.listStatus(bandDir.getPath).toIndexedSeq
-            .filter(s => s.isDirectory &&
-              s.getPath.getName.startsWith("batch="))
-            .map(s => (band, s.getPath.getName.stripPrefix("batch=").toLong))
-        }.toSet
-      // an index vacuumed down to NOTHING must stay readable — but the
-      // placeholder must live INSIDE a partition-shaped leaf, never at
-      // the root: a root-level file beside band_idx= directories breaks
-      // partition discovery the moment a later merge recreates them.
-      // Data columns only (partition values come from the directory
-      // names, exactly like every merged leaf); the truncating
-      // overwrite of the canonical leaf doubles as its deletion.
-      val keepPlaceholder = (existing -- dying).isEmpty
-      if (keepPlaceholder)
-        survivors.drop("band_idx", "batch").limit(0).coalesce(1)
-          .write.mode("overwrite").parquet(s"$path/band_idx=0/batch=0")
-      dying.filterNot(bt => keepPlaceholder && bt == ((0L, 0L))).foreach {
-        case (b, t) =>
-          val (df_, dp) = ObservationStore.fs(spark,
-            s"$path/band_idx=$b/batch=$t")
-          if (df_.exists(dp)) { df_.delete(dp, true); () }
-      }
+      path: String): Long =
+    StagedCommit.mutate(spark, path, Band)(stageBandVacuum(spark, path)).get
+
+  /** [[vacuumBandIndex]]'s stage step: the staging dir (None without
+    * tombstones) and the band rows removed. Package-visible so tests can
+    * stop here. */
+  private[graft] def stageBandVacuum(spark: org.apache.spark.sql.SparkSession,
+      path: String): (Option[String], Long) = {
+    val tombs = TombstoneMask.parts(spark, path)
+    if (tombs.isEmpty) None -> 0L
+    else StagedCommit.stage(spark, path, None) { stg =>
+      val (numHashes, bands) = recordedParams(path, stg)
+      val (pieces, removed, n) = TombstoneMask.stageFold(spark, path, tombs,
+        "", "corpus_id", Seq("band_idx", "batch"), stg)(
+        _.repartition(col("band_idx"), col("band_hash"))
+          .sortWithinPartitions(col("band_hash")))
+      Some(StagedCommit.Manifest(Seq("staged_bands" -> pieces),
+        bandFields(numHashes, bands), removed)) -> n
     }
-    f.delete(tp, true)
-    removed
   }
 
   /** Delta dedup against a PRECOMPUTED band index (built/persisted via

@@ -105,35 +105,39 @@ object Retrieval {
     * each bucket file, so a phrase query prunes to its terms' bucket
     * directories and the word-equality filters push into the parquet
     * scan with row-group stats doing the rest. Same meta/epoch
-    * convention as the bag-of-words index; rebuild-only (positions are
-    * corpus-wide offsets — incremental doc ADDITION composes exactly
-    * like [[mergeIndex]] since postings are per-document, but this
-    * artifact keeps the simpler rebuild lifecycle until a gate needs
-    * more). */
+    * convention as the bag-of-words index: a (re)build is one staged
+    * generation, and a `batchId` the index already committed is
+    * skipped ([[mergePositionalIndex]] folds later batches in). */
   def writePositionalIndex(df: DataFrame, textCol: String, idCol: String,
       path: String, nBuckets: Int = 64,
-      batchId: Option[Long] = None): Unit = {
+      batchId: Option[Long] = None): Unit =
+    StagedCommit.mutate(df.sparkSession, path, Positional, batchId)(Some(
+      stagePositionalBuild(df, textCol, idCol, path, nBuckets, batchId)) ->
+      ()): Unit
+
+  /** [[writePositionalIndex]]'s stage step: both tables staged whole,
+    * the tombstone parts it saw removed (a rebuild starts a fresh corpus;
+    * a delete appended later stays), the manifest committed under
+    * `batchId`. Package-visible so crash tests
+    * can stop here. */
+  private[graft] def stagePositionalBuild(df: DataFrame, textCol: String,
+      idCol: String, path: String, nBuckets: Int,
+      batchId: Option[Long] = None): String = {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
     require(!df.isEmpty, "writePositionalIndex: corpus is empty")
     val spark = df.sparkSession
-    // rebuild = writer: resolve committed staging leftovers first
-    if (ObservationStore.pathExists(spark, path))
-      recoverPositionalIndex(spark, path, deleteUncommitted = true)
-    bucketedPostings(df, textCol, idCol, nBuckets.toLong)
-      .repartition(col("word_bucket"))
-      .sortWithinPartitions(col("word"), col("doc_id"), col("p"))
-      .write.partitionBy("word_bucket").mode("overwrite")
-      .parquet(s"$path/positions")
-    spark.range(1).select(lit(nBuckets.toLong).as("n_buckets"))
-      .write.mode("overwrite").parquet(s"$path/stats")
-    // rebuild clears deletion state (the writeIndex rule) — AFTER the
-    // new tables: an early clear would resurrect the old index's
-    // deletions if the rebuild failed before writing anything
-    val (tbf, tbp) = ObservationStore.fs(spark, s"$path/_tombstones")
-    if (tbf.exists(tbp)) tbf.delete(tbp, true)
-    // LAST write, batch id atomic with it — the writeLm stream contract
-    StagedCommit.writeBuildMeta(spark, path,
-      StagedCommit.readMeta(spark, path), batchId = batchId)
+    StagedCommit.stage(spark, path, batchId) { stg =>
+      bucketedPostings(df, textCol, idCol, nBuckets.toLong)
+        .repartition(col("word_bucket"))
+        .sortWithinPartitions(col("word"), col("doc_id"), col("p"))
+        .write.partitionBy("word_bucket").mode("overwrite")
+        .parquet(s"${stg.dir}/positions")
+      spark.range(1).select(lit(nBuckets.toLong).as("n_buckets"))
+        .write.mode("overwrite").parquet(s"${stg.dir}/stats")
+      Some(StagedCommit.Manifest(Seq("staged_tables" ->
+        Seq("positions", "stats"), "staged_positions" -> Nil),
+        removed = TombstoneMask.parts(spark, path))) -> ()
+    }._1.get
   }
 
   /** Bucketed (doc_id, p, word) postings — ONE definition shared by the
@@ -147,8 +151,7 @@ object Retrieval {
         pmod(xxhash64(col("word")), lit(nBuckets)))
 
   /** The positional index's commit shape: staged position buckets;
-    * vacuums also swap whole tables (the emptied tombstone set), plain
-    * merges list none. */
+    * builds swap whole tables, merges and vacuums none. */
   private val Positional = StagedCommit.Family(Seq(
     StagedCommit.PieceList("staged_positions", "positions"),
     StagedCommit.PieceList("staged_tables", ifAbsent = Some((_, _) => Nil))))
@@ -195,10 +198,10 @@ object Retrieval {
   }
 
   private def positionalManifest(spark: SparkSession,
-      stg: StagedCommit.Staging, tables: String*): StagedCommit.Manifest =
-    StagedCommit.Manifest(Seq("staged_positions" -> StagedCommit
-      .stagedPartDirs(spark, s"${stg.dir}/positions", "word_bucket=")) ++
-      (if (tables.isEmpty) Nil else Seq("staged_tables" -> tables)))
+      stg: StagedCommit.Staging): StagedCommit.Manifest =
+    StagedCommit.Manifest(Seq("staged_positions" ->
+      StagedCommit.stagedPartDirs(spark, s"${stg.dir}/positions",
+        "word_bucket=")))
 
   /** Retraction on the positional index — pure VISIBILITY (phrase and
     * proximity search carry no corpus statistics, unlike BM25): deleted
@@ -216,44 +219,43 @@ object Retrieval {
   }
 
   /** Fold positional tombstones into the bucket files as ONE staged
-    * generation: survivors of the touched word buckets (fully-dead
-    * buckets stage explicit empty pieces) and the EMPTIED tombstone
-    * table swap together under the positional manifest — the
-    * [[vacuumIndex]] crash argument, minus the statistics (none here).
-    * Returns position rows removed. */
+    * generation: survivors of the touched word buckets swap in
+    * (fully-dead buckets stage explicit empty pieces) and the tombstone
+    * parts folded are the generation's `removed` — the [[vacuumIndex]]
+    * crash argument, minus the statistics (none here). A delete
+    * appended meanwhile stays. Returns position rows removed. */
   def vacuumPositionalIndex(spark: SparkSession, path: String): Long =
     StagedCommit.mutate(spark, path, Positional) {
-      val (f, tp) = ObservationStore.fs(spark, s"$path/_tombstones")
-      lazy val tomb = spark.read.parquet(s"$path/_tombstones")
-        .select(col("doc_id")).distinct().localCheckpoint(false)
-      if (!f.exists(tp)) None -> 0L
-      else if (tomb.isEmpty) { f.delete(tp, true); None -> 0L }
+      val tombs = TombstoneMask.parts(spark, path)
+      if (tombs.isEmpty) None -> 0L
       else StagedCommit.stage(spark, path, None) { stg =>
         val positions = spark.read.parquet(s"$path/positions")
-        val tombIds = TombstoneMask.hinted(spark, tomb,
-          TombstoneMask.footerRowCount(spark, s"$path/_tombstones"))
+        val tombIds = TombstoneMask.hinted(spark, TombstoneMask.read(spark,
+            path, tombs).select(col("doc_id")).distinct()
+          .localCheckpoint(false), path, tombs)
         val dead = positions.join(tombIds, Seq("doc_id"), "left_semi")
           .localCheckpoint(false)
         val removed = dead.count()
         val touched = dead.select(col("word_bucket").cast("long"))
           .distinct().collect().map(_.getLong(0)).toIndexedSeq
-        val survivors = positions
-          .filter(col("word_bucket").isin(touched: _*))
-          .join(tombIds, Seq("doc_id"), "left_anti")
-          .localCheckpoint(false) // reads the files the swap replaces
-        survivors
-          .repartition(col("word_bucket"))
-          .sortWithinPartitions(col("word"), col("doc_id"), col("p"))
-          .write.mode("overwrite").partitionBy("word_bucket")
-          .parquet(s"${stg.dir}/positions")
-        val staying = survivors.select(col("word_bucket").cast("long"))
-          .distinct().collect().map(_.getLong(0)).toSet
-        StagedCommit.stageEmptyPieces(spark, survivors.drop("word_bucket"),
-          touched.filterNot(staying)
-            .map(b => s"${stg.dir}/positions/word_bucket=$b"))
-        tomb.limit(0).coalesce(1)
-          .write.mode("overwrite").parquet(s"${stg.dir}/_tombstones")
-        Some(positionalManifest(spark, stg, "_tombstones")) -> removed
+        if (touched.nonEmpty) {
+          val survivors = positions
+            .filter(col("word_bucket").isin(touched: _*))
+            .join(tombIds, Seq("doc_id"), "left_anti")
+            .localCheckpoint(false) // reads the files the swap replaces
+          survivors
+            .repartition(col("word_bucket"))
+            .sortWithinPartitions(col("word"), col("doc_id"), col("p"))
+            .write.mode("overwrite").partitionBy("word_bucket")
+            .parquet(s"${stg.dir}/positions")
+          val staying = survivors.select(col("word_bucket").cast("long"))
+            .distinct().collect().map(_.getLong(0)).toSet
+          StagedCommit.stageEmptyPieces(spark,
+            survivors.drop("word_bucket"), touched.filterNot(staying)
+              .map(b => s"${stg.dir}/positions/word_bucket=$b"))
+        }
+        Some(positionalManifest(spark, stg).copy(removed = tombs)) ->
+          removed
       }
     }.get
 
@@ -298,8 +300,7 @@ object Retrieval {
     // retracted documents ([[deleteFromPositionalIndex]]) mask out via
     // an anti-join (broadcast under [[TombstoneMask]]'s driver-memory
     // bound, shuffled past it) until the next vacuum folds them in
-    val pos = TombstoneMask.antiJoin(spark, base, s"$path/_tombstones",
-      "doc_id", "doc_id")
+    val pos = TombstoneMask.antiJoin(spark, base, path, "doc_id", "doc_id")
     phraseFold(pos, phrase)
   }
 
@@ -411,52 +412,51 @@ object Retrieval {
     * `n_buckets` is recorded in `stats` and read back at query time —
     * never trusted from the caller (the `_graft_meta.json` lesson: a
     * layout parameter that can drift from the written layout silently
-    * drops rows). */
+    * drops rows). A (re)build is one staged generation; a `batchId` the
+    * index already committed is skipped. */
   def writeIndex(df: DataFrame, textCol: String, idCol: String,
       path: String, nBuckets: Int = 64,
-      batchId: Option[Long] = None): Unit = {
+      batchId: Option[Long] = None): Unit =
+    StagedCommit.mutate(df.sparkSession, path, Bm25, batchId)(Some(
+      stageIndexBuild(df, textCol, idCol, path, nBuckets, batchId)) -> ()): Unit
+
+  /** [[writeIndex]]'s stage step: the three tables staged whole, the
+    * tombstone parts it saw removed (they would mask, and statistically
+    * mis-adjust, the new corpus; a delete appended later stays), the
+    * manifest committed under `batchId`.
+    * Package-visible so crash tests can stop here. */
+  private[graft] def stageIndexBuild(df: DataFrame, textCol: String,
+      idCol: String, path: String, nBuckets: Int,
+      batchId: Option[Long] = None): String = {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
     // an empty corpus would persist n_docs=0 with a NULL sum_dl that
     // indexTopK reads back as 0 — refuse to write a degenerate index
     require(!df.isEmpty, "writeIndex: corpus is empty")
-    val spark = df.sparkSession
-    // a rebuild is a writer: resolve committed staging and clear leftovers
-    // first, or a stale committed merge could later replay over the
-    // freshly rebuilt tables
-    if (ObservationStore.pathExists(spark, path))
-      recoverIndexMerge(spark, path, deleteUncommitted = true)
-    val idx = tokenIndex(df, textCol, idCol).localCheckpoint(false)
-    // materialize the checkpoint once, then overlap the three table
-    // writes — they are independent jobs over the cached index (and the
-    // corpus, for stats) into disjoint directories, and each alone is
-    // narrower than the cluster (the writeDual/stageMerge move)
-    idx.count(): Unit
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(Future.sequence(Seq(
-      Future(idx.withColumn("term_bucket",
-          pmod(xxhash64(col("term")), lit(nBuckets.toLong)))
-        .write.partitionBy("term_bucket").mode("overwrite")
-        .parquet(s"$path/postings")),
-      Future(idx.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .write.mode("overwrite").parquet(s"$path/terms")),
-      Future(df.agg(count(lit(1)).as("n_docs"),
-          sum(size(tokens(col(textCol)))).as("sum_dl"),
-          lit(nBuckets.toLong).as("n_buckets"))
-        .write.mode("overwrite").parquet(s"$path/stats")))),
-      scala.concurrent.duration.Duration.Inf): Unit
-    // a rebuild starts a fresh corpus: stale tombstones from the old
-    // index would mask (and statistically mis-adjust) the new one —
-    // cleared only NOW, after the new tables exist: an early clear would
-    // resurrect the old index's deletions if the rebuild failed before
-    // writing anything (bad input, a failed job), while the old tables
-    // stayed fully live
-    val (tbf, tbp) = ObservationStore.fs(spark, s"$path/_tombstones")
-    if (tbf.exists(tbp)) tbf.delete(tbp, true)
-    // the meta write is LAST and carries the builder's batch id
-    // atomically (the writeLm stream contract)
-    StagedCommit.writeBuildMeta(spark, path,
-      StagedCommit.readMeta(spark, path), batchId = batchId)
+    StagedCommit.stage(df.sparkSession, path, batchId) { stg =>
+      val idx = tokenIndex(df, textCol, idCol).localCheckpoint(false)
+      // materialize the checkpoint once, then overlap the three table
+      // writes — they are independent jobs over the cached index (and
+      // the corpus, for stats) into disjoint directories, and each alone
+      // is narrower than the cluster (the writeDual/stageMerge move)
+      idx.count(): Unit
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      Await.result(Future.sequence(Seq(
+        Future(idx.withColumn("term_bucket",
+            pmod(xxhash64(col("term")), lit(nBuckets.toLong)))
+          .write.partitionBy("term_bucket").mode("overwrite")
+          .parquet(s"${stg.dir}/postings")),
+        Future(idx.groupBy(col("term")).agg(count(lit(1)).as("df"))
+          .write.mode("overwrite").parquet(s"${stg.dir}/terms")),
+        Future(df.agg(count(lit(1)).as("n_docs"),
+            sum(size(tokens(col(textCol)))).as("sum_dl"),
+            lit(nBuckets.toLong).as("n_buckets"))
+          .write.mode("overwrite").parquet(s"${stg.dir}/stats")))),
+        scala.concurrent.duration.Duration.Inf): Unit
+      Some(StagedCommit.Manifest(Seq("staged_postings" -> Nil,
+        "staged_tables" -> Seq("postings", "terms", "stats")),
+        removed = TombstoneMask.parts(df.sparkSession, path))) -> ()
+    }._1.get
   }
 
   /** Index generation: advanced once per committed write/merge — of
@@ -470,7 +470,7 @@ object Retrieval {
     StagedCommit.metaField(spark, path, "last_batch_id")
 
   /** The BM25 index's commit shape: staged postings buckets plus whole
-    * tables (terms and stats; a vacuum adds the emptied tombstones). */
+    * tables (terms and stats; a build stages postings whole too). */
   private val Bm25 = StagedCommit.Family(Seq(
     StagedCommit.PieceList("staged_postings", "postings"),
     StagedCommit.PieceList("staged_tables")))
@@ -677,10 +677,10 @@ object Retrieval {
     // statistics. Every adjustment is computable from the tombstones
     // (which carry dl) plus the already-read query-term postings, so
     // the query never scans beyond its term buckets.
-    val (tf, tp) = ObservationStore.fs(spark, s"$path/_tombstones")
-    if (!tf.exists(tp)) score(idx, dfreq, terms, k, nDocs, sumDl)
+    val tombs = TombstoneMask.parts(spark, path)
+    if (tombs.isEmpty) score(idx, dfreq, terms, k, nDocs, sumDl)
     else {
-      val tomb = spark.read.parquet(s"$path/_tombstones")
+      val tomb = TombstoneMask.read(spark, path, tombs)
         .groupBy(col("doc_id")).agg(max(col("dl")).as("t_dl"))
         .localCheckpoint(false)
       val ts = tomb.agg(count(lit(1)).as("n"), sum(col("t_dl")).as("dl"))
@@ -691,8 +691,7 @@ object Retrieval {
       if (ts.getLong(0) == 0L) score(idx, dfreq, terms, k, nDocs, sumDl)
       else {
         val tombIds = TombstoneMask.hinted(spark,
-          tomb.select(col("doc_id")),
-          TombstoneMask.footerRowCount(spark, s"$path/_tombstones"))
+          tomb.select(col("doc_id")), path, tombs)
         val deadDf = idx.join(tombIds, Seq("doc_id"), "left_semi")
           .groupBy(col("term")).agg(count(lit(1)).as("dead_df"))
         val dfreqAdj = dfreq.join(deadDf, Seq("term"), "left")
@@ -726,105 +725,104 @@ object Retrieval {
 
   /** Fold BM25 tombstones into the index as ONE staged generation —
     * postings (touched term buckets only), terms (df decremented, empty
-    * terms dropped), stats (n_docs/sum_dl decremented) and an EMPTIED
-    * tombstone table all swap atomically under the merge manifest, so a
-    * crash at any point either leaves the tombstones masking (and a
-    * recovery replay re-applies) or the fully-vacuumed index — never a
-    * state that double-subtracts. Touched buckets whose every posting
-    * died stage an explicit empty piece (dynamic overwrite would leave
-    * the dead files live). Verifies every tombstoned id actually holds
+    * terms dropped) and stats (n_docs/sum_dl decremented) swap, and the
+    * tombstone parts folded are removed, atomically under the merge
+    * manifest, so a crash at any point either leaves the tombstones
+    * masking (and a recovery replay re-applies) or the fully-vacuumed
+    * index — never a state that double-subtracts. A delete appended
+    * meanwhile stays. Touched buckets whose every posting
+    * died stage an explicit empty piece (a pieced swap would otherwise
+    * leave the dead files live). Verifies every tombstoned id actually holds
     * postings before staging — an id never indexed would silently skew
     * df/n_docs/sum_dl forever. Returns postings rows removed. */
   def vacuumIndex(spark: SparkSession, path: String): Long =
     StagedCommit.mutate(spark, path, Bm25) {
-      val (f, tp) = ObservationStore.fs(spark, s"$path/_tombstones")
-      lazy val tomb = spark.read.parquet(s"$path/_tombstones")
-        .groupBy(col("doc_id")).agg(max(col("dl")).as("t_dl"))
-        .localCheckpoint(false)
-      lazy val ts =
-        tomb.agg(count(lit(1)).as("n"), sum(col("t_dl")).as("dl")).head()
-      if (!f.exists(tp)) None -> 0L
-      else if (ts.getLong(0) == 0L) { f.delete(tp, true); None -> 0L }
+      val tombs = TombstoneMask.parts(spark, path)
+      if (tombs.isEmpty) None -> 0L
       else StagedCommit.stage(spark, path, None) { stg =>
+        val tomb = TombstoneMask.read(spark, path, tombs)
+          .groupBy(col("doc_id")).agg(max(col("dl")).as("t_dl"))
+          .localCheckpoint(false)
+        val ts =
+          tomb.agg(count(lit(1)).as("n"), sum(col("t_dl")).as("dl")).head()
         val (nTomb, dlTomb) =
           (ts.getLong(0), if (ts.isNullAt(1)) 0L else ts.getLong(1))
-        val st = spark.read.parquet(s"$path/stats").head()
-        val (nDocs, sumDl, nBuckets) =
-          (st.getAs[Long]("n_docs"), st.getAs[Long]("sum_dl"),
-            st.getAs[Long]("n_buckets"))
-        val postings = spark.read.parquet(s"$path/postings")
-        val tombIds = TombstoneMask.hinted(spark, tomb.select(col("doc_id")),
-          TombstoneMask.footerRowCount(spark, s"$path/_tombstones"))
-        val dead = postings.join(tombIds, Seq("doc_id"), "left_semi")
-          .localCheckpoint(false) // feeds the per-term counts, touched set,
-                                  // row count and the id check once
-        // a legitimately indexed ZERO-TOKEN document is counted in
-        // n_docs/sum_dl yet owns no postings rows — its tombstone records
-        // dl=0 and must match zero postings, or deleting it would wedge
-        // vacuum forever. Only dl>0 tombstones must hold postings; a dl=0
-        // tombstone on a doc that DOES hold postings (a mis-recorded dl)
-        // still trips the require, because matchedIds then exceeds the
-        // dl>0 tombstone count.
-        val matchedIds = dead.select(col("doc_id")).distinct().count()
-        val nTombTokened = tomb.filter(col("t_dl") > 0).count()
-        require(matchedIds == nTombTokened,
-          s"vacuumIndex: $nTombTokened tombstoned ids carry tokens but " +
-            s"$matchedIds hold postings — deleting a never-indexed id " +
-            "would corrupt the index statistics; remove the bad " +
-            "tombstones first")
-        val removed = dead.count()
-        val touched = dead.select(col("term_bucket").cast("long"))
-          .distinct().collect().map(_.getLong(0)).toIndexedSeq
-        val survivors = postings
-          .filter(col("term_bucket").isin(touched: _*))
-          .join(tombIds, Seq("doc_id"), "left_anti")
-          .localCheckpoint(false) // reads the files the swap replaces
-        // the four staged tables are independent jobs into disjoint
-        // directories — overlap them (the writeIndex move); the manifest
-        // below is still the only commit point
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        Await.result(Future.sequence(Seq(
-          Future {
-            survivors
-              .repartition(col("term_bucket"))
-              .sortWithinPartitions(col("term_bucket"), col("term"))
-              .write.mode("overwrite").partitionBy("term_bucket")
-              .parquet(s"${stg.dir}/postings")
-            // fully-dead buckets wrote nothing above — stage explicit empty
-            // pieces so the swap replaces (not strands) their live files
-            val staying = survivors.select(col("term_bucket").cast("long"))
-              .distinct().collect().map(_.getLong(0)).toSet
-            StagedCommit.stageEmptyPieces(spark,
-              survivors.drop("term_bucket"),
-              touched.filterNot(staying)
-                .map(b => s"${stg.dir}/postings/term_bucket=$b"))
-          },
-          Future {
-            val deadDf = dead.groupBy(col("term"))
-              .agg(count(lit(1)).as("dead_df"))
-            spark.read.parquet(s"$path/terms")
-              .join(deadDf, Seq("term"), "left")
-              .select(col("term"),
-                (col("df") - coalesce(col("dead_df"), lit(0L))).as("df"))
-              .filter(col("df") > 0)
-              .write.mode("overwrite").parquet(s"${stg.dir}/terms")
-          },
-          Future(spark.range(1).select(
-              lit(nDocs - nTomb).as("n_docs"),
-              lit(sumDl - dlTomb).as("sum_dl"),
-              lit(nBuckets).as("n_buckets"))
-            .write.mode("overwrite").parquet(s"${stg.dir}/stats")),
-          // the emptied tombstone table swaps WITH the adjusted tables: any
-          // earlier ordering double-subtracts on one side of a crash.
-          // Schema must be the (doc_id, dl) that deleteFromIndex appends
-          // and the query path reads.
-          Future(tomb.select(col("doc_id"), col("t_dl").as("dl"))
-            .limit(0).coalesce(1)
-            .write.mode("overwrite").parquet(s"${stg.dir}/_tombstones")))),
-          scala.concurrent.duration.Duration.Inf): Unit
-        Some(bm25Manifest(spark, stg, "terms", "stats", "_tombstones")) ->
-          removed
+        if (nTomb == 0L)
+          Some(bm25Manifest(spark, stg).copy(removed = tombs)) -> 0L
+        else {
+          val st = spark.read.parquet(s"$path/stats").head()
+          val (nDocs, sumDl, nBuckets) =
+            (st.getAs[Long]("n_docs"), st.getAs[Long]("sum_dl"),
+              st.getAs[Long]("n_buckets"))
+          val postings = spark.read.parquet(s"$path/postings")
+          val tombIds = TombstoneMask.hinted(spark, tomb.select(col("doc_id")),
+            path, tombs)
+          val dead = postings.join(tombIds, Seq("doc_id"), "left_semi")
+            .localCheckpoint(false) // feeds the per-term counts, touched set,
+                                    // row count and the id check once
+          // a legitimately indexed ZERO-TOKEN document is counted in
+          // n_docs/sum_dl yet owns no postings rows — its tombstone records
+          // dl=0 and must match zero postings, or deleting it would wedge
+          // vacuum forever. Only dl>0 tombstones must hold postings; a dl=0
+          // tombstone on a doc that DOES hold postings (a mis-recorded dl)
+          // still trips the require, because matchedIds then exceeds the
+          // dl>0 tombstone count.
+          val matchedIds = dead.select(col("doc_id")).distinct().count()
+          val nTombTokened = tomb.filter(col("t_dl") > 0).count()
+          require(matchedIds == nTombTokened,
+            s"vacuumIndex: $nTombTokened tombstoned ids carry tokens but " +
+              s"$matchedIds hold postings — deleting a never-indexed id " +
+              "would corrupt the index statistics; remove the bad " +
+              "tombstones first")
+          val removed = dead.count()
+          val touched = dead.select(col("term_bucket").cast("long"))
+            .distinct().collect().map(_.getLong(0)).toIndexedSeq
+          val survivors = postings
+            .filter(col("term_bucket").isin(touched: _*))
+            .join(tombIds, Seq("doc_id"), "left_anti")
+            .localCheckpoint(false) // reads the files the swap replaces
+          // the three staged tables are independent jobs into disjoint
+          // directories — overlap them (the writeIndex move); the manifest
+          // below is still the only commit point
+          import scala.concurrent.{Await, Future}
+          import scala.concurrent.ExecutionContext.Implicits.global
+          Await.result(Future.sequence(Seq(
+            Future {
+              survivors
+                .repartition(col("term_bucket"))
+                .sortWithinPartitions(col("term_bucket"), col("term"))
+                .write.mode("overwrite").partitionBy("term_bucket")
+                .parquet(s"${stg.dir}/postings")
+              // fully-dead buckets wrote nothing above — stage explicit empty
+              // pieces so the swap replaces (not strands) their live files
+              val staying = survivors.select(col("term_bucket").cast("long"))
+                .distinct().collect().map(_.getLong(0)).toSet
+              StagedCommit.stageEmptyPieces(spark,
+                survivors.drop("term_bucket"),
+                touched.filterNot(staying)
+                  .map(b => s"${stg.dir}/postings/term_bucket=$b"))
+            },
+            Future {
+              val deadDf = dead.groupBy(col("term"))
+                .agg(count(lit(1)).as("dead_df"))
+              spark.read.parquet(s"$path/terms")
+                .join(deadDf, Seq("term"), "left")
+                .select(col("term"),
+                  (col("df") - coalesce(col("dead_df"), lit(0L))).as("df"))
+                .filter(col("df") > 0)
+                .write.mode("overwrite").parquet(s"${stg.dir}/terms")
+            },
+            Future(spark.range(1).select(
+                lit(nDocs - nTomb).as("n_docs"),
+                lit(sumDl - dlTomb).as("sum_dl"),
+                lit(nBuckets).as("n_buckets"))
+              .write.mode("overwrite").parquet(s"${stg.dir}/stats")))),
+            scala.concurrent.duration.Duration.Inf): Unit
+          // the folded tombstones go WITH the adjusted tables: any other
+          // ordering double-subtracts on one side of a crash
+          Some(bm25Manifest(spark, stg, "terms", "stats")
+            .copy(removed = tombs)) -> removed
+        }
       }
     }.get
 

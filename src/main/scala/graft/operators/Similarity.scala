@@ -93,22 +93,8 @@ object Similarity {
               queryId: Long, k: Int, centroidIds: Seq[Long],
               nprobe: Int): DataFrame = {
     val scaledDf = embeddings.select(col(idCol).as("id"), scaled(col(embCol)).as("v"))
-    val centroids = scaledDf.filter(col("id").isin(centroidIds: _*))
-      .select(col("id").as("c_id"), col("v").as("c_v"))
-
-    // argmax assignment: broadcast C centroids, then ONE aggregation —
-    // max_by over the (cos, -c_id) struct picks the nearest centroid with
-    // a deterministic lowest-c_id tie-break (cosines are exact integers /
-    // sqrt, so ties are real ties, not float noise). A ranking window
-    // here would SORT every (vector × centroid) row inside each id
-    // partition — at 10⁹ vectors that sort dominates; the HashAggregate
-    // does map-side partial max_by instead, shrinking C rows per vector
-    // to 1 before the shuffle.
-    val assigned = scaledDf.crossJoin(broadcast(centroids))
-      .withColumn("c_cos", cosine(col("v"), col("c_v")))
-      .groupBy(col("id"), col("v"))
-      .agg(max_by(col("c_id"), struct(col("c_cos"), -col("c_id")))
-        .as("cluster"))
+    val centroids = centroidsOf(scaledDf, centroidIds)
+    val assigned = nearestCentroid(scaledDf, centroids)
 
     val probeClusters = assigned.filter(col("id") === queryId)
       .select(col("v").as("qv"), col("cluster"))
@@ -126,34 +112,68 @@ object Similarity {
       .limit(k)
   }
 
+  /** The centroid rows (`c_id`, `c_v`): the vectors of `centroidIds`
+    * (deterministic "training"). */
+  private def centroidsOf(scaledDf: DataFrame,
+      centroidIds: Seq[Long]): DataFrame =
+    scaledDf.filter(col("id").isin(centroidIds: _*))
+      .select(col("id").as("c_id"), col("v").as("c_v"))
+
+  /** `scaledDf`'s (id, v) rows, each with the `cluster` of its nearest
+    * centroid by cosine — ONE definition for the in-memory probe, both
+    * builds and the merge, so a stored vector and a merged one can
+    * never be assigned differently. Argmax assignment: broadcast C
+    * centroids, then ONE aggregation — max_by over the (cos, -c_id)
+    * struct picks the nearest centroid with a deterministic lowest-c_id
+    * tie-break (cosines are exact integers / sqrt, so ties are real
+    * ties, not float noise). A ranking window here would SORT every
+    * (vector × centroid) row inside each id partition — at 10⁹ vectors
+    * that sort dominates; the HashAggregate does map-side partial max_by
+    * instead, shrinking C rows per vector to 1 before the shuffle. */
+  private def nearestCentroid(scaledDf: DataFrame,
+      centroids: DataFrame): DataFrame =
+    scaledDf.crossJoin(broadcast(centroids))
+      .withColumn("c_cos", cosine(col("v"), col("c_v")))
+      .groupBy(col("id"), col("v"))
+      .agg(max_by(col("c_id"), struct(col("c_cos"), -col("c_id")))
+        .as("cluster"))
+
   /** Persist an IVF index: every vector stored under its centroid's
     * partition directory (`cluster=<c>/`), plus the centroid vectors —
     * the "cluster id becomes a partition column" layout that turns an
     * IVF probe into PARTITION PRUNING: a query plans `nprobe` directory
     * scans, never touching the other clusters' files. Assignment is the
-    * same broadcast-argmax aggregation as [[ivfTopK]]. */
+    * same broadcast-argmax aggregation as [[ivfTopK]]. A (re)build is
+    * one staged generation of the IVF-PQ commit shape (meta, epoch and
+    * all); it drops the old index's tombstones. */
   def writeIvfIndex(embeddings: DataFrame, idCol: String, embCol: String,
       centroidIds: Seq[Long], path: String): Unit = {
     val scaledDf = embeddings.select(col(idCol).as("id"),
       scaled(col(embCol)).as("v"))
-    val centroids = scaledDf.filter(col("id").isin(centroidIds: _*))
-      .select(col("id").as("c_id"), col("v").as("c_v"))
-    val assigned = scaledDf.crossJoin(broadcast(centroids))
-      .withColumn("c_cos", cosine(col("v"), col("c_v")))
-      .groupBy(col("id"), col("v"))
-      .agg(max_by(col("c_id"), struct(col("c_cos"), -col("c_id")))
-        .as("cluster"))
-    assigned.write.mode("overwrite").partitionBy("cluster")
-      .parquet(s"$path/vectors")
-    centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    // a rebuilt index has no deletions: clear any tombstones — only
-    // AFTER the new tables exist (a clear before the writes would
-    // resurrect the old index's GDPR deletions if the rebuild failed
-    // early, while the old tables stayed fully live)
-    val (f, tp) = ObservationStore.fs(embeddings.sparkSession,
-      s"$path/_tombstones")
-    if (f.exists(tp)) { f.delete(tp, true); () }
+    val centroids = centroidsOf(scaledDf, centroidIds)
+    StagedCommit.mutate(embeddings.sparkSession, path, IvfPq)(Some(
+      stageIvfBuild(path, None, nearestCentroid(scaledDf, centroids),
+        "centroids" -> centroids)) -> ()): Unit
   }
+
+  /** The one IVF build stage step ([[writeIvfIndex]],
+    * [[writeIvfPqIndex]]): `vectors` (carrying `cluster`) and the other
+    * `tables` staged whole, the tombstone parts it saw removed (a
+    * rebuilt index has no deletions; one appended later stays), the
+    * manifest committed under `batchId`. */
+  private def stageIvfBuild(path: String, batchId: Option[Long],
+      vectors: DataFrame, tables: (String, DataFrame)*): String =
+    StagedCommit.stage(vectors.sparkSession, path, batchId) { stg =>
+      vectors.write.mode("overwrite").partitionBy("cluster")
+        .parquet(s"${stg.dir}/vectors")
+      tables.foreach { case (name, t) =>
+        t.write.mode("overwrite").parquet(s"${stg.dir}/$name")
+      }
+      Some(StagedCommit.Manifest(Seq(
+        "staged_tables" -> ("vectors" +: tables.map(_._1)),
+        "staged_vectors" -> Nil),
+        removed = TombstoneMask.parts(vectors.sparkSession, path))) -> ()
+    }._1.get
 
   /** Tombstone deletion for a persisted IVF index — retract vectors
     * (GDPR erasure, dedup corrections) WITHOUT a rebuild: ids append to
@@ -173,68 +193,31 @@ object Similarity {
     deleteFromIvfIndex(spark, path, ids.toDF("id"))
   }
 
-  /** Fold tombstones into the vector partitions: ONLY cluster
-    * directories that actually hold a deleted id are rewritten (dynamic
-    * partition overwrite — the touched-bucket discipline), a cluster
-    * whose every vector died has its directory removed outright, and
-    * the tombstone set is dropped LAST — a crash anywhere leaves the
-    * tombstones masking queries, and a replay is idempotent. Returns
-    * the number of vectors removed. */
+  /** Fold tombstones into the vector partitions as ONE staged
+    * generation of the IVF/IVF-PQ index ([[TombstoneMask.stageFold]]):
+    * ONLY cluster directories that hold a deleted id restage their
+    * survivors, a cluster whose every vector died is removed, and the
+    * tombstone parts it folded go in the same swap (a delete appended
+    * meanwhile stays) — a crash anywhere leaves the tombstones masking
+    * queries or the fully vacuumed index, and the epoch advances once. Any committed merge replays first, so its
+    * vectors fold too. Returns the number of vectors removed. */
   def vacuumIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    val (f, tp) = ObservationStore.fs(spark, s"$path/_tombstones")
-    if (!f.exists(tp)) return 0L
-    val nTombRaw = TombstoneMask.footerRowCount(spark, s"$path/_tombstones")
-    val tomb = TombstoneMask.hinted(spark,
-      spark.read.parquet(s"$path/_tombstones")
-        .select(col("id")).distinct().localCheckpoint(false), nTombRaw)
-    val vectors = spark.read.parquet(s"$path/vectors")
-    val dead = vectors.join(tomb, Seq("id"), "left_semi")
-      .groupBy(col("cluster").cast("long").as("cluster"))
-      .agg(count(lit(1)).as("n")).collect()
-    val removed = dead.map(_.getLong(1)).sum
-    if (dead.nonEmpty) {
-      val touched = dead.map(_.getLong(0))
-      val survivors = vectors
-        .filter(col("cluster").isin(touched.toIndexedSeq.map(Long.box): _*))
-        .join(tomb, Seq("id"), "left_anti")
-        .localCheckpoint(false) // reads the files the write replaces
-      survivors.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cluster").parquet(s"$path/vectors")
-      // fully-deleted clusters stage nothing under dynamic overwrite —
-      // remove their directories outright (the stageExpire empty-bucket
-      // lesson, inverted: an empty cluster has no reader value)
-      val staying = survivors.select(col("cluster").cast("long"))
-        .distinct().collect().map(_.getLong(0)).toSet
-      val dying = touched.filterNot(staying).toSet
-      // "remains" must be judged against EVERY cluster directory on
-      // disk, not just the touched ones: deleting one full cluster
-      // while others are untouched must NOT drop a root-level file next
-      // to partition directories (it breaks partition discovery)
-      val (vf, vp) = ObservationStore.fs(spark, s"$path/vectors")
-      val existing = vf.listStatus(vp).toIndexedSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("cluster="))
-        .map(_.getPath.getName.stripPrefix("cluster=").toLong).toSet
-      // an index vacuumed down to NOTHING must stay readable — and the
-      // placeholder must live INSIDE a partition-shaped leaf, never at
-      // the vectors root: a root-level file beside cluster= directories
-      // breaks partition discovery the moment a later IVF-PQ merge
-      // recreates them (the vacuumBandIndex lesson). Data columns only;
-      // the truncating overwrite of the canonical leaf doubles as its
-      // deletion.
-      val keepPlaceholder = (existing -- dying).isEmpty
-      if (keepPlaceholder)
-        survivors.drop("cluster").limit(0).coalesce(1)
-          .write.mode("overwrite").parquet(s"$path/vectors/cluster=0")
-      dying.filterNot(c => keepPlaceholder && c == 0L).foreach { c =>
-        val (fc, cp) = ObservationStore.fs(spark,
-          s"$path/vectors/cluster=$c")
-        if (fc.exists(cp)) { fc.delete(cp, true); () }
-      }
+      path: String): Long =
+    StagedCommit.mutate(spark, path, IvfPq)(stageIvfVacuum(spark, path)).get
+
+  /** [[vacuumIvfIndex]]'s stage step: the staging dir (None without
+    * tombstones) and the vectors removed. Package-visible so tests can
+    * stop here. */
+  private[graft] def stageIvfVacuum(spark: org.apache.spark.sql.SparkSession,
+      path: String): (Option[String], Long) = {
+    val tombs = TombstoneMask.parts(spark, path)
+    if (tombs.isEmpty) None -> 0L
+    else StagedCommit.stage(spark, path, None) { stg =>
+      val (pieces, removed, n) = TombstoneMask.stageFold(spark, path, tombs,
+        "vectors", "id", Seq("cluster"), stg)(_.repartition(col("cluster")))
+      Some(StagedCommit.Manifest(Seq("staged_vectors" -> pieces),
+        removed = removed)) -> n
     }
-    f.delete(tp, true)
-    removed
   }
 
   /** Top-k against a persisted IVF index: centroids are collected (tiny),
@@ -247,6 +230,9 @@ object Similarity {
   def ivfIndexTopK(spark: org.apache.spark.sql.SparkSession, path: String,
       queryEmbedding: Seq[Float], queryId: Long, k: Int,
       nprobe: Int): DataFrame = {
+    // finish any committed-but-unapplied build, merge or vacuum first
+    // (reader-safe: never deletes a live writer's staging)
+    recoverIvfPqMerge(spark, path)
     import spark.implicits._
     val qv: Array[Double] = Seq(queryEmbedding).toDF("e")
       .select(scaled(col("e"))).head().getSeq[Double](0).toArray
@@ -268,8 +254,7 @@ object Similarity {
     // deleted vectors ([[deleteFromIvfIndex]]) mask out via an
     // anti-join (broadcast under [[TombstoneMask]]'s driver-memory
     // bound, shuffled past it) until the next vacuum folds them in
-    val live = TombstoneMask.antiJoin(spark, base, s"$path/_tombstones",
-      "id", "id")
+    val live = TombstoneMask.antiJoin(spark, base, path, "id", "id")
     live
       .select(col("id"), cosine(col("v"), qvCol).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("id").asc)
@@ -996,48 +981,35 @@ object Similarity {
     * rounds (each one narrow encode + a m·ks·dsub-row aggregate) + one
     * partitioned write — nothing joins vector-against-vector.
     *
-    * `batchId`: the micro-batch id when the build IS a streaming batch
-    * ([[streamIvfPqIndex]]'s first), recorded in the build's one meta
-    * write so a replay of that batch is an exactly-once skip. */
+    * One staged generation (the [[writeIvfIndex]] build step plus the
+    * codebooks table). `batchId`: the micro-batch id when the build IS a
+    * streaming batch ([[streamIvfPqIndex]]'s first), committed with the
+    * generation, so a replay of that batch is an exactly-once skip. */
   def writeIvfPqIndex(embeddings: DataFrame, idCol: String, embCol: String,
       centroidIds: Seq[Long], path: String, m: Int = 4, ks: Int = 8,
-      iters: Int = 1, dim: Int = 64, batchId: Option[Long] = None): Unit = {
-    // a rebuild is a writer: resolve committed staging and clear
-    // leftovers, or a stale committed merge could replay over the
-    // rebuilt index (the writeIndex/writeDual rule)
-    if (ObservationStore.pathExists(embeddings.sparkSession, path))
-      recoverIvfPqMerge(embeddings.sparkSession, path,
-        deleteUncommitted = true)
+      iters: Int = 1, dim: Int = 64, batchId: Option[Long] = None): Unit =
+    StagedCommit.mutate(embeddings.sparkSession, path, IvfPq, batchId)(Some(
+      stageIvfPqBuild(embeddings, idCol, embCol, centroidIds, path, m, ks,
+        iters, dim, batchId)) -> ()): Unit
+
+  /** [[writeIvfPqIndex]]'s stage step: codebooks trained, vectors
+    * assigned and encoded, all three tables staged whole.
+    * Package-visible so crash tests can stop here. */
+  private[graft] def stageIvfPqBuild(embeddings: DataFrame, idCol: String,
+      embCol: String, centroidIds: Seq[Long], path: String, m: Int, ks: Int,
+      iters: Int, dim: Int, batchId: Option[Long] = None): String = {
     val cb = pqCodebooks(embeddings, idCol, embCol, m, ks, iters, dim)
     val scaledDf = embeddings.select(col(idCol).cast("long").as("id"),
       scaled(col(embCol)).as("v"))
-    val centroids = scaledDf.filter(col("id").isin(centroidIds: _*))
-      .select(col("id").as("c_id"), col("v").as("c_v"))
-    val assigned = scaledDf.crossJoin(broadcast(centroids))
-      .withColumn("c_cos", cosine(col("v"), col("c_v")))
-      .groupBy(col("id"), col("v"))
-      .agg(max_by(col("c_id"), struct(col("c_cos"), -col("c_id")))
-        .as("cluster"))
-    assigned.withColumn("codes", pqEncode(col("v"), cb))
-      .select(col("id"), col("codes"), col("v"), col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster")
-      .parquet(s"$path/vectors")
-    centroids.write.mode("overwrite").parquet(s"$path/centroids")
+    val centroids = centroidsOf(scaledDf, centroidIds)
     val spark = embeddings.sparkSession
     import spark.implicits._
-    (for { j <- 0 until m; c <- 0 until ks; d <- 0 until dim / m }
-      yield (j, c.toLong, d, cb(j)(c)(d)))
-      .toDF("j", "code", "d", "cval")
-      .write.mode("overwrite").parquet(s"$path/codebooks")
-    // rebuild clears deletion state (the writeIvfIndex rationale) — only
-    // AFTER codebook training and the table writes: a clear before them
-    // would resurrect the old index's deletions if training failed on
-    // bad input while the old tables stayed fully live
-    val (tbf, tbp) = ObservationStore.fs(spark, s"$path/_tombstones")
-    if (tbf.exists(tbp)) tbf.delete(tbp, true)
-    // LAST write, batch id atomic with it — the writeLm stream contract
-    StagedCommit.writeBuildMeta(spark, path,
-      StagedCommit.readMeta(spark, path), batchId = batchId)
+    val codebooks = (for { j <- 0 until m; c <- 0 until ks; d <- 0 until dim / m }
+      yield (j, c.toLong, d, cb(j)(c)(d))).toDF("j", "code", "d", "cval")
+    stageIvfBuild(path, batchId, nearestCentroid(scaledDf, centroids)
+        .withColumn("codes", pqEncode(col("v"), cb))
+        .select(col("id"), col("codes"), col("v"), col("cluster")),
+      "centroids" -> centroids, "codebooks" -> codebooks)
   }
 
   /** Incrementally merge NEW vectors into a persisted IVF-PQ index —
@@ -1059,8 +1031,11 @@ object Similarity {
     StagedCommit.mutate(spark, path, IvfPq, batchId)(Some(
       stageIvfPqMerge(spark, path, batch, idCol, embCol, batchId)) -> ()): Unit
 
-  /** The IVF-PQ index's commit shape: the staged cluster directories. */
+  /** The IVF and IVF-PQ indexes' commit shape: whole tables (a build's
+    * vectors, centroids and codebooks; absent from merge and vacuum
+    * manifests), then the staged cluster directories. */
   private val IvfPq = StagedCommit.Family(Seq(
+    StagedCommit.PieceList("staged_tables", ifAbsent = Some((_, _) => Nil)),
     StagedCommit.PieceList("staged_vectors", "vectors")))
 
   /** Continuous vector-index maintenance: every micro-batch of NEW
@@ -1073,7 +1048,7 @@ object Similarity {
     * ([[mergeIvfPqIndex]]), so a query between batches never sees a
     * half-applied generation, and a Spark-retried batch replays as a
     * no-op via the recorded batch id. A first batch whose build died
-    * before its meta write replays as a rebuild. Batches must carry
+    * before its manifest replays as a rebuild. Batches must carry
     * previously-unseen vector ids (the append-only contract shared by
     * every persisted index here). */
   def streamIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
@@ -1106,15 +1081,11 @@ object Similarity {
     StagedCommit.stage(spark, path, batchId) { stg =>
       val cb = loadCodebooks(spark, path)
       val centroids = spark.read.parquet(s"$path/centroids")
-      // assignment: the SAME broadcast-argmax as writeIvfPqIndex, against
-      // the persisted centroid vectors — bit-identical cluster choice
-      val withCodes = batch
-        .select(col(idCol).cast("long").as("id"), scaled(col(embCol)).as("v"))
-        .crossJoin(broadcast(centroids))
-        .withColumn("c_cos", cosine(col("v"), col("c_v")))
-        .groupBy(col("id"), col("v"))
-        .agg(max_by(col("c_id"), struct(col("c_cos"), -col("c_id")))
-          .as("cluster"))
+      // assignment against the persisted centroid vectors — the build's
+      // bit-identical cluster choice
+      val withCodes = nearestCentroid(batch.select(
+          col(idCol).cast("long").as("id"), scaled(col(embCol)).as("v")),
+          centroids)
         .withColumn("codes", pqEncode(col("v"), cb))
         .select(col("id"), col("codes"), col("v"), col("cluster"))
         .localCheckpoint(false) // feeds touched-cluster collect + the write
@@ -1132,9 +1103,9 @@ object Similarity {
     }._1.get
   }
 
-  /** The [[Retrieval.recoverIndexMerge]] contract for the IVF-PQ index:
-    * committed staging replays, manifest-less staging is only ever
-    * discarded by a writer. */
+  /** The [[Retrieval.recoverIndexMerge]] contract for the IVF and IVF-PQ
+    * indexes: committed staging (a build, merge or vacuum) replays,
+    * manifest-less staging is only ever discarded by a writer. */
   def recoverIvfPqMerge(spark: org.apache.spark.sql.SparkSession,
       path: String, deleteUncommitted: Boolean = false): Unit =
     StagedCommit.recover(spark, path, IvfPq, deleteUncommitted)
@@ -1191,8 +1162,7 @@ object Similarity {
     // pointed at this index's path): deleted ids mask before the ADC
     // scan so a retracted vector cannot even consume a rerank slot
     // (broadcast under [[TombstoneMask]]'s bound, shuffled past it)
-    val vectors = TombstoneMask.antiJoin(spark, base,
-      s"$path/_tombstones", "id", "id")
+    val vectors = TombstoneMask.antiJoin(spark, base, path, "id", "id")
     val cand = vectors
       .select(col("id"), posexplode(col("codes")).as(Seq("j", "code")))
       .join(broadcast(dt), Seq("j", "code"))

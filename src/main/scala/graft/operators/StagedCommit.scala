@@ -4,27 +4,38 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The ONE staged-commit engine shared by every persisted family: the
   * dual observation store, the BM25 index, the positional index, the
-  * IVF-PQ index, the n-gram LM, the MinHash band index and the BPE
-  * vocabulary. A family writes its expensive pieces under
-  * `_staging_<generation>` and describes itself with a [[Family]] value;
-  * everything around those writes lives here:
+  * IVF and IVF-PQ indexes, the n-gram LM, the MinHash band index and the
+  * BPE vocabulary. Every write of every family — first build, rebuild,
+  * merge, delete, vacuum — is one [[mutate]] over a stage step that
+  * writes the family's pieces under `_staging_<generation>`; nothing
+  * writes the live tree in place (the one exception is the append-only
+  * `_tombstones` table a delete request extends). A family describes
+  * itself with a [[Family]] value; everything around its writes lives
+  * here:
   *
-  *  - the `_graft_meta.json` codec ([[readMeta]], [[writeMeta]]): the
-  *    epoch, the fields a family carries over from its manifest, and the
-  *    streaming `last_batch_id`, which a write without a batch id keeps;
+  *  - the `_graft_meta.json` codec ([[readMeta]]): the epoch, the fields
+  *    a family carries over from its manifest, and the streaming
+  *    `last_batch_id`, which a write without a batch id keeps;
   *  - the manifest: [[stage]] writes it in one create call — the commit
-  *    point, LISTING every staged piece — and [[apply]] reads it back;
+  *    point, LISTING every staged piece, and in `removed` every live
+  *    piece the generation drops (the `_tombstones` part files a rebuild
+  *    or vacuum read — never the whole table, so a delete appended
+  *    meanwhile survives — and a vacuum's emptied leaves) — and
+  *    [[apply]] reads it back;
   *  - [[applyPieces]]: swap each staged piece into the live tree by an
   *    idempotent rename (staged present → swap; already applied → skip;
   *    present in NEITHER place → fail loudly rather than commit a
-  *    generation with pieces missing), bump the generation exactly once,
-  *    drop the staging dir;
-  *  - [[recover]]: resolve interrupted merges on open — a staging dir
+  *    generation with pieces missing), move each removed piece aside
+  *    (and a directory that leaves empty), bump the generation exactly
+  *    once, drop the staging dir;
+  *  - [[recover]]: resolve interrupted writes on open — a staging dir
   *    WITH a manifest is committed and replays; one WITHOUT is either a
-  *    crash leftover or a merge a live writer is staging right now, so
+  *    crash leftover or a write a live writer is staging right now, so
   *    only the writer path (`deleteUncommitted = true`) may discard it;
   *  - [[mutate]]: the one writer sequence (recover, skip a committed
-  *    batch id, stage, apply);
+  *    batch id, stage, apply) — a build stages whole tables, so the
+  *    epoch and batch id commit with them and a build that dies midway
+  *    leaves only a staging dir;
   *  - [[stream]]: the one Structured-Streaming driver (build on the first
   *    batch, merge on the rest).
   *
@@ -46,7 +57,9 @@ private[operators] object StagedCommit {
   /** A manifest list field naming staged pieces under `dir` — relative
     * to both the staging dir and the live root, "" for the root itself.
     * An absent field marks a torn manifest, unless `ifAbsent` derives
-    * the pieces from the staging dir instead. */
+    * the pieces from the staging dir instead. A manifest writes a list
+    * with an `ifAbsent` rule before the strict ones, so a torn write
+    * always cuts a strict list. */
   final case class PieceList(field: String, dir: String = "",
       ifAbsent: Option[(SparkSession, String) => Seq[String]] = None)
 
@@ -55,11 +68,12 @@ private[operators] object StagedCommit {
     * and `layout`), read back on every apply. */
   final case class Family(lists: Seq[PieceList], carried: Seq[String] = Nil)
 
-  /** What a stage step wrote: the staged names per list field, and any
+  /** What a stage step wrote: the staged names per list field, any
     * other numbers the manifest records (a family's carried fields, the
-    * store's `whole_copies` flag). */
+    * store's `whole_copies` flag), and the live pieces (paths relative
+    * to the root) the generation drops without a replacement. */
   final case class Manifest(lists: Seq[(String, Seq[String])],
-      fields: Seq[(String, Long)] = Nil)
+      fields: Seq[(String, Long)] = Nil, removed: Seq[String] = Nil)
 
   /** Where a stage step writes: the staging `dir`, the `epoch` it
     * commits, and the artifact's `meta` as it stood. */
@@ -104,27 +118,6 @@ private[operators] object StagedCommit {
       name: String): Option[Long] =
     readMeta(spark, path).get(name)
 
-  /** The one meta write: `epoch`, the `carried` fields, then
-    * `last_batch_id` — `batchId`, else the one `prior` (the meta this
-    * write replaces) records, so a write without a batch id never erases
-    * the exactly-once marker. The marker commits atomically with the
-    * epoch (one create call): that is what makes stream replays
-    * detectable. */
-  private def writeMeta(spark: SparkSession, path: String,
-      prior: Map[String, Long], epoch: Long, carried: Seq[(String, Long)],
-      batchId: Option[Long]): Unit =
-    writeJson(spark, s"$path/$MetaFile", ("epoch" -> epoch) +: carried ++:
-      batchId.orElse(prior.get("last_batch_id"))
-        .map("last_batch_id" -> _).toSeq, Nil)
-
-  /** A build's LAST write: a rebuild over an existing artifact advances
-    * the epoch, never resets it (readers use it for change detection). */
-  def writeBuildMeta(spark: SparkSession, path: String,
-      prior: Map[String, Long], carried: Seq[(String, Long)] = Nil,
-      batchId: Option[Long] = None): Unit =
-    writeMeta(spark, path, prior, prior.getOrElse("epoch", 0L) + 1L,
-      carried, batchId)
-
   private def readManifest(spark: SparkSession, staging: String): String =
     readText(spark, s"$staging/$ManifestFile").getOrElse(
       throw new java.io.FileNotFoundException(s"$staging/$ManifestFile"))
@@ -155,17 +148,22 @@ private[operators] object StagedCommit {
     manifest match {
       case None => drop(); (None, result)
       case Some(m) =>
-        // the epoch and batch id first, the lists last: a torn write
-        // loses a list's closing quote and reads as torn
+        // the epoch and batch id first, `removed` next, the family's
+        // lists last: a torn write loses a list's closing quote and
+        // reads as torn
         writeJson(spark, s"$dir/$ManifestFile", ("target_epoch" -> epoch) +:
-          batchId.map("batch_id" -> _).toSeq ++: m.fields, m.lists)
+          batchId.map("batch_id" -> _).toSeq ++: m.fields,
+          ("removed" -> m.removed) +: m.lists)
         (Some(dir), result)
     }
   }
 
   /** Replay a committed staging dir: swap every piece its manifest lists
-    * into the live tree, then commit the manifest's epoch, carried fields
-    * and batch id as the meta — once. */
+    * into the live tree, move every `removed` piece aside, then commit
+    * the manifest's epoch, carried fields and batch id as the meta —
+    * once, in one create call, so the batch id (else the one the prior
+    * meta records: a write without a batch id never erases the
+    * exactly-once marker) is atomic with the epoch. */
   def apply(spark: SparkSession, path: String, family: Family,
       staging: String): Unit = {
     val manifest = readManifest(spark, staging)
@@ -185,10 +183,14 @@ private[operators] object StagedCommit {
             s"staged manifest missing ${l.field}: $manifest"))
           .map(n => if (l.dir.isEmpty) n else s"${l.dir}/$n")
       }
-    applyPieces(spark, path, staging, pieces, epoch) {
+    // absent in manifests staged before the field existed
+    val removed = listField(manifest, "removed").getOrElse(Nil)
+    applyPieces(spark, path, staging, pieces, removed, epoch) {
       val prior = readMeta(spark, path)
       if (prior.getOrElse("epoch", 0L) < epoch)
-        writeMeta(spark, path, prior, epoch, carried, m.get("batch_id"))
+        writeJson(spark, s"$path/$MetaFile", ("epoch" -> epoch) +:
+          carried ++: m.get("batch_id").orElse(prior.get("last_batch_id"))
+            .map("last_batch_id" -> _).toSeq, Nil)
     }
   }
 
@@ -214,11 +216,11 @@ private[operators] object StagedCommit {
   /** The one Structured-Streaming driver for a persisted family: every
     * non-empty micro-batch `build`s the artifact when it has no
     * `_graft_meta.json` yet and `merge`s into it otherwise, both under
-    * the micro-batch id. The meta is a build's LAST write and carries
-    * that id, so a first batch that died mid-build replays as a clean
-    * rebuild and a committed one as an exactly-once skip — probing a
-    * data directory instead would let a half-built artifact replay as a
-    * double-counting merge. */
+    * the micro-batch id. A build commits its tables, epoch and that id
+    * as one manifest, so a first batch that died mid-build replays as a
+    * clean rebuild and a committed one as an exactly-once skip — probing
+    * a data directory instead would let a half-built artifact replay as
+    * a double-counting merge. */
   def stream(spark: SparkSession, data: DataFrame, path: String,
       checkpointDir: String)(build: (DataFrame, Long) => Unit,
       merge: (DataFrame, Long) => Unit)
@@ -236,11 +238,12 @@ private[operators] object StagedCommit {
   /** Stage schema-only EMPTY pieces into every directory in `targets`
     * with ONE Spark job: the limit-0 frame writes once (into the first
     * target) and the single footer-only parquet file it produced
-    * fs-copies into the rest. Fully-dead partitions must stage explicit
-    * empties (dynamic/pieced swaps would otherwise strand the live
-    * files), and a mass takedown can kill THOUSANDS of buckets — one
-    * serial limit-0 job per bucket is O(dead) driver job launches;
-    * this is one job plus metadata-sized copies. */
+    * fs-copies into the rest. Fully-dead partitions a layout keeps (the
+    * store's and the text indexes' buckets) must stage explicit empties
+    * (a pieced swap would otherwise strand the live files), and a mass
+    * takedown can kill THOUSANDS of buckets — one serial limit-0 job per
+    * bucket is O(dead) driver job launches; this is one job plus
+    * metadata-sized copies. */
   def stageEmptyPieces(spark: SparkSession,
       schemaOnly: org.apache.spark.sql.DataFrame,
       targets: Seq[String]): Unit = {
@@ -277,48 +280,52 @@ private[operators] object StagedCommit {
 
   /** Swap `pieces` (paths relative to BOTH the staging dir and the live
     * root, e.g. "by_rrname/bucket=3", "terms", "vectors/cluster=7")
-    * from `staging` into `path`, then commit `targetGen` once and drop
-    * the staging dir. Idempotent at every step — safe to replay from
-    * any crash point, and tolerant of a concurrent recoverer winning an
-    * individual rename.
+    * from `staging` into `path`, move the live `removed` pieces aside,
+    * then commit `targetGen` once and drop the staging dir. Idempotent
+    * at every step — safe to replay from any crash point, and tolerant
+    * of a concurrent recoverer winning an individual rename.
     *
-    * The swap never DELETES a live piece: the old `dest` is moved ASIDE
-    * (atomic rename into `staging/_replaced/`) before the staged piece
-    * renames in, so a concurrent recoverer of the same manifest cannot
-    * destroy data — every piece exists in at least one of
-    * {staging, live, aside} at every instant, interleavings at worst
-    * strand a piece in the aside slot, and the aside branch below heals
-    * that on replay. The aside copies die with the staging dir. */
+    * The swap never DELETES a live piece: the old `dest` (or a removed
+    * piece) is moved ASIDE (atomic rename into `staging/_replaced/`)
+    * before the staged piece renames in, so a concurrent recoverer of
+    * the same manifest cannot destroy data — every piece exists in at
+    * least one of {staging, live, aside} at every instant, interleavings
+    * at worst strand a piece in the aside slot, and the aside branch
+    * below heals that on replay. A removed piece already gone from the
+    * live tree is done. The aside copies die with the staging dir. */
   private def applyPieces(spark: SparkSession, path: String,
-      staging: String, pieces: Seq[String], targetGen: Long)(
-      commitGen: => Unit): Unit =
+      staging: String, pieces: Seq[String], removed: Seq[String],
+      targetGen: Long)(commitGen: => Unit): Unit =
     RecoveryLock.withLock(path) {
       val (f, _) = ObservationStore.fs(spark, staging)
+      def live(rel: String) = new org.apache.hadoop.fs.Path(s"$path/$rel")
+      def aside(rel: String) =
+        new org.apache.hadoop.fs.Path(s"$staging/_replaced/$rel")
+      def moveAside(rel: String): Unit = {
+        // only move a live piece aside while OUR manifest is still live:
+        // a concurrent recoverer that finished this manifest deletes the
+        // staging dir, and blindly recreating it would park the committed
+        // piece in a manifest-less staging dir (which a later writer-path
+        // recover would discard)
+        if (!f.exists(new org.apache.hadoop.fs.Path(staging, ManifestFile)))
+          throw new java.io.IOException(
+            s"staging $staging vanished mid-apply (concurrent " +
+              "recoverer finished this manifest) — aborting replay")
+        f.mkdirs(aside(rel).getParent)
+        // the aside rename MUST be verified: on local/HDFS filesystems,
+        // renaming into a still-existing non-empty directory can NEST src
+        // under dest and report success — silent corruption, strictly
+        // worse than failing here
+        if (!f.rename(live(rel), aside(rel)) && f.exists(live(rel)))
+          throw new java.io.IOException(
+            s"cannot move live piece aside: ${live(rel)} -> ${aside(rel)}")
+      }
       pieces.foreach { rel =>
         val src = new org.apache.hadoop.fs.Path(s"$staging/$rel")
-        val dest = new org.apache.hadoop.fs.Path(s"$path/$rel")
-        val aside = new org.apache.hadoop.fs.Path(s"$staging/_replaced/$rel")
+        val dest = live(rel)
         if (f.exists(src)) {
-          if (f.exists(dest)) {
-            // only move a live piece aside while OUR manifest is still
-            // live: a concurrent recoverer that finished this manifest
-            // deletes the staging dir, and blindly recreating it would
-            // park the committed piece in a manifest-less staging dir
-            // (which a later writer-path recover would discard)
-            if (!f.exists(new org.apache.hadoop.fs.Path(staging,
-              ManifestFile)))
-              throw new java.io.IOException(
-                s"staging $staging vanished mid-apply (concurrent " +
-                  "recoverer finished this manifest) — aborting replay")
-            f.mkdirs(aside.getParent)
-            // the aside rename MUST be verified: on local/HDFS
-            // filesystems, renaming into a still-existing non-empty
-            // directory can NEST src under dest and report success —
-            // silent corruption, strictly worse than failing here
-            if (!f.rename(dest, aside) && f.exists(dest))
-              throw new java.io.IOException(
-                s"cannot move live piece aside: $dest -> $aside")
-          } else f.mkdirs(dest.getParent) // a new piece's parent (band_idx=)
+          if (f.exists(dest)) moveAside(rel)
+          else f.mkdirs(dest.getParent) // a new piece's parent (band_idx=)
           if (!f.rename(src, dest) && !(f.exists(dest) && !f.exists(src)))
             // a concurrent recoverer may win the rename between our
             // exists-checks — dest present + src gone is success
@@ -327,13 +334,28 @@ private[operators] object StagedCommit {
           // src gone, dest gone: an interleaved recoverer can strand the
           // freshly-applied piece in the aside slot (it moved dest aside
           // after the other's swap) — restore it before declaring corrupt
-          if (!(f.exists(aside) && f.rename(aside, dest)))
+          if (!(f.exists(aside(rel)) && f.rename(aside(rel), dest)))
             throw new java.io.IOException(
               s"staged merge corrupt: $rel missing from $staging, $path " +
                 s"and the aside slot — refusing to commit " +
                 s"generation $targetGen")
         }
       }
+      // removals after every swap: a lost staged piece fails above
+      // before the generation drops anything
+      removed.foreach(rel => if (f.exists(live(rel))) moveAside(rel))
+      // a directory the removals emptied goes too (the `_tombstones`
+      // table once its last part is folded, a band dir whose last leaf
+      // died): nothing but hidden files (`_SUCCESS`, checksums) left —
+      // never a `_temporary` dir, an append still in flight
+      removed.filter(_.contains('/'))
+        .map(rel => live(rel.substring(0, rel.lastIndexOf('/'))))
+        .distinct.foreach { d =>
+          if (f.exists(d) && f.listStatus(d).forall(st => st.isFile &&
+            (st.getPath.getName.startsWith("_") ||
+              st.getPath.getName.startsWith("."))))
+            f.delete(d, true)
+        }
       // the generation commits LAST, and only once (commitGen checks
       // the recorded epoch) — recovery after a crash between the swaps
       // and this write re-enters with the same target

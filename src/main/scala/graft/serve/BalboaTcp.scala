@@ -78,7 +78,7 @@ object BalboaTcp {
     out.write(b, 0, b.length)
   }
 
-  private[serve] def writeBin(out: ByteArrayOutputStream,
+  private[graft] def writeBin(out: ByteArrayOutputStream,
       b: Array[Byte]): Unit = {
     if (b.length <= 0xff) { out.write(0xc4); out.write(b.length) }
     else if (b.length <= 0xffff) {
@@ -91,7 +91,7 @@ object BalboaTcp {
     out.write(b, 0, b.length)
   }
 
-  private[serve] def writeUint(out: ByteArrayOutputStream, v: Long): Unit = {
+  private[graft] def writeUint(out: ByteArrayOutputStream, v: Long): Unit = {
     require(v >= 0, s"negative uint $v")
     if (v <= 0x7f) out.write(v.toInt)
     else if (v <= 0xff) { out.write(0xcc); out.write(v.toInt) }

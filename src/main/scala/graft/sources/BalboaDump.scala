@@ -151,44 +151,17 @@ object BalboaDump {
 
   // ------------------------------------------------------------ encode
 
-  private def writeUint(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
-    require(v >= 0, s"balboa dump: negative uint $v")
-    if (v <= 0x7f) out.write(v.toInt)
-    else if (v <= 0xff) { out.write(0xcc); out.write(v.toInt) }
-    else if (v <= 0xffff) {
-      out.write(0xcd); out.write((v >> 8).toInt); out.write(v.toInt)
-    } else if (v <= 0xffffffffL) {
-      out.write(0xce)
-      var s = 24
-      while (s >= 0) { out.write((v >> s).toInt & 0xff); s -= 8 }
-    } else {
-      out.write(0xcf)
-      var s = 56
-      while (s >= 0) { out.write((v >> s).toInt & 0xff); s -= 8 }
-    }
-  }
-
-  private def writeBin(out: java.io.ByteArrayOutputStream, s: String): Unit = {
-    val b = s.getBytes("UTF-8")
-    if (b.length <= 0xff) { out.write(0xc4); out.write(b.length) }
-    else if (b.length <= 0xffff) {
-      out.write(0xc5); out.write(b.length >> 8); out.write(b.length & 0xff)
-    } else {
-      out.write(0xc6)
-      var s2 = 24
-      while (s2 >= 0) { out.write((b.length >> s2) & 0xff); s2 -= 8 }
-    }
-    out.write(b, 0, b.length)
-  }
-
   private[graft] def encodeEntry(out: java.io.ByteArrayOutputStream,
       rrname: String, rrtype: String, rdata: String, sensor: String,
       count: Long, firstSec: Long, lastSec: Long): Unit = {
+    // the wire's msgpack writers: one encoder for dump and TCP bytes
+    import graft.serve.BalboaTcp.{writeBin, writeUint}
+    def bin(s: String): Unit = writeBin(out, s.getBytes("UTF-8"))
     out.write(0x87) // fixmap(7), field order as protocol.c:155-169
-    out.write(0x00); writeBin(out, rrname)
-    out.write(0x01); writeBin(out, rrtype)
-    out.write(0x02); writeBin(out, rdata)
-    out.write(0x03); writeBin(out, sensor)
+    out.write(0x00); bin(rrname)
+    out.write(0x01); bin(rrtype)
+    out.write(0x02); bin(rdata)
+    out.write(0x03); bin(sensor)
     out.write(0x04); writeUint(out, count)
     out.write(0x05); writeUint(out, firstSec)
     out.write(0x06); writeUint(out, lastSec)

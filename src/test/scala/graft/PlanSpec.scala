@@ -474,6 +474,69 @@ class PlanSpec extends AnyFunSuite {
     assert(corpusIds() == (0L to 23L).toSet)
   }
 
+  // A vacuum is a writer: a merge whose manifest is committed but not yet
+  // applied replays BEFORE the fold, so a tombstone on one of its ids
+  // folds too instead of being dropped while the id comes back.
+  private def smallVecs(ids: Seq[Long]) =
+    ids.map(i => (i, (0 until 8).map(d =>
+      (((i * 31 + d * 17) % 13) - 6).toFloat / 3f)))
+      .toDF("vec_id", "embedding")
+
+  private def smallDocs(ids: Seq[Long]) =
+    ids.map(i => (i, s"alpha beta gamma delta w$i x$i y$i z$i common"))
+      .toDF("doc_id", "text")
+
+  test("IVF-PQ vacuum after a committed merge folds the merged ids too") {
+    import graft.operators.Similarity
+    val dir = Files.createTempDirectory("graft-plan-pqvacmerge").toString
+    Similarity.writeIvfPqIndex(smallVecs(0L to 9L), "vec_id", "embedding",
+      Seq(0L, 1L), dir, m = 2, ks = 4, iters = 1, dim = 8)
+    Similarity.stageIvfPqMerge(spark, dir, smallVecs(10L to 15L), "vec_id",
+      "embedding")
+    Similarity.deleteFromIvfIndex(spark, dir, Seq(12L))
+    assert(Similarity.vacuumIvfIndex(spark, dir) == 1L)
+    Similarity.recoverIvfPqMerge(spark, dir)
+    val ids = spark.read.parquet(s"$dir/vectors").select(col("id"))
+      .collect().map(_.getLong(0)).toSet
+    assert(ids == (0L to 15L).toSet - 12L, ids)
+  }
+
+  test("band vacuum after a committed merge folds the merged ids too") {
+    import graft.operators.Dedup
+    val dir = Files.createTempDirectory("graft-plan-bandvacmerge").toString
+    Dedup.writeBandIndex(smallDocs(0L to 9L), "text", "doc_id", dir)
+    Dedup.stageBandMerge(spark, dir, smallDocs(10L to 14L), "text",
+      "doc_id", 1L)
+    Dedup.deleteFromBandIndex(spark, dir, Seq(12L))
+    assert(Dedup.vacuumBandIndex(spark, dir) > 0L)
+    val ids = Dedup.loadBandIndex(spark, dir).select(col("corpus_id"))
+      .distinct().collect().map(_.getLong(0)).toSet
+    assert(ids == (0L to 14L).toSet - 12L, ids)
+  }
+
+  test("plain IVF probe replays a committed vacuum before reading") {
+    import graft.operators.Similarity
+    val vecs = smallVecs(0L to 19L)
+    val dir = Files.createTempDirectory("graft-plan-ivfvacread").toString
+    Similarity.writeIvfIndex(vecs, "vec_id", "embedding", Seq(0L, 1L), dir)
+    val q = vecs.filter(col("vec_id") === 5)
+      .select(col("embedding")).head().getSeq[Float](0)
+    def top(): Seq[Long] = Similarity
+      .ivfIndexTopK(spark, dir, q, queryId = 5L, k = 20, nprobe = 2)
+      .collect().map(_.getLong(0)).toSeq
+    val before = top()
+    Similarity.deleteFromIvfIndex(spark, dir, before.take(2))
+    // the vacuum's manifest commits; nothing is applied yet
+    val (staging, removed) = Similarity.stageIvfVacuum(spark, dir)
+    assert(removed == 2L)
+    assert(new java.io.File(s"${staging.get}/_manifest.json").exists())
+    assert(top() == before.drop(2))
+    // the probe finished the vacuum: staging and tombstones are gone
+    assert(!new java.io.File(staging.get).exists())
+    assert(!new java.io.File(s"$dir/_tombstones").exists())
+    assert(top() == before.drop(2))
+  }
+
   test("IVF-PQ probe: partition pruning + broadcast ADC table + TakeOrdered") {
     val vecs = (0L to 40L).map { i =>
       val rnd = new scala.util.Random(i)

@@ -18,7 +18,14 @@ import graft.operators._
   *  (c) swap half done (the first listed piece already renamed): the
   *      reader path heals it;
   *  (d) a listed piece missing from both staging and live: recovery
-  *      throws `IOException` and the epoch stays where it was. */
+  *      throws `IOException` and the epoch stays where it was.
+  *
+  * Every family's REBUILD commits the same way (a crash before its
+  * manifest is discarded by the next writer; a committed one replays on
+  * the reader path, once, and drops the old tombstones), and a manifest's
+  * `removed` list heals from a half-applied state. A rebuild or vacuum
+  * removes only the tombstone parts it read: a delete appended between
+  * its manifest and the replay still masks afterwards. */
 class StagedCommitSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -262,5 +269,184 @@ class StagedCommitSpec extends AnyFunSuite {
     ObservationStore.mergeBatch(spark, p, storeBase, 4, Some(0L))
     assert(ObservationStore.readEpoch(spark, p).contains(1L))
     assert(storeTables(p) == oneBuild)
+  }
+
+  /** A rebuild over a family's built artifact: `stage` it without
+    * applying (returns the staging dir), `run` it uninterrupted;
+    * `delete` records a deletion (tombstoned families) the rebuild drops.
+    * Band rebuilds with fewer bands, so its stale band dirs go too. */
+  private case class Rebuild(stage: String => String, run: String => Unit,
+      delete: Option[String => Unit])
+
+  private val rebuilds = Seq(
+    "bm25" -> Rebuild(
+      p => Retrieval.stageIndexBuild(docs(20L to 29L), "text", "doc_id", p, 4),
+      p => Retrieval.writeIndex(docs(20L to 29L), "text", "doc_id", p, 4),
+      Some(p => Retrieval.deleteFromIndex(spark, p, docs(Seq(3L)), "text",
+        "doc_id"))),
+    "positional" -> Rebuild(
+      p => Retrieval.stagePositionalBuild(docs(20L to 29L), "text",
+        "doc_id", p, 4),
+      p => Retrieval.writePositionalIndex(docs(20L to 29L), "text",
+        "doc_id", p, 4),
+      Some(p => Retrieval.deleteFromPositionalIndex(spark, p, Seq(3L)))),
+    "ivfpq" -> Rebuild(
+      // codebooks seed from ids 0 until ks
+      p => Similarity.stageIvfPqBuild(vectors((0L to 3L) ++ (20L to 29L)),
+        "vec_id", "embedding", Seq(20L, 21L), p, 2, 4, 1, 8),
+      p => Similarity.writeIvfPqIndex(vectors((0L to 3L) ++ (20L to 29L)),
+        "vec_id", "embedding", Seq(20L, 21L), p, m = 2, ks = 4, iters = 1,
+        dim = 8),
+      Some(p => Similarity.deleteFromIvfIndex(spark, p, Seq(3L)))),
+    "lm" -> Rebuild(
+      p => Curation.stageLmBuild(docs(20L to 29L), "text", p),
+      p => Curation.writeLm(docs(20L to 29L), "text", p), None),
+    "band" -> Rebuild(
+      p => Dedup.stageBandBuild(docs(20L to 29L), "text", "doc_id", p, 16, 2),
+      p => Dedup.writeBandIndex(docs(20L to 29L), "text", "doc_id", p,
+        bands = 2),
+      Some(p => Dedup.deleteFromBandIndex(spark, p, Seq(3L)))),
+    "bpe" -> Rebuild(p => BpeVocab.stage(spark, vocab2, p),
+      p => BpeVocab.write(spark, vocab2, p), None))
+
+  private def family(name: String): Family = families.find(_.name == name).get
+
+  /** The built artifact with its deletion recorded. */
+  private def deleted(fam: Family, rb: Rebuild): String = {
+    val p = fresh(fam)
+    rb.delete.foreach(_(p))
+    p
+  }
+
+  private val rebuildControls = scala.collection.mutable.Map.empty[String,
+    (Option[Long], Seq[Seq[String]])]
+
+  private def rebuildControl(fam: Family, rb: Rebuild) =
+    rebuildControls.getOrElseUpdate(fam.name, {
+      val p = deleted(fam, rb)
+      rb.run(p)
+      snapshot(fam, p)
+    })
+
+  rebuilds.foreach { case (name, rb) =>
+    val fam = family(name)
+    test(s"$name rebuild: (a) staging without a manifest is discarded by the next writer") {
+      val p = deleted(fam, rb)
+      val before = fam.epoch(p)
+      val staging = rb.stage(p)
+      assert(new File(s"$staging/_manifest.json").delete())
+      fam.read(p)
+      assert(new File(staging).exists())
+      assert(fam.epoch(p) == before)
+      rb.run(p)
+      assert(!new File(staging).exists())
+      assert(!new File(s"$p/_tombstones").exists())
+      assert(snapshot(fam, p) == rebuildControl(fam, rb))
+    }
+
+    test(s"$name rebuild: (b) a committed manifest replays on the reader path, once") {
+      val p = deleted(fam, rb)
+      val before = fam.epoch(p)
+      val staging = rb.stage(p)
+      assert(fam.epoch(p) == before)
+      assert(rb.delete.isEmpty || new File(s"$p/_tombstones").exists())
+      fam.read(p)
+      assert(!new File(staging).exists())
+      assert(!new File(s"$p/_tombstones").exists())
+      assert(snapshot(fam, p) == rebuildControl(fam, rb))
+      assert(fam.epoch(p) == before.map(_ + 1))
+      fam.read(p)
+      assert(fam.epoch(p) == before.map(_ + 1))
+    }
+
+    rb.delete.foreach { del =>
+      test(s"$name rebuild: (d) a delete appended after the manifest survives the replay") {
+        val p = deleted(fam, rb)
+        rb.stage(p)
+        del(p) // id 3 again, after the rebuild listed its tombstones
+        fam.read(p)
+        assert(spark.read.parquet(s"$p/_tombstones").collect()
+          .map(_.getLong(0)).toSeq == Seq(3L))
+        assert(snapshot(fam, p) == rebuildControl(fam, rb))
+      }
+    }
+  }
+
+  /** A vacuum whose manifest removes whole leaves: `delete` kills every
+    * row of some leaves (never all), `stage` stops the vacuum after its
+    * manifest, `run` vacuums uninterrupted; `deleteIds` tombstones ids of
+    * the `key` column of the table at `dir` ("" = the root). */
+  private case class Vacuum(delete: String => Unit, stage: String => String,
+      run: String => Unit, deleteIds: (String, Seq[Long]) => Unit,
+      dir: String, key: String)
+
+  private val vacuums = Seq(
+    "ivfpq" -> Vacuum(
+      p => Similarity.deleteFromIvfIndex(spark, p,
+        spark.read.parquet(s"$p/vectors").filter($"cluster" === 0)
+          .select($"id")),
+      p => Similarity.stageIvfVacuum(spark, p)._1.get,
+      p => Similarity.vacuumIvfIndex(spark, p): Unit,
+      Similarity.deleteFromIvfIndex(spark, _, _), "vectors", "id"),
+    "band" -> Vacuum(
+      p => {
+        Dedup.mergeBandIndex(spark, p, docs(10L to 14L), "text", "doc_id",
+          1L)
+        Dedup.deleteFromBandIndex(spark, p, 10L to 14L)
+      },
+      p => Dedup.stageBandVacuum(spark, p)._1.get,
+      p => Dedup.vacuumBandIndex(spark, p): Unit,
+      Dedup.deleteFromBandIndex(spark, _, _), "", "corpus_id"))
+
+  private val vacuumControls = scala.collection.mutable.Map.empty[String,
+    (Option[Long], Seq[Seq[String]])]
+
+  vacuums.foreach { case (name, v) =>
+    val fam = family(name)
+    test(s"$name vacuum: (c) a half-applied removal list heals on the reader path") {
+      def deletedLeaves(): String = { val p = fresh(fam); v.delete(p); p }
+      val control = vacuumControls.getOrElseUpdate(name, {
+        val p = deletedLeaves()
+        v.run(p)
+        snapshot(fam, p)
+      })
+      val p = deletedLeaves()
+      val before = fam.epoch(p)
+      val staging = v.stage(p)
+      val manifest = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$staging/_manifest.json")), "UTF-8")
+      val removed = """"removed"\s*:\s*"([^"]*)"""".r
+        .findFirstMatchIn(manifest).get.group(1).split(",").toSeq
+      assert(removed.size >= 2 && removed.last.startsWith("_tombstones/"),
+        removed)
+      // the first removal already moved aside, as an interrupted apply
+      // leaves it
+      val aside = new File(s"$staging/_replaced/${removed.head}")
+      aside.getParentFile.mkdirs()
+      assert(new File(s"$p/${removed.head}").renameTo(aside))
+      fam.read(p)
+      assert(!new File(staging).exists())
+      assert(removed.forall(r => !new File(s"$p/$r").exists()))
+      assert(!new File(s"$p/_tombstones").exists())
+      assert(snapshot(fam, p) == control)
+      assert(fam.epoch(p) == before.map(_ + 1))
+    }
+
+    test(s"$name vacuum: (e) a delete appended after the manifest stays masked") {
+      val p = fresh(fam)
+      v.delete(p)
+      def visible(): Set[Long] = TombstoneMask.antiJoin(spark,
+          spark.read.parquet(if (v.dir.isEmpty) p else s"$p/${v.dir}"), p,
+          v.key, v.key)
+        .select(v.key).collect().map(_.getLong(0)).toSet
+      val before = visible()
+      val late = before.min
+      v.stage(p)
+      v.deleteIds(p, Seq(late))
+      fam.read(p)
+      assert(visible() == before - late)
+      assert(spark.read.parquet(s"$p/_tombstones").collect()
+        .map(_.getLong(0)).toSeq == Seq(late))
+    }
   }
 }
