@@ -637,8 +637,9 @@ object Bench {
     // star-contraction CC over ONE 5000-hop chain — the pathological
     // diameter no real dedup graph reaches, timed per round so the
     // O(log diameter) convergence and starRound's 3-exchange budget
-    // have a cross-round trend line IN the driver artifact (the
-    // BenchScaleText number never landed there — separate main).
+    // have a cross-round trend line IN the Bench artifact (README's
+    // Measured scale figures came from standalone mains, since retired,
+    // and never landed there).
     // No union-find fast path exists on this operator, so the figure
     // is the distributed loop, not a driver collect.
     val starSec =

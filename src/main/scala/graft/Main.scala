@@ -21,10 +21,11 @@ import graft.serve.QueryServer
   * }}}
   *
   * `serve` ≙ `balboa serve` (GraphQL + REST endpoints, QueryServer);
-  * `query` ≙ `balboa query [netmask]` (`cmd/balboa/cmds/query.go:60-61`) —
-  * but CIDR subjects run SERVER-side as one range scan on the persisted
-  * numeric `rdata_ip` column instead of the reference's client-side
-  * per-IP expansion; `dump`/`replay`/`backup` ≙ the backend-console
+  * `query` ≙ `balboa query [netmask]` (`cmd/balboa/cmds/query.go:60-61`),
+  * answered by the store's driver-local readers like `serve` and printed
+  * as `/pdns/query`'s NDJSON lines — but a CIDR subject is one fan over
+  * the inverted copy instead of the reference's client-side per-IP
+  * expansion; `dump`/`replay`/`backup` ≙ the backend-console
   * tools (`backend/balboa-backend-console/main.c:44-150`). `build` and
   * `merge` are the Spark-native bulk paths (there is no wire protocol —
   * observation batches arrive as parquet/stream micro-batches).
@@ -55,6 +56,8 @@ object Main {
       |  merge  --obs <parquet> --store <dir>
       |  serve  --store <dir> [--port 8080] [--tcp-port <p>]
       |  query  <subject|cidr> --store <dir> [--limit 1000]
+      |         (prints /pdns/query's NDJSON lines: rrname rdata rrtype
+      |          sensor_id count time_first time_last, times in unix seconds)
       |  dump   --store <dir> --out <dir>
       |  replay --dump <dir> --store <dir> [--buckets 64]
       |  backup --store <dir> --out <dir>
@@ -147,11 +150,10 @@ object Main {
           throw new IllegalArgumentException("query needs a subject"))
         val store = ObservationStore.load(spark, required(flags, "store"))
         val limit = flags.get("limit").map(_.toInt).getOrElse(1000)
-        val df =
-          if (subject.contains("/")) store.cidrQuery(subject, limit)
-          else store.restQuery(subject, limit)
-        val it = df.toJSON.toLocalIterator()
-        while (it.hasNext) println(it.next())
+        val rows =
+          if (subject.contains("/")) store.answerCidr(subject, limit)
+          else QueryServer.pdnsQuery(store, subject, limit)
+        rows.foreach(o => println(QueryServer.ndjsonLine(o)))
         null
       case "dump" =>
         val store = ObservationStore.load(spark, required(flags, "store"))

@@ -54,7 +54,8 @@ object DistributedOrder {
     * is then fine because groups that numerous are small). The order
     * must be TOTAL within a group (include a tie-break id).
     *
-    * Measured regime boundary (BenchScaleRank, local[32]): with
+    * Measured regime boundary (README, Measured: the round-16
+    * grouped-order entry, local[32]): with
     * 800k-row groups the plain window WINS (3.0 s vs 7.6 s — five
     * in-memory sorts beat a shuffle+join pipeline); at 8M-row groups
     * this engine wins (206 s vs 284 s) and the gap grows with group
@@ -71,7 +72,8 @@ object DistributedOrder {
     // meaningful if both consumers see the SAME physical partitioning —
     // re-executing the range shuffle per consumer lets AQE/sampling
     // land different boundaries and the offsets silently misalign
-    // (caught by BenchScaleRank at 4M rows: max rank 812k ≠ 800k).
+    // (caught at 4M rows, max rank 812k ≠ 800k: README, Measured, the
+    // round-16 grouped-order entry).
     val local = df.repartitionByRange(group ++ order: _*)
       .withColumn("_pid", spark_partition_id())
       .withColumn("_lv", row_number().over(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -109,13 +109,19 @@ object ObservationStore {
   /** The one whole-copy stage step ([[writeDual]], [[rebucket]]): write
     * both copies of `agg` under `stg.dir` and return the manifest that
     * swaps each copy DIRECTORY as one piece — a piecewise bucket swap
-    * would leave the replaced store's other bucket dirs live. */
+    * would leave the replaced store's other bucket dirs live. An empty
+    * `agg` writes no bucket, so its copies each get one schema-only
+    * bucket: the store still loads, and its readers answer empty. */
   private def stageCopies(stg: StagedCommit.Staging, agg: DataFrame,
       numBuckets: Int): Option[StagedCommit.Manifest] = {
+    val spark = agg.sparkSession
     eachCopy { case (sub, keyCol, sortCols) =>
       writeCopy(agg, s"${stg.dir}/$sub", keyCol, sortCols, numBuckets)
+      if (StagedCommit.stagedPartDirs(spark, s"${stg.dir}/$sub", "bucket=").isEmpty)
+        StagedCommit.stageEmptyPieces(spark, withDerived(agg, keyCol),
+          Seq(s"${stg.dir}/$sub/bucket=0"))
     }
-    storeManifest(agg.sparkSession, stg, numBuckets, wholeCopies = true)
+    storeManifest(spark, stg, numBuckets, wholeCopies = true)
   }
 
   /** `f` over both copies on two threads: the copies are independent
@@ -143,13 +149,6 @@ object ObservationStore {
 
   /** Columns that exist only in the on-disk layout, never in results. */
   private[operators] val LayoutCols = Seq("bucket", "rdata_ip", "rdata_ip6")
-
-  /** A result row as [[Observation]] fields; a TIMESTAMP_NTZ store reads
-    * in the session time zone. */
-  private val ObsCols: Seq[Column] =
-    Seq("rrname", "sensor_id", "rrtype", "rdata", "count").map(col) ++
-      Seq("first_seen", "last_seen").map(c => col(c).cast("timestamp").as(c))
-  private val ObsEncoder = Encoders.product[Observation]
 
   // All store paths go through Hadoop FS, so hdfs:// / s3a:// stores work
   // the same as local ones. Shared with [[Retrieval]]'s staged index merge.
@@ -204,11 +203,15 @@ object ObservationStore {
     bucketsOf(path, StagedCommit.readMeta(spark, path))
   }
 
+  /** `df` with the copy's persisted derived columns. */
+  private def withDerived(df: DataFrame, keyCol: String): DataFrame =
+    derivedCols(keyCol).foldLeft(df) {
+      case (d, (name, c)) => d.withColumn(name, c)
+    }
+
   private def writeCopy(df: DataFrame, path: String, keyCol: String,
       sortCols: Seq[String], numBuckets: Int): Unit =
-    bloomOpts(derivedCols(keyCol).foldLeft(df) {
-        case (d, (name, c)) => d.withColumn(name, c)
-      }
+    bloomOpts(withDerived(df, keyCol)
       .withColumn("bucket", bucketOf(col(keyCol), numBuckets))
       .repartition(col("bucket"))
       .sortWithinPartitions(("bucket" +: sortCols).map(col): _*)
@@ -703,6 +706,8 @@ object ObservationStore {
 
   /** In-memory store over an already-aggregated DataFrame (both "copies"
     * share the plan; Catalyst pushes key filters below the aggregate).
+    * It has the plan methods only: it has no readers, so it is not
+    * served.
     */
   def inMemory(agg: DataFrame): ObservationStore = new ObservationStore(agg, agg)
 }
@@ -714,28 +719,32 @@ object ObservationStore {
 final class ObservationStore(byRrname: DataFrame, byRdata: DataFrame,
     numBuckets: Option[Int] = None, diskPath: Option[String] = None) {
 
-  // ---------------------------------------------------------- fast path
-  // Driver-local point readers (see [[PointReader]]): built lazily for
-  // every disk-backed store. A reader that finds an incompatible file
-  // shape reports available=false and the store falls back to the Spark
-  // plan path.
+  // ---------------------------------------------------------- serving
+  // Driver-local point readers (see [[PointReader]]), one per copy: a
+  // store [[ObservationStore.load]]ed from disk has them and answers
+  // through them alone; an in-memory store has none and is not served.
   private lazy val pointReaders: Option[(PointReader, PointReader)] =
-    for {
-      path <- diskPath
-      n <- numBuckets
-      spark = byRrname.sparkSession
-      fwd = new PointReader(spark, path, "by_rrname", "rrname", n)
-      inv = new PointReader(spark, path, "by_rdata", "rdata", n)
-      if fwd.available && inv.available
-    } yield (fwd, inv)
+    for (path <- diskPath; n <- numBuckets) yield {
+      val spark = byRrname.sparkSession
+      (new PointReader(spark, path, "by_rrname", "rrname", n),
+        new PointReader(spark, path, "by_rdata", "rdata", n))
+    }
+
+  private def notServed = new IllegalStateException(
+    "an in-memory store is not served: write it with " +
+      "ObservationStore.writeDual and serve ObservationStore.load of that path")
+
+  /** Throws unless this store has readers — what the servers check at
+    * construction. */
+  private[graft] def requireServed(): Unit =
+    if (pointReaders.isEmpty) throw notServed
 
   /** Driver-local point lookup — the ms-class serving path. Same
     * semantics and result shape as [[entries]] (access-path selection on
     * rrname-present, conjunctive residual equality, limit), but executed
     * on the calling thread via a pruned parquet read instead of a Spark
-    * job, dropping the per-query planning+scheduling floor. Returns None
-    * when the fast path is unavailable (in-memory store, or files of a
-    * shape the readers refuse) — [[answerPoint]] then runs [[entries]].
+    * job, dropping the per-query planning+scheduling floor. None on an
+    * in-memory store.
     */
   def servePoint(
       rrname: Option[String] = None,
@@ -763,7 +772,7 @@ final class ObservationStore(byRrname: DataFrame, byRdata: DataFrame,
     * sorted file. Same result set as `entriesPrefix(prefix, limit)`
     * when the match count fits the limit (both paths are unordered
     * scans, so an overflowing limit returns an arbitrary subset on
-    * either). None when the fast path is unavailable. */
+    * either). None on an in-memory store. */
   def servePrefix(prefix: String, limit: Int = 1000,
       rrtype: Option[String] = None, sensorId: Option[String] = None)
       : Option[Seq[graft.model.Observation]] = {
@@ -784,7 +793,7 @@ final class ObservationStore(byRrname: DataFrame, byRdata: DataFrame,
     * families and for non-canonical spellings (`010.0.0.1`) that no
     * string-prefix seek would find; a binding limit returns `limit` of
     * them (an arbitrary subset on either path). A malformed block throws
-    * what `cidrQuery` throws. None when the fast path is unavailable. */
+    * what `cidrQuery` throws. None on an in-memory store. */
   def serveCidr(cidr: String, limit: Int = 1000)
       : Option[Seq[graft.model.Observation]] = {
     val keep: Array[Byte] => Boolean =
@@ -812,86 +821,58 @@ final class ObservationStore(byRrname: DataFrame, byRdata: DataFrame,
       rrtype: Option[String] = None,
       sensorId: Option[String] = None,
       limit: Int = 1000): Option[Seq[org.apache.spark.sql.Row]] =
-    servePoint(rrname, rdata, rrtype, sensorId, limit)
-      .map(_.map(obsRow))
-
-  private def obsRow(o: graft.model.Observation): org.apache.spark.sql.Row =
-    new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-      Array[Any](o.rrname, o.sensor_id, o.rrtype, o.rdata, o.count,
-        o.first_seen, o.last_seen),
-      Model.observationSchema)
+    servePoint(rrname, rdata, rrtype, sensorId, limit).map(_.map(o =>
+      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+        Array[Any](o.rrname, o.sensor_id, o.rrtype, o.rdata, o.count,
+          o.first_seen, o.last_seen),
+        Model.observationSchema)))
 
   // ---------------------------------------------------------- answering
-  // One always-answering method per query shape, the only entry points
-  // the serving front ends call: the driver-local readers when the store
-  // has them, else the plan below, collected — at most `limit` rows on
-  // either path, materialized once.
+  // One answering method per query shape, the only entry points the
+  // serving front ends call: the readers' rows (at most `limit`), or the
+  // in-memory refusal.
 
-  /** [[servePoint]], else the [[entries]] plan. */
+  /** [[servePoint]]'s rows. */
   def answerPoint(
       rrname: Option[String] = None,
       rdata: Option[String] = None,
       rrtype: Option[String] = None,
       sensorId: Option[String] = None,
       limit: Int = 1000): Seq[Observation] =
-    servePoint(rrname, rdata, rrtype, sensorId, limit).getOrElse(
-      collectObs(entries(rrname, rdata, rrtype, sensorId, limit)))
+    servePoint(rrname, rdata, rrtype, sensorId, limit).getOrElse(throw notServed)
 
-  /** [[servePrefix]], else the [[entriesPrefix]] plan. */
+  /** [[servePrefix]]'s rows. */
   def answerPrefix(prefix: String, limit: Int = 1000,
       rrtype: Option[String] = None, sensorId: Option[String] = None)
       : Seq[Observation] =
-    servePrefix(prefix, limit, rrtype, sensorId).getOrElse(
-      collectObs(entriesPrefix(prefix, limit, rrtype, sensorId)))
+    servePrefix(prefix, limit, rrtype, sensorId).getOrElse(throw notServed)
 
-  /** [[serveCidr]], else the [[cidrQuery]] plan. */
+  /** [[serveCidr]]'s rows. */
   def answerCidr(cidr: String, limit: Int = 1000): Seq[Observation] =
-    serveCidr(cidr, limit).getOrElse(collectObs(cidrQuery(cidr, limit)))
+    serveCidr(cidr, limit).getOrElse(throw notServed)
 
   /** Q6 for the serving front ends: the aliases of each aliasable entry,
-    * keyed by the entry's (rrname, sensor_id, rdata). With readers, each
-    * entry's aliases ARE an inverted point lookup — key `rdata`, residual
-    * `sensor_id` — resolved on the calling thread; without, the
-    * [[aliases]] self-join over exactly `entries`, collected. Plan-path
-    * parity, pinned by PointReaderSpec: same aliasable-type gate, same
-    * rrname-differs predicate, same (rrname, rrtype) ordering (total —
-    * the store key is unique within an (rdata, sensor_id) group) and the
-    * same per-entry cap applied after the sort. */
+    * keyed by the entry's (rrname, sensor_id, rdata). Each entry's
+    * aliases ARE an inverted point lookup — key `rdata`, residual
+    * `sensor_id` — resolved on the calling thread. Parity with the
+    * [[aliases]] plan, pinned by PointReaderSpec: same aliasable-type
+    * gate, same rrname-differs predicate, same (rrname, rrtype) ordering
+    * (total — the store key is unique within an (rdata, sensor_id)
+    * group) and the same per-entry cap applied after the sort. */
   def answerAliases(entries: Seq[Observation], perEntryLimit: Int = 1000,
       aliasableTypes: Seq[String] = Seq("A", "AAAA"))
-      : Map[(String, String, String), Seq[Observation]] =
-    pointReaders match {
-      case Some((_, inv)) =>
-        entries.filter(e => aliasableTypes.contains(e.rrtype))
-          .map(e => (e.rrname, e.sensor_id, e.rdata))
-          .distinct
-          .map { case key @ (n, s, d) =>
-            key -> inv.lookup(d, Seq("sensor_id" -> s), Int.MaxValue)
-              .filter(_.rrname != n)
-              .sortBy(o => (o.rrname, o.rrtype))
-              .take(perEntryLimit)
-          }.toMap
-      case None =>
-        aliases(entriesDfFromRows(entries.map(obsRow)), perEntryLimit,
-            aliasableTypes)
-          .select(col("e_rrname"), struct(ObservationStore.ObsCols: _*))
-          .as(Encoders.tuple(Encoders.STRING, ObservationStore.ObsEncoder))
-          .collect().toSeq
-          .groupMap { case (n, o) => (n, o.sensor_id, o.rdata) }(_._2)
-    }
-
-  /** A plan's rows on the driver as [[Observation]]s. */
-  private def collectObs(df: DataFrame): Seq[Observation] =
-    df.select(ObservationStore.ObsCols: _*).as(ObservationStore.ObsEncoder)
-      .collect().toSeq
-
-  /** Materialized rows back into a (LocalRelation-rooted) DataFrame, for
-    * feeding served rows into a Spark op (the [[answerAliases]] fallback
-    * join). */
-  def entriesDfFromRows(rows: Seq[org.apache.spark.sql.Row]): DataFrame =
-    byRrname.sparkSession.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava,
-      Model.observationSchema)
+      : Map[(String, String, String), Seq[Observation]] = {
+    val (_, inv) = pointReaders.getOrElse(throw notServed)
+    entries.filter(e => aliasableTypes.contains(e.rrtype))
+      .map(e => (e.rrname, e.sensor_id, e.rdata))
+      .distinct
+      .map { case key @ (n, s, d) =>
+        key -> inv.lookup(d, Seq("sensor_id" -> s), Int.MaxValue)
+          .filter(_.rrname != n)
+          .sortBy(o => (o.rrname, o.rrtype))
+          .take(perEntryLimit)
+      }.toMap
+  }
 
   /** Q1/Q2/Q3/Q4/Q8 — `entries`: conjunctive equality filters, access-path
     * selection (rrname present → forward copy, else inverted copy —
@@ -1009,9 +990,7 @@ final class ObservationStore(byRrname: DataFrame, byRdata: DataFrame,
     * in-memory stores compute the parse at read time.
     *
     * Serving answers CIDR blocks with [[serveCidr]] (same rows, no Spark
-    * job); this plan is its fallback for stores without driver-local
-    * readers — in-memory stores, and files of a shape the readers
-    * refuse.
+    * job); this plan is its reference.
     */
   def cidrQuery(cidr: String, limit: Int = 1000): DataFrame = {
     val pred =

@@ -20,7 +20,7 @@ import org.apache.parquet.hadoop.metadata.{CompressionCodecName, ParquetMetadata
 import org.apache.parquet.hadoop.util.{HadoopCodecs, HadoopInputFile}
 import org.apache.parquet.io.ParquetDecodingException
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.types.StringType
@@ -95,11 +95,11 @@ final class PointReader private[operators] (
   /** bucket id → parquet file paths, listed lazily per bucket. */
   private val filesByBucket = new TrieMap[Long, Seq[Path]]()
 
-  /** file path → parsed footer (reused across lookups; immutable after
-    * parsing and safe to share across serving threads). Bounded by the
-    * store's file count; dropped on epoch change alongside
-    * [[filesByBucket]]. */
-  private val footerCache = new TrieMap[String, ParquetMetadata]()
+  /** file path → parsed footer and projection ([[footerOf]]; reused
+    * across lookups, immutable after parsing and safe to share across
+    * serving threads). Bounded by the store's file count; dropped on
+    * epoch change alongside [[filesByBucket]]. */
+  private val footerCache = new TrieMap[String, PointReader.Footer]()
 
   /** file path → ((decoded key-column dictionary per row group, whether
     * its entries are ascending), approx bytes). None for a row group
@@ -129,44 +129,6 @@ final class PointReader private[operators] (
   @volatile private var lastEpochCheck = 0L
   @volatile private var lastEpoch = -1L
 
-  // Projection + type validation, derived once from the first data file's
-  // footer: serving returns the 7 observation columns (the inverted copy
-  // also persists rdata_ip/rdata_ip6 — layout-only, never returned) and
-  // requires INT64 TIMESTAMP timestamps (what writeCopy produces under
-  // `outputTimestampType=TIMESTAMP_MICROS`). A store written with any
-  // other shape disables the fast path (projection = None) instead of
-  // returning differently-typed results than the plan path.
-  private lazy val projection: Option[MessageType] = {
-    val cols = PointReader.Cols
-    try {
-      anyDataFile().flatMap { f =>
-        val r = ParquetFileReader.open(inputFile(f))
-        val schema =
-          try r.getFooter.getFileMetaData.getSchema
-          finally r.close()
-        val fields = cols.flatMap { c =>
-          if (schema.containsField(c))
-            Some(schema.getType(schema.getFieldIndex(c)))
-          else None
-        }
-        def tsOk(name: String): Boolean = schema.containsField(name) &&
-          (schema.getType(schema.getFieldIndex(name)) match {
-            case p: PrimitiveType =>
-              p.getPrimitiveTypeName == PrimitiveType.PrimitiveTypeName.INT64 &&
-                p.getLogicalTypeAnnotation
-                  .isInstanceOf[LogicalTypeAnnotation.TimestampLogicalTypeAnnotation]
-            case _ => false
-          })
-        if (fields.size != cols.size || !tsOk("first_seen") || !tsOk("last_seen"))
-          None
-        else Some(new MessageType(schema.getName, fields: _*))
-      }
-    } catch { case _: Exception => None }
-  }
-
-  /** Whether this store copy can serve driver-local lookups. */
-  def available: Boolean = projection.isDefined
-
   /** InputFile for a store file: local paths bypass the Hadoop
     * ChecksumFileSystem (java.nio reads — measured ~7 ms saved per file
     * open on a 113 KB file); hdfs://, s3a:// etc. go through
@@ -182,16 +144,6 @@ final class PointReader private[operators] (
       new PointReader.BufferedLocalInputFile(
         java.nio.file.Paths.get(uri.getPath))
     else HadoopInputFile.fromPath(p, hadoopConf)
-  }
-
-  private def anyDataFile(): Option[Path] = {
-    val (f, p) = ObservationStore.fs(spark, copyPath)
-    if (!f.exists(p)) return None
-    f.listStatus(p).iterator
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-      .flatMap(d => f.listStatus(d.getPath))
-      .find(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath)
   }
 
   private def bucketOf(key: String): Long = {
@@ -251,10 +203,8 @@ final class PointReader private[operators] (
     * `PointReaderSpec` contract). */
   def lookup(key: String, residual: Seq[(String, String)],
       limit: Int): Vector[Observation] = {
-    val proj = projection.getOrElse(
-      throw new IllegalStateException("fast path unavailable"))
     ensureFresh()
-    readBucket(bucketOf(key), proj,
+    readBucket(bucketOf(key),
       PointReader.Read(FilterCompat.get(predicate(key, residual)),
         PointReader.KeyTest.point(
           key.getBytes(java.nio.charset.StandardCharsets.UTF_8)),
@@ -307,22 +257,25 @@ final class PointReader private[operators] (
     * unordered scan + limit). */
   private def fan(filter: FilterCompat.Filter, test: PointReader.KeyTest,
       residual: Seq[(String, String)], limit: Int): Vector[Observation] = {
-    val proj = projection.getOrElse(
-      throw new IllegalStateException("fast path unavailable"))
     ensureFresh()
     def once(): (Vector[Observation], PointReader.Budget) = {
       val read = PointReader.Read(filter, test, residual,
         new PointReader.Budget(limit))
       val rows =
-        if (numBuckets <= 1) readBucket(0L, proj, read, trackFan = true)
+        if (numBuckets <= 1) readBucket(0L, read, trackFan = true)
         else
           (0L until numBuckets).map { b =>
             PointReader.prefixFanPool.submit(
               new java.util.concurrent.Callable[Vector[Observation]] {
                 def call(): Vector[Observation] =
-                  readBucket(b, proj, read, trackFan = true)
+                  readBucket(b, read, trackFan = true)
               })
-          }.flatMap(_.get()).take(limit).toVector
+          }.flatMap { f =>
+            // a bucket's own failure (a refused file shape), not the
+            // pool's wrapper
+            try f.get()
+            catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+          }.take(limit).toVector
       (rows, read.budget)
     }
     // a bucket whose file vanished mid-read (concurrent commit) gives
@@ -406,7 +359,7 @@ final class PointReader private[operators] (
       } finally r.close()
     } catch { case _: Exception => Seq(None) }
 
-  private def readBucket(bucket: Long, proj: MessageType,
+  private def readBucket(bucket: Long,
       read: PointReader.Read, trackFan: Boolean = false)
       : Vector[Observation] = {
     // An EMPTY cached list never touches a file, so the vanished-file
@@ -429,7 +382,7 @@ final class PointReader private[operators] (
       PointReader.fanBucketsTotal.incrementAndGet()
       if (first.nonEmpty) PointReader.fanBucketsRead.incrementAndGet(): Unit
     }
-    try readFiles(first, proj, read)
+    try readFiles(first, read)
     catch {
       // vanished file = concurrent committed merge swapped this bucket:
       // drop caches for it, relist once and retry (see staleness note)
@@ -443,14 +396,29 @@ final class PointReader private[operators] (
         }
         val fresh = listBucket(bucket)
         filesByBucket.put(bucket, fresh)
-        readFiles(live(fresh), proj, read)
+        readFiles(live(fresh), read)
     }
   }
 
-  private def footerOf(p: Path): ParquetMetadata =
+  /** `p`'s footer and the projection of the served columns out of its
+    * schema, parsed and shape-checked once per cached file. A file of
+    * another shape ([[PointReader.projection]]) is refused with the
+    * command that rewrites the store, as `load` refuses a legacy store;
+    * it never switches serving to another mode. */
+  private def footerOf(p: Path): PointReader.Footer =
     footerCache.getOrElseUpdate(p.toString, {
       val r = ParquetFileReader.open(inputFile(p))
-      try r.getFooter finally r.close()
+      val footer = try r.getFooter finally r.close()
+      val schema = footer.getFileMetaData.getSchema
+      PointReader.Footer(footer, PointReader.projection(schema).getOrElse(
+        throw new IllegalArgumentException(
+          s"store file $p does not hold the served columns " +
+            s"${PointReader.Cols.mkString(", ")} as BINARY strings, an " +
+            "INT64 count and INT64 TIMESTAMP(MICROS) times (INT96 " +
+            "timestamps come from a session without Graft's " +
+            "spark.sql.parquet.outputTimestampType); rewrite the store " +
+            s"once with `graft.Main rebucket --store $storePath --buckets " +
+            s"<n>`, n other than its $numBuckets")))
     })
 
   /** Reads the matching rows of `files` column by column. The read
@@ -471,7 +439,7 @@ final class PointReader private[operators] (
     * parquet-mr's synchronizing readers keep the columns aligned (pinned
     * by PointReaderSpec's multi-page store cases). */
   private def readFiles(files: Seq[(Path, Seq[Option[PointReader.KeyIds]])],
-      proj: MessageType, read: PointReader.Read): Vector[Observation] = {
+      read: PointReader.Read): Vector[Observation] = {
     import scala.jdk.CollectionConverters._
     val out = Vector.newBuilder[Observation]
     var n = 0
@@ -492,7 +460,9 @@ final class PointReader private[operators] (
     val it = files.iterator
     try while (it.hasNext && budget.open) {
       val (path, ids) = it.next()
-      val footer = footerOf(path)
+      val file = footerOf(path)
+      val footer = file.meta
+      val proj = file.proj
       val blocks = footer.getBlocks.asScala
       val in = inputFile(path)
       val reader = new ParquetFileReader(in, footer, opts, in.newStream())
@@ -549,6 +519,40 @@ object PointReader {
   /** The served columns, in [[Observation]]'s field order. */
   private[operators] val Cols: Seq[String] = Seq("rrname", "sensor_id",
     "rrtype", "rdata", "count", "first_seen", "last_seen")
+
+  /** A store file's footer and the schema its reads request. */
+  private[operators] final case class Footer(meta: ParquetMetadata,
+      proj: MessageType)
+
+  /** The served columns out of a store file's `schema`, in [[Cols]]
+    * order, when each has the store's shape: the four keys BINARY, `count`
+    * INT64, both times INT64 TIMESTAMP(MICROS) — what every store write
+    * produces under Graft's session settings. None for any other shape
+    * (a missing column, INT96 or millisecond timestamps), which no read
+    * decodes. Each column keeps its file's repetition: a build from
+    * non-nullable input writes its keys REQUIRED, while a merge, expiry
+    * or compaction rewrites them OPTIONAL (Spark reads parquet as
+    * nullable), so one store can hold both, and definition levels decode
+    * only against the file's own. */
+  private[operators] def projection(schema: MessageType): Option[MessageType] = {
+    import PrimitiveType.PrimitiveTypeName.{BINARY, INT64}
+    def served(c: String, t: PrimitiveType): Boolean = c match {
+      case "count" => t.getPrimitiveTypeName == INT64
+      case "first_seen" | "last_seen" =>
+        t.getPrimitiveTypeName == INT64 && (t.getLogicalTypeAnnotation match {
+          case a: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+            a.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS
+          case _ => false
+        })
+      case _ => t.getPrimitiveTypeName == BINARY
+    }
+    val fields = Cols.filter(schema.containsField)
+      .map(c => c -> schema.getType(schema.getFieldIndex(c)))
+      .collect { case (c, t: PrimitiveType)
+          if !t.isRepetition(Type.Repetition.REPEATED) && served(c, t) => t }
+    Option.when(fields.size == Cols.size)(
+      new MessageType(schema.getName, fields: _*))
+  }
 
   /** Bucket-fan pruning telemetry (cumulative across all readers):
     * of the buckets a prefix or key-test fan visited, how many actually had a
@@ -618,7 +622,7 @@ object PointReader {
     * contiguous range of a prefix — found by binary search; otherwise
     * (a CIDR block, a foreign unsorted dictionary) every entry is
     * tested. */
-  private[operators] final class KeyTest(val keep: Array[Byte] => Boolean,
+  private[graft] final class KeyTest(val keep: Array[Byte] => Boolean,
       seek: Option[Array[Byte]]) {
     def ids(entries: Array[Array[Byte]], sorted: Boolean): java.util.BitSet = {
       val out = new java.util.BitSet()
@@ -640,24 +644,11 @@ object PointReader {
     }
   }
 
-  private[operators] object KeyTest {
+  private[graft] object KeyTest {
     def point(key: Array[Byte]): KeyTest =
       new KeyTest(java.util.Arrays.equals(_, key), Some(key))
     def prefix(p: Array[Byte]): KeyTest = new KeyTest(startsWith(_, p), Some(p))
   }
-
-  /** Does an ascending dictionary hold `key`? */
-  private[graft] def containsSorted(entries: Array[Array[Byte]],
-      key: Array[Byte]): Boolean =
-    !KeyTest.point(key).ids(entries, sorted = true).isEmpty
-
-  /** Any entry starting with `prefix`? Sorted case: entries with the
-    * prefix form the contiguous range [prefix, prefix∞), so the entry
-    * at the prefix's lower bound either starts with it or nothing
-    * does. */
-  private[graft] def anyPrefixSorted(entries: Array[Array[Byte]],
-      prefix: Array[Byte]): Boolean =
-    !KeyTest.prefix(prefix).ids(entries, sorted = true).isEmpty
 
   private[graft] def startsWith(e: Array[Byte],
       prefix: Array[Byte]): Boolean = {

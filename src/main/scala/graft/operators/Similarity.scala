@@ -404,9 +404,9 @@ object Similarity {
     // pattern) and ride the probe expression as ONE reference object:
     // the probe list is then a NARROW per-row pass — scan → project —
     // instead of the previous crossJoin+groupBy, which shuffled
-    // N × |centroids| rows EACH CARRYING THE VECTOR ARRAY (measured in
-    // BenchScaleJoins: super-linear wall-time once the centroid count
-    // scales with the corpus). Cosine arithmetic/order is identical
+    // N × |centroids| rows EACH CARRYING THE VECTOR ARRAY (README's
+    // round-9 scale-join entry: super-linear wall-time once the centroid
+    // count scales with the corpus). Cosine arithmetic/order is identical
     // (same dot loop, same (−cos, id) sort), so results are unchanged.
     val cents = base.filter(col("id").isin(centroidIds: _*))
       .select(col("id"), col("v")).collect()
@@ -444,8 +444,8 @@ object Similarity {
           .as("cos_sim"))
       // top-k per id via the bounded heap aggregate, NOT a row_number
       // window: the window sorts the FULL candidate set (≈ clusterSize ×
-      // nprobe rows per id — 50M rows at 20k vectors in BenchScaleJoins,
-      // ~17 s of a 21 s job) where the heap keeps k pairs per mapper
+      // nprobe rows per id — 50M rows at 20k vectors in README's round-9
+      // scale-join entry, ~17 s of a 21 s job) where the heap keeps k pairs per mapper
       // with map-side combine. (cos desc, id asc) order rides TopKPairs'
       // long tuples via the order-preserving double→long bit codec and
       // a negated payload id; values decode back bit-identically.
@@ -888,8 +888,9 @@ object Similarity {
     // (cluster-size² pairs per cluster) from an MB-sized shuffle, and
     // AQE's size-based coalescing would otherwise fuse the exchanges
     // and run the expansion nearly single-threaded (the knnJoin
-    // finding; BenchScaleJoins). User-numbered repartitions are never
-    // coalesced and satisfy the join's distribution.
+    // finding; README's round-9 scale-join entry). User-numbered
+    // repartitions are never coalesced and satisfy the join's
+    // distribution.
     val parts = base.sparkSession.sessionState.conf.numShufflePartitions
     val bp = base.repartition(parts, col("cluster"))
     val pairs = bp.as("a").join(bp.as("b"),

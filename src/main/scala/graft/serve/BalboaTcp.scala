@@ -372,13 +372,15 @@ object BalboaTcp {
   * limit (`backend/lib/engine.c:554-557`: 64 connection threads) — an
   * over-cap accept gets an ErrorResponse and an immediate close instead
   * of an unbounded thread pile-up. [[stats]] keeps the engine's rolling
-  * 10 s queries/inputs/errors/bytes/connections log. */
+  * 10 s queries/inputs/errors/bytes/connections log. The store must be
+  * a loaded disk store: an in-memory one is refused at construction. */
 final class BalboaTcpServer(store: ObservationStore, port: Int = 0,
     onInput: BalboaTcp.Entry => Unit = _ => (),
     maxConnections: Int = 64,
     statsIntervalMillis: Long = 10000L,
     statsSink: String => Unit = s => System.err.println(s)) {
   import BalboaTcp._
+  store.requireServed()
 
   private val server = new ServerSocket(port)
   private val pool = java.util.concurrent.Executors.newCachedThreadPool()

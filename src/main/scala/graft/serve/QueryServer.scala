@@ -36,17 +36,14 @@ import graft.operators.ObservationStore
   *
   * Every route answers through one [[ObservationStore]] method per
   * query shape (`answerPoint`, `answerPrefix`, `answerCidr`): at most
-  * `limit` rows, materialized on the driver, then written as NDJSON.
-  * Concurrent queries on stores without driver-local readers: run the
-  * session with `spark.scheduler.mode=FAIR` (the analogue of the
-  * backend's 64-thread connection pool) and
-  * `spark.sql.adaptive.enabled=false` — AQE buys nothing for
-  * single-stage pre-pruned point scans but costs per-query driver
-  * planning.
+  * `limit` rows from the store's driver-local readers, then written as
+  * NDJSON. The store must be a loaded disk store: an in-memory one is
+  * refused at construction.
   */
 final class QueryServer(store: ObservationStore, port: Int = 0,
     statsIntervalMillis: Long = 10000L,
     statsSink: String => Unit = s => System.err.println(s)) {
+  store.requireServed()
 
   // HTTP slow-client hardening to reference parity
   // (`query/query_graphql.go:410-412`: 5 s read / 10 s write): the JDK
@@ -135,10 +132,7 @@ final class QueryServer(store: ObservationStore, port: Int = 0,
       else parseLimit(queryParam(ex, "limit")) match {
         case None => respond(ex, 400, "invalid limit\n")
         case Some(l) =>
-          // CIRCL bag semantics: subject as rrname THEN as rdata,
-          // concatenated (duplicates kept — query_rest.go:58-70)
-          writeNdjson(ex, store.answerPoint(rrname = Some(subject), limit = l) ++
-            store.answerPoint(rdata = Some(subject), limit = l),
+          writeNdjson(ex, QueryServer.pdnsQuery(store, subject, l),
             notFoundOnEmpty = true)
       }
     })
@@ -248,8 +242,7 @@ final class QueryServer(store: ObservationStore, port: Int = 0,
     finally ex.close()
   }
 
-  /** NDJSON in the reference's dump shape: field order, unix-seconds
-    * ints (`observation/observation.go:26-37`). */
+  /** [[QueryServer.ndjsonLine]] per row. */
   private def writeNdjson(ex: HttpExchange, obs: Seq[Observation],
       notFoundOnEmpty: Boolean): Unit = {
     if (obs.isEmpty && notFoundOnEmpty) { respond(ex, 404, "not found\n"); return }
@@ -257,13 +250,7 @@ final class QueryServer(store: ObservationStore, port: Int = 0,
     ex.sendResponseHeaders(200, 0) // chunked
     val out: OutputStream = ex.getResponseBody
     obs.foreach { o =>
-      val n = mapper.createObjectNode()
-      n.put("rrname", o.rrname); n.put("rdata", o.rdata)
-      n.put("rrtype", o.rrtype); n.put("sensor_id", o.sensor_id)
-      n.put("count", o.count)
-      n.put("time_first", QueryServer.unixSeconds(o.first_seen))
-      n.put("time_last", QueryServer.unixSeconds(o.last_seen))
-      val line = mapper.writeValueAsString(n).getBytes(UTF_8)
+      val line = QueryServer.ndjsonLine(o).getBytes(UTF_8)
       out.write(line)
       out.write('\n')
       stats.bytesOut.addAndGet(line.length + 1L)
@@ -284,6 +271,30 @@ final class QueryServer(store: ObservationStore, port: Int = 0,
 }
 
 object QueryServer {
+  private val lineMapper = new ObjectMapper()
+
+  /** One row as an NDJSON line (no newline) in the reference's dump
+    * shape: field order, unix-seconds ints
+    * (`observation/observation.go:26-37`). Every REST route and the
+    * `query` CLI write these. */
+  private[graft] def ndjsonLine(o: Observation): String = {
+    val n = lineMapper.createObjectNode()
+    n.put("rrname", o.rrname); n.put("rdata", o.rdata)
+    n.put("rrtype", o.rrtype); n.put("sensor_id", o.sensor_id)
+    n.put("count", o.count)
+    n.put("time_first", unixSeconds(o.first_seen))
+    n.put("time_last", unixSeconds(o.last_seen))
+    lineMapper.writeValueAsString(n)
+  }
+
+  /** `/pdns/query`'s rows: CIRCL bag semantics, the subject as rrname
+    * THEN as rdata, concatenated (duplicates kept —
+    * `query_rest.go:58-70`), each lookup capped at `limit`. */
+  private[graft] def pdnsQuery(store: ObservationStore, subject: String,
+      limit: Int): Seq[Observation] =
+    store.answerPoint(rrname = Some(subject), limit = limit) ++
+      store.answerPoint(rdata = Some(subject), limit = limit)
+
   /** The one seconds rule of every serving surface (REST, GraphQL, the
     * TCP wire): floor, so 1969-12-31T23:59:59.5Z is -1, not 0. */
   private[serve] def unixSeconds(ts: java.sql.Timestamp): Long =

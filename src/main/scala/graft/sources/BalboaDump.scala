@@ -38,74 +38,26 @@ object BalboaDump {
 
   // ------------------------------------------------------------ decode
 
-  private final class Reader(bytes: Array[Byte]) {
-    private var pos = 0
-    def atEnd: Boolean = pos >= bytes.length
-    private def u8(): Int = {
-      need(1, "msgpack type/value byte")
-      val b = bytes(pos) & 0xff; pos += 1; b
-    }
-
-    private def need(n: Int, what: String): Unit =
-      if (pos + n > bytes.length)
-        fail(s"truncated dump: $what needs $n bytes, " +
-          s"${bytes.length - pos} remain")
-
-    private def beUint(n: Int): Long = {
-      need(n, "uint")
-      var acc = 0L
-      var i = 0
-      while (i < n) { acc = (acc << 8) | (bytes(pos + i) & 0xffL); i += 1 }
-      pos += n
-      acc
-    }
-
-    def readMapHeader(): Int = u8() match {
-      case b if (b & 0xf0) == 0x80 => b & 0x0f // fixmap
-      case 0xde => beUint(2).toInt // map16
-      case 0xdf => beUint(4).toInt // map32
-      case b => fail(s"expected map, got 0x${b.toHexString}")
-    }
-
-    def readUint(): Long = u8() match {
-      case b if b <= 0x7f => b.toLong // positive fixint
-      case 0xcc => beUint(1)
-      case 0xcd => beUint(2)
-      case 0xce => beUint(4)
-      case 0xcf => beUint(8)
-      case b => fail(s"expected uint, got 0x${b.toHexString}")
-    }
-
-    /** bin8/16/32 (what mpack writes) or the str family (lenient). */
-    def readBytes(): Array[Byte] = {
-      val len = u8() match {
-        case b if (b & 0xe0) == 0xa0 => b & 0x1f // fixstr
-        case 0xc4 | 0xd9 => beUint(1).toInt // bin8 | str8
-        case 0xc5 | 0xda => beUint(2).toInt // bin16 | str16
-        case 0xc6 | 0xdb => beUint(4).toInt // bin32 | str32
-        case b => fail(s"expected bin/str, got 0x${b.toHexString}")
-      }
-      // copyOfRange would silently ZERO-PAD past the end of a truncated
-      // file — a cut-off dump must fail loudly ('corrupt dump fails
-      // loudly' contract), not decode to a NUL-padded string
-      need(len, "bin/str payload")
-      val out = java.util.Arrays.copyOfRange(bytes, pos, pos + len)
-      pos += len
-      out
-    }
-
-    private def fail(msg: String): Nothing =
-      throw new IllegalArgumentException(s"balboa dump: $msg at offset $pos")
-  }
-
-  /** Decode one concatenated-entry stream. Strict on structure (a corrupt
-    * dump fails loudly, `protocol.c:814-821` parity) but field-order
-    * agnostic, like the reference's switch-on-index loop. */
+  /** Decode one concatenated-entry stream through the wire's msgpack
+    * reader ([[graft.serve.BalboaTcp.MsgReader]], which also takes the
+    * `str` family for strings and any uint width). Strict on structure
+    * (a corrupt dump fails loudly, `protocol.c:814-821` parity) but
+    * field-order agnostic, like the reference's switch-on-index loop. A
+    * stream cut inside an entry is a "truncated dump", never a short or
+    * NUL-padded value. */
   private[graft] def decodeStream(bytes: Array[Byte]): Iterator[Row] =
     new Iterator[Row] {
-      private val rd = new Reader(bytes)
-      override def hasNext: Boolean = !rd.atEnd
-      override def next(): Row = {
+      private val rd = new graft.serve.BalboaTcp.MsgReader(
+        new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes)))
+      override def hasNext: Boolean = !rd.atCleanEnd()
+      override def next(): Row =
+        try entry()
+        catch {
+          case _: java.io.EOFException => throw new IllegalArgumentException(
+            s"balboa dump: truncated dump: an entry runs past the end of " +
+              s"the ${bytes.length}-byte stream")
+        }
+      private def entry(): Row = {
         val n = rd.readMapHeader()
         require(n == 7, s"balboa dump: expected 7-field map, got $n")
         var rrname, rrtype, rdata, sensor: String = null
@@ -113,10 +65,10 @@ object BalboaDump {
         var i = 0
         while (i < n) {
           rd.readUint() match {
-            case 0 => rrname = new String(rd.readBytes(), "UTF-8")
-            case 1 => rrtype = new String(rd.readBytes(), "UTF-8")
-            case 2 => rdata = new String(rd.readBytes(), "UTF-8")
-            case 3 => sensor = new String(rd.readBytes(), "UTF-8")
+            case 0 => rrname = rd.readStr()
+            case 1 => rrtype = rd.readStr()
+            case 2 => rdata = rd.readStr()
+            case 3 => sensor = rd.readStr()
             case 4 => count = rd.readUint()
             case 5 => first = rd.readUint()
             case 6 => last = rd.readUint()

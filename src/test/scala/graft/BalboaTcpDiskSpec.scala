@@ -16,7 +16,7 @@ import graft.serve.BalboaTcp._
 class BalboaTcpDiskSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  test("TCP answers from a disk store equal the in-memory plan fallback") {
+  test("TCP answers from a disk store equal the collected plan") {
     import spark.implicits._
     val ts = Timestamp.valueOf("2018-01-01 00:00:00")
     val agg = ObservationStore.aggregate(Seq(
@@ -29,10 +29,10 @@ class BalboaTcpDiskSpec extends AnyFunSuite {
     ObservationStore.writeDual(agg, dir, numBuckets = 4)
     val disk = ObservationStore.load(spark, dir)
     assert(disk.servePoint(rrname = Some("foo.bar")).isDefined)
-    val servers = Seq(ObservationStore.inMemory(agg), disk)
-      .map { st => val s = new BalboaTcpServer(st); s.start(); s }
+    val srv = new BalboaTcpServer(disk)
+    srv.start()
     try {
-      def answer(srv: BalboaTcpServer, q: QueryRequest): Seq[Entry] = {
+      def answer(q: QueryRequest): Seq[Entry] = {
         val sock = new Socket("localhost", srv.boundPort)
         try {
           sock.getOutputStream.write(encodeQueryRequest(q))
@@ -46,16 +46,25 @@ class BalboaTcpDiskSpec extends AnyFunSuite {
             .map(m => decodeEntry(m._2)).toSeq.sortBy(_.toString)
         } finally sock.close()
       }
+      /** The `entries` plan's rows as the wire's entries. */
+      def plan(q: QueryRequest): Seq[Entry] =
+        disk.entries(q.rrname, q.rdata, q.rrtype, q.sensorId, q.limit)
+          .collect().toSeq.map(r => Entry(r.getAs[String]("rrname"),
+            r.getAs[String]("rrtype"), r.getAs[String]("rdata"),
+            r.getAs[String]("sensor_id"), r.getAs[Long]("count"),
+            Math.floorDiv(r.getAs[Timestamp]("first_seen").getTime, 1000L),
+            Math.floorDiv(r.getAs[Timestamp]("last_seen").getTime, 1000L)))
+          .sortBy(_.toString)
       for (q <- Seq(
           QueryRequest(Some("foo.bar"), None, None, None, 1000),
           QueryRequest(None, Some("1.2.3.4"), None, None, 1000),
           QueryRequest(None, Some("1.2.3.4"), None, Some("s1"), 1000),
           QueryRequest(Some("absent"), None, None, None, 1000))) {
-        val Seq(mem, dsk) = servers.map(answer(_, q))
-        assert(mem == dsk, q)
-        assert(mem.nonEmpty == q.rrname.forall(_ != "absent"), q)
+        val dsk = answer(q)
+        assert(dsk == plan(q), q)
+        assert(dsk.nonEmpty == q.rrname.forall(_ != "absent"), q)
       }
-    } finally servers.foreach(_.stop())
+    } finally srv.stop()
   }
 
   test("concurrent point queries against a disk store all stream cleanly") {

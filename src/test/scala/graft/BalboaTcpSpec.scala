@@ -14,7 +14,7 @@ import graft.serve.BalboaTcp._
   * QueryRequest encoded the way the Go frontend does goes in, the
   * start/data…/end stream comes back; the entry encoding is asserted at
   * the BYTE level against `backend/lib/protocol.c:190-211`'s mpack
-  * output. */
+  * output. The servers answer from disk stores. */
 class BalboaTcpSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -27,7 +27,7 @@ class BalboaTcpSpec extends AnyFunSuite {
       ("foo.bar", "s2", "AAAA", "2001:db8::1", 2L, ts, ts)
     ).toDF("rrname", "sensor_id", "rrtype", "rdata", "count",
       "timestamp_start", "timestamp_end")
-    ObservationStore.inMemory(ObservationStore.aggregate(input))
+    diskStore(ObservationStore.aggregate(input))
   }
 
   private lazy val server = {
@@ -62,8 +62,8 @@ class BalboaTcpSpec extends AnyFunSuite {
     out.result()
   }
 
-  /** An aggregate written as a disk store, so a server answers on the
-    * PointReader fast path. */
+  /** An aggregate written as a disk store and loaded: what a server
+    * serves. */
   private def diskStore(agg: org.apache.spark.sql.DataFrame): ObservationStore = {
     val dir = java.nio.file.Files.createTempDirectory("graft-tcp").toString
     ObservationStore.writeDual(agg, dir, numBuckets = 4)
@@ -143,7 +143,11 @@ class BalboaTcpSpec extends AnyFunSuite {
     val u64 = Array(0xcf, 0x80, 0, 0, 0, 0, 0, 0, 0)
     assert(decodeQueryRequest(readTypedInner(request(u32))).limit == Int.MaxValue)
     assert(decodeQueryRequest(readTypedInner(request(u64))).limit == Int.MaxValue)
-    val disk = new BalboaTcpServer(diskStore(store.forward))
+    val plan = store.entries(rdata = Some("1.2.3.4"), limit = Int.MaxValue)
+      .select("rrname").as[String](org.apache.spark.sql.Encoders.STRING)
+      .collect().sorted.toSeq
+    assert(plan == Seq("baz.io", "foo.bar"))
+    val disk = new BalboaTcpServer(diskStore(store.forward.drop("bucket")))
     disk.start()
     try {
       for (port <- Seq(server.boundPort, disk.boundPort); limit <- Seq(u32, u64)) {
@@ -152,7 +156,7 @@ class BalboaTcpSpec extends AnyFunSuite {
           msgs.collect { case (TypeErrorResponse, m) => decodeErrorResponse(m) })
         assert(msgs.last._1 == TypeQueryStreamEndResponse)
         assert(msgs.filter(_._1 == TypeQueryStreamDataResponse)
-          .map(m => decodeEntry(m._2).rrname).sorted == Seq("baz.io", "foo.bar"))
+          .map(m => decodeEntry(m._2).rrname).sorted == plan)
       }
     } finally disk.stop()
   }
@@ -166,33 +170,31 @@ class BalboaTcpSpec extends AnyFunSuite {
       ("far.example", "s1", "A", "10.0.0.2", 1L, far),
       ("ok.example", "s1", "A", "10.0.0.3", 1L, at("2018-01-01T00:00:00Z"))
     ).toDF("rrname", "sensor_id", "rrtype", "rdata", "count", "ts"))
-    for (st <- Seq(ObservationStore.inMemory(agg), diskStore(agg))) {
-      val srv = new BalboaTcpServer(st)
-      srv.start()
-      val sock = new Socket("localhost", srv.boundPort)
-      try {
-        val rd = new MsgReader(new DataInputStream(
-          new java.io.BufferedInputStream(sock.getInputStream)))
-        def ask(rrname: String): Seq[(Int, Array[Byte])] = {
-          sock.getOutputStream.write(encodeQueryRequest(
-            QueryRequest(Some(rrname), None, None, None, 10)))
-          sock.getOutputStream.flush()
-          readResponse(rd)
-        }
-        for ((name, sec) <- Seq("pre.example" -> -2L,
-            "far.example" -> far.getTime / 1000L)) {
-          val msgs = ask(name)
-          assert(msgs.map(_._1) == Seq(TypeErrorResponse), name)
-          val err = decodeErrorResponse(msgs.head._2)
-          assert(err.contains("out of u32 range") && err.contains(sec.toString), err)
-          // the same connection keeps serving
-          val ok = ask("ok.example")
-          assert(ok.map(_._1) == Seq(TypeQueryStreamStartResponse,
-            TypeQueryStreamDataResponse, TypeQueryStreamEndResponse), name)
-          assert(decodeEntry(ok(1)._2).firstSeen == 1514764800L)
-        }
-      } finally { sock.close(); srv.stop() }
-    }
+    val srv = new BalboaTcpServer(diskStore(agg))
+    srv.start()
+    val sock = new Socket("localhost", srv.boundPort)
+    try {
+      val rd = new MsgReader(new DataInputStream(
+        new java.io.BufferedInputStream(sock.getInputStream)))
+      def ask(rrname: String): Seq[(Int, Array[Byte])] = {
+        sock.getOutputStream.write(encodeQueryRequest(
+          QueryRequest(Some(rrname), None, None, None, 10)))
+        sock.getOutputStream.flush()
+        readResponse(rd)
+      }
+      for ((name, sec) <- Seq("pre.example" -> -2L,
+          "far.example" -> far.getTime / 1000L)) {
+        val msgs = ask(name)
+        assert(msgs.map(_._1) == Seq(TypeErrorResponse), name)
+        val err = decodeErrorResponse(msgs.head._2)
+        assert(err.contains("out of u32 range") && err.contains(sec.toString), err)
+        // the same connection keeps serving
+        val ok = ask("ok.example")
+        assert(ok.map(_._1) == Seq(TypeQueryStreamStartResponse,
+          TypeQueryStreamDataResponse, TypeQueryStreamEndResponse), name)
+        assert(decodeEntry(ok(1)._2).firstSeen == 1514764800L)
+      }
+    } finally { sock.close(); srv.stop() }
   }
 
   test("missing rrname AND rdata -> ErrorResponse, like the reference") {

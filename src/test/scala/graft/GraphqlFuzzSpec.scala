@@ -116,11 +116,13 @@ class GraphqlFuzzSpec extends AnyFunSuite {
     val values = Gen.listOfN(60, Gen.nonEmptyListOf(piece).map(_.mkString))
       .pureApply(Gen.Parameters.default.withSize(12), Seed.random()).distinct
     val ts = java.sql.Timestamp.valueOf("2018-01-01 00:00:00")
-    val store = ObservationStore.inMemory(ObservationStore.aggregate(
+    val dir = java.nio.file.Files.createTempDirectory("graft-gqlfuzz").toString
+    ObservationStore.writeDual(ObservationStore.aggregate(
       values.zipWithIndex.map { case (v, i) =>
         (s"v$i.example", "s1", "TXT", v, 1L, ts, ts)
       }.toDF("rrname", "sensor_id", "rrtype", "rdata", "count",
-        "timestamp_start", "timestamp_end")))
+        "timestamp_start", "timestamp_end")), dir, numBuckets = 4)
+    val store = ObservationStore.load(spark, dir)
     val p = Prop.forAll(Gen.oneOf(values.indices)) { i =>
       val v = values(i)
       val want = mapper.createObjectNode()

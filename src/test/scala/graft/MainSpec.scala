@@ -47,6 +47,23 @@ class MainSpec extends AnyFunSuite {
     val lines = out.toString.trim.split("\n").filter(_.nonEmpty)
     assert(lines.length == 1)
     assert(lines.head.contains("\"rrname\":\"host-7.example.com\""))
+    // /pdns/query's line: unix-seconds times
+    assert(lines.head.contains("\"time_first\":1622505600"), lines.head)
+    // an rdata subject and a CIDR block print the plan's rows as those
+    // lines
+    def query(subject: String): Seq[String] = {
+      val o = new java.io.ByteArrayOutputStream()
+      Console.withOut(new java.io.PrintStream(o)) {
+        Main.run(spark, Seq("query", subject, "--store", s"$dir/store"))
+      }
+      o.toString.trim.split("\n").filter(_.nonEmpty).sorted.toSeq
+    }
+    def plan(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      TestSpark.observations(df).map(graft.serve.QueryServer.ndjsonLine).sorted
+    assert(query("192.0.2.7") == plan(built.restQuery("192.0.2.7")))
+    assert(query("192.0.2.7").size == 2)
+    assert(query("192.0.2.0/30") == plan(built.cidrQuery("192.0.2.0/30")))
+    assert(query("192.0.2.0/30").size == 7)
   }
 
   test("merge adds a batch through the CLI") {

@@ -157,7 +157,7 @@ class PointReaderSpec extends AnyFunSuite {
     assert(store.serveCidr("10.0.0.0/24").get.size == 2 * 4 + 1)
     assert(store.serveCidr("10.0.0.1/32").get.map(_.count).sorted ==
       Seq(2L, 6L))
-    // an in-memory store has no readers: the caller falls back
+    // an in-memory store has no readers: nothing is served
     assert(ObservationStore.inMemory(ObservationStore.aggregate(input))
       .serveCidr("10.0.0.0/8").isEmpty)
   }
@@ -400,8 +400,118 @@ class PointReaderSpec extends AnyFunSuite {
     val agg = ObservationStore.aggregate(
       Seq(("a", "s", "A", "1.1.1.1", 1L, ts("2020-01-01 00:00:00")))
         .toDF("rrname", "sensor_id", "rrtype", "rdata", "count", "ts"))
-    assert(ObservationStore.inMemory(agg)
-      .servePoint(rrname = Some("a")).isEmpty)
+    val mem = ObservationStore.inMemory(agg)
+    assert(mem.servePoint(rrname = Some("a")).isEmpty)
+    assert(mem.servePrefix("a").isEmpty)
+    assert(mem.servePointRows(rdata = Some("1.1.1.1")).isEmpty)
+    // the answering methods have no other mode: they refuse, naming
+    // the way to a served store
+    val refusals = Seq[() => Any](
+      () => mem.answerPoint(rrname = Some("a")),
+      () => mem.answerPrefix("a"),
+      () => mem.answerCidr("1.0.0.0/8"),
+      () => mem.answerAliases(Seq.empty))
+    refusals.foreach { run =>
+      val e = intercept[IllegalStateException](run())
+      assert(e.getMessage.contains("writeDual") &&
+        e.getMessage.contains("load"), e.getMessage)
+    }
+  }
+
+  test("an empty store answers empty from the readers") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pr-empty").toString
+    ObservationStore.writeDual(ObservationStore.aggregate(
+      Seq(("a", "s", "A", "1.1.1.1", 1L, ts("2020-01-01 00:00:00")))
+        .toDF("rrname", "sensor_id", "rrtype", "rdata", "count", "ts")
+        .filter(col("count") < 0)), dir, numBuckets = 4)
+    val store = ObservationStore.load(spark, dir)
+    assert(store.totalCount() == 0L)
+    assert(store.servePoint(rrname = Some("a")).contains(Seq.empty))
+    assert(store.servePoint(rdata = Some("1.1.1.1")).contains(Seq.empty))
+    assert(store.servePrefix("a").contains(Seq.empty))
+    assert(store.serveCidr("0.0.0.0/0").contains(Seq.empty))
+    assert(store.serveCidr("::/0").contains(Seq.empty))
+    assert(store.entries(rrname = Some("a")).isEmpty)
+    // a first merge fills it like any store
+    val t = ts("2021-01-01 00:00:00")
+    ObservationStore.mergeBatch(spark, dir, Seq(("a", "s", "A", "1.1.1.1", 2L, t, t))
+      .toDF("rrname", "sensor_id", "rrtype", "rdata", "count",
+        "timestamp_start", "timestamp_end"))
+    val merged = ObservationStore.load(spark, dir)
+    assert(merged.servePoint(rrname = Some("a")).get.map(_.count) == Seq(2L))
+  }
+
+  test("a file of another shape is refused, naming rebucket, until rebucket rewrites it") {
+    // INT96 timestamps: what a session without Graft's
+    // outputTimestampType writes. The shared session stays untouched.
+    val other = spark.newSession()
+    other.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    val rows = Seq(
+      ("foo", "s1", "A", "1.2.3.4", 2L, ts("2018-01-01 00:00:00")),
+      ("bar", "s1", "A", "1.2.3.4", 3L, ts("2018-02-01 00:00:00.5")))
+    val dir = java.nio.file.Files.createTempDirectory("graft-pr-int96").toString
+    ObservationStore.writeDual(ObservationStore.aggregate(other.createDataFrame(rows)
+      .toDF("rrname", "sensor_id", "rrtype", "rdata", "count", "ts")), dir,
+      numBuckets = 4)
+    val int96 = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "by_rrname"))
+      .filter(_.toString.endsWith(".parquet")).findFirst().get
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(int96.toUri),
+        new org.apache.hadoop.conf.Configuration()))
+    try {
+      val schema = r.getFooter.getFileMetaData.getSchema
+      assert(schema.getType(schema.getFieldIndex("first_seen"))
+        .asPrimitiveType.getPrimitiveTypeName.name == "INT96")
+    } finally r.close()
+    val store = ObservationStore.load(spark, dir)
+    for (run <- Seq[() => Any](() => store.answerPoint(rrname = Some("foo")),
+        () => store.answerPoint(rdata = Some("1.2.3.4")),
+        () => store.answerPrefix("ba"), () => store.answerCidr("1.2.3.0/24"))) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("rebucket"), e.getMessage)
+    }
+    // a miss opens no file, so it answers
+    assert(store.answerPoint(rrname = Some("absent")).isEmpty)
+    ObservationStore.rebucket(spark, dir, 2)
+    val fixed = ObservationStore.load(spark, dir)
+    assertSame(fixed, rrname = Some("foo"))
+    assertSame(fixed, rdata = Some("1.2.3.4"))
+    assert(sortedSet(fixed.answerPrefix("ba").map(o => Row(o.rrname,
+      o.sensor_id, o.rrtype, o.rdata, o.count, o.first_seen, o.last_seen))) ==
+      sortedSet(fixed.entriesPrefix("ba").collect().toSeq))
+    assert(fixed.answerPoint(rrname = Some("bar")).head.first_seen ==
+      ts("2018-02-01 00:00:00.5"))
+  }
+
+  test("files of both column repetitions in one store serve like the plan") {
+    // non-nullable input builds REQUIRED key columns; the merge rewrites
+    // the buckets it touches with OPTIONAL ones
+    val input = spark.range(40).selectExpr(
+      "concat('name-', cast(id as string)) as rrname", "'s1' as sensor_id",
+      "'A' as rrtype", "concat('10.0.0.', cast(id as string)) as rdata",
+      "1L as count", "timestamp'2020-01-01 00:00:00' as ts")
+    assert(!input.schema("rrname").nullable)
+    val dir = java.nio.file.Files.createTempDirectory("graft-pr-rep").toString
+    ObservationStore.writeDual(ObservationStore.aggregate(input), dir,
+      numBuckets = 4)
+    val t = ts("2021-01-01 00:00:00")
+    ObservationStore.mergeBatch(spark, dir, Seq(
+      ("name-1", "s1", "A", "10.0.0.1", 5L, t, t),
+      ("name-2", "s1", "A", "10.0.0.2", 5L, t, t)
+    ).toDF("rrname", "sensor_id", "rrtype", "rdata", "count",
+      "timestamp_start", "timestamp_end"))
+    val store = ObservationStore.load(spark, dir)
+    val plan = store.entriesPrefix("name-", Int.MaxValue).collect().toSeq
+    assert(plan.size == 40)
+    for (i <- 0 until 40) {
+      val (n, d) = (s"name-$i", s"10.0.0.$i")
+      assert(sortedSet(store.servePointRows(rrname = Some(n)).get) ==
+        sortedSet(plan.filter(_.getAs[String]("rrname") == n)), n)
+      assert(sortedSet(store.servePointRows(rdata = Some(d)).get) ==
+        sortedSet(plan.filter(_.getAs[String]("rdata") == d)), d)
+    }
+    assert(store.servePoint(rrname = Some("name-1")).get.map(_.count) == Seq(6L))
   }
 
   test("fast path sees a committed merge after the epoch check interval") {
@@ -436,18 +546,22 @@ class PointReaderSpec extends AnyFunSuite {
     val entries = Array(b("abc"), b("abd"), b("b"), b("part-1"),
       b("part-10"), b("part-2"), Array(0x80.toByte, 0x01.toByte))
     assert(PointReader.isAscending(entries))
-    assert(PointReader.containsSorted(entries, b("part-10")))
-    assert(!PointReader.containsSorted(entries, b("part-11")))
-    assert(!PointReader.containsSorted(entries, b(""))) // below all
-    assert(!PointReader.containsSorted(entries, Array(0xff.toByte))) // above
+    def point(k: Array[Byte]) =
+      !PointReader.KeyTest.point(k).ids(entries, sorted = true).isEmpty
+    def prefix(p: Array[Byte]) =
+      !PointReader.KeyTest.prefix(p).ids(entries, sorted = true).isEmpty
+    assert(point(b("part-10")))
+    assert(!point(b("part-11")))
+    assert(!point(b(""))) // below all
+    assert(!point(Array(0xff.toByte))) // above
     // prefix probes: lower-bound entry either starts with the prefix or
     // nothing does
-    assert(PointReader.anyPrefixSorted(entries, b("part-1"))) // exact+ext
-    assert(PointReader.anyPrefixSorted(entries, b("ab")))
-    assert(!PointReader.anyPrefixSorted(entries, b("part-3")))
-    assert(!PointReader.anyPrefixSorted(entries, b("c")))
-    assert(PointReader.anyPrefixSorted(entries, Array(0x80.toByte)))
-    assert(PointReader.anyPrefixSorted(entries, Array[Byte]())) // all match
+    assert(prefix(b("part-1"))) // exact+ext
+    assert(prefix(b("ab")))
+    assert(!prefix(b("part-3")))
+    assert(!prefix(b("c")))
+    assert(prefix(Array(0x80.toByte)))
+    assert(prefix(Array[Byte]())) // all match
     // an unsorted (foreign) dictionary is detected and the callers fall
     // back to the linear probe
     assert(!PointReader.isAscending(Array(b("b"), b("a"))))
@@ -459,8 +573,10 @@ class PointReaderSpec extends AnyFunSuite {
     assert(rows.head.getAs[String]("rrname") == "bar")
     assert(rows.head.getAs[Long]("count") == 10L)
     assert(rows.head.getAs[Timestamp]("first_seen") == ts("2018-03-01 00:00:00"))
-    // entriesDfFromRows round-trips into a Spark-joinable frame
-    val df = store.entriesDfFromRows(rows)
+    // the rows round-trip into a Spark-joinable frame of the schema
+    val df = spark.createDataFrame(
+      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava,
+      graft.model.Model.observationSchema)
     assert(df.filter(col("rrname") === "bar").count() == 1)
   }
 }

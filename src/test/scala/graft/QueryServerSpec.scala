@@ -6,15 +6,29 @@ import java.sql.Timestamp
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.DataFrame
+
 import graft.operators.ObservationStore
 import graft.serve.QueryServer
 
 /** End-to-end HTTP tests mirroring the reference's frontend tests
   * (`query/query_graphql_test.go:148-198`, `query/query_rest_test.go:
-  * 124-174`): seed the 3-observation fixture, start the real server on an
-  * ephemeral port, issue real HTTP requests. */
+  * 124-174`): seed the 3-observation fixture as a disk store, start the
+  * real server on an ephemeral port, issue real HTTP requests. Answers
+  * are checked against the store's collected plan methods. */
 class QueryServerSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  /** `agg` written as a disk store and loaded: what a server serves. */
+  private def served(agg: DataFrame): ObservationStore = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-qs").toString
+    ObservationStore.writeDual(agg, dir, numBuckets = 4)
+    ObservationStore.load(spark, dir)
+  }
+
+  /** A plan's rows as the sorted NDJSON lines the REST routes write. */
+  private def planLines(df: DataFrame): Seq[String] =
+    TestSpark.observations(df).map(QueryServer.ndjsonLine).sorted
 
   private lazy val store = {
     import spark.implicits._
@@ -25,7 +39,7 @@ class QueryServerSpec extends AnyFunSuite {
       ("baz", "abc", "A", "1.2.3.4", 1L, ts, ts)
     ).toDF("rrname", "sensor_id", "rrtype", "rdata", "count",
       "timestamp_start", "timestamp_end")
-    ObservationStore.inMemory(ObservationStore.aggregate(input))
+    served(ObservationStore.aggregate(input))
   }
 
   private lazy val server = { val s = new QueryServer(store); s.start(); s }
@@ -64,10 +78,11 @@ class QueryServerSpec extends AnyFunSuite {
     assert(get("/query").statusCode() == 405)
   }
 
-  test("POST /query rrname_prefix: range scan, validation, fallback path") {
-    // in-memory store → plan-path fallback (entriesPrefix)
+  test("POST /query rrname_prefix: range scan, validation, residuals") {
     val r = post("/query", """{"rrname_prefix": "ba"}""")
     assert(r.statusCode() == 200)
+    assert(r.body().trim.split("\n").sorted.toSeq ==
+      planLines(store.entriesPrefix("ba")))
     val names = r.body().trim.split("\n")
       .map(l => "\"rrname\":\"([a-z]+)\"".r.findFirstMatchIn(l).get.group(1))
       .sorted.toSeq
@@ -76,7 +91,7 @@ class QueryServerSpec extends AnyFunSuite {
     assert(post("/query",
       """{"rrname_prefix": "ba", "rrname": "foo"}""").statusCode() == 400)
     assert(post("/query", """{"rrname_prefix": ""}""").statusCode() == 400)
-    // disk-backed store → fast path (servePrefix), same rows
+    // a second store, where bar and baz differ in rrtype
     import spark.implicits._
     val ts = Timestamp.valueOf("2018-01-01 00:00:00")
     val input = Seq(
@@ -149,84 +164,91 @@ class QueryServerSpec extends AnyFunSuite {
       .split("\n").length == 1)
   }
 
-  test("GET /pdns/cidr/: in-memory plan fallback answers like the disk fast path") {
-    import spark.implicits._
-    val ts = Timestamp.valueOf("2018-01-01 00:00:00")
-    val input = Seq(
-      ("foo", "abc", "A", "1.2.3.4", 10L, ts, ts),
-      ("bar", "abc", "A", "1.2.3.5", 10L, ts, ts),
-      ("baz", "abc", "A", "1.2.3.4", 1L, ts, ts)
-    ).toDF("rrname", "sensor_id", "rrtype", "rdata", "count",
-      "timestamp_start", "timestamp_end")
-    val dir = java.nio.file.Files.createTempDirectory("graft-qs-cidr").toString
-    ObservationStore.writeDual(ObservationStore.aggregate(input), dir,
-      numBuckets = 4)
-    val disk = ObservationStore.load(spark, dir)
-    assert(disk.serveCidr("1.2.3.0/24").isDefined)  // served on the fast path
-    assert(store.serveCidr("1.2.3.0/24").isEmpty)   // in-memory: plan fallback
-    val diskSrv = new QueryServer(disk)
-    diskSrv.start()
-    try {
-      def onDisk(path: String): HttpResponse[String] = client.send(
-        HttpRequest.newBuilder(
-          URI.create(s"http://localhost:${diskSrv.boundPort}$path")).GET().build(),
-        HttpResponse.BodyHandlers.ofString())
-      for ((path, status) <- Seq(
-          "/pdns/cidr/1.2.3.0/24" -> 200, "/pdns/cidr/1.2.3.4/32" -> 200,
-          "/pdns/cidr/0.0.0.0/0" -> 200, "/pdns/cidr/9.9.9.0/24" -> 404,
-          "/pdns/cidr/2001:db8::/64" -> 404, "/pdns/cidr/nonsense" -> 400,
-          "/pdns/cidr/1.2.3.0/33" -> 400, "/pdns/cidr/::g/64" -> 400,
-          "/pdns/cidr/1.2.3.0/24?limit=0" -> 400,
-          "/pdns/cidr/1.2.3.0/24?limit=x" -> 400,
-          "/pdns/query/1.2.3.4" -> 200, "/pdns/query/absent" -> 404,
-          "/pdns/query/foo?limit=1" -> 200)) {
-        val (mem, dsk) = (get(path), onDisk(path))
-        assert(mem.statusCode() == status, s"$path in memory: ${mem.body()}")
-        assert(dsk.statusCode() == status, s"$path on disk: ${dsk.body()}")
-        if (status == 200) {
-          assert(dsk.headers().firstValue("Content-Type").orElse("")
-            .contains("ndjson"), path)
-          assert(mem.body().trim.split("\n").sorted.toSeq ==
-            dsk.body().trim.split("\n").sorted.toSeq, path)
-        }
+  test("GET /pdns/cidr/ and /pdns/query answer like the collected plan") {
+    assert(store.serveCidr("1.2.3.0/24").isDefined)  // served by the readers
+    assert(ObservationStore.inMemory(store.forward.drop("bucket"))
+      .serveCidr("1.2.3.0/24").isEmpty)              // in memory: not served
+    for ((path, status, plan) <- Seq(
+        ("/pdns/cidr/1.2.3.0/24", 200, Some(store.cidrQuery("1.2.3.0/24"))),
+        ("/pdns/cidr/1.2.3.4/32", 200, Some(store.cidrQuery("1.2.3.4/32"))),
+        ("/pdns/cidr/0.0.0.0/0", 200, Some(store.cidrQuery("0.0.0.0/0"))),
+        ("/pdns/cidr/9.9.9.0/24", 404, Some(store.cidrQuery("9.9.9.0/24"))),
+        ("/pdns/cidr/2001:db8::/64", 404, Some(store.cidrQuery("2001:db8::/64"))),
+        ("/pdns/cidr/nonsense", 400, None),
+        ("/pdns/cidr/1.2.3.0/33", 400, None), ("/pdns/cidr/::g/64", 400, None),
+        ("/pdns/cidr/1.2.3.0/24?limit=0", 400, None),
+        ("/pdns/cidr/1.2.3.0/24?limit=x", 400, None),
+        ("/pdns/query/1.2.3.4", 200, Some(store.restQuery("1.2.3.4"))),
+        ("/pdns/query/absent", 404, Some(store.restQuery("absent"))),
+        ("/pdns/query/foo?limit=1", 200, Some(store.restQuery("foo", 1))))) {
+      val r = get(path)
+      assert(r.statusCode() == status, s"$path: ${r.body()}")
+      if (status == 200) {
+        assert(r.headers().firstValue("Content-Type").orElse("")
+          .contains("ndjson"), path)
+        assert(r.body().trim.split("\n").sorted.toSeq == planLines(plan.get), path)
       }
-      // a binding limit returns `limit` rows on both paths
-      assert(onDisk("/pdns/cidr/1.2.3.0/24?limit=2").body().trim
-        .split("\n").length == 2)
-      assert(get("/pdns/cidr/1.2.3.0/24?limit=2").body().trim
-        .split("\n").length == 2)
-      assert(onDisk("/pdns/query/1.2.3.4?limit=1").body().trim
-        .split("\n").length == 1)
-      assert(get("/pdns/query/1.2.3.4?limit=1").body().trim
-        .split("\n").length == 1)
-      // POST routes: residuals on a point and on a prefix, and GraphQL
-      // aliases; GraphQL answers one JSON document, so its entries are
-      // compared as a sorted list
-      def onDiskPost(path: String, body: String): HttpResponse[String] =
-        client.send(HttpRequest.newBuilder(
-          URI.create(s"http://localhost:${diskSrv.boundPort}$path"))
-          .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
-          HttpResponse.BodyHandlers.ofString())
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      def lines(path: String, r: HttpResponse[String]): Seq[String] =
-        if (path != "/graphql") r.body().trim.split("\n").sorted.toSeq
-        else {
-          val es = mapper.readTree(r.body()).path("data").path("entries")
-          (0 until es.size()).map(i => es.get(i).toString).sorted
-        }
-      for ((path, body) <- Seq(
-          "/query" -> """{"rdata": "1.2.3.4", "rrtype": "A", "sensor_id": "abc"}""",
-          "/query" -> """{"rrname_prefix": "ba", "rrtype": "A", "sensor_id": "abc"}""",
-          "/graphql" -> """query { entries(rdata: "1.2.3.4") { rrname rdata
-            | count time_first time_last aliases(limit: 1) { rrname rrtype
-            | count time_last_rfc3339 } } }""".stripMargin)) {
-        val (mem, dsk) = (post(path, body), onDiskPost(path, body))
-        assert(mem.statusCode() == 200, s"$path $body in memory: ${mem.body()}")
-        assert(dsk.statusCode() == 200, s"$path $body on disk: ${dsk.body()}")
-        assert(lines(path, mem).size == 2, s"$path $body: ${mem.body()}")
-        assert(lines(path, mem) == lines(path, dsk), s"$path $body")
+      if (status == 404) assert(plan.get.isEmpty, path)
+    }
+    // a binding limit returns `limit` rows from the server and the plan
+    assert(get("/pdns/cidr/1.2.3.0/24?limit=2").body().trim
+      .split("\n").length == 2)
+    assert(store.cidrQuery("1.2.3.0/24", 2).count() == 2)
+    assert(get("/pdns/query/1.2.3.4?limit=1").body().trim
+      .split("\n").length == 1)
+    assert(store.entries(rdata = Some("1.2.3.4"), limit = 1).count() == 1)
+    // POST routes: residuals on a point and on a prefix, and GraphQL
+    // aliases; GraphQL answers one JSON document, so its entries are
+    // compared as a sorted list
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def lines(path: String, r: HttpResponse[String]): Seq[String] =
+      if (path != "/graphql") r.body().trim.split("\n").sorted.toSeq
+      else {
+        val es = mapper.readTree(r.body()).path("data").path("entries")
+        (0 until es.size()).map(i => es.get(i).toString).sorted
       }
-    } finally diskSrv.stop()
+    // the GraphQL document below, built from the entries and aliases plans
+    val gqlPlan = {
+      def secs(t: Timestamp) = Math.floorDiv(t.getTime, 1000L)
+      val es = store.entries(rdata = Some("1.2.3.4"))
+      val as = store.aliases(es, perEntryLimit = 1).collect().toSeq
+      es.collect().toSeq.map { e =>
+        val (n, s, d) = (e.getAs[String]("rrname"), e.getAs[String]("sensor_id"),
+          e.getAs[String]("rdata"))
+        val o = mapper.createObjectNode()
+        o.put("rrname", n); o.put("rdata", d); o.put("count", e.getAs[Long]("count"))
+        o.put("time_first", secs(e.getAs[Timestamp]("first_seen")))
+        o.put("time_last", secs(e.getAs[Timestamp]("last_seen")))
+        val arr = o.putArray("aliases")
+        as.filter(a => a.getAs[String]("e_rrname") == n &&
+            a.getAs[String]("e_sensor_id") == s && a.getAs[String]("e_rdata") == d)
+          .sortBy(a => (a.getAs[String]("rrname"), a.getAs[String]("rrtype")))
+          .foreach { a =>
+            val x = arr.addObject()
+            x.put("rrname", a.getAs[String]("rrname"))
+            x.put("rrtype", a.getAs[String]("rrtype"))
+            x.put("count", a.getAs[Long]("count"))
+            x.put("time_last_rfc3339", java.time.Instant.ofEpochSecond(
+              secs(a.getAs[Timestamp]("last_seen"))).toString)
+          }
+        o.toString
+      }.sorted
+    }
+    for ((path, body, plan) <- Seq(
+        ("/query", """{"rdata": "1.2.3.4", "rrtype": "A", "sensor_id": "abc"}""",
+          planLines(store.entries(rdata = Some("1.2.3.4"), rrtype = Some("A"),
+            sensorId = Some("abc")))),
+        ("/query", """{"rrname_prefix": "ba", "rrtype": "A", "sensor_id": "abc"}""",
+          planLines(store.entriesPrefix("ba", rrtype = Some("A"),
+            sensorId = Some("abc")))),
+        ("/graphql", """query { entries(rdata: "1.2.3.4") { rrname rdata
+          | count time_first time_last aliases(limit: 1) { rrname rrtype
+          | count time_last_rfc3339 } } }""".stripMargin, gqlPlan))) {
+      val r = post(path, body)
+      assert(r.statusCode() == 200, s"$path $body: ${r.body()}")
+      assert(lines(path, r).size == 2, s"$path $body: ${r.body()}")
+      assert(lines(path, r) == plan, s"$path $body")
+    }
   }
 
   test("GET /stats -> total_count + goroutines + serving counters") {
@@ -564,7 +586,7 @@ class QueryServerSpec extends AnyFunSuite {
   test("graphql string args: escaped quotes keep full value fidelity") {
     import spark.implicits._
     val ts = Timestamp.valueOf("2018-01-01 00:00:00")
-    val txtStore = ObservationStore.inMemory(ObservationStore.aggregate(Seq(
+    val txtStore = served(ObservationStore.aggregate(Seq(
       ("quoted.example", "s1", "TXT", """say "hi" ok""", 2L, ts, ts),
       ("quoted.example", "s1", "TXT", """say""", 1L, ts, ts)
     ).toDF("rrname", "sensor_id", "rrtype", "rdata", "count",
@@ -603,7 +625,7 @@ class QueryServerSpec extends AnyFunSuite {
       ("a", "bc", "A", "x", 1L, ts, ts)
     ).toDF("rrname", "sensor_id", "rrtype", "rdata", "count",
       "timestamp_start", "timestamp_end")
-    val st = ObservationStore.inMemory(ObservationStore.aggregate(ambiguous))
+    val st = served(ObservationStore.aggregate(ambiguous))
     def idsOf(rrname: String): Seq[String] = {
       val body = graft.serve.Graphql.execute(
         s"""query { entries(rrname: "$rrname") { id } }""", st)
@@ -617,9 +639,8 @@ class QueryServerSpec extends AnyFunSuite {
 
   test("disk-backed store serves GraphQL/REST through the fast path") {
     import spark.implicits._
-    // a DISK store makes servePoint available, so every endpoint below
-    // exercises the PointReader branch (the in-memory fixture above
-    // covers the plan-path fallback); responses must be shape-identical
+    // a second disk store, where foo and bar share one rdata: every
+    // endpoint below answers from its PointReaders
     val ts = Timestamp.valueOf("2018-01-01 00:00:00")
     val dir = java.nio.file.Files.createTempDirectory("graft-qs-disk").toString
     ObservationStore.writeDual(ObservationStore.aggregate(Seq(
@@ -649,7 +670,7 @@ class QueryServerSpec extends AnyFunSuite {
       val q = p("/query", """{"rdata":"1.2.3.4","rrname":null}""")
         .body().trim.split("\n")
       assert(q.length == 2 && q.exists(_.contains("\"rrname\":\"foo\"")))
-      // GraphQL with aliases: fast rows + LocalRelation aliases join
+      // GraphQL with aliases: the entries and their inverted lookups
       val gql = p("/graphql",
         """{ entries(rrname: "foo") { rrname rdata count time_first
           |  aliases { rrname } } }""".stripMargin).body()
@@ -668,35 +689,34 @@ class QueryServerSpec extends AnyFunSuite {
       ("pre.example", "s1", "A", "10.0.0.1", 1L, ts, ts)
     ).toDF("rrname", "sensor_id", "rrtype", "rdata", "count",
       "timestamp_start", "timestamp_end"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-qs-floor").toString
-    ObservationStore.writeDual(agg, dir, numBuckets = 4)
-    val disk = ObservationStore.load(spark, dir)
+    val disk = served(agg)
     assert(disk.servePoint(rrname = Some("pre.example")).isDefined)
-    for (st <- Seq(ObservationStore.inMemory(agg), disk)) {
-      val srv = new QueryServer(st)
-      srv.start()
-      try {
-        def send(b: HttpRequest.Builder) = client.send(b.build(),
-          HttpResponse.BodyHandlers.ofString())
-        def at(path: String) = HttpRequest.newBuilder(
-          URI.create(s"http://localhost:${srv.boundPort}$path"))
-        val rest = send(at("/pdns/query/pre.example").GET())
-        val point = send(at("/query").POST(HttpRequest.BodyPublishers
-          .ofString("""{"rdata": "10.0.0.1"}""")))
-        val gql = send(at("/graphql").POST(HttpRequest.BodyPublishers
-          .ofString("""{ entries(rrname: "pre.example") { time_first
-            | time_last time_first_rfc3339 } }""".stripMargin)))
-        for (r <- Seq(rest, point)) {
-          assert(r.statusCode() == 200, r.body())
-          assert(r.body().contains("\"time_first\":-1,\"time_last\":-1}"),
-            r.body())
-        }
-        assert(gql.statusCode() == 200, gql.body())
-        assert(gql.body() == """{"data":{"entries":[{"time_first":-1,""" +
-          """"time_last":-1,"time_first_rfc3339":"1969-12-31T23:59:59Z"}]}}""",
-          gql.body())
-      } finally srv.stop()
-    }
+    // the plan's row renders the same floored seconds
+    assert(planLines(disk.entries(rrname = Some("pre.example"))).map(
+      _.contains("\"time_first\":-1,\"time_last\":-1}")) == Seq(true))
+    val srv = new QueryServer(disk)
+    srv.start()
+    try {
+      def send(b: HttpRequest.Builder) = client.send(b.build(),
+        HttpResponse.BodyHandlers.ofString())
+      def at(path: String) = HttpRequest.newBuilder(
+        URI.create(s"http://localhost:${srv.boundPort}$path"))
+      val rest = send(at("/pdns/query/pre.example").GET())
+      val point = send(at("/query").POST(HttpRequest.BodyPublishers
+        .ofString("""{"rdata": "10.0.0.1"}""")))
+      val gql = send(at("/graphql").POST(HttpRequest.BodyPublishers
+        .ofString("""{ entries(rrname: "pre.example") { time_first
+          | time_last time_first_rfc3339 } }""".stripMargin)))
+      for (r <- Seq(rest, point)) {
+        assert(r.statusCode() == 200, r.body())
+        assert(r.body().contains("\"time_first\":-1,\"time_last\":-1}"),
+          r.body())
+      }
+      assert(gql.statusCode() == 200, gql.body())
+      assert(gql.body() == """{"data":{"entries":[{"time_first":-1,""" +
+        """"time_last":-1,"time_first_rfc3339":"1969-12-31T23:59:59Z"}]}}""",
+        gql.body())
+    } finally srv.stop()
   }
 
   test("graphql regression table: argument values are data, the schema is checked") {
@@ -772,22 +792,17 @@ class QueryServerSpec extends AnyFunSuite {
         }
         if (ok) None else Some(s"$req\n  -> ${r.statusCode()} ${r.body()}")
       }
-    val mem = new QueryServer(ObservationStore.inMemory(agg))
-    mem.start()
-    try {
-      val bad = check(mem, table)
-      assert(bad.isEmpty, bad.mkString("\n"))
-    } finally mem.stop()
-    // the value-as-syntax rows and the zero limit again on the disk fast path
-    val dir = java.nio.file.Files.createTempDirectory("graft-qs-table").toString
-    ObservationStore.writeDual(agg, dir, numBuckets = 4)
-    val disk = ObservationStore.load(spark, dir)
+    val disk = served(agg)
     assert(disk.servePoint(rdata = Some("limit: 1")).isDefined)
     val diskSrv = new QueryServer(disk)
     diskSrv.start()
     try {
-      val bad = check(diskSrv, Seq(table(0), table(1), table(10)))
+      val bad = check(diskSrv, table)
       assert(bad.isEmpty, bad.mkString("\n"))
+      // the value-as-syntax rows and the zero limit agree with the plan
+      assert(disk.entries(rdata = Some("limit: 1")).count() == 3)
+      assert(disk.entries(rrname = Some("__schema.example")).count() == 1)
+      assert(disk.entries(rrname = Some("foo"), limit = 0).isEmpty)
     } finally diskSrv.stop()
   }
 
@@ -803,6 +818,17 @@ class QueryServerSpec extends AnyFunSuite {
     // a null member is an absent one
     val r = post("/query", """{"rrname": null, "rdata": "1.2.3.5"}""")
     assert(r.statusCode() == 200 && r.body().contains("\"bar\""), r.body())
+  }
+
+  test("both servers refuse an in-memory store at construction") {
+    val mem = ObservationStore.inMemory(store.forward.drop("bucket"))
+    for ((name, make) <- Seq[(String, () => Any)](
+        "QueryServer" -> (() => new QueryServer(mem)),
+        "BalboaTcpServer" -> (() => new graft.serve.BalboaTcpServer(mem)))) {
+      val e = intercept[IllegalStateException](make())
+      assert(e.getMessage.contains("writeDual") && e.getMessage.contains("load"),
+        s"$name: ${e.getMessage}")
+    }
   }
 
   test("slow-client timeouts configured to reference parity (5s/10s)") {

@@ -602,15 +602,21 @@ class StoreSpec extends AnyFunSuite {
       ("baz.other", "s1", "A", "10.0.0.1", 4L, ts("2021-01-01 00:00:00"))
     ).toDF("rrname", "sensor_id", "rrtype", "rdata", "count", "ts")
     val agg = ObservationStore.aggregate(input)
-    // plan answers, taken before any legacy store exists
+    // plan answers, collected before any legacy store exists
     val mem = ObservationStore.inMemory(agg)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      TestSpark.observations(df).toSet
     def answers(st: ObservationStore) =
       (st.answerPoint(rrname = Some("foo.example")).toSet,
         st.answerPoint(rdata = Some("10.0.0.1")).toSet,
         st.answerPrefix("foo.").toSet,
         st.answerCidr("10.0.0.0/24").toSet,
         st.answerCidr("2001:db8::/32").toSet)
-    val expected = answers(mem)
+    val expected = (rows(mem.entries(rrname = Some("foo.example"))),
+      rows(mem.entries(rdata = Some("10.0.0.1"))),
+      rows(mem.entriesPrefix("foo.")),
+      rows(mem.cidrQuery("10.0.0.0/24")),
+      rows(mem.cidrQuery("2001:db8::/32")))
     assert(expected._2.size == 2 && expected._4.size == 3)
 
     def legacy(name: String)(damage: String => Unit): String = {
